@@ -109,12 +109,14 @@ def run(
     from .jobs.pipeline import (
         DEFAULT_SPEC,
         ROW_SCHEMA,
-        _decode_partition,
         _pdf_to_arrow,
+        make_decode_kernel,
     )
 
+    decode_kernel = make_decode_kernel(DEFAULT_SPEC)
+
     def _decode_arrow(tbl):
-        return _pdf_to_arrow(_decode_partition(tbl.to_pandas()), DEFAULT_SPEC)
+        return _pdf_to_arrow(decode_kernel(tbl.to_pandas()), DEFAULT_SPEC)
 
     t0 = time.time()
     (

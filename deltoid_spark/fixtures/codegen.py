@@ -204,14 +204,21 @@ def write_parquet(df: pd.DataFrame, path: str, n_shards: int = 32) -> str:
     return path
 
 
-def fixture_path(name: str, base: str = "/root/repo/.fixtures") -> str:
+# generated fixtures cache beside the package, in the checkout root
+FIXTURE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".fixtures",
+)
+
+
+def fixture_path(name: str, base: str = FIXTURE_DIR) -> str:
     return os.path.join(base, f"code_files_{name}.parquet")
 
 
 SIZES = {"tiny": 2_000, "small": 60_000, "bench": 960_000}
 
 
-def ensure_fixture(name: str = "small", base: str = "/root/repo/.fixtures") -> str:
+def ensure_fixture(name: str = "small", base: str = FIXTURE_DIR) -> str:
     """Generate-once cache: fixtures are deterministic, so an existing
     file is always valid for the same (name, seed)."""
     path = fixture_path(name, base)

@@ -60,25 +60,27 @@ def build_partition_map(
     everything).
     """
     group_col = key_cols[0]
-    # one aggregate over the group key: tiny output, cached so the giants
-    # filter and the global total reuse it instead of rescanning the input
-    counts = df.groupBy(group_col).agg(F.count("*").alias("n")).cache()
-    giants = [
-        (r[group_col], int(r["n"]))
-        for r in counts.filter(F.col("n") > target_rows).collect()
-    ]
-    giants.sort()  # deterministic base-id assignment
+    # one collect: per-group counts, re-aggregated so that each giant
+    # keeps its own row and every small group folds into one null-keyed
+    # row — giants-sized output, and the total is the sum of all rows
+    counts = df.groupBy(group_col).agg(F.count("*").alias("n"))
+    rows = (
+        counts.groupBy(
+            F.when(F.col("n") > target_rows, F.col(group_col)).alias("grp")
+        )
+        .agg(F.sum("n").alias("n"))
+        .collect()
+    )
+    giants = sorted((r["grp"], int(r["n"])) for r in rows if r["grp"] is not None)
     base = 0
     salt_map: list[tuple[str, int, int]] = []  # group, base_id, n_salts
-    for grp, n in giants:
+    for grp, n in giants:  # sorted: deterministic base-id assignment
         n_salts = math.ceil(n / target_rows)
         salt_map.append((grp, base, n_salts))
         base += n_salts
     # how many buckets for the long tail of small groups
-    total = counts.agg(F.sum("n")).collect()[0][0] or 0
-    counts.unpersist()
-    giant_total = sum(n for _, n in giants)
-    n_small = max(1, math.ceil((total - giant_total) / target_rows))
+    small_total = sum(int(r["n"]) for r in rows if r["grp"] is None)
+    n_small = max(1, math.ceil(small_total / target_rows))
     return salt_map, base, n_small
 
 

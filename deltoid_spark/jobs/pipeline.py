@@ -41,15 +41,19 @@ into the kernels.
 from __future__ import annotations
 
 import os
+import tempfile
 import time
 import uuid
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels import (
     api,
@@ -82,6 +86,26 @@ BLOCK_SCHEMA = (
 )
 
 ROW_SCHEMA = "repo string, path string, commit string, lang string, content string"
+
+# The engine's metadata tables.  Every read of an engine-owned table
+# passes its schema explicitly: no read spends a schema-inference job,
+# and columns that older files lack read as null — zone maps and Bloom
+# filters then prune nothing, and origin/msg show as null in history().
+SPEC_ARROW = pa.schema([
+    ("pos", pa.int32()), ("name", pa.string()), ("ddl", pa.string()),
+    ("is_key", pa.bool_()), ("is_order", pa.bool_()), ("is_content", pa.bool_()),
+])
+PARTMAP_ARROW = pa.schema([
+    ("grp", pa.string()), ("base_id", pa.int64()), ("n_salts", pa.int64()),
+])
+MANIFEST_ARROW = pa.schema([
+    ("part_id", pa.int64()), ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()), ("codecs", pa.string()),
+    ("content_sha256", pa.string()), ("wall_s", pa.float64()),
+    ("status", pa.string()), ("error", pa.string()), ("run_id", pa.string()),
+    ("gen", pa.int64()), ("kind", pa.string()), ("batch_id", pa.string()),
+    ("origin", pa.string()), ("msg", pa.string()),
+])
 
 # scalar Spark types the encoder routes (simpleString -> logical width)
 _INT_DDL = {"bigint": 8, "int": 4, "smallint": 2, "tinyint": 1}
@@ -672,22 +696,60 @@ def _write_table_spec(
         (i, name, ddl, name in key_cols, name in order_cols, name == content_col)
         for i, (name, ddl) in enumerate(spec)
     ]
-    # via pandas: Arrow-path createDataFrame + a single write task.  The
-    # list-of-tuples path parallelizes into defaultParallelism pickled
-    # slices and coalesce(1) then evaluates all of them serially through
-    # Python workers — ~6 s of pure overhead for a KB of metadata.
-    pdf = pd.DataFrame(
-        rows, columns=["pos", "name", "ddl", "is_key", "is_order", "is_content"]
+    table = pa.Table.from_pylist(
+        [dict(zip(SPEC_ARROW.names, r)) for r in rows], schema=SPEC_ARROW
     )
-    spark.createDataFrame(
-        pdf,
-        "pos int, name string, ddl string, is_key boolean, is_order boolean, is_content boolean",
-    ).repartition(1).write.mode("overwrite").parquet(os.path.join(out_dir, "schema"))
+    _write_small(spark, table, os.path.join(out_dir, "schema"), "part-00000.parquet", True)
+
+
+def _hadoop(spark: SparkSession, path: str):
+    """(jvm, Hadoop FileSystem, Path) for ``path`` — any scheme the
+    session can read."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jvm, hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
+def _read_small(spark: SparkSession, path: str, schema: pa.Schema) -> pa.Table:
+    """Read a metadata table (spec, partition map, manifest) on the
+    driver, launching no Spark job: the session's Hadoop file system
+    copies its files to a local temp dir and pyarrow reads them against
+    ``schema``.  Columns absent from older files read as null; hidden
+    files (``_SUCCESS``, ``.crc``, staged writes) are skipped."""
+    jvm, fs, hpath = _hadoop(spark, path)
+    if not fs.exists(hpath):
+        raise FileNotFoundError(f"no engine table at {path}")
+    with tempfile.TemporaryDirectory() as tmp:
+        local = os.path.join(tmp, "table")
+        fs.copyToLocalFile(False, hpath, jvm.org.apache.hadoop.fs.Path(local), True)
+        return ds.dataset(local, schema=schema, format="parquet").to_table()
+
+
+def _write_small(
+    spark: SparkSession, table: pa.Table, path: str, name: str, replace: bool
+) -> None:
+    """Write a metadata table as the one parquet file ``name`` under
+    ``path`` on the driver, launching no Spark job.  ``replace`` drops
+    the table's earlier files first; otherwise the file is appended.
+    The file is staged under a hidden name and renamed, so readers
+    never see it half written."""
+    jvm, fs, hpath = _hadoop(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    if replace:
+        fs.delete(hpath, True)
+    fs.mkdirs(hpath)
+    staged = Path(hpath, f".{name}.staged")
+    with tempfile.TemporaryDirectory() as tmp:
+        local = os.path.join(tmp, name)
+        pq.write_table(table, local)
+        fs.copyFromLocalFile(True, True, Path(local), staged)
+    if not fs.rename(staged, Path(hpath, name)):
+        raise OSError(f"could not publish {name} under {path}")
 
 
 def read_table_spec(spark: SparkSession, out_dir: str) -> dict:
     rows = sorted(
-        spark.read.parquet(os.path.join(out_dir, "schema")).collect(),
+        _read_small(spark, os.path.join(out_dir, "schema"), SPEC_ARROW).to_pylist(),
         key=lambda r: r["pos"],
     )
     return {
@@ -698,55 +760,64 @@ def read_table_spec(spark: SparkSession, out_dir: str) -> dict:
     }
 
 
-def _manifest_active(
-    spark: SparkSession, manifest_path: str, as_of_gen: int | None = None
-) -> DataFrame:
+def _read_manifest(spark: SparkSession, out_dir: str) -> pd.DataFrame:
+    """Every manifest row, on the driver.  The manifest is metadata:
+    one row per partition each run wrote (vacuum trims it to the active
+    rows), read without a Spark job."""
+    return _read_small(spark, os.path.join(out_dir, "manifest"), MANIFEST_ARROW).to_pandas()
+
+
+def _active_of(manifest: pd.DataFrame, as_of_gen: int | None = None) -> pd.DataFrame:
     """The manifest's active rows per part_id: the latest "replace"
     generation plus every later "append" generation (incremental batches
     extending that base).  Earlier replace rows and appends that a newer
     replace superseded (compaction) drop out.
 
-    The replace anchor coalesces to -1 (gens are time_ns, so always
+    The replace anchor defaults to -1 (gens are time_ns, so always
     greater): a part_id whose ONLY generations are appends — new keys
     hashing into a bucket the base run left empty — has no replace row,
-    and a NULL anchor would silently filter those appends out (the
-    ADVICE r02 data-loss scenario).
+    and a missing anchor must not filter those appends out (the ADVICE
+    r02 data-loss scenario).
 
     as_of_gen is TIME TRAVEL: resolve the table as it stood at that
     manifest generation (gens are commit timestamps in ns) — later
     replaces/appends are invisible, so any historical snapshot stays
     readable until a vacuum reclaims its blocks."""
-    m = spark.read.parquet(manifest_path)
+    m = manifest
     if as_of_gen is not None:
-        m = m.filter(F.col("gen") <= int(as_of_gen))
-    w = Window.partitionBy("part_id")
-    last_rep = F.coalesce(
-        F.max(F.when(F.col("kind") == "replace", F.col("gen"))).over(w),
-        F.lit(-1).cast("long"),
+        m = m[m["gen"] <= int(as_of_gen)]
+    replace = m["kind"] == "replace"
+    # nullable Int64 keeps ns gens exact (float64 would round past 2^53)
+    rep_gen = m["gen"].astype("Int64").where(replace)
+    last_rep = rep_gen.groupby(m["part_id"]).transform("max").fillna(-1)
+    keep = (replace & (m["gen"] == last_rep)) | ((m["kind"] == "append") & (m["gen"] > last_rep))
+    return m[keep].reset_index(drop=True)
+
+
+def _manifest_df(spark: SparkSession, rows: pd.DataFrame) -> DataFrame:
+    """Manifest rows already read on the driver, as a DataFrame."""
+    return spark.createDataFrame(
+        pa.Table.from_pandas(rows, schema=MANIFEST_ARROW, preserve_index=False)
     )
-    return (
-        m.withColumn("_lr", last_rep)
-        .filter(
-            ((F.col("kind") == "replace") & (F.col("gen") == F.col("_lr")))
-            | ((F.col("kind") == "append") & (F.col("gen") > F.col("_lr")))
-        )
-        .drop("_lr")
-    )
+
+
+def _manifest_active(spark: SparkSession, manifest_path: str) -> DataFrame:
+    """The active manifest rows (``_active_of``) as a DataFrame — the
+    manifest head that encode, encode_append and compact return."""
+    out_dir = os.path.dirname(manifest_path.rstrip("/"))
+    return _manifest_df(spark, _active_of(_read_manifest(spark, out_dir)))
 
 
 def _write_partition_map(
     spark: SparkSession, out_dir: str, salt_map, base: int, n_small: int
 ) -> None:
-    rows = [(g, b, s) for g, b, s in salt_map] + [(None, base, n_small)]
-    # pandas/Arrow single-partition write — see _write_table_spec.
-    pdf = pd.DataFrame(rows, columns=["grp", "base_id", "n_salts"])
-    spark.createDataFrame(
-        pdf, "grp string, base_id long, n_salts long"
-    ).repartition(1).write.mode("overwrite").parquet(os.path.join(out_dir, "partmap"))
+    grp, base_id, n_salts = zip(*[*salt_map, (None, base, n_small)])
+    table = pa.table([list(grp), list(base_id), list(n_salts)], schema=PARTMAP_ARROW)
+    _write_small(spark, table, os.path.join(out_dir, "partmap"), "part-00000.parquet", True)
 
 
 def _read_partition_map(spark: SparkSession, out_dir: str):
-    """Collect the persisted partition map to the driver.
+    """Read the persisted partition map on the driver.
 
     Headroom bound: the map has one row per SALTED GIANT group (plus a
     sentinel), at most total_rows / target_rows entries — i.e. it is
@@ -755,13 +826,31 @@ def _read_partition_map(spark: SparkSession, out_dir: str):
     (string, long, long) — tens of MB on the driver, same order as
     Spark's own file-listing state.  Pinned by the 10^5-partition
     smoke test (test_partition_count_headroom_100k), not assumed."""
-    rows = spark.read.parquet(os.path.join(out_dir, "partmap")).collect()
+    rows = _read_small(spark, os.path.join(out_dir, "partmap"), PARTMAP_ARROW).to_pylist()
     salt_map = [
         (r["grp"], r["base_id"], r["n_salts"]) for r in rows if r["grp"] is not None
     ]
     salt_map.sort(key=lambda t: t[1])
     sentinel = next(r for r in rows if r["grp"] is None)
     return salt_map, int(sentinel["base_id"]), int(sentinel["n_salts"])
+
+
+class TableMeta(NamedTuple):
+    """One resolution of a table's metadata, made once per operation on
+    the driver without a Spark job.  Every metadata decision of the
+    operation (failed bases, retried batches, partitions to compact,
+    strict reads, which blocks to read) derives from it."""
+
+    info: dict  # read_table_spec: spec, key_cols, order_cols, content_col
+    manifest: pd.DataFrame  # _read_manifest: every manifest row
+    active: pd.DataFrame  # _active_of(manifest, as_of_gen)
+
+
+def _resolve(
+    spark: SparkSession, out_dir: str, as_of_gen: int | None = None
+) -> TableMeta:
+    manifest = _read_manifest(spark, out_dir)
+    return TableMeta(read_table_spec(spark, out_dir), manifest, _active_of(manifest, as_of_gen))
 
 
 def _infer_order_cols(cols: list[str]) -> tuple[str, ...]:
@@ -840,12 +929,13 @@ def encode(
     df = apply_partition_map(df.select(*cols), salt_map, pbase, n_small, key_cols)
 
     if resume and _exists(spark, manifest_path):
-        committed = (
-            _manifest_active(spark, manifest_path)
-            .filter((F.col("kind") == "replace") & (F.col("status") == "committed"))
-            .select("part_id")
+        active = _active_of(_read_manifest(spark, out_dir))
+        committed = active.loc[
+            (active["kind"] == "replace") & (active["status"] == "committed"), ["part_id"]
+        ]
+        df = df.join(
+            F.broadcast(spark.createDataFrame(committed, "part_id long")), "part_id", "left_anti"
         )
-        df = df.join(F.broadcast(committed), "part_id", "left_anti")
 
     run_id = uuid.uuid4().hex
     gen = time.time_ns()
@@ -885,18 +975,14 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
 
     blocks_path = os.path.join(out_dir, "blocks")
     manifest_path = os.path.join(out_dir, "manifest")
-    active = (
-        _manifest_active(spark, manifest_path)
-        .filter(F.col("status") == "committed")
-        .cache()
-    )
+    active = _active_of(_read_manifest(spark, out_dir))
+    active = active[active["status"] == "committed"]
     blocks = _read_blocks(spark, blocks_path)
     before = blocks.agg(
         F.count("*").alias("n"), F.sum("enc_bytes").alias("b")
     ).collect()[0]
-    keep = blocks.join(
-        F.broadcast(active.select("part_id", "run_id")), ["part_id", "run_id"], "left_semi"
-    )
+    # the gen column is the selection's, not a block column
+    keep = _active_blocks(spark, out_dir, active=active).drop("gen")
     tmp_blocks = blocks_path + "_vacuum"
     tmp_manifest = manifest_path + "_vacuum"
     # keep the hive run_id layout — a flat rewrite would clash with the
@@ -905,11 +991,14 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
         "run_id"
     ).parquet(tmp_blocks)
     os.makedirs(tmp_blocks, exist_ok=True)  # fully-dead state writes nothing
-    active.write.mode("overwrite").parquet(tmp_manifest)
-    after = spark.read.parquet(tmp_blocks).agg(
+    _write_small(
+        spark,
+        pa.Table.from_pandas(active, schema=MANIFEST_ARROW, preserve_index=False),
+        tmp_manifest, "part-00000.parquet", True,
+    )
+    after = _read_blocks(spark, tmp_blocks).agg(
         F.count("*").alias("n"), F.sum("enc_bytes").alias("b")
     ).collect()[0]
-    active.unpersist()
     for live, tmp in ((blocks_path, tmp_blocks), (manifest_path, tmp_manifest)):
         old = live + "_old"
         os.rename(live, old)
@@ -926,13 +1015,14 @@ def _read_blocks(spark: SparkSession, blocks_path: str) -> DataFrame:
     """Typed read of the blocks dir; an all-empty run (partitionBy on an
     empty frame) writes no files at all, which reads as an empty table.
 
-    mergeSchema: appends from newer versions may carry columns (zmin/
-    zmax/smin/smax zone maps) that pre-existing footers lack — without
-    merging, the inferred schema depends on which footer Spark samples,
-    so pruning would nondeterministically disappear and a vacuum rewrite
-    could permanently drop the zone-map columns."""
+    The explicit BLOCK_SCHEMA is what keeps mixed-version directories
+    safe: files written before the zone-map and Bloom columns existed
+    read those columns as null (unprunable, never wrongly pruned), and
+    a vacuum rewrite keeps the columns for every block.  ``run_id`` is
+    the hive partition directory, typed string by the schema rather
+    than inferred from the directory names."""
     if _exists(spark, blocks_path):
-        return spark.read.option("mergeSchema", "true").parquet(blocks_path)
+        return spark.read.schema(BLOCK_SCHEMA).parquet(blocks_path)
     return spark.createDataFrame([], BLOCK_SCHEMA)
 
 
@@ -957,9 +1047,7 @@ def _exists(spark: SparkSession, path: str) -> bool:
     readable as parquet, matching the old semantics.
     """
     try:
-        jvm = spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        _jvm, fs, hpath = _hadoop(spark, path)
         if not fs.exists(hpath):
             return False
         it = fs.listFiles(hpath, True)
@@ -980,15 +1068,28 @@ def _manifest_rows_for_run(
     spec: list[tuple[str, str]], kind: str, batch_id: str | None = None,
     origin: str | None = None, message: str | None = None,
 ) -> None:
-    """Aggregate this run's written blocks into manifest rows (append)."""
+    """Aggregate this run's written blocks into manifest rows (append).
+
+    Only the blocks' metadata columns are read back — ``payload`` holds
+    the encoded data and is read only for the error rows of failed
+    partitions, whose payload is the error text.  The aggregate is
+    partitions-sized, so it is collected and written from the driver.
+    The new file lands under the run's own name: the manifest is
+    append-only, one file per run."""
+    blocks_path = os.path.join(out_dir, "blocks")
     written = (
-        _read_blocks(spark, os.path.join(out_dir, "blocks"))
+        _read_blocks(spark, blocks_path)
         .filter(F.col("run_id") == run_id)
+        .select(
+            "part_id", "frag_id", "column", "codec", "n_rows", "raw_bytes",
+            "enc_bytes", "sha256", "wall_s",
+        )
+        # one shuffle on part_id serves both the dedup and the aggregate
+        .repartition("part_id")
         .dropDuplicates(["part_id", "frag_id", "column"])
     )
-    cols = [name for name, _ in spec]
     first_col = spec[0][0]
-    manifest = written.groupBy("part_id").agg(
+    rows = written.groupBy("part_id").agg(
         F.sum(
             F.when(F.col("column").isin(first_col, "*"), F.col("n_rows")).otherwise(0)
         ).alias("n_rows"),
@@ -998,7 +1099,7 @@ def _manifest_rows_for_run(
             F.create_map(
                 *[
                     part
-                    for c in cols
+                    for c, _ in spec
                     for part in (
                         F.lit(c),
                         F.min(F.when(F.col("column") == c, F.col("codec"))),
@@ -1011,17 +1112,26 @@ def _manifest_rows_for_run(
         F.when(
             F.sum(F.when(F.col("codec") == "error", 1).otherwise(0)) > 0, "failed"
         ).otherwise("committed").alias("status"),
-        F.max(
-            F.when(F.col("codec") == "error", F.col("payload").cast("string"))
-        ).alias("error"),
-        F.lit(run_id).alias("run_id"),
-        F.lit(gen).alias("gen"),
-        F.lit(kind).alias("kind"),
-        F.lit(batch_id).cast("string").alias("batch_id"),
-        F.lit(origin).cast("string").alias("origin"),
-        F.lit(message).cast("string").alias("msg"),
+    ).toPandas()
+    rows["error"] = None
+    if (rows["status"] == "failed").any():
+        errors = (
+            _read_blocks(spark, blocks_path)
+            .filter((F.col("run_id") == run_id) & (F.col("codec") == "error"))
+            .groupBy("part_id")
+            .agg(F.max(F.col("payload").cast("string")).alias("error"))
+            .toPandas()
+        )
+        rows = rows.drop(columns="error").merge(errors, on="part_id", how="left")
+    rows = rows.assign(
+        run_id=run_id, gen=gen, kind=kind, batch_id=batch_id, origin=origin, msg=message
     )
-    manifest.write.mode("append").parquet(os.path.join(out_dir, "manifest"))
+    table = pa.Table.from_pandas(
+        rows[MANIFEST_ARROW.names], schema=MANIFEST_ARROW, preserve_index=False
+    )
+    _write_small(
+        spark, table, os.path.join(out_dir, "manifest"), f"part-{run_id}.parquet", False
+    )
 
 
 def make_append_kernel(
@@ -1111,7 +1221,7 @@ def encode_append(
     the reference's push_snapshot has the same at-least-once shape).
     """
     df = spark.read.parquet(source) if isinstance(source, str) else source
-    info = read_table_spec(spark, out_dir)
+    info, manifest, active = _resolve(spark, out_dir)
     spec, key_cols = info["spec"], info["key_cols"]
     cols = [name for name, _ in spec]
     got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -1123,36 +1233,40 @@ def encode_append(
     dfp = apply_partition_map(df.select(*cols), salt_map, pbase, n_small, key_cols)
 
     if batch_id is not None:
-        already = (
-            spark.read.parquet(os.path.join(out_dir, "manifest"))
-            .filter(
-                (F.col("kind") == "append")
-                & (F.col("status") == "committed")
-                & (F.col("batch_id") == batch_id)
+        # every manifest row, not the active ones: a compaction may have
+        # folded this batch's committed appends into a newer replace
+        already = manifest.loc[
+            (manifest["kind"] == "append")
+            & (manifest["status"] == "committed")
+            & (manifest["batch_id"] == batch_id),
+            ["part_id"],
+        ].drop_duplicates()
+        if len(already):
+            dfp = dfp.join(
+                F.broadcast(spark.createDataFrame(already, "part_id long")),
+                "part_id", "left_anti",
             )
-            .select("part_id")
-            .distinct()
-        )
-        dfp = dfp.join(F.broadcast(already), "part_id", "left_anti")
 
-    touched = dfp.select("part_id").distinct()
     # refuse to append onto a FAILED base: the appended generation would
     # be superseded (and its rows stranded) the moment a healing
-    # re-encode writes a newer replace generation for the partition
-    failed = (
-        _manifest_active(spark, os.path.join(out_dir, "manifest"))
-        .filter((F.col("kind") == "replace") & (F.col("status") == "failed"))
-        .join(F.broadcast(touched), "part_id", "left_semi")
-        .select("part_id")
-        .limit(20)
-        .collect()
+    # re-encode writes a newer replace generation for the partition.
+    # The batch is probed only when the resolved manifest has one.
+    failed_base = sorted(
+        active.loc[(active["kind"] == "replace") & (active["status"] == "failed"), "part_id"]
+        .astype(int).unique().tolist()
     )
-    if failed:
-        raise ValueError(
-            f"partitions {sorted(r['part_id'] for r in failed)} have a failed "
-            "base encode; re-run encode() to heal them before appending"
+    if failed_base:
+        failed = (
+            dfp.filter(F.col("part_id").isin(failed_base))
+            .select("part_id").distinct().limit(20).collect()
         )
-    existing = _active_blocks(spark, out_dir).join(
+        if failed:
+            raise ValueError(
+                f"partitions {sorted(r['part_id'] for r in failed)} have a failed "
+                "base encode; re-run encode() to heal them before appending"
+            )
+    touched = dfp.select("part_id").distinct()
+    existing = _active_blocks(spark, out_dir, active=active).join(
         F.broadcast(touched), "part_id", "left_semi"
     )
 
@@ -1190,22 +1304,16 @@ def compact(
     (the new kind="replace" generation supersedes them); a vacuum pass
     can reclaim them.
     """
-    info = read_table_spec(spark, out_dir)
+    meta = _resolve(spark, out_dir)
+    info, _manifest, active = meta
     manifest_path = os.path.join(out_dir, "manifest")
-    multi = (
-        _manifest_active(spark, manifest_path)
-        .filter(F.col("status") == "committed")  # never fold failed rows in
-        .groupBy("part_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-        .select("part_id")
-    )
-    if not multi.take(1):
-        return _manifest_active(spark, manifest_path)
+    live = active.loc[active["status"] == "committed", "part_id"]  # never fold failed rows in
+    counts = live.value_counts()
+    multi = sorted(int(p) for p in counts.index[counts > 1])
+    if not multi:
+        return _manifest_df(spark, active)
 
-    rows = decode(spark, out_dir, with_part_id=True).join(
-        F.broadcast(multi), "part_id", "left_semi"
-    )
+    rows = _decode(spark, out_dir, meta, with_part_id=True, parts=multi)
     run_id = uuid.uuid4().hex
     gen = time.time_ns()
     kernel = make_encode_kernel(
@@ -1417,10 +1525,6 @@ def make_decode_kernel(
     return decode_partition
 
 
-# retained for callers that decode the fixed code-table layout directly
-_decode_partition = make_decode_kernel(DEFAULT_SPEC)
-
-
 # Spark-side Arrow type per DDL for the decode job's applyInArrow
 # return boundary.  Timestamps are tz-aware UTC (storage is UTC-epoch
 # micros — the cast reinterprets, it does not shift).
@@ -1472,17 +1576,24 @@ def _pdf_to_arrow(out: pd.DataFrame, out_spec: list[tuple[str, str]]) -> pa.Tabl
 
 
 def _active_blocks(
-    spark: SparkSession, out_dir: str, as_of_gen: int | None = None
+    spark: SparkSession, out_dir: str, active: pd.DataFrame | None = None
 ) -> DataFrame:
     """Block rows belonging to active committed manifest entries, with
-    the manifest generation attached (fragment replay order)."""
-    blocks = _read_blocks(spark, os.path.join(out_dir, "blocks"))
-    active = (
-        _manifest_active(spark, os.path.join(out_dir, "manifest"), as_of_gen)
-        .filter(F.col("status") == "committed")
-        .select("part_id", "run_id", "gen")
+    the manifest generation attached (fragment replay order).
+
+    ``active`` is the operation's resolved manifest (``TableMeta``),
+    possibly narrowed to some partitions; it is resolved here when not
+    given.  The run_id directories of dead runs drop out of the scan,
+    and the committed (part_id, run_id, gen) rows select the blocks
+    through one broadcast join."""
+    if active is None:
+        active = _active_of(_read_manifest(spark, out_dir))
+    live = active.loc[active["status"] == "committed", ["part_id", "run_id", "gen"]]
+    blocks = _read_blocks(spark, os.path.join(out_dir, "blocks")).filter(
+        F.col("run_id").isin(sorted(set(live["run_id"])))
     )
-    return blocks.join(F.broadcast(active), ["part_id", "run_id"])
+    live_df = spark.createDataFrame(live, "part_id long, run_id string, gen long")
+    return blocks.join(F.broadcast(live_df), ["part_id", "run_id"])
 
 
 def history(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1494,13 +1605,8 @@ def history(spark: SparkSession, out_dir: str) -> DataFrame:
 
     Rows carry the caller-supplied commit metadata (``origin``/``msg``,
     reference snapshot/full.rs:164-170); tables written before that
-    metadata existed read as nulls (mergeSchema)."""
-    m = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(out_dir, "manifest")
-    )
-    for c in ("origin", "msg"):
-        if c not in m.columns:
-            m = m.withColumn(c, F.lit(None).cast("string"))
+    metadata existed read as nulls (MANIFEST_ARROW)."""
+    m = _manifest_df(spark, _read_manifest(spark, out_dir))
     return (
         m.groupBy("run_id", "gen", "kind", "batch_id", "origin", "msg")
         .agg(
@@ -1730,6 +1836,30 @@ def decode(
     (decode depth stays keyframe-bounded) but only the requested
     version per key leaves the worker.
     """
+    return _decode(
+        spark, out_dir, _resolve(spark, out_dir, as_of_gen),
+        with_part_id=with_part_id, columns=columns, parts=parts,
+        latest_only=latest_only, at_version=at_version, strict=strict,
+        where=where, on_error=on_error,
+    )
+
+
+def _decode(
+    spark: SparkSession,
+    out_dir: str,
+    meta: TableMeta,
+    with_part_id: bool = False,
+    columns: list[str] | None = None,
+    parts: list[int] | None = None,
+    latest_only: bool = False,
+    at_version: int | None = None,
+    strict: bool = False,
+    where: tuple | list[tuple] | None = None,
+    on_error: str = "raise",
+) -> DataFrame:
+    """``decode`` against a resolution of out_dir the caller already
+    made (``_resolve``), so an operation that decodes (compact) resolves
+    the metadata once."""
     if latest_only and at_version is not None:
         raise ValueError("latest_only and at_version are mutually exclusive")
     if on_error not in ("raise", "skip"):
@@ -1758,22 +1888,18 @@ def decode(
             if wlo is None and whi is None:
                 raise ValueError("where needs at least one of (lo, hi)")
             wpreds.append((wcol, wlo, whi, None))
+    info, _manifest, active = meta
     if strict:
-        failed = (
-            _manifest_active(spark, os.path.join(out_dir, "manifest"), as_of_gen)
-            .filter(F.col("status") == "failed")
-            .select("part_id", "error")
-            .limit(20)
-            .collect()
-        )
-        if failed:
+        failed = active[active["status"] == "failed"]
+        if len(failed):
             raise ValueError(
                 f"decode(strict=True): partitions "
-                f"{sorted({r['part_id'] for r in failed})} have failed "
-                f"encodes (first error: {failed[0]['error']!r}); re-run "
+                f"{sorted(set(failed['part_id'].astype(int)))[:20]} have failed "
+                f"encodes (first error: {failed['error'].iloc[0]!r}); re-run "
                 "encode() to heal them or decode without strict"
             )
-    info = read_table_spec(spark, out_dir)
+    if parts is not None:
+        active = active[active["part_id"].isin([int(p) for p in parts])]
     spec = info["spec"]
     zpreds: list[tuple] = []  # (wcol, wddl, wlo, whi, zlo, zhi) — ranges
     ipreds: list[tuple] = []  # (wcol, wddl, vals, zvals) — IN-lists
@@ -1838,12 +1964,10 @@ def decode(
         latest_only=latest_only, at_version=at_version,
         on_error=on_error,
     )
-    blocks = _active_blocks(spark, out_dir, as_of_gen)
+    blocks = _active_blocks(spark, out_dir, active=active)
     if columns is not None:
         wanted = [n for n, _ in decode_spec]
         blocks = blocks.filter(F.col("column").isin(wanted))
-    if parts is not None:
-        blocks = blocks.filter(F.col("part_id").isin([int(p) for p in parts]))
     # String zone/Bloom pruning assumes the residual filter compares
     # strings under binary (UTF-8 byte) order — the order (smin, smax)
     # were recorded in at encode.  A session whose DEFAULT COLLATION is

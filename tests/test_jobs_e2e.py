@@ -15,6 +15,8 @@ from deltoid_spark import reference_encoder as ref
 from deltoid_spark.fixtures import codegen
 from deltoid_spark.jobs import assign_partitions, decode, encode, metrics_summary, verify
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture(scope="module")
 def tiny_pdf():
@@ -225,7 +227,7 @@ def test_cli_subcommands_end_to_end(tmp_path_factory):
     base = str(tmp_path_factory.mktemp("cli"))
     script = f"""
 import json, os, sys
-sys.path.insert(0, {repr("/root/repo")})
+sys.path.insert(0, {REPO!r})
 from deltoid_spark.fixtures import codegen
 import deltoid_spark.__main__ as cli
 

@@ -8,6 +8,7 @@ Run: python tools/bytes_audit.py [K]   (default 24 groups)
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import defaultdict
 
@@ -16,7 +17,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from deltoid_spark.fixtures import codegen
 from deltoid_spark.jobs.pipeline import make_encode_kernel

@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Profile the decode kernel single-threaded outside Spark (guide §1).
 Encodes the bench fixture once in-process, then cProfiles
-_decode_partition over every partition's block set."""
+the decode kernel over every partition's block set."""
 
 from __future__ import annotations
 
 import cProfile
 import io
+import os
 import pstats
 import sys
 import time
@@ -16,13 +17,14 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from deltoid_spark.fixtures import codegen  # noqa: E402
 from deltoid_spark.jobs import pipeline as pl  # noqa: E402
 
 
 def main() -> None:
-    tbl = pq.read_table("/root/repo/.fixtures/code_files_bench.parquet")
+    tbl = pq.read_table(codegen.fixture_path("bench"))
     n = tbl.num_rows
     target = max(500, n // 128)
     keys = pd.DataFrame(
@@ -41,13 +43,14 @@ def main() -> None:
         blocks.append(kern(tbl.filter(pa.array(part_of_row == p))))
     print(f"encoded {len(blocks)} partitions")
 
+    decode_kernel = pl.make_decode_kernel(pl.DEFAULT_SPEC)
     pdfs = [b.to_pandas() for b in blocks]
     t0 = time.time()
     prof = cProfile.Profile()
     prof.enable()
     rows = 0
     for pdf in pdfs:
-        out = pl._decode_partition(pdf)
+        out = decode_kernel(pdf)
         rows += len(out)
     prof.disable()
     wall = time.time() - t0

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import cProfile
 import io
+import os
 import pstats
 import sys
 import time
@@ -18,13 +19,14 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from deltoid_spark.fixtures import codegen  # noqa: E402
 from deltoid_spark.jobs.pipeline import make_encode_kernel  # noqa: E402
 
 
 def main() -> None:
-    tbl = pq.read_table("/root/repo/.fixtures/code_files_bench.parquet")
+    tbl = pq.read_table(codegen.fixture_path("bench"))
     n = tbl.num_rows
     target = max(500, n // 128)
     # mirror assign_partitions: group rows by (repo, path) chains into

@@ -116,7 +116,7 @@ def main(argv: list[str] | None = None) -> int:
             if args.where:
                 # '|' wins when present so full timestamps ("…T10:00:00")
                 # survive; bounds pass through as RAW text — decode's
-                # _zbound coerces per the target column's DDL (int(),
+                # _where_value coerces per the target column's DDL (int(),
                 # float(), pd.Timestamp() all parse strings), so an
                 # early int() here would mangle numeric-LOOKING string
                 # bounds ('05' -> 5 -> '5') and change the range applied.

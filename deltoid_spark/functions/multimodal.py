@@ -906,13 +906,11 @@ def decode_features(payload: bytes, kind: str) -> np.ndarray:
     return _decode_external(payload, kind)
 
 
-def extract_features(media: DataFrame, decode_stub: bool | None = None) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary media columns.
 
     Arrow batches stream through the Python worker; each batch is
-    processed column-at-a-time.  BMP/WAV/MJPB payloads decode for real;
-    ``decode_stub`` is retained for API compatibility and ignored (the
-    real decoders are always available)."""
+    processed column-at-a-time.  BMP/WAV/MJPB payloads decode for real."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

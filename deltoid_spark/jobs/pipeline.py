@@ -54,6 +54,7 @@ import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernels import (
     api,
@@ -79,18 +80,26 @@ DEFAULT_KEY_COLS = ("repo", "path")
 DEFAULT_ORDER_COLS = ("commit",)
 DEFAULT_CONTENT_COL = "content"
 
-BLOCK_SCHEMA = (
-    "part_id long, frag_id long, column string, codec string, payload binary, "
-    "n_rows long, raw_bytes long, enc_bytes long, sha256 string, wall_s double, "
-    "run_id string, zmin long, zmax long, smin string, smax string, bloom binary"
-)
-
 ROW_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
-# The engine's metadata tables.  Every read of an engine-owned table
-# passes its schema explicitly: no read spends a schema-inference job,
-# and columns that older files lack read as null — zone maps and Bloom
+# The engine's own tables.  Every read of an engine-owned table passes
+# its schema explicitly: no read spends a schema-inference job, and
+# columns that older files lack read as null — zone maps and Bloom
 # filters then prune nothing, and origin/msg show as null in history().
+# The block table is declared once, in Arrow (the kernels' output);
+# BLOCK_SCHEMA is its Spark form.
+BLOCK_ARROW = pa.schema([
+    ("part_id", pa.int64()), ("frag_id", pa.int64()),
+    ("column", pa.string()), ("codec", pa.string()),
+    ("payload", pa.binary()), ("n_rows", pa.int64()),
+    ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
+    ("sha256", pa.string()), ("wall_s", pa.float64()),
+    ("run_id", pa.string()),
+    ("zmin", pa.int64()), ("zmax", pa.int64()),
+    ("smin", pa.string()), ("smax", pa.string()),
+    ("bloom", pa.binary()),
+])
+BLOCK_SCHEMA = from_arrow_schema(BLOCK_ARROW)
 SPEC_ARROW = pa.schema([
     ("pos", pa.int32()), ("name", pa.string()), ("ddl", pa.string()),
     ("is_key", pa.bool_()), ("is_order", pa.bool_()), ("is_content", pa.bool_()),
@@ -266,6 +275,15 @@ def _float_sortable(a: np.ndarray) -> np.ndarray:
     return v ^ ((v >> 63) & np.int64(0x7FFFFFFFFFFFFFFF))
 
 
+def _float_keys(a: np.ndarray) -> np.ndarray:
+    """Float zone-space keys, shared by the zone maps written at encode
+    and the where= bounds probed at decode.  Signed zeros canonicalize
+    first: Spark/Python compare -0.0 == +0.0 but _float_sortable maps
+    them to -1 and 0 — a block whose max is -0.0 must not be pruned by
+    where=(col, 0.0, None)."""
+    return _float_sortable(np.where(a == 0.0, 0.0, a))
+
+
 def _float_zone(s: pd.Series) -> tuple[int | None, int | None]:
     """(zmin, zmax) for a float/double column in sortable-int64 space;
     NaNs and nulls are excluded (like nulls on int columns), so an
@@ -274,11 +292,7 @@ def _float_zone(s: pd.Series) -> tuple[int | None, int | None]:
     a = a[~np.isnan(a)]
     if len(a) == 0:
         return None, None
-    # canonicalize signed zeros: Spark/Python compare -0.0 == +0.0 but
-    # _float_sortable maps them to -1 and 0 — a block whose max is -0.0
-    # must not be pruned by where=(col, 0.0, None).  Mirrored in _zbound.
-    a = np.where(a == 0.0, 0.0, a)
-    st = _float_sortable(a)
+    st = _float_keys(a)
     return int(st.min()), int(st.max())
 
 
@@ -376,10 +390,6 @@ def _encode_typed(
         None if pd.isna(zmin) else int(zmin),
         None if pd.isna(zmax) else int(zmax),
     )
-
-
-def _map_raw_bytes(s: pd.Series) -> int:
-    return mapdelta_kernel.map_raw_bytes(s)
 
 
 def _group_starts(gsizes: np.ndarray) -> np.ndarray:
@@ -521,7 +531,7 @@ def _encode_rows(
             buf = mapdelta_kernel.encode_mapdelta(
                 s, gsizes, keyframe_interval=keyframe_interval, level=level
             )
-            raw = _map_raw_bytes(s)
+            raw = mapdelta_kernel.map_raw_bytes(s)
             sha = None
         else:
             codec, buf, raw, zmin, zmax = _encode_typed(s, ddl)
@@ -533,20 +543,13 @@ def _encode_rows(
     return out
 
 
-_BLOCK_COLS = [
-    "part_id", "frag_id", "column", "codec", "payload",
-    "n_rows", "raw_bytes", "enc_bytes", "sha256", "wall_s", "run_id",
-    "zmin", "zmax", "smin", "smax", "bloom",
-]
-
-
 def _block_frame(rows: list[tuple]) -> pd.DataFrame:
     """Block rows -> DataFrame with the zone-map columns as EXACT
     nullable Int64 (tuple-list inference would make a None+int column
     float64 and silently truncate |v| >= 2^53 — the same lossy boundary
     ADVICE r02 closed on the data path)."""
-    df = pd.DataFrame(rows, columns=_BLOCK_COLS)
-    zi = _BLOCK_COLS.index("zmin")
+    df = pd.DataFrame(rows, columns=BLOCK_ARROW.names)
+    zi = BLOCK_ARROW.names.index("zmin")
     df["zmin"] = pd.array([r[zi] for r in rows], dtype="Int64")
     df["zmax"] = pd.array([r[zi + 1] for r in rows], dtype="Int64")
     return df
@@ -595,7 +598,7 @@ def make_encode_kernel(
             rows = [_error_row(part_id, 0, len(pdf), exc, run_id, t0)]
         return pa.Table.from_pandas(
             _block_frame(rows),
-            schema=_block_arrow_schema(), preserve_index=False,
+            schema=BLOCK_ARROW, preserve_index=False,
         )
 
     return encode_partition
@@ -660,25 +663,9 @@ def make_fragment_kernel(
             except Exception as exc:  # noqa: BLE001
                 rows.append(_error_row(int(part_id), frag_id, len(sub), exc, run_id, t0))
         out = _block_frame(rows)
-        yield pa.RecordBatch.from_pandas(out, schema=_block_arrow_schema())
+        yield pa.RecordBatch.from_pandas(out, schema=BLOCK_ARROW)
 
     return encode_split
-
-
-def _block_arrow_schema() -> pa.Schema:
-    return pa.schema(
-        [
-            ("part_id", pa.int64()), ("frag_id", pa.int64()),
-            ("column", pa.string()), ("codec", pa.string()),
-            ("payload", pa.binary()), ("n_rows", pa.int64()),
-            ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
-            ("sha256", pa.string()), ("wall_s", pa.float64()),
-            ("run_id", pa.string()),
-            ("zmin", pa.int64()), ("zmax", pa.int64()),
-            ("smin", pa.string()), ("smax", pa.string()),
-            ("bloom", pa.binary()),
-        ]
-    )
 
 
 # ----------------------------------------------------- schema/manifest IO ----
@@ -1156,7 +1143,7 @@ def make_append_kernel(
     def append_partition(left_t: pa.Table, right_t: pa.Table) -> pa.Table:
         t0 = time.time()
         if left_t.num_rows == 0:
-            return _block_arrow_schema().empty_table()
+            return BLOCK_ARROW.empty_table()
         left, arrows = _table_to_pdf(left_t, spec, _arrow_content_col(spec, content_col))
         right = right_t.to_pandas()  # block rows: binary payloads, exact
         part_id = int(left["part_id"].iloc[0])
@@ -1184,7 +1171,7 @@ def make_append_kernel(
             rows = [_error_row(part_id, frag_id, len(left), exc, run_id, t0)]
         return pa.Table.from_pandas(
             _block_frame(rows),
-            schema=_block_arrow_schema(), preserve_index=False,
+            schema=BLOCK_ARROW, preserve_index=False,
         )
 
     return append_partition
@@ -1589,11 +1576,18 @@ def _active_blocks(
     if active is None:
         active = _active_of(_read_manifest(spark, out_dir))
     live = active.loc[active["status"] == "committed", ["part_id", "run_id", "gen"]]
-    blocks = _read_blocks(spark, os.path.join(out_dir, "blocks")).filter(
+    live_df = spark.createDataFrame(live, "part_id long, run_id string, gen long")
+    return _live_run_blocks(spark, out_dir, live).join(
+        F.broadcast(live_df), ["part_id", "run_id"]
+    )
+
+
+def _live_run_blocks(spark: SparkSession, out_dir: str, live: pd.DataFrame) -> DataFrame:
+    """The blocks scan narrowed to the run_id directories of the ``live``
+    (part_id, run_id) fragments."""
+    return _read_blocks(spark, os.path.join(out_dir, "blocks")).filter(
         F.col("run_id").isin(sorted(set(live["run_id"])))
     )
-    live_df = spark.createDataFrame(live, "part_id long, run_id string, gen long")
-    return blocks.join(F.broadcast(live_df), ["part_id", "run_id"])
 
 
 def history(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1621,154 +1615,165 @@ def history(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def _zone_prune(
-    blocks: DataFrame,
-    wcol: str,
-    lo,
-    hi,
-    string_kind: bool = False,
-) -> DataFrame:
-    """Partition pruning via block zone maps: drop every partition in
-    which NO active fragment's [min, max] for ``wcol`` intersects
-    [lo, hi].  Int-family columns prune on (zmin, zmax) in int64
-    storage space; string columns on the UTF-8-byte-order (smin, smax)
-    bounds (see _string_zone — code-point order == UTF-8 byte order ==
-    the pinned UTF8_BINARY collation).  Blocks without zone maps
-    (pre-zone-map tables, all-null fragments, truncation-dropped
-    string extremes) count as possible matches — pruning is
-    only ever an optimization, never a correctness dependency (the
-    residual row filter still applies after decode).
+class _Pred(NamedTuple):
+    """One where= predicate, parsed once (``_parse_where``).  ``lo`` and
+    ``hi`` bound a range, ``points`` is an IN-list; every value is a
+    ``(typed, key)`` pair from ``_where_value``."""
 
-    Headroom bound: the broadcast ``hits`` list is one long per
-    SURVIVING partition — partitions-sized at worst (no predicate
-    selectivity), so <= ~10^6 entries / ~8 MB at 100 TB with >= 100 MB
-    partitions.  Pinned by test_partition_count_headroom_100k."""
-    mn, mx = ("smin", "smax") if string_kind else ("zmin", "zmax")
-    if mn not in blocks.columns:
-        return blocks
-    lit = (lambda v: F.lit(str(v))) if string_kind else (lambda v: F.lit(int(v)))
-    # each bound checks null independently: a one-sided zone (e.g. a
-    # truncation-dropped smax) still prunes on its recorded side
-    upper_ok = (
-        F.lit(True) if hi is None else (F.col(mn).isNull() | (F.col(mn) <= lit(hi)))
-    )
-    lower_ok = (
-        F.lit(True) if lo is None else (F.col(mx).isNull() | (F.col(mx) >= lit(lo)))
-    )
-    cond = upper_ok & lower_ok
-    hits = (
-        blocks.filter(F.col("column") == wcol)
-        .groupBy("part_id")
-        .agg(F.max(F.when(cond, 1).otherwise(0)).alias("hit"))
-        .filter(F.col("hit") == 1)
-        .select("part_id")
-    )
-    return blocks.join(F.broadcast(hits), "part_id", "left_semi")
+    col: str
+    ddl: str
+    lo: tuple | None
+    hi: tuple | None
+    points: list[tuple] | None
+
+
+_WHERE_DDL = {*_INT_DDL, "boolean", "timestamp", "date", "string", "float", "double"}
+
+
+def _where_value(v, ddl: str) -> tuple:
+    """A where= value -> (typed, key).  ``typed`` is the Python value the
+    residual row filter compares with the decoded column; ``key`` is
+    the value in the zone map's space: the int64 storage value for
+    int-family and temporal columns (the mapping _storage_int64 applies
+    at encode), the sortable int64 for floats (_float_keys, as
+    _float_zone), the string itself for strings (smin/smax compare
+    directly under the pinned binary collation)."""
+    if ddl == "string":
+        return str(v), str(v)
+    if ddl in ("float", "double"):
+        f = float(v)
+        return f, int(_float_keys(np.array([f], dtype=np.float64))[0])
+    if ddl == "timestamp":
+        t = pd.Timestamp(v)
+        return t.to_pydatetime(), int(t.value)  # epoch ns
+    if ddl == "date":
+        t = pd.Timestamp(v)
+        return t.date(), int(t.value // _NS_PER_DAY)
+    return int(v), int(v)
+
+
+def _parse_where(where: tuple | list[tuple], spec: list[tuple[str, str]]) -> list[_Pred]:
+    """decode's where= (one tuple or a list of them, ANDed) -> predicates.
+    ``(col, lo, hi)`` is a range (either bound may be None) and
+    ``(col, [v, ...])`` an IN-list.  A string equality range becomes a
+    one-point set, so it prunes through the Bloom filters like an
+    IN-list."""
+    ddls = dict(spec)
+    preds = []
+    for w in ([where] if isinstance(where, tuple) else list(where)):
+        if len(w) == 2:  # (col, [v1, v2, ...]) — IN-list point probes
+            col, vals = w
+            if not isinstance(vals, (list, tuple, set, frozenset)) or not vals:
+                raise ValueError("IN-list where needs (col, non-empty list of values)")
+            if any(v is None for v in vals):
+                raise ValueError("IN-list where values must be non-null")
+            lo = hi = None
+        else:
+            col, lo, hi = w
+            if lo is None and hi is None:
+                raise ValueError("where needs at least one of (lo, hi)")
+            vals = None
+        ddl = ddls.get(col)
+        if ddl is None:
+            raise ValueError(f"where column {col!r} not in table")
+        if ddl not in _WHERE_DDL:
+            raise ValueError(
+                f"where supports int/boolean/timestamp/date/float/double/"
+                f"string columns; {col!r} is {ddl}"
+            )
+        lo, hi = (None if v is None else _where_value(v, ddl) for v in (lo, hi))
+        # deduplicated, and sorted for a deterministic plan/probe order
+        points = None if vals is None else sorted({_where_value(v, ddl) for v in vals})
+        if ddl == "string" and lo is not None and lo == hi:
+            points, lo, hi = [lo], None, None
+        preds.append(_Pred(col, ddl, lo, hi, points))
+    return preds
 
 
 _IN_ZONE_MAX = 64  # per-value zone OR beyond this degrades to one range
 
 
-def _zone_prune_in(
-    blocks: DataFrame, wcol: str, zvals: list, string_kind: bool = False
-) -> DataFrame:
-    """IN-list zone pruning: keep every partition in which ANY probe
-    value can land inside some active fragment's [min, max] for
-    ``wcol`` (per-value containment checks OR'd).  Beyond
-    ``_IN_ZONE_MAX`` values the OR degrades to a single loose
-    [min(values), max(values)] range check — a plan-size guard that is
-    looser but never wrong (the residual ``isin`` filter is exact, same
-    contract as _zone_prune)."""
-    mn, mx = ("smin", "smax") if string_kind else ("zmin", "zmax")
-    if mn not in blocks.columns or not zvals:
-        return blocks
-    if len(zvals) > _IN_ZONE_MAX:
-        return _zone_prune(blocks, wcol, min(zvals), max(zvals), string_kind)
-    lit = (lambda v: F.lit(str(v))) if string_kind else (lambda v: F.lit(int(v)))
-    cond = F.lit(False)
-    for v in zvals:
-        cond = cond | (
-            (F.col(mn).isNull() | (F.col(mn) <= lit(v)))
-            & (F.col(mx).isNull() | (F.col(mx) >= lit(v)))
-        )
+def _where_parts(
+    blocks: DataFrame, preds: list[_Pred], live: pd.DataFrame | None = None
+) -> set[int]:
+    """Partition pruning for where=: the part_ids in which EVERY predicate
+    has a block that can hold a match, from one metadata-only pass over
+    ``blocks`` (no payload is read).  A block of a predicate's column
+    hits when its zone map meets the predicate — (zmin, zmax) in key
+    space for numeric and temporal columns, the UTF-8-byte-ordered
+    (smin, smax) for strings (see _string_zone) — AND, for string point
+    sets, its Bloom filter admits at least one value
+    (kernels/bloom.bloom_maybe_any).  An IN-list beyond ``_IN_ZONE_MAX``
+    values tests one loose [min, max] zone range instead of a per-value
+    OR: a plan-size guard, looser but never wrong.
+
+    Null zone bounds and Bloom filters (older tables, all-null
+    fragments, truncation-dropped string extremes, low-cardinality
+    columns), and columns ``blocks`` lacks, count as possible matches:
+    pruning is only ever an optimization, and the residual row filter
+    after decode keeps exact semantics.  ``live`` (committed
+    (part_id, run_id) fragments) drops the hits of superseded fragments
+    that share a live run's directory.
+
+    Headroom: the collected hit list holds one row per fragment of a
+    predicate column — partitions-sized, so <= ~10^6 rows per column at
+    100 TB with >= 100 MB partitions.  Pinned by
+    test_partition_count_headroom_100k."""
+    have = set(blocks.columns)
+
+    def meets(mn: str, mx: str, lo, hi):
+        # each bound checks null independently: a one-sided zone (e.g.
+        # a truncation-dropped smax) still prunes on its recorded side
+        ok = F.lit(True)
+        if mn not in have:
+            return ok
+        if hi is not None:
+            ok = ok & (F.col(mn).isNull() | (F.col(mn) <= F.lit(hi)))
+        if lo is not None:
+            ok = ok & (F.col(mx).isNull() | (F.col(mx) >= F.lit(lo)))
+        return ok
+
+    hit_cols = []
+    for i, p in enumerate(preds):
+        mn, mx = ("smin", "smax") if p.ddl == "string" else ("zmin", "zmax")
+        if p.points is None:
+            lo, hi = (None if b is None else b[1] for b in (p.lo, p.hi))
+            hit = meets(mn, mx, lo, hi)
+        else:
+            keys = [k for _, k in p.points]
+            if len(keys) > _IN_ZONE_MAX:
+                hit = meets(mn, mx, min(keys), max(keys))
+            else:
+                hit = F.lit(False)
+                for k in keys:
+                    hit = hit | meets(mn, mx, k, k)
+            if p.ddl == "string" and "bloom" in have:
+                hit = hit & _bloom_any(keys)(F.col("bloom"))
+        hit_cols.append(((F.col("column") == p.col) & hit).alias(f"h{i}"))
     hits = (
-        blocks.filter(F.col("column") == wcol)
-        .groupBy("part_id")
-        .agg(F.max(F.when(cond, 1).otherwise(0)).alias("hit"))
-        .filter(F.col("hit") == 1)
-        .select("part_id")
+        blocks.filter(F.col("column").isin(sorted({p.col for p in preds})))
+        .select("part_id", "run_id", *hit_cols)
+        .toPandas()
     )
-    return blocks.join(F.broadcast(hits), "part_id", "left_semi")
+    if live is not None:
+        live = live[["part_id", "run_id"]].astype({"part_id": "int64"})
+        hits = hits.merge(live, on=["part_id", "run_id"])
+    ok = hits.groupby("part_id")[[f"h{i}" for i in range(len(preds))]].any().all(axis=1)
+    return {int(p) for p, keep in ok.items() if keep}
 
 
-def _bloom_prune(blocks: DataFrame, wcol: str, value: str) -> DataFrame:
-    """Point-probe pruning via per-block Bloom filters (kernels/bloom):
-    drop every partition in which EVERY active fragment's filter for
-    ``wcol`` proves ``value`` absent.  Null filters (pre-bloom tables,
-    low-cardinality columns, all-null fragments) count as possible
-    matches — like the zone maps, pruning is an optimization only; the
-    residual row filter after decode keeps exact semantics, so the
-    filter's false-positive rate affects scan cost, never results.
-    Runs distributed over the metadata-sized blocks DataFrame; the
-    probe value ships in the UDF closure."""
-    if "bloom" not in blocks.columns:
-        return blocks
-    from ..kernels.bloom import bloom_maybe
+def _bloom_any(values: list[str]):
+    """pandas UDF over a Bloom column: False only where the filter proves
+    every one of ``values`` absent.  The probe list ships in the
+    closure, and each block answers it with one vectorized FNV sweep."""
 
     @F.pandas_udf("boolean")
-    def _maybe(b: pd.Series) -> pd.Series:
+    def maybe_any(b: pd.Series) -> pd.Series:
         return pd.Series(
-            [True if x is None else bloom_maybe(bytes(x), value) for x in b]
+            [x is None or bloom_kernel.bloom_maybe_any(x, values) for x in b]
         )
 
-    hits = (
-        blocks.filter(F.col("column") == wcol)
-        .select("part_id", "bloom")
-        .withColumn(
-            "hit",
-            F.when(F.col("bloom").isNull(), F.lit(True)).otherwise(
-                _maybe(F.col("bloom"))
-            ),
-        )
-        .groupBy("part_id")
-        .agg(F.max(F.col("hit").cast("int")).alias("h"))
-        .filter(F.col("h") == 1)
-        .select("part_id")
-    )
-    return blocks.join(F.broadcast(hits), "part_id", "left_semi")
-
-
-def _bloom_prune_in(blocks: DataFrame, wcol: str, values: list[str]) -> DataFrame:
-    """IN-list point-probe pruning: drop every partition in which every
-    active fragment's Bloom filter proves ALL probe values absent.  The
-    whole probe list ships in the UDF closure and each block answers it
-    with one vectorized FNV sweep (kernels/bloom.bloom_maybe_any); same
-    optimization-only contract as _bloom_prune."""
-    if "bloom" not in blocks.columns or not values:
-        return blocks
-    from ..kernels.bloom import bloom_maybe_any
-
-    @F.pandas_udf("boolean")
-    def _maybe_any(b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [True if x is None else bloom_maybe_any(bytes(x), values) for x in b]
-        )
-
-    hits = (
-        blocks.filter(F.col("column") == wcol)
-        .select("part_id", "bloom")
-        .withColumn(
-            "hit",
-            F.when(F.col("bloom").isNull(), F.lit(True)).otherwise(
-                _maybe_any(F.col("bloom"))
-            ),
-        )
-        .groupBy("part_id")
-        .agg(F.max(F.col("hit").cast("int")).alias("h"))
-        .filter(F.col("h") == 1)
-        .select("part_id")
-    )
-    return blocks.join(F.broadcast(hits), "part_id", "left_semi")
+    return maybe_any
 
 
 def decode(
@@ -1804,21 +1809,25 @@ def decode(
     requested columns are returned).  parts prunes whole partitions via
     the manifest, the partition-pruning analog.
 
-    where=(col, lo, hi) — or a LIST of such tuples, ANDed — pushes
-    range predicates on int-family or string columns INTO the block
-    scan: partitions whose zone maps (per-block min/max recorded at
-    encode, the A13 Range semantics; UTF-8-byte-ordered smin/smax for
-    strings, unicode included) cannot intersect every predicate's range are pruned
-    before any kernel runs, and a residual row filter restores exact
-    semantics afterwards.  Either bound may be None (open-ended).
-    where=(col, [v1, v2, ...]) is the IN-list form — batch point
-    probes ("fetch these N commits"): a partition survives when ANY
-    value can land in its zones, string columns additionally answer
-    the whole list with one per-block Bloom sweep, and the residual is
-    an exact ``isin``.  Predicate columns are always included in the
-    output (the residual filter reads them).  Tables encoded before
-    zone maps existed decode fine — pruning silently degrades to
-    scan-all.
+    where=(col, lo, hi) — or a LIST of such tuples, ANDed — is a range
+    predicate on an int-family, boolean, float, double, timestamp, date or
+    string column; either bound may be None (open-ended).
+    where=(col, [v1, v2, ...]) is the IN-list form — batch point probes
+    ("fetch these N commits") — and a string equality range (lo == hi)
+    is a one-value IN-list.  Each value is normalized once per column
+    type (``_where_value``).  Before any kernel runs, one metadata-only
+    pass over the live fragments' predicate-column blocks (no payload)
+    decides which partitions to decode: a block hits a predicate when
+    its zone map (per-block min/max recorded at encode, the A13 Range
+    semantics; UTF-8-byte-ordered smin/smax for strings, unicode
+    included) meets the range or any listed value AND, for string
+    IN-lists, its Bloom filter admits some listed value; a partition
+    survives when every predicate has a hitting block.  A residual
+    row filter (range compares, exact ``isin``) then restores exact
+    semantics.  Predicate columns are always included in the output
+    (the residual filter reads them).  Tables encoded before zone maps
+    or Bloom filters existed decode fine — pruning silently degrades
+    to scan-all.
 
     on_error="skip" is READ-side failure isolation (the decode mirror
     of encode's fail-the-partition-not-the-job taxonomy): a partition
@@ -1866,29 +1875,9 @@ def _decode(
         raise ValueError("on_error must be 'raise' or 'skip'")
     if at_version is not None and at_version < 0:
         raise ValueError("at_version must be >= 0")
-    wpreds: list[tuple] = []  # (wcol, wlo, whi, wvals): wvals set for IN-lists
-    if where is not None:
-        for w in ([where] if isinstance(where, tuple) else list(where)):
-            if len(w) == 2:  # (col, [v1, v2, ...]) — IN-list point probes
-                wcol, wvals = w
-                if not isinstance(wvals, (list, tuple, set, frozenset)) or not wvals:
-                    raise ValueError(
-                        "IN-list where needs (col, non-empty list of values)"
-                    )
-                if any(v is None for v in wvals):
-                    raise ValueError("IN-list where values must be non-null")
-                vals = list(dict.fromkeys(wvals))
-                try:  # deterministic plan/probe order when comparable
-                    vals = sorted(vals)
-                except TypeError:
-                    pass
-                wpreds.append((wcol, None, None, vals))
-                continue
-            wcol, wlo, whi = w
-            if wlo is None and whi is None:
-                raise ValueError("where needs at least one of (lo, hi)")
-            wpreds.append((wcol, wlo, whi, None))
     info, _manifest, active = meta
+    spec = info["spec"]
+    preds = [] if where is None else _parse_where(where, spec)
     if strict:
         failed = active[active["status"] == "failed"]
         if len(failed):
@@ -1900,48 +1889,6 @@ def _decode(
             )
     if parts is not None:
         active = active[active["part_id"].isin([int(p) for p in parts])]
-    spec = info["spec"]
-    zpreds: list[tuple] = []  # (wcol, wddl, wlo, whi, zlo, zhi) — ranges
-    ipreds: list[tuple] = []  # (wcol, wddl, vals, zvals) — IN-lists
-    for wcol, wlo, whi, wvals in wpreds:
-        wddl = dict(spec).get(wcol)
-        if wddl is None:
-            raise ValueError(f"where column {wcol!r} not in table")
-        if wddl not in _INT_DDL and wddl not in (
-            "boolean", "timestamp", "date", "string", "float", "double"
-        ):
-            raise ValueError(
-                f"where supports int/boolean/timestamp/date/float/double/"
-                f"string columns; {wcol!r} is {wddl}"
-            )
-
-        def _zbound(v, wddl=wddl):
-            """Predicate bound -> the zone map's comparison space: int64
-            storage values for int-family columns (same mapping
-            _storage_int64 applies at encode), the raw string for
-            string columns (smin/smax compare directly under the pinned
-            binary collation)."""
-            if v is None:
-                return None
-            if wddl == "string":
-                return str(v)
-            if wddl in ("float", "double"):
-                # same sortable-int64 mapping _float_zone applied at
-                # encode, including its signed-zero canonicalization
-                fv = float(v)
-                if fv == 0.0:
-                    fv = 0.0
-                return int(_float_sortable(np.array([fv], dtype=np.float64))[0])
-            if wddl == "timestamp":
-                return int(pd.Timestamp(v).value)  # epoch ns
-            if wddl == "date":
-                return int(pd.Timestamp(v).value // _NS_PER_DAY)
-            return int(v)
-
-        if wvals is not None:
-            ipreds.append((wcol, wddl, wvals, [_zbound(v) for v in wvals]))
-        else:
-            zpreds.append((wcol, wddl, wlo, whi, _zbound(wlo), _zbound(whi)))
     version_prune = latest_only or at_version is not None
     if columns is not None:
         unknown = set(columns) - {n for n, _ in spec}
@@ -1950,7 +1897,7 @@ def _decode(
         internal = set(columns)
         if info["content_col"] in internal or version_prune:
             internal |= set(info["key_cols"])  # chain seeds / version ids
-        wcols = {zp[0] for zp in zpreds} | {ip[0] for ip in ipreds}
+        wcols = {p.col for p in preds}
         internal |= wcols  # the residual filters need their columns
         decode_spec = [(n, d) for n, d in spec if n in internal]
         out_spec = [(n, d) for n, d in spec if n in set(columns) or n in wcols]
@@ -1964,10 +1911,6 @@ def _decode(
         latest_only=latest_only, at_version=at_version,
         on_error=on_error,
     )
-    blocks = _active_blocks(spark, out_dir, active=active)
-    if columns is not None:
-        wanted = [n for n, _ in decode_spec]
-        blocks = blocks.filter(F.col("column").isin(wanted))
     # String zone/Bloom pruning assumes the residual filter compares
     # strings under binary (UTF-8 byte) order — the order (smin, smax)
     # were recorded in at encode.  A session whose DEFAULT COLLATION is
@@ -1987,63 +1930,34 @@ def _decode(
                 string_prune_ok = False
         except Exception:
             pass
-    for wcol, wddl, wlo, whi, zlo, zhi in zpreds:
-        if wddl == "string" and not string_prune_ok:
-            continue
-        # multi-predicate pruning composes: each pass keeps only
-        # partitions whose zones can intersect ITS range, so the
-        # surviving set is the intersection across predicates
-        blocks = _zone_prune(blocks, wcol, zlo, zhi, string_kind=(wddl == "string"))
-        if wddl == "string" and wlo is not None and wlo == whi:
-            # equality probe: zones rarely help on hash-like columns
-            # (commit/path); the per-block Bloom filter does
-            blocks = _bloom_prune(blocks, wcol, str(wlo))
-    for wcol, wddl, vals, zvals in ipreds:
-        if wddl == "string" and not string_prune_ok:
-            continue
-        # IN-list point probes: any-value zone intersection, then (for
-        # string columns) a one-sweep Bloom probe over the whole list
-        blocks = _zone_prune_in(blocks, wcol, zvals, string_kind=(wddl == "string"))
-        if wddl == "string":
-            blocks = _bloom_prune_in(blocks, wcol, [str(v) for v in vals])
+    prunable = [p for p in preds if p.ddl != "string" or string_prune_ok]
+    if prunable:
+        # the surviving partitions narrow the resolved manifest, as
+        # parts= does, so the block selection below stays one join
+        live = active.loc[active["status"] == "committed", ["part_id", "run_id"]]
+        keep = _where_parts(_live_run_blocks(spark, out_dir, live), prunable, live)
+        active = active[active["part_id"].isin(keep)]
+    blocks = _active_blocks(spark, out_dir, active=active)
+    if columns is not None:
+        wanted = [n for n, _ in decode_spec]
+        blocks = blocks.filter(F.col("column").isin(wanted))
 
     def _residual(df: DataFrame) -> DataFrame:
-        if not zpreds and not ipreds:
+        if not preds:
             return df
-        # the zone maps pruned PARTITIONS; exact row semantics come
-        # from this residual filter (AND across predicates) over the
-        # decoded columns (timestamp/date bounds compare natively)
-        pred = F.lit(True)
-        for wcol, wddl, wlo, whi, _zlo, _zhi in zpreds:
-
-            def _lit(v, wddl=wddl):
-                if wddl == "string":
-                    return F.lit(str(v))
-                if wddl in ("float", "double"):
-                    return F.lit(float(v))
-                if wddl == "timestamp":
-                    return F.lit(pd.Timestamp(v).to_pydatetime())
-                if wddl == "date":
-                    return F.lit(pd.Timestamp(v).date())
-                return F.lit(int(v))
-
-            if wlo is not None:
-                pred = pred & (F.col(wcol) >= _lit(wlo))
-            if whi is not None:
-                pred = pred & (F.col(wcol) <= _lit(whi))
-        for wcol, wddl, vals, _zvals in ipreds:
-            if wddl == "string":
-                pyvals = [str(v) for v in vals]
-            elif wddl in ("float", "double"):
-                pyvals = [float(v) for v in vals]
-            elif wddl == "timestamp":
-                pyvals = [pd.Timestamp(v).to_pydatetime() for v in vals]
-            elif wddl == "date":
-                pyvals = [pd.Timestamp(v).date() for v in vals]
-            else:
-                pyvals = [int(v) for v in vals]
-            pred = pred & F.col(wcol).isin(pyvals)
-        return df.filter(pred)
+        # pruning dropped PARTITIONS; exact row semantics come from this
+        # residual filter (AND across predicates) over the decoded
+        # columns (timestamp/date bounds compare natively)
+        cond = F.lit(True)
+        for p in preds:
+            c = F.col(p.col)
+            if p.points is not None:
+                cond = cond & c.isin([v for v, _ in p.points])
+            if p.lo is not None:
+                cond = cond & (c >= F.lit(p.lo[0]))
+            if p.hi is not None:
+                cond = cond & (c <= F.lit(p.hi[0]))
+        return df.filter(cond)
 
     # applyInArrow, not applyInPandas: the return boundary mirrors the
     # encode side — we own the pandas -> Arrow conversion, so NaN inside

@@ -26,8 +26,10 @@ per-value md5 formulation cost ~120 ms).
 Sizing: ~10 bits per DISTINCT key, k=4 probes (FPR ~1%), clamped to
 [1 Ki, 256 Ki] bits -> at most 32 KiB of metadata per (partition,
 column); at 100 TB with >= 100 MB partitions that is <= ~0.06% of data
-size, and the prune runs distributed over the blocks DataFrame (the
-probe ships as one broadcast literal), never through a driver loop.
+size.  Filters never reach the driver: decode's one prune pass
+(``jobs/pipeline._where_parts``) probes them distributed over the
+blocks DataFrame with ``bloom_maybe_any``, together with the zone test
+of the same block, and collects only the partitions-sized hit list.
 Low-cardinality columns (repo, lang; <= 64 distincts) skip the filter
 — their zone maps and dictionary blocks already answer point probes.
 """
@@ -141,23 +143,12 @@ def bloom_build(arr: pa.Array) -> bytes | None:
     return np.packbits(bits, bitorder="little").tobytes()
 
 
-def bloom_maybe(bloom: bytes | None, value: str) -> bool:
-    """False ONLY when the filter proves ``value`` absent from the
-    block; None/empty filters answer True (possible)."""
-    if not bloom:
-        return True
-    m_bits = len(bloom) * 8
-    mat, lens = _byte_matrix([value.encode("utf-8")])
-    h1, h2 = _fnv_pair_matrix(mat, lens)
-    bits = np.unpackbits(np.frombuffer(bloom, dtype=np.uint8), bitorder="little")
-    return bool(bits[_positions_vec(h1, h2, m_bits).reshape(-1)].all())
-
-
 def bloom_maybe_any(bloom: bytes | None, values: list[str]) -> bool:
-    """IN-list probe: False ONLY when the filter proves EVERY value
-    absent.  One padded byte matrix + FNV column sweep covers the whole
-    probe list (same kernels as bloom_build), so a K-value probe costs
-    one vectorized pass, not K python round-trips."""
+    """False ONLY when the filter proves EVERY value absent from the
+    block; None/empty filters answer True (possible), and a point probe
+    is a one-value list.  One padded byte matrix + FNV column sweep
+    covers the whole probe list (same kernels as bloom_build), so a
+    K-value probe costs one vectorized pass, not K python round-trips."""
     if not bloom:
         return True
     if not values:

@@ -1839,7 +1839,7 @@ FROM events GROUP BY 1, 2 ORDER BY day, event_type
 
 def _q23_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.synthesize_media(spark, n=64)
-    feats = multimodal.extract_features(media, decode_stub=True)
+    feats = multimodal.extract_features(media)
     return feats.select(
         "media_id", "kind", "n_bytes", F.size("feature").cast("long").alias("dim")
     ).orderBy("media_id")
@@ -2037,16 +2037,12 @@ _SPLIT: dict[str, tuple[Callable, str]] = {
     "q60_in_list_decode": (_q60_in_list_decode, _Q60_ORACLE),
 }
 
-_SPARK_ONLY: dict[str, Callable] = {}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name, (tables, sql) in _SHARED.items():
         out[name] = _shared_sql(tables, sql)
     for name, (fn, _oracle) in _SPLIT.items():
         out[name] = fn
-    out.update(_SPARK_ONLY)
     return out
 
 

@@ -21,7 +21,7 @@ import pytest
 
 from deltoid_spark.fixtures import codegen
 from deltoid_spark.jobs import compact, decode, encode, encode_append, history, vacuum, verify
-from deltoid_spark.jobs.pipeline import _active_blocks, _zone_prune
+from deltoid_spark.jobs.pipeline import DEFAULT_SPEC, _active_blocks, _parse_where, _where_parts
 
 ZONE_COLS = ["zmin", "zmax", "smin", "smax", "bloom"]
 
@@ -55,6 +55,12 @@ def _parts(blocks) -> set[int]:
     return {r["part_id"] for r in blocks.select("part_id").distinct().collect()}
 
 
+def _pruned(spark, out: str, where) -> set[int]:
+    """The partitions decode(where=) keeps, over the live fragments."""
+    preds = _parse_where(where, DEFAULT_SPEC)
+    return _where_parts(_active_blocks(spark, out), preds)
+
+
 def test_older_footers_read_as_null(spark, split_batches, tmp_path_factory):
     pdf, a, b = split_batches
     out = str(tmp_path_factory.mktemp("legacy"))
@@ -65,8 +71,7 @@ def test_older_footers_read_as_null(spark, split_batches, tmp_path_factory):
     # control: on the fresh table the repo zone maps prune partitions
     all_parts = _parts(_active_blocks(spark, out))
     assert len(all_parts) >= 3
-    fresh = _zone_prune(_active_blocks(spark, out), "repo", lo, hi, string_kind=True)
-    assert _parts(fresh) < all_parts
+    assert _pruned(spark, out, ("repo", lo, hi)) < all_parts
 
     # the base run as an older writer left it: blocks without zone maps
     # and Bloom filters, manifest without origin/msg
@@ -85,8 +90,7 @@ def test_older_footers_read_as_null(spark, split_batches, tmp_path_factory):
     # pruning falls back to scanning every partition that holds a base
     # fragment (its zones read as null), and the residual filter keeps
     # the rows exact
-    legacy = _zone_prune(_active_blocks(spark, out), "repo", lo, hi, string_kind=True)
-    assert _parts(legacy) == all_parts
+    assert _pruned(spark, out, ("repo", lo, hi)) == all_parts
     got = sorted(r["commit"] for r in decode(spark, out, where=("repo", lo, hi)).collect())
     want = sorted(pdf.loc[(pdf["repo"] >= lo) & (pdf["repo"] <= hi), "commit"])
     assert got == want
@@ -117,9 +121,13 @@ def test_older_footers_read_as_null(spark, split_batches, tmp_path_factory):
 # tables are now read and written on the driver, so what remains is
 # data work: the input scan, the kernel shuffles and block writes, the
 # broadcast joins of the partition map and the active manifest, and the
-# manifest aggregate; see README "Metadata plane".
-MAX_JOBS = {"encode": 9, "decode": 3, "append": 10, "compact": 6}
-
+# manifest aggregate; see README "Metadata plane".  A where= read adds
+# one job to a decode: the single prune pass that collects the hit
+# list.  Separate zone and Bloom passes, each with its own aggregate and
+# broadcast join, took lookup 8 and range_read 6 jobs here.
+MAX_JOBS = {
+    "encode": 9, "decode": 3, "append": 10, "lookup": 5, "range_read": 5, "compact": 6,
+}
 
 
 def test_jobs_per_operation(spark, split_batches, tmp_path_factory):
@@ -129,10 +137,19 @@ def test_jobs_per_operation(spark, split_batches, tmp_path_factory):
     codegen.write_parquet(a, os.path.join(src, "a.parquet"))
     codegen.write_parquet(b, os.path.join(src, "b.parquet"))
     sc = spark.sparkContext
+    commits = [str(c) for c in b["commit"].iloc[::400]]
+    lo, hi = sorted(a["repo"].unique())[:2]
+
+    def read(**kw):
+        decode(spark, out, **kw).write.format("noop").mode("overwrite").save()
+
     ops = {
         "encode": lambda: encode(spark, os.path.join(src, "a.parquet"), out, target_rows=500),
-        "decode": lambda: decode(spark, out).write.format("noop").mode("overwrite").save(),
+        "decode": lambda: read(),
         "append": lambda: encode_append(spark, os.path.join(src, "b.parquet"), out),
+        # after the append, so partitions hold two fragments
+        "lookup": lambda: read(where=("commit", commits)),
+        "range_read": lambda: read(where=("repo", lo, hi)),
         "compact": lambda: compact(spark, out),
     }
     counts = {}
@@ -147,3 +164,37 @@ def test_jobs_per_operation(spark, split_batches, tmp_path_factory):
         sc.setLocalProperty("spark.job.description", None)
     assert all(counts[k] <= MAX_JOBS[k] for k in MAX_JOBS), counts
 
+
+def test_where_prunes_multi_fragment_partitions(spark, split_batches, tmp_path_factory):
+    """decode(where=) after an append: a partition survives when any of
+    its live fragments can hold a match, and predicates AND."""
+    pdf, a, b = split_batches
+    out = str(tmp_path_factory.mktemp("multifrag"))
+    encode(spark, spark.createDataFrame(a), out, target_rows=500)
+    encode_append(spark, spark.createDataFrame(b), out)
+    frags = _active_blocks(spark, out).select("part_id", "run_id").distinct()
+    assert frags.groupBy("part_id").count().filter("count = 2").count() > 0
+
+    # a commit that only the appended fragment holds
+    v = str(b["commit"].iloc[0])
+    assert v not in set(a["commit"])
+    got = decode(spark, out, with_part_id=True, where=("commit", [v])).collect()
+    assert [r["commit"] for r in got] == [v]
+    assert got[0]["part_id"] in _pruned(spark, out, ("commit", [v]))
+
+    # an absent commit prunes every partition
+    absent = "00000000" + "8" + "0" * 31
+    assert absent not in set(pdf["commit"])
+    assert _pruned(spark, out, ("commit", [absent])) == set()
+    assert decode(spark, out, where=("commit", [absent])).count() == 0
+
+    # an equality range is a one-point set; predicates on one column AND
+    pv = _pruned(spark, out, ("commit", [v]))
+    assert _pruned(spark, out, ("commit", v, v)) == pv
+    w = str(a["commit"].iloc[-1])
+    pw = _pruned(spark, out, ("commit", [w]))
+    assert _pruned(spark, out, [("commit", [v]), ("commit", [w])]) == pv & pw
+    assert decode(spark, out, where=[("commit", [v]), ("commit", [w])]).count() == 0
+    assert _pruned(spark, out, [("commit", [v, w]), ("commit", [w])]) == pw
+    both = decode(spark, out, where=[("commit", [v, w]), ("commit", [w])]).collect()
+    assert [r["commit"] for r in both] == [w]

@@ -630,7 +630,7 @@ def test_partition_count_headroom_100k(spark, tmp_path_factory):
     """10^5-partition metadata smoke test: every partitions-sized
     driver/broadcast structure survives 100k partitions with correct
     results — the partition map (write -> read-back -> broadcast apply)
-    and the zone-map prune's surviving-part_id broadcast.  This pins
+    and the where= prune pass's partitions-sized hit list.  This pins
     the 100x scale story for the metadata paths without paying a 10^5-
     partition encode (the data path is partition-local by design)."""
     import numpy as np
@@ -639,9 +639,10 @@ def test_partition_count_headroom_100k(spark, tmp_path_factory):
     from deltoid_spark.jobs.partitioning import apply_partition_map
     from deltoid_spark.jobs.pipeline import (
         BLOCK_SCHEMA,
+        _parse_where,
         _read_partition_map,
+        _where_parts,
         _write_partition_map,
-        _zone_prune,
     )
 
     P = 100_000
@@ -658,8 +659,8 @@ def test_partition_count_headroom_100k(spark, tmp_path_factory):
         }
     )
     blocks = spark.createDataFrame(pdf, BLOCK_SCHEMA)
-    hit = _zone_prune(blocks, "size", 500_000, 509_999)
-    ids = sorted(r["part_id"] for r in hit.select("part_id").distinct().collect())
+    preds = _parse_where(("size", 500_000, 509_999), [("size", "bigint")])
+    ids = sorted(_where_parts(blocks, preds))
     assert ids == list(range(5000, 5100))
 
     # --- partition map: 100k salted giants round-trip + broadcast apply
@@ -994,7 +995,7 @@ def test_bloom_point_lookup_pruning(spark, tmp_path_factory):
     import pyspark.sql.functions as F
 
     from deltoid_spark.jobs import decode, encode
-    from deltoid_spark.jobs.pipeline import _active_blocks, _bloom_prune, _zone_prune
+    from deltoid_spark.jobs.pipeline import _active_blocks, _parse_where, _where_parts
 
     rows = []
     commits = {}
@@ -1014,20 +1015,26 @@ def test_bloom_point_lookup_pruning(spark, tmp_path_factory):
 
     probe = commits[1234]
     blocks = _active_blocks(spark, out, None)
+    # zone maps alone: the same blocks with every Bloom filter null
+    zone_blocks = blocks.withColumn("bloom", F.lit(None).cast("binary"))
 
     def parts(b):
         return {r["part_id"] for r in b.select("part_id").distinct().collect()}
 
-    zone_only = _zone_prune(blocks, "commit", probe, probe, string_kind=True)
-    assert len(parts(zone_only)) == nparts  # zones CANNOT prune interleaved hex
-    bloomed = _bloom_prune(zone_only, "commit", probe)
-    surv = parts(bloomed)
+    def pruned(b, v):
+        return _where_parts(b, _parse_where(("commit", v, v), [("commit", "string")]))
+
+    zone_only = pruned(zone_blocks, probe)
+    assert len(zone_only) == nparts  # zones CANNOT prune interleaved hex
+    surv = pruned(blocks, probe)
     assert len(surv) < nparts  # the bloom is what prunes
 
-    # absent probe inside the global hex range: every partition proven out
-    absent = "f" * 31 + "0"
+    # absent probe inside every partition's zone: the bloom proves it out
+    # everywhere
+    absent = "8" + "0" * 31
     assert absent not in set(commits.values())
-    assert parts(_bloom_prune(blocks, "commit", absent)) == set()
+    assert len(pruned(zone_blocks, absent)) == nparts
+    assert pruned(blocks, absent) == set()
 
     # end-to-end exactness through decode(where=)
     got = decode(spark, out, where=("commit", probe, probe)).collect()
@@ -1043,7 +1050,7 @@ def test_bloom_point_lookup_pruning(spark, tmp_path_factory):
 
     # tables whose block schema predates the bloom column: no-op prune
     legacy = blocks.drop("bloom")
-    assert parts(_bloom_prune(legacy, "commit", absent)) == parts(legacy)
+    assert pruned(legacy, absent) == parts(legacy)
 
 
 def test_string_prune_disabled_under_non_binary_collation(spark, tmp_path_factory):

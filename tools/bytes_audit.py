@@ -1,6 +1,6 @@
 """Where-the-bytes-go audit: per-column encoded size over the bench
 fixture (no Spark — runs the encode kernel directly over the first K
-repo-hash groups, like tools/profile_encode.py).  Reproduces the
+repo-hash groups).  Reproduces the
 BASELINE.md "Round-6 where-the-bytes-go audit" table.
 
 Run: python tools/bytes_audit.py [K]   (default 24 groups)

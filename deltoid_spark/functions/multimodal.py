@@ -26,7 +26,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, width int, height int, "
@@ -1079,14 +1079,14 @@ def media_near_dup_pairs(
         raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
     k = max_hamming + 1
     offs = [(64 * i) // k for i in range(k + 1)]
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(F.col("dhash"), offs[b])
-            .bitwiseAND(F.lit((1 << (offs[b + 1] - offs[b])) - 1)).alias("v"),
-        )
-        for b in range(k)
-    ]
+
+    def band(b: int) -> Column:
+        v = F.shiftrightunsigned(F.col("dhash"), offs[b])
+        width = offs[b + 1] - offs[b]
+        # a 64-bit band is the whole hash; its mask would overflow a long
+        return v if width == 64 else v.bitwiseAND(F.lit((1 << width) - 1))
+
+    bands = [F.struct(F.lit(b).alias("band"), band(b).alias("v")) for b in range(k)]
     banded = (
         hashed.filter(F.col("dhash").isNotNull())
         .select("media_id", "dhash", F.explode(F.array(*bands)).alias("bh"))

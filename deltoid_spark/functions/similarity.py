@@ -349,30 +349,14 @@ def ivf_assignments(emb: DataFrame, n_lists: int = 8) -> DataFrame:
     return emb.select("vec_id", list_id_col(cents).alias("list_id"))
 
 
-_ASSIGN_EXPR_MAX_LISTS = 64
-
-
 def list_id_col(cents: list[tuple[int, list[float]]]) -> Column:
-    """Nearest-centroid list assignment as a Column, size-gated
-    (same shape as the portable-hash switch in functions/hashing.py):
-
-    * <= _ASSIGN_EXPR_MAX_LISTS centroids: the exact-sequential Arrow
-      kernel (_list_id_seq, since r07) — every cosine in the literal
-      fold's IEEE order, so doubles match _list_id_expr and the DuckDB
-      oracle bit-for-bit (q29/q42 green), with a plan that stays FLAT
-      in n_lists instead of growing a literal array per centroid.
-      _list_id_expr remains as the executable spec / A/B reference.
-    * larger codebooks: an Arrow-batched pandas_udf over a broadcast
-      numpy centroid matrix (_list_id_pandas) — one BLAS matmul per
-      batch.  Tie-break matches (cos desc, cid asc).  numpy's pairwise
-      summation can differ from the sequential fold in the last ulp,
-      so exact-oracle paths (q29/q42, n_lists=8) stay on the seq side
-      of the gate; at n_lists where this path engages there is no
-      cross-engine oracle to disagree with.
-    """
-    if len(cents) <= _ASSIGN_EXPR_MAX_LISTS:
-        return _list_id_seq(cents)(F.col("embedding").cast("array<double>"))
-    return _list_id_pandas(cents)(F.col("embedding").cast("array<double>"))
+    """Nearest-centroid list assignment as a Column: the
+    exact-sequential Arrow kernel (_list_id_seq) at every codebook
+    size — every cosine in the literal fold's IEEE order, so doubles
+    match _list_id_expr (the executable spec) and the DuckDB oracle
+    bit-for-bit (q29/q42 green), with a plan that stays FLAT in n_lists
+    instead of growing a literal array per centroid."""
+    return _list_id_seq(cents)(F.col("embedding").cast("array<double>"))
 
 
 def _list_id_seq(cents: list[tuple[int, list[float]]]):
@@ -406,25 +390,6 @@ def _list_id_seq(cents: list[tuple[int, list[float]]]):
             res = res.astype(object)
             res[isnull] = None
         return res
-
-    return assign
-
-
-def _list_id_pandas(cents: list[tuple[int, list[float]]]):
-    from pyspark.sql.functions import pandas_udf
-
-    order = sorted(cents, key=lambda t: t[0])  # argmax first-hit = cid asc
-    cids = np.array([cid for cid, _ in order], dtype=np.int64)
-    m = np.array([cv for _, cv in order], dtype=np.float64)
-    mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-
-    @pandas_udf("bigint")
-    def assign(embs: pd.Series) -> pd.Series:
-        v = np.asarray(embs.tolist(), dtype=np.float64)
-        norms = np.linalg.norm(v, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        sims = (v / norms) @ mn.T
-        return pd.Series(cids[sims.argmax(axis=1)])
 
     return assign
 

@@ -30,9 +30,12 @@ resolve each part_id to its latest generation.  A partition whose
 kernel raises emits a single ``codec="error"`` block row -> manifest
 ``status="failed"`` with the error text; the job completes, decode
 skips the partition, and a re-run re-encodes exactly the failed /
-missing partitions.  Because decode joins blocks on (part_id, run_id),
-fragments torn off by a crashed run can never mix with a later run's
-fragments (whatever the input split layout) — in any mode.
+missing partitions.  Compaction is the exception: it rewrites data
+that is already committed, so a failing partition fails the whole run
+and leaves the manifest untouched.  Because decode joins blocks on
+(part_id, run_id), fragments torn off by a crashed run can never mix
+with a later run's fragments (whatever the input split layout) — in
+any mode.
 
 Zero per-row Python: the only JVM<->Python boundary is Arrow batches
 into the kernels.
@@ -543,24 +546,65 @@ def _encode_rows(
     return out
 
 
-def _block_frame(rows: list[tuple]) -> pd.DataFrame:
-    """Block rows -> DataFrame with the zone-map columns as EXACT
-    nullable Int64 (tuple-list inference would make a None+int column
-    float64 and silently truncate |v| >= 2^53 — the same lossy boundary
-    ADVICE r02 closed on the data path)."""
-    df = pd.DataFrame(rows, columns=BLOCK_ARROW.names)
-    zi = BLOCK_ARROW.names.index("zmin")
-    df["zmin"] = pd.array([r[zi] for r in rows], dtype="Int64")
-    df["zmax"] = pd.array([r[zi + 1] for r in rows], dtype="Int64")
-    return df
+def _slice_encoder(
+    spec: list[tuple[str, str]],
+    key_cols: tuple[str, ...],
+    order_cols: tuple[str, ...],
+    content_col: str | None,
+    keyframe_interval: int = 32,
+    level: int | None = None,
+    run_id: str = "local",
+    fail_inject: str | None = None,
+    isolate: bool = True,
+):
+    """The one encode path every kernel (encode, fragment, append,
+    compact) runs: ``encode_slice(tbl, part_id, frag_id, prior)`` turns
+    one partition's rows, in any order, into its block rows.  It sorts
+    them on the key and order columns, permutes the Arrow content
+    column alike, and encodes the slice; ``prior`` block rows (a
+    partition's stored fragments) are replayed first so the slice's
+    chains continue theirs.
 
+    ``isolate`` is the failure taxonomy: a slice that raises becomes one
+    ``codec="error"`` block row (manifest ``status="failed"``) — "fail
+    the partition, not the job" (reference taxonomy error.rs).  Without
+    it the error propagates and fails the job."""
+    sort_cols = [*key_cols, *order_cols]
+    arrow_cols = _arrow_content_col(spec, content_col)
 
-def _error_row(part_id: int, frag_id: int, n_rows: int, exc: Exception, run_id: str, t0: float) -> tuple:
-    """A failed partition becomes one manifest-visible error record —
-    "fail the partition, not the job" (reference taxonomy error.rs)."""
-    msg = f"{type(exc).__name__}: {exc}".encode("utf-8", "replace")[:4096]
-    return (part_id, frag_id, "*", "error", msg, n_rows, 0, 0, None,
-            time.time() - t0, run_id, None, None, None, None, None)
+    def encode_slice(
+        tbl: pa.Table, part_id: int, frag_id: int, prior: pd.DataFrame | None = None
+    ) -> pa.Table:
+        t0 = time.time()
+        pdf, arrows = _table_to_pdf(tbl, spec, arrow_cols)
+        try:
+            if fail_inject is not None and (pdf[key_cols[0]] == fail_inject).any():
+                raise RuntimeError(f"injected failure for {fail_inject!r}")
+            tails = tail_counts = None
+            if prior is not None:
+                _rows, tails, tail_counts = _decode_fragments(
+                    prior, spec, key_cols, content_col
+                )
+            pdf = pdf.sort_values(sort_cols, kind="mergesort")
+            content = None
+            if arrows:
+                content = arrows[content_col].take(pa.array(pdf.index.to_numpy(dtype=np.int64)))
+            rows = _encode_rows(
+                pdf.reset_index(drop=True), part_id, frag_id, spec, key_cols,
+                content_col, keyframe_interval, level, run_id, t0,
+                tails=tails, tail_counts=tail_counts, content_arr=content,
+            )
+        except Exception as exc:  # noqa: BLE001 — isolation is the point
+            if not isolate:
+                raise
+            msg = f"{type(exc).__name__}: {exc}".encode("utf-8", "replace")[:4096]
+            rows = [(part_id, frag_id, "*", "error", msg, len(pdf), 0, 0, None,
+                     time.time() - t0, run_id, None, None, None, None, None)]
+        return pa.Table.from_pylist(
+            [dict(zip(BLOCK_ARROW.names, r)) for r in rows], schema=BLOCK_ARROW
+        )
+
+    return encode_slice
 
 
 def make_encode_kernel(
@@ -573,33 +617,15 @@ def make_encode_kernel(
     run_id: str = "local",
     fail_inject: str | None = None,
 ):
-    spec = spec or DEFAULT_SPEC
-    sort_cols = [*key_cols, *order_cols]
+    """groupBy(part_id).applyInArrow kernel: one whole partition -> its
+    block rows (fragment 0)."""
+    encode_slice = _slice_encoder(
+        spec or DEFAULT_SPEC, key_cols, order_cols, content_col,
+        keyframe_interval, level, run_id, fail_inject,
+    )
 
     def encode_partition(tbl: pa.Table) -> pa.Table:
-        t0 = time.time()
-        pdf, arrows = _table_to_pdf(tbl, spec, _arrow_content_col(spec, content_col))
-        part_id = int(pdf["part_id"].iloc[0])
-        try:
-            if fail_inject is not None and (pdf[key_cols[0]] == fail_inject).any():
-                raise RuntimeError(f"injected failure for {fail_inject!r}")
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            content_arr = None
-            if arrows:
-                perm = pa.array(pdf.index.to_numpy(dtype=np.int64))
-                content_arr = arrows[content_col].take(perm)
-            pdf = pdf.reset_index(drop=True)
-            rows = _encode_rows(
-                pdf, part_id, 0, spec, key_cols, content_col,
-                keyframe_interval, level, run_id, t0,
-                content_arr=content_arr,
-            )
-        except Exception as exc:  # noqa: BLE001 — isolation is the point
-            rows = [_error_row(part_id, 0, len(pdf), exc, run_id, t0)]
-        return pa.Table.from_pandas(
-            _block_frame(rows),
-            schema=BLOCK_ARROW, preserve_index=False,
-        )
+        return encode_slice(tbl, tbl.column("part_id")[0].as_py(), 0)
 
     return encode_partition
 
@@ -615,13 +641,14 @@ def make_fragment_kernel(
     fail_inject: str | None = None,
 ):
     """mapInArrow kernel for *clustered* mode: encode each input split
-    in place (no shuffle).  The split's rows are sorted and grouped by
-    part_id locally; each (part_id, split) slice becomes a block
+    in place (no shuffle).  Each (part_id, split) slice becomes a block
     *fragment*.  Chains crossing split boundaries simply start a new
     keyframe — a bounded ratio cost, zero data movement.
     """
-    spec = spec or DEFAULT_SPEC
-    sort_cols = [*key_cols, *order_cols]
+    encode_slice = _slice_encoder(
+        spec or DEFAULT_SPEC, key_cols, order_cols, content_col,
+        keyframe_interval, level, run_id, fail_inject,
+    )
 
     def encode_split(batches):
         from pyspark import TaskContext
@@ -630,40 +657,11 @@ def make_fragment_kernel(
         tables = list(batches)
         if not tables:
             return
-        t0 = time.time()
-        pdf, arrows = _table_to_pdf(
-            pa.Table.from_batches(tables), spec, _arrow_content_col(spec, content_col)
-        )
-        pdf = pdf.sort_values(["part_id", *sort_cols], kind="mergesort")
-        content_sorted = None
-        if arrows:
-            content_sorted = arrows[content_col].take(
-                pa.array(pdf.index.to_numpy(dtype=np.int64))
-            )
-        pdf = pdf.reset_index(drop=True)
-        rows: list[tuple] = []
-        for part_id, sub in pdf.groupby("part_id", sort=True):
-            pos = sub.index.to_numpy(dtype=np.int64)
-            sub = sub.reset_index(drop=True)
-            try:
-                if fail_inject is not None and (sub[key_cols[0]] == fail_inject).any():
-                    raise RuntimeError(f"injected failure for {fail_inject!r}")
-                carr = (
-                    content_sorted.take(pa.array(pos))
-                    if content_sorted is not None
-                    else None
-                )
-                rows.extend(
-                    _encode_rows(
-                        sub, int(part_id), frag_id, spec, key_cols,
-                        content_col, keyframe_interval, level, run_id, t0,
-                        content_arr=carr,
-                    )
-                )
-            except Exception as exc:  # noqa: BLE001
-                rows.append(_error_row(int(part_id), frag_id, len(sub), exc, run_id, t0))
-        out = _block_frame(rows)
-        yield pa.RecordBatch.from_pandas(out, schema=BLOCK_ARROW)
+        tbl = pa.Table.from_batches(tables)
+        pids = tbl.column("part_id").to_numpy()
+        for part_id in np.unique(pids):
+            sub = tbl.filter(pa.array(pids == part_id))
+            yield from encode_slice(sub, int(part_id), frag_id).to_batches()
 
     return encode_split
 
@@ -1138,40 +1136,18 @@ def make_append_kernel(
     as a continuation fragment whose chain groups delta against those
     tails (reference ``push_snapshot``, delta.rs:108-125).
     """
-    sort_cols = [*key_cols, *order_cols]
+    encode_slice = _slice_encoder(
+        spec, key_cols, order_cols, content_col, keyframe_interval, level,
+        run_id, fail_inject,
+    )
 
     def append_partition(left_t: pa.Table, right_t: pa.Table) -> pa.Table:
-        t0 = time.time()
         if left_t.num_rows == 0:
             return BLOCK_ARROW.empty_table()
-        left, arrows = _table_to_pdf(left_t, spec, _arrow_content_col(spec, content_col))
         right = right_t.to_pandas()  # block rows: binary payloads, exact
-        part_id = int(left["part_id"].iloc[0])
         frag_id = int(right["frag_id"].max()) + 1 if len(right) else 0
-        try:
-            if fail_inject is not None and (left[key_cols[0]] == fail_inject).any():
-                raise RuntimeError(f"injected failure for {fail_inject!r}")
-            _rows, tails, tail_counts = _decode_fragments(
-                right, spec, key_cols, content_col
-            )
-            pdf = left.sort_values(sort_cols, kind="mergesort")
-            content_arr = None
-            if arrows:
-                content_arr = arrows[content_col].take(
-                    pa.array(pdf.index.to_numpy(dtype=np.int64))
-                )
-            pdf = pdf.reset_index(drop=True)
-            rows = _encode_rows(
-                pdf, part_id, frag_id, spec, key_cols, content_col,
-                keyframe_interval, level, run_id, t0,
-                tails=tails, tail_counts=tail_counts,
-                content_arr=content_arr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            rows = [_error_row(part_id, frag_id, len(left), exc, run_id, t0)]
-        return pa.Table.from_pandas(
-            _block_frame(rows),
-            schema=BLOCK_ARROW, preserve_index=False,
+        return encode_slice(
+            left_t, left_t.column("part_id")[0].as_py(), frag_id, prior=right
         )
 
     return append_partition
@@ -1276,45 +1252,76 @@ def encode_append(
     return _manifest_active(spark, os.path.join(out_dir, "manifest"))
 
 
+def make_compact_kernel(
+    spec: list[tuple[str, str]],
+    key_cols: tuple[str, ...],
+    order_cols: tuple[str, ...],
+    content_col: str | None,
+    run_id: str,
+):
+    """groupBy(part_id) kernel over one partition's active blocks: replay
+    its fragments (``_decode_fragments``) and encode the rows as one
+    fresh fragment.  The rows take the Arrow form ``decode`` hands Spark
+    (``_pdf_to_arrow``), the form an encode kernel reads back, so the
+    payloads are the bytes ``make_encode_kernel`` makes of the
+    partition's decoded rows.  Failures are not isolated: a partition
+    that cannot be replayed or re-encoded fails the job."""
+    encode_slice = _slice_encoder(
+        spec, key_cols, order_cols, content_col, run_id=run_id, isolate=False
+    )
+
+    def compact_partition(tbl: pa.Table) -> pa.Table:
+        blocks = tbl.to_pandas()
+        rows, _tails, _counts = _decode_fragments(blocks, spec, key_cols, content_col)
+        return encode_slice(_pdf_to_arrow(rows, spec), int(blocks["part_id"].iloc[0]), 0)
+
+    return compact_partition
+
+
 def compact(
     spark: SparkSession,
     out_dir: str,
     origin: str | None = None,
     message: str | None = None,
 ) -> DataFrame:
-    """Re-encode partitions that have accumulated append fragments into a
+    """Fold each partition that has accumulated append fragments into a
     single fresh fragment (A17: the codec selector re-runs over the full
     partition, so a drifted column switches codec wholesale — the
     cross-variant full re-encode of gen/enums.rs:544-550).
+
+    One kernel per folded partition (``make_compact_kernel``) replays
+    the partition's committed fragments and re-encodes the rows, so only
+    the compressed blocks of the multi-fragment partitions cross a
+    shuffle; a partition without appends is not read.  A partition that
+    fails to decode or encode fails the call, and no manifest generation
+    is written: the partition's base and appends stay active.
 
     Old blocks stay on disk but drop out of the manifest resolution
     (the new kind="replace" generation supersedes them); a vacuum pass
     can reclaim them.
     """
-    meta = _resolve(spark, out_dir)
-    info, _manifest, active = meta
-    manifest_path = os.path.join(out_dir, "manifest")
-    live = active.loc[active["status"] == "committed", "part_id"]  # never fold failed rows in
-    counts = live.value_counts()
-    multi = sorted(int(p) for p in counts.index[counts > 1])
-    if not multi:
+    info, _manifest, active = _resolve(spark, out_dir)
+    live = active[active["status"] == "committed"]  # never fold failed rows in
+    counts = live["part_id"].value_counts()
+    multi = live[live["part_id"].isin(counts.index[counts > 1])]
+    if multi.empty:
         return _manifest_df(spark, active)
 
-    rows = _decode(spark, out_dir, meta, with_part_id=True, parts=multi)
     run_id = uuid.uuid4().hex
     gen = time.time_ns()
-    kernel = make_encode_kernel(
-        spec=info["spec"], key_cols=info["key_cols"],
-        order_cols=info["order_cols"], content_col=info["content_col"],
-        run_id=run_id,
+    kernel = make_compact_kernel(
+        info["spec"], info["key_cols"], info["order_cols"], info["content_col"], run_id
     )
-    blocks = rows.groupBy("part_id").applyInArrow(kernel, BLOCK_SCHEMA)
-    _write_blocks(blocks, os.path.join(out_dir, "blocks"))
+    blocks = _active_blocks(spark, out_dir, active=multi)
+    _write_blocks(
+        blocks.groupBy("part_id").applyInArrow(kernel, BLOCK_SCHEMA),
+        os.path.join(out_dir, "blocks"),
+    )
     _manifest_rows_for_run(
         spark, out_dir, run_id, gen, info["spec"], "replace",
         origin=origin, message=message or "compact",
     )
-    return _manifest_active(spark, manifest_path)
+    return _manifest_active(spark, os.path.join(out_dir, "manifest"))
 
 
 # ------------------------------------------------------------- J2 decode ----
@@ -1357,8 +1364,8 @@ def _decode_fragments(
     chain tails: a fragment appended by a later run (higher gen) may
     seed its chain groups from earlier fragments' last versions.
 
-    Returns (rows_df, tails, tail_counts) so the append kernel can reuse
-    the threaded state directly.
+    Returns (rows_df, tails, tail_counts) so an append can seed its
+    chains from the threaded state directly.
     """
     names = [n for n, _ in spec]
     if "gen" not in pdf.columns:
@@ -1845,37 +1852,13 @@ def decode(
     (decode depth stays keyframe-bounded) but only the requested
     version per key leaves the worker.
     """
-    return _decode(
-        spark, out_dir, _resolve(spark, out_dir, as_of_gen),
-        with_part_id=with_part_id, columns=columns, parts=parts,
-        latest_only=latest_only, at_version=at_version, strict=strict,
-        where=where, on_error=on_error,
-    )
-
-
-def _decode(
-    spark: SparkSession,
-    out_dir: str,
-    meta: TableMeta,
-    with_part_id: bool = False,
-    columns: list[str] | None = None,
-    parts: list[int] | None = None,
-    latest_only: bool = False,
-    at_version: int | None = None,
-    strict: bool = False,
-    where: tuple | list[tuple] | None = None,
-    on_error: str = "raise",
-) -> DataFrame:
-    """``decode`` against a resolution of out_dir the caller already
-    made (``_resolve``), so an operation that decodes (compact) resolves
-    the metadata once."""
     if latest_only and at_version is not None:
         raise ValueError("latest_only and at_version are mutually exclusive")
     if on_error not in ("raise", "skip"):
         raise ValueError("on_error must be 'raise' or 'skip'")
     if at_version is not None and at_version < 0:
         raise ValueError("at_version must be >= 0")
-    info, _manifest, active = meta
+    info, _manifest, active = _resolve(spark, out_dir, as_of_gen)
     spec = info["spec"]
     preds = [] if where is None else _parse_where(where, spec)
     if strict:

@@ -523,6 +523,17 @@ def test_media_near_dup_bands_track_max_hamming(spark):
     assert got == {(0, 1): 4}
     # the default stays the documented 4x16 layout and still excludes it
     assert multimodal.media_near_dup_pairs(hashed).count() == 0
+    # max_hamming=0 is one 64-bit band: exact duplicates only, sign bit
+    # included (a (1 << 64) - 1 mask literal overflows LongType)
+    dups = spark.createDataFrame(
+        [(0, base), (1, other), (2, base), (3, -5), (4, -5), (5, -6)],
+        "media_id long, dhash long",
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in multimodal.media_near_dup_pairs(dups, max_hamming=0).collect()
+    }
+    assert got == {(0, 2): 0, (3, 4): 0}
 
 
 def test_media_near_dup_mega_bucket_guard(spark):
@@ -1118,13 +1129,12 @@ def test_stratified_sample_rates_and_determinism(spark):
 
 
 def test_list_id_gate_paths_agree_and_plan_flat(spark):
-    """IVF list assignment is size-gated: small codebooks compile to
-    the literal-argmax expression (oracle-exact), large ones to an
-    Arrow-batched matmul over a broadcast centroid matrix.  On a
-    well-separated fixture (axis-aligned one-hot centroids, vectors
-    near one axis) the two paths assign identically, and the plan size
-    stays FLAT in n_lists on the pandas path while the literal plan
-    grows linearly — the reason the gate exists."""
+    """IVF list assignment runs the exact-sequential Arrow kernel
+    (_list_id_seq) at every codebook size.  On a well-separated fixture
+    (axis-aligned one-hot centroids, vectors near one axis) it assigns
+    exactly like the literal-argmax expression (_list_id_expr, the
+    spec), and its plan size stays FLAT in n_lists while the literal
+    plan grows linearly."""
     import numpy as np
     import pyspark.sql.functions as F  # noqa: PLC0415
 
@@ -1142,13 +1152,10 @@ def test_list_id_gate_paths_agree_and_plan_flat(spark):
 
     lit = {r["vec_id"]: r["lid"] for r in
            emb.select("vec_id", similarity._list_id_expr(cents).alias("lid")).collect()}
-    pnd = {r["vec_id"]: r["lid"] for r in
-           emb.select("vec_id", similarity._list_id_pandas(cents)(
-               F.col("embedding")).alias("lid")).collect()}
     seq = {r["vec_id"]: r["lid"] for r in
            emb.select("vec_id", similarity._list_id_seq(cents)(
                F.col("embedding")).alias("lid")).collect()}
-    assert lit == pnd == seq  # r07: the seq Arrow kernel is the <=64 path
+    assert lit == seq
     assert set(lit.values()) == set(range(dim))  # every axis actually hit
     expect = {i: i % dim for i in range(n)}
     assert lit == expect
@@ -1165,12 +1172,10 @@ def test_list_id_gate_paths_agree_and_plan_flat(spark):
         df = emb.select("vec_id", similarity._list_id_expr(cs).alias("lid"))
         return len(df._jdf.queryExecution().optimizedPlan().toString())
 
-    # the literal expression's plan grows linearly in n_lists — the
-    # original reason the gate exists...
+    # the literal expression's plan grows linearly in n_lists...
     assert lit_plan_len(mk(64)) > lit_plan_len(mk(8)) * 2
-    # ...while since r07 EVERY list_id_col plan is flat: the <=64 path
-    # compiles to the seq Arrow kernel (bit-identical doubles, see
-    # _list_id_seq), the larger path to the matmul kernel
+    # ...while every list_id_col plan is flat: it compiles to the seq
+    # Arrow kernel (bit-identical doubles, see _list_id_seq)
     p8, p64, p256, p1024 = (plan_len(mk(k)) for k in (8, 64, 256, 1024))
     assert p64 < p8 * 1.1 and p1024 < p256 * 1.1
     assert p1024 < lit_plan_len(mk(64))

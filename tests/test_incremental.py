@@ -12,7 +12,21 @@ import pyspark.sql.functions as F
 import pytest
 
 from deltoid_spark.fixtures import codegen
-from deltoid_spark.jobs import compact, decode, encode, encode_append, metrics_summary, verify
+from deltoid_spark.jobs import (
+    compact,
+    decode,
+    encode,
+    encode_append,
+    history,
+    metrics_summary,
+    verify,
+)
+from deltoid_spark.jobs.pipeline import (
+    BLOCK_SCHEMA,
+    _manifest_active,
+    make_encode_kernel,
+    read_table_spec,
+)
 
 
 @pytest.fixture(scope="module")
@@ -299,33 +313,35 @@ def test_append_with_nested_columns(spark, tmp_path_factory):
     assert orig == got
 
 
+def _nested_table(spark, lo, hi):
+    """Rows lo..hi of a code table with a struct and an array<bigint>
+    column (values past 2^53 included)."""
+    schema = (
+        "repo string, path string, commit string, content string, "
+        "meta struct<name:string,v:int>, xs array<bigint>"
+    )
+    rows = [
+        (
+            f"org/r{i % 2}", f"src/p{i % 8}.py", f"c{i:06d}",
+            f"v{i}\ncommon",
+            {"name": f"n{i % 3}", "v": None if i % 6 == 0 else i},
+            [2**53 + i] * (i % 3),
+        )
+        for i in range(lo, hi)
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
 def test_compact_and_selective_decode_nested(spark, tmp_path_factory):
     """After a nested-column append: compaction folds the fragments
     (re-encoding nested cells wholesale) and column-selective decode
     prunes to a nested column without touching the others' blocks."""
     out = str(tmp_path_factory.mktemp("nested_compact"))
-    schema = (
-        "repo string, path string, commit string, content string, "
-        "meta struct<name:string,v:int>, xs array<bigint>"
-    )
-
-    def mk(lo, hi):
-        rows = [
-            (
-                f"org/r{i % 2}", f"src/p{i % 8}.py", f"c{i:06d}",
-                f"v{i}\ncommon",
-                {"name": f"n{i % 3}", "v": None if i % 6 == 0 else i},
-                [2**53 + i] * (i % 3),
-            )
-            for i in range(lo, hi)
-        ]
-        return spark.createDataFrame(rows, schema)
-
-    encode(spark, mk(0, 160), out, target_rows=60)
-    encode_append(spark, mk(160, 240), out, batch_id="nc1")
+    encode(spark, _nested_table(spark, 0, 160), out, target_rows=60)
+    encode_append(spark, _nested_table(spark, 160, 240), out, batch_id="nc1")
     compact(spark, out)
 
-    full = mk(0, 240)
+    full = _nested_table(spark, 0, 240)
     decoded = decode(spark, out)
     assert {r["commit"]: tuple(r) for r in decoded.collect()} == {
         r["commit"]: tuple(r) for r in full.collect()
@@ -336,3 +352,96 @@ def test_compact_and_selective_decode_nested(spark, tmp_path_factory):
     want = {r["commit"]: r["meta"] for r in full.collect()}
     got = {r["commit"]: r["meta"] for r in sel.collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("table", ["split", "nested"])
+def test_compact_payloads_match_reencoded_decode(spark, split_batches, tmp_path_factory, table):
+    """compact() replays and re-encodes inside one kernel.  The reference
+    path it replaced — decode(with_part_id=True), then make_encode_kernel
+    over each partition's rows — must give the same payload bytes for
+    every compacted (part_id, column)."""
+    out = str(tmp_path_factory.mktemp(f"compact_bytes_{table}"))
+    if table == "split":
+        _pdf, a, b = split_batches
+        encode(spark, spark.createDataFrame(a), out, target_rows=500)
+        encode_append(spark, spark.createDataFrame(b), out)
+    else:
+        encode(spark, _nested_table(spark, 0, 160), out, target_rows=60)
+        encode_append(spark, _nested_table(spark, 160, 240), out, batch_id="nc1")
+
+    multi = {
+        r["part_id"]
+        for r in _manifest_active(spark, f"{out}/manifest")
+        .groupBy("part_id").count().filter(F.col("count") > 1).collect()
+    }
+    assert multi
+    info = read_table_spec(spark, out)
+    kernel = make_encode_kernel(
+        spec=info["spec"], key_cols=info["key_cols"],
+        order_cols=info["order_cols"], content_col=info["content_col"],
+    )
+    want = {
+        (r["part_id"], r["column"]): bytes(r["payload"])
+        for r in decode(spark, out, with_part_id=True)
+        .groupBy("part_id").applyInArrow(kernel, BLOCK_SCHEMA).collect()
+        if r["part_id"] in multi
+    }
+
+    compact(spark, out)
+    run_id = history(spark, out).collect()[-1]["run_id"]
+    got = {
+        (r["part_id"], r["column"]): bytes(r["payload"])
+        for r in spark.read.schema(BLOCK_SCHEMA).parquet(f"{out}/blocks")
+        .filter(F.col("run_id") == run_id).collect()
+    }
+    assert {p for p, _ in got} == multi
+    assert got == want
+
+
+def test_compact_fails_loudly_and_strands_nothing(spark, split_batches, tmp_path_factory):
+    """A folded partition whose appended fragment cannot be replayed
+    fails compact() as a whole.  No manifest generation is written, so
+    the partition's base and appends stay active (a failed replace row
+    would hide them, and a vacuum would then delete their blocks), and
+    every other partition reads as before."""
+    import os
+    import shutil
+
+    pdf, a, b = split_batches
+    out = str(tmp_path_factory.mktemp("compact_rot"))
+    encode(spark, spark.createDataFrame(a), out, target_rows=500)
+    encode_append(spark, spark.createDataFrame(b), out)
+    hist = history(spark, out).collect()
+    append_run = hist[-1]["run_id"]
+
+    # bit rot in ONE appended fragment: its content payload
+    blocks_dir = os.path.join(out, "blocks")
+    blocks = spark.read.schema(BLOCK_SCHEMA).parquet(blocks_dir)
+    victim = blocks.filter(F.col("run_id") == append_run).agg(F.min("part_id")).first()[0]
+    rot = (
+        (F.col("run_id") == append_run)
+        & (F.col("part_id") == victim)
+        & (F.col("column") == "content")
+    )
+    tmp = blocks_dir + "_rot"
+    blocks.withColumn(
+        "payload", F.when(rot, F.lit(b"\x00rotten")).otherwise(F.col("payload"))
+    ).write.mode("overwrite").option("compression", "none").partitionBy(
+        "run_id"
+    ).parquet(tmp)
+    shutil.rmtree(blocks_dir)
+    os.rename(tmp, blocks_dir)
+
+    def snapshot():
+        active = _manifest_active(spark, f"{out}/manifest")
+        return (
+            sorted(tuple(r) for r in active.select("part_id", "run_id", "kind", "status").collect()),
+            sorted(tuple(r) for r in decode(spark, out, on_error="skip").collect()),
+        )
+
+    active_before, rows_before = snapshot()
+    assert 0 < len(rows_before) < len(pdf)  # the victim partition is skipped
+    with pytest.raises(Exception):
+        compact(spark, out)
+    assert history(spark, out).count() == len(hist)
+    assert snapshot() == (active_before, rows_before)

@@ -4,9 +4,11 @@ Run as ``python -m deltoid_spark.bench_encode --cores N [--name bench]``;
 prints one JSON line.  bench.py spawns this at two core counts to
 evidence the north_rule's N -> 4N scaling efficiency with clean JVMs.
 
-Timing covers the encode *action* only (shuffle + kernels + block
-write), not session startup or fixture generation — matching how a
-cluster job would be measured (input GB / job wall-clock).
+It times the shipped jobs, not a copy of them: ``wall_s`` is one
+``jobs.encode`` call into a fresh directory (partition map build, scan,
+shuffle, kernels, block write, spec / partition map / manifest writes),
+and ``decode_wall_s`` is ``jobs.decode`` into Spark's ``noop`` sink.
+Session startup and fixture generation are outside both.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ def run(
     attempts: int = 3,
 ) -> dict:
     from .fixtures import codegen
-    from .jobs import encode, metrics_summary  # noqa: F401
+    from .jobs import decode, encode, metrics_summary
     from .session import get_spark
 
     fixture = codegen.ensure_fixture(name)
@@ -65,65 +67,20 @@ def run(
 
     spark.range(cores * 8).repartition(cores * 2).mapInArrow(_warm, "id long").count()
 
-    # timed region = the encode ACTION (scan -> one shuffle -> kernels ->
-    # block write): the part that scales with cluster size.  Partition
-    # assignment (one tiny aggregate) and manifest aggregation (rows ==
-    # partition count) are O(metadata) bookkeeping, reported separately.
-    from .jobs.partitioning import assign_partitions
-    from .jobs.pipeline import BLOCK_SCHEMA, make_encode_kernel, make_fragment_kernel
-
-    t_assign = time.time()
-    dfp, n_parts = assign_partitions(df, target_rows)
-    t_assign = time.time() - t_assign
-
-    if mode == "clustered":
-        encoded = dfp.mapInArrow(make_fragment_kernel(), BLOCK_SCHEMA)
-    else:
-        encoded = dfp.groupBy("part_id").applyInArrow(make_encode_kernel(), BLOCK_SCHEMA)
     walls = []
     outs = []
     for _attempt in range(attempts):  # best-of-N: JIT + page cache warm, env noise
         out = tempfile.mkdtemp(prefix=f"bench_enc_{cores}_")
         outs.append(out)
         t0 = time.time()
-        # payloads are already zstd'd — parquet re-compression (snappy)
-        # would burn CPU + memory bandwidth for ~0 size win
-        encoded.write.mode("append").option("compression", "none").parquet(
-            os.path.join(out, "blocks")
-        )
+        manifest = encode(spark, fixture, out, target_rows=target_rows, mode=mode)
         walls.append(time.time() - t0)
     wall = min(walls)
+    summary = metrics_summary(manifest)
 
-    import pyspark.sql.functions as F
-
-    written = spark.read.parquet(os.path.join(outs[-1], "blocks"))
-    agg = written.agg(
-        F.sum("raw_bytes").alias("raw"), F.sum("enc_bytes").alias("enc")
-    ).collect()[0]
-
-    # decode throughput (output bytes reconstructed per second).
-    # applyInArrow with the owned pandas->Arrow conversion — the SAME
-    # return boundary the production decode() job uses — instead of
-    # applyInPandas, whose serializer re-transposes ~2 GB of decoded
-    # strings through pandas on the way back to the JVM (guide §4).
-    from .jobs.pipeline import (
-        DEFAULT_SPEC,
-        ROW_SCHEMA,
-        _pdf_to_arrow,
-        make_decode_kernel,
-    )
-
-    decode_kernel = make_decode_kernel(DEFAULT_SPEC)
-
-    def _decode_arrow(tbl):
-        return _pdf_to_arrow(decode_kernel(tbl.to_pandas()), DEFAULT_SPEC)
-
+    # decode throughput (output bytes reconstructed per second)
     t0 = time.time()
-    (
-        written.groupBy("part_id")
-        .applyInArrow(_decode_arrow, ROW_SCHEMA)
-        .write.format("noop").mode("overwrite").save()
-    )
+    decode(spark, outs[-1]).write.format("noop").mode("overwrite").save()
     decode_wall = time.time() - t0
     spark.stop()
     for out in outs:
@@ -133,15 +90,14 @@ def run(
         "mode": mode,
         "rows": n_rows,
         "input_bytes": input_bytes,
-        "enc_bytes": int(agg["enc"]),
-        "ratio": int(agg["enc"]) / max(1, int(agg["raw"])),
+        "enc_bytes": summary["enc_bytes"],
+        "ratio": summary["enc_bytes"] / max(1, summary["raw_bytes"]),
         "wall_s": round(wall, 2),
         "walls": [round(w, 2) for w in walls],
-        "assign_s": round(t_assign, 2),
         "gbps": input_bytes / wall / 1e9,
         "decode_wall_s": round(decode_wall, 2),
         "decode_gbps": input_bytes / decode_wall / 1e9,
-        "partitions": n_parts,
+        "partitions": summary["partitions"],
     }
 
 

@@ -80,16 +80,25 @@ def _ge0(a: np.ndarray) -> np.ndarray:
     return np.where(np.isnan(a), True, a >= 0)
 
 
-def _bucket_udf(coeffs_per_band: list[list[list[float]]]):
+def _bucket_udf(n_bands: int, n_planes: int, seed: int):
     """pandas_udf: embedding -> array<long> of per-band sign buckets,
-    bit p of band b = sign of the band's p-th plane projection."""
+    bit p of band b = sign of plane ``b * n_planes + p``'s projection.
+
+    The planes (:func:`hyperplane_coeffs`) are built per batch at the
+    batch's vector dimension, so building the plan needs no job to
+    learn the dimension, and an empty input runs no batch at all.
+    Vectors within one batch share one dimension."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def buckets(v: pd.Series) -> pd.Series:
         X, isnull = _stack_embeddings(v)
         n = len(X)
-        out = np.zeros((n, len(coeffs_per_band)), dtype=np.int64)
+        out = np.zeros((n, n_bands), dtype=np.int64)
+        coeffs_per_band = [
+            hyperplane_coeffs(X.shape[1], n_planes, seed, plane_offset=b * n_planes)
+            for b in range(n_bands)
+        ]
         for b, planes in enumerate(coeffs_per_band):
             bucket = np.zeros(n, dtype=np.int64)
             for p, cv in enumerate(planes):
@@ -193,12 +202,10 @@ def random_hyperplane_buckets(emb: DataFrame, n_planes: int = 8, seed: int = 42)
     engine reproduces the same buckets.
     """
     emb = spread(emb, "vec_id")  # parallelise the projection batch work
-    dim = emb.select(F.size("embedding").alias("d")).first()["d"]
     # one Arrow-batched kernel evaluates all plane projections in the
     # folds' exact IEEE order (see the kernel block above) — replaces
     # n_planes interpreted HOF folds per row, buckets bit-identical
-    coeffs = hyperplane_coeffs(dim, n_planes, seed)
-    barr = _bucket_udf([coeffs])(F.col("embedding").cast("array<double>"))
+    barr = _bucket_udf(1, n_planes, seed)(F.col("embedding").cast("array<double>"))
     return emb.select(
         "vec_id", "label", "embedding",
         F.element_at(barr, 1).alias("bucket"),
@@ -208,14 +215,13 @@ def random_hyperplane_buckets(emb: DataFrame, n_planes: int = 8, seed: int = 42)
 def hyperplane_coeffs(
     dim: int, n_planes: int, seed: int = 42, plane_offset: int = 0
 ) -> list[list[float]]:
-    """Driver-side materialization of the md5-derived plane matrix.
+    """The md5-derived plane matrix, materialized once per bucket batch.
 
     Identical values to :func:`plane_coeff` (and to the DuckDB oracle's
     in-SQL md5 recompute) — hashlib md5 == SQL md5, and ``x / 10000.0``
-    is the same IEEE division in every engine.  Precomputing on the
-    driver turns 64 md5 calls *per row per plane* into literal arrays
-    shipped once inside the plan — the scale-correct shape for a
-    many-band bucket table.
+    is the same IEEE division in every engine.  Computing it once per
+    batch turns 64 md5 calls *per row per plane* into one matrix per
+    Arrow batch — the scale-correct shape for a many-band bucket table.
     """
     return [
         [
@@ -236,30 +242,23 @@ def banded_hyperplane_buckets(
     n_bands: int = 4,
     n_planes: int = 12,
     seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
     """(vec_id, band, bucket): one sign-LSH bucket per band.
 
     Band ``b`` uses planes ``b*n_planes .. (b+1)*n_planes - 1`` of the
     same deterministic md5 plane family, so bands are independent and
-    any engine reproduces every bucket bit-for-bit.  Coefficients are
-    literal arrays (see :func:`hyperplane_coeffs`); the projection is
+    any engine reproduces every bucket bit-for-bit.  Coefficients come
+    from :func:`hyperplane_coeffs`, once per batch; the projection is
     the same sequential ``aggregate`` fold as the oracle's
     ``list_reduce``, so the sign bits match exactly.
     """
-    if dim is None:
-        dim = emb.select(F.size("embedding").alias("d")).first()["d"]
     # the n_bands * n_planes projection folds per row dominated this
     # operator as interpreted HOF expressions; one Arrow-batched kernel
     # (same IEEE op order, see the kernel block above) computes every
     # band's bucket bit-identically.  spread() first so an unsplittable
     # input cannot serialise the batch work (no-op at scan scale).
     emb = spread(emb, "vec_id")
-    coeffs_all = [
-        hyperplane_coeffs(dim, n_planes, seed, plane_offset=b * n_planes)
-        for b in range(n_bands)
-    ]
-    barr = _bucket_udf(coeffs_all)(F.col("embedding").cast("array<double>"))
+    barr = _bucket_udf(n_bands, n_planes, seed)(F.col("embedding").cast("array<double>"))
     return emb.select("vec_id", barr.alias("bs")).select(
         "vec_id", F.posexplode("bs").alias("band", "bucket")
     )

@@ -228,10 +228,9 @@ def _table_to_pdf(
         col = tbl.column(name)
         ddl = ddls.get(name, "")
         if name in arrow_cols:
-            one = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
             # Spark ships strings as utf8 (int32 offsets); the buffer
             # views/kernels expect large_utf8 — cast once (data shared)
-            arrows[name] = one if one.type == pa.large_utf8() else one.cast(pa.large_utf8())
+            arrows[name] = strings.as_large_utf8(col)
         elif ddl.startswith(("struct<", "array<", "map<")):
             if ddl != "array<string>":
                 # nested trees stay Arrow end-to-end: the NESTED codec
@@ -400,17 +399,17 @@ def _group_starts(gsizes: np.ndarray) -> np.ndarray:
 
 
 def _encode_content(
-    s,
+    arr: pa.Array,
     gsizes: np.ndarray,
     keyframe_interval: int,
     level,
-    base_texts: list | None = None,
-    base_versions: np.ndarray | None = None,
-    view: tuple | None = None,
+    base_texts: list | None,
+    base_versions: np.ndarray | None,
+    view: tuple,
 ) -> tuple[str, bytes]:
-    """CHAIN-encode the content column (pandas Series or Arrow array);
-    fall back to whole-column PLAIN only when a cheap zstd bound says
-    PLAIN could plausibly win.
+    """CHAIN-encode the content column (a LargeStringArray and its
+    ``strings.utf8_view``); fall back to whole-column PLAIN only when a
+    cheap zstd bound says PLAIN could plausibly win.
 
     The full PLAIN trial used to run unconditionally — an honest but
     ~2x CPU cost on the dominant column.  The gate compresses a
@@ -418,27 +417,22 @@ def _encode_content(
     cross-version redundancy) and extrapolates; the full trial runs
     only when the bound lands within 30% of CHAIN's actual size.
     """
-    is_arrow = isinstance(s, pa.Array)
     buf = chain_kernel.encode_chain(
-        s, gsizes, keyframe_interval=keyframe_interval, level=level,
+        arr, gsizes, keyframe_interval=keyframe_interval, level=level,
         base_texts=base_texts, base_versions=base_versions,
     )
     if base_texts is not None and any(t is not None for t in base_texts):
         # a seeded fragment must stay CHAIN: whole-column PLAIN can't
         # continue chains and seeded deltas are near-minimal anyway
         return "chain", buf
-    if view is None:
-        view = strings.arrow_utf8_view(s) if is_arrow else strings.utf8_view(s)
-    lengths, data = view
+    _lengths, data = view
     sample = data[: max(4096, len(data) // 8)]
     if sample:
         est_plain = len(blocks_mod.compress(sample, level)) / len(sample) * len(data)
     else:
         est_plain = 0.0
     if est_plain < len(buf) * 1.3:
-        plain_buf = (
-            strings.encode_plain_arrow(s) if is_arrow else api.encode_block(s, "plain")
-        )
+        plain_buf = strings.encode_plain(arr)
         if len(plain_buf) < len(buf):
             return "plain", plain_buf
     return "chain", buf
@@ -481,42 +475,27 @@ def _encode_rows(
             dtype=np.int64,
         )
     for col, ddl in spec:
-        if col == content_col and content_arr is not None:
-            view = strings.arrow_utf8_view(content_arr)
-            raw = int(view[0].sum())
-            if len(gsizes) < len(content_arr) or tails:
-                codec, buf = _encode_content(
-                    content_arr, gsizes, keyframe_interval, level,
-                    base_texts, base_versions, view,
-                )
-            else:  # no multi-version chains: plain selector path
-                codec, _stats, buf = selector.select_and_encode(
-                    content_arr.to_pandas().astype(object)
-                )
-            out.append(
-                (part_id, frag_id, col, codec, buf, len(content_arr), raw,
-                 len(buf), api.sha256_column_arrow(content_arr, view),
-                 time.time() - t0, run_id, None, None, None, None, None)
-            )
-            continue
-        s = pdf[col]
         zmin = zmax = None
         smin = smax = None
         blm = None
         if ddl == "string":
-            # one Arrow conversion shared by raw-size, the PLAIN-gate
-            # sample, the content digest, and the string zone map
-            arr = pa.Array.from_pandas(s, type=pa.large_utf8())
-            view = strings.arrow_utf8_view(arr)
+            # one Arrow array per string column, shared by raw-size, the
+            # selector, the PLAIN-gate sample, the content digest, and
+            # the string zone map; the content column arrives as Arrow
+            if col == content_col and content_arr is not None:
+                arr = content_arr
+            else:
+                arr = strings.as_large_utf8(pdf[col])
+            view = strings.utf8_view(arr)
             raw = int(view[0].sum())
-            if col == content_col and (len(gsizes) < len(s) or tails):
+            if col == content_col and (len(gsizes) < len(arr) or tails):
                 codec, buf = _encode_content(
-                    s, gsizes, keyframe_interval, level, base_texts,
+                    arr, gsizes, keyframe_interval, level, base_texts,
                     base_versions, view,
                 )
-            else:
-                codec, _stats, buf = selector.select_and_encode(s)
-            sha = api.sha256_column(s, view) if col == content_col else None
+            else:  # no multi-version chains: the selector picks
+                codec, _stats, buf = selector.select_and_encode(arr)
+            sha = api.sha256_column_arrow(arr, view) if col == content_col else None
             if col != content_col:
                 # dimension-style string columns (repo/path/lang) get
                 # (smin, smax) zone bounds — the dominant predicate
@@ -532,15 +511,15 @@ def _encode_rows(
             # content column uses (reference HashMap::delta)
             codec = "mapdelta"
             buf = mapdelta_kernel.encode_mapdelta(
-                s, gsizes, keyframe_interval=keyframe_interval, level=level
+                pdf[col], gsizes, keyframe_interval=keyframe_interval, level=level
             )
-            raw = mapdelta_kernel.map_raw_bytes(s)
+            raw = mapdelta_kernel.map_raw_bytes(pdf[col])
             sha = None
         else:
-            codec, buf, raw, zmin, zmax = _encode_typed(s, ddl)
+            codec, buf, raw, zmin, zmax = _encode_typed(pdf[col], ddl)
             sha = None
         out.append(
-            (part_id, frag_id, col, codec, buf, len(s), raw, len(buf), sha,
+            (part_id, frag_id, col, codec, buf, len(pdf), raw, len(buf), sha,
              time.time() - t0, run_id, zmin, zmax, smin, smax, blm)
         )
     return out

@@ -12,7 +12,12 @@ from . import blocks, chain, floats, fsst, intcodec, mapdelta, nested, strings
 STRING_CODECS = ("plain", "dict", "rle", "front", "hex", "fsst")
 
 
-def encode_block(series: pd.Series, codec: str, **kw) -> bytes:
+def encode_block(series, codec: str, **kw) -> bytes:
+    """Encode one column with ``codec``.  A string codec takes any
+    column form (pandas Series, Arrow array) and converts it once to
+    the LargeStringArray every string encoder reads."""
+    if codec in STRING_CODECS:
+        series = strings.as_large_utf8(series)
     if codec == "plain":
         return strings.encode_plain(series, **kw)
     if codec == "dict":
@@ -103,35 +108,16 @@ def block_codec(buf: bytes) -> str:
 
 
 def sha256_column_arrow(arr, view: tuple | None = None) -> str:
-    """sha256_column straight off a LargeStringArray (same digest bytes:
-    identical mask/lengths/data streams, no python strings)."""
-    import pyarrow.compute as pc
-
-    mask = (
-        pc.is_null(arr).to_numpy(zero_copy_only=False)
-        if arr.null_count
-        else np.zeros(len(arr), dtype=bool)
-    )
-    lengths, data = view if view is not None else strings.arrow_utf8_view(arr)
-    h = hashlib.sha256()
-    h.update(mask.astype(np.uint8).tobytes())
-    h.update(lengths.astype("<i8").tobytes())
-    h.update(data)
-    return h.hexdigest()
-
-
-def sha256_column(series: pd.Series, view: tuple | None = None) -> str:
-    """Order-sensitive digest of a string column (null-aware).
+    """Order-sensitive digest of a LargeStringArray (null-aware).
 
     One C-speed pass: hashes the null mask, the per-row byte lengths,
     and the concatenated utf-8 data straight from Arrow buffers — no
     per-row Python (the length prefix + mask make the digest injective
     over (values, nulls, boundaries)).  ``view`` lets callers reuse an
-    already-computed (lengths, data) pair."""
-    mask = series.isna().to_numpy()
-    lengths, data = view if view is not None else strings.utf8_view(series)
+    already-computed ``strings.utf8_view`` (lengths, data) pair."""
+    lengths, data = view if view is not None else strings.utf8_view(arr)
     h = hashlib.sha256()
-    h.update(mask.astype(np.uint8).tobytes())
+    h.update(strings.null_mask(arr).astype(np.uint8).tobytes())
     h.update(lengths.astype("<i8").tobytes())
     h.update(data)
     return h.hexdigest()

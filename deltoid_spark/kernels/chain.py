@@ -36,7 +36,7 @@ import pyarrow.compute as pc
 
 from . import blocks
 from .intcodec import pack_ints, pack_ints_z, unpack_ints, unpack_ints_z
-from .strings import decode_plain, encode_plain_arrow
+from .strings import as_large_utf8, decode_plain, encode_plain, null_mask
 
 DEFAULT_KEYFRAME_INTERVAL = 32
 
@@ -268,20 +268,13 @@ def encode_chain(
     kernel is Arrow-native (round 3): lines are dictionary-encoded ONCE
     and every per-version comparison runs on int codes (exact: Arrow's
     hashing is byte-aware), keyframe texts and delta lines leave via
-    Arrow takes into encode_plain_arrow — the content column never
+    Arrow takes into encode_plain — the content column never
     materializes as Python strings.
     """
-    if isinstance(contents, pa.ChunkedArray):
-        contents = contents.combine_chunks()
-    if isinstance(contents, pa.Array):
-        arr = contents if contents.type == pa.large_utf8() else contents.cast(pa.large_utf8())
-    else:
-        arr = pa.Array.from_pandas(contents, type=pa.large_utf8())
+    arr = as_large_utf8(contents)
     n = len(arr)
     assert int(np.sum(group_sizes)) == n, "group sizes must cover all rows"
-    is_null = (
-        pc.is_null(arr).to_numpy(zero_copy_only=False) if n else np.zeros(0, dtype=bool)
-    )
+    is_null = null_mask(arr)
     # ONE Arrow pass splits every version into lines, ONE dictionary
     # encode maps every line to an int code; version i's lines are then
     # the int slice codes[loffs[i]:loffs[i+1]] and all elementwise
@@ -620,14 +613,14 @@ def _pack_chain(
     splice_bits = blocks.pack_mask(splice_arr)
     # keyframe texts and delta lines leave as Arrow takes (C gathers),
     # never as Python strings
-    keys_block = encode_plain_arrow(
+    keys_block = encode_plain(
         arr.take(pa.array(np.asarray(key_idx, dtype=np.int64))), level
     )
     emeta, epay = pack_ints(ecnt_arr)
     ameta, apay = pack_ints(acnt_arr)
     rmeta, rpay = pack_ints(rcnt_arr)
     imeta, ipay = pack_ints_z(np.asarray(flat_idx, dtype=np.int64))
-    lines_block = encode_plain_arrow(
+    lines_block = encode_plain(
         line_dict.take(pa.array(np.asarray(flat_line_codes, dtype=np.int64))), level
     )
     meta = {
@@ -651,7 +644,7 @@ def _pack_chain(
         char_bits = blocks.pack_mask(np.array(char_bits_l, dtype=bool))
         csmeta, cspay = pack_ints(np.array(char_cs, dtype=np.int64))
         cdmeta, cdpay = pack_ints(np.array(char_cd, dtype=np.int64))
-        frags_block = encode_plain_arrow(
+        frags_block = encode_plain(
             pa.array(char_frags, type=pa.large_utf8()), level
         )
         meta.update(

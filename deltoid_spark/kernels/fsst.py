@@ -31,7 +31,6 @@ cost lands only on blocks where FSST actually pays.
 from __future__ import annotations
 
 import re
-from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -39,7 +38,7 @@ import pyarrow as pa
 
 from . import blocks
 from .intcodec import pack_ints, unpack_ints
-from .strings import _apply_mask, _mask_meta, utf8_view
+from .strings import _apply_mask, _mask_meta, null_mask, utf8_view
 
 ESCAPE = 0xFF
 MAX_SYMBOLS = 255  # codes 0..254; 255 reserved for escape
@@ -337,27 +336,26 @@ def decompress_bytes(data: bytes, symbols: list[bytes]) -> bytes:
 # The whole block's utf-8 concatenation is FSST-compressed in ONE pass
 # (symbols may span string boundaries — harmless, decode decompresses
 # the whole stream first, then slices by the stored original byte
-# lengths).  Optionally zstd on top of the code stream, the FSST+LZ4
-# pairing from the paper.
+# lengths).  zstd runs on top of the code stream, the FSST+LZ4 pairing
+# from the paper; decode still reads blocks whose meta says
+# ``"zstd": false``.
 
 
-def encode_fsst(series: pd.Series, post_zstd: bool = True) -> bytes:
-    mask = series.isna().to_numpy()
-    lengths, data = utf8_view(series)
+def encode_fsst(arr: pa.Array) -> bytes:
+    lengths, data = utf8_view(arr)
     symbols = train(data)
     codes = compress_bytes(data, symbols)
-    payload_codes = blocks.compress(codes) if post_zstd else codes
     table = b"".join(symbols)
     tmeta, tlens = pack_ints(np.array([len(s) for s in symbols], dtype=np.int64))
     lmeta, lpay = pack_ints(lengths)
     meta = {
-        "n": len(series), "nsym": len(symbols), "tbl_len": len(table),
+        "n": len(arr), "nsym": len(symbols), "tbl_len": len(table),
         "tlens": tmeta, "tlplen": len(tlens),
         "lens": lmeta, "lplen": len(lpay),
-        "zstd": bool(post_zstd), "codes_raw": len(codes),
+        "zstd": True, "codes_raw": len(codes),
     }
-    mb = _mask_meta(meta, mask)
-    return blocks.frame("fsst", meta, mb + tlens + table + lpay + payload_codes)
+    mb = _mask_meta(meta, null_mask(arr))
+    return blocks.frame("fsst", meta, mb + tlens + table + lpay + blocks.compress(codes))
 
 
 def decode_fsst(meta: dict, payload: bytes) -> pd.Series:

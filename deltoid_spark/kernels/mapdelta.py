@@ -175,9 +175,9 @@ def encode_mapdelta(
     null_bits = blocks.pack_mask(is_null)
     pmeta, ppay = pack_ints_z(put_counts.astype(np.int64))
     dmeta, dpay = pack_ints_z(del_counts.astype(np.int64))
-    pk_block = encode_plain(pd.Series(put_keys, dtype=object), level)
-    pv_block = encode_plain(pd.Series(put_vals, dtype=object), level)
-    dk_block = encode_plain(pd.Series(del_keys, dtype=object), level)
+    pk_block = encode_plain(pa.array(put_keys, type=pa.large_utf8()), level)
+    pv_block = encode_plain(pa.array(put_vals, type=pa.large_utf8()), level)
+    dk_block = encode_plain(pa.array(del_keys, type=pa.large_utf8()), level)
     meta = {
         "n": n,
         "groups": gmeta, "gplen": len(gpay),
@@ -299,9 +299,8 @@ def encode_strlist(series: pd.Series, level: int | None = None) -> bytes:
     la = pa.array(series, type=_LIST_TYPE, from_pandas=True)
     offs = la.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
     lengths = np.diff(offs) if len(series) else np.zeros(0, dtype=np.int64)
-    flat = la.values.to_numpy(zero_copy_only=False)
     lmeta, lpay = pack_ints_z(lengths)
-    elems = encode_plain(pd.Series(flat, dtype=object), level)
+    elems = encode_plain(la.values, level)
     meta = {"n": len(series), "lens": lmeta, "lplen": len(lpay)}
     meta["has_null"] = bool(mask.any())
     mb = b""

@@ -205,9 +205,9 @@ def _enc(arr: pa.Array, node, level, parts: list[bytes]) -> dict:
         st = node[1]
         meta["t"] = st
         if st == "string":
-            from .strings import encode_plain_arrow
+            from .strings import encode_plain
 
-            block = encode_plain_arrow(arr, level)
+            block = encode_plain(arr, level)
             meta["len"] = len(block)
             parts.append(block)
         elif st in _INT_LIKE:

@@ -8,21 +8,22 @@ candidates, then trial-encodes a deterministic sample and picks the
 smallest output.  Trial-encode on a sample keeps the choice honest
 (estimated-size formulas drift; measured bytes don't) while bounding
 cost: the sample is capped, the full encode runs once with the winner.
+The column is a LargeStringArray throughout (a pandas Series converts
+once at entry); samples are Arrow slices of it.
 """
 
 from __future__ import annotations
 
-from collections import Counter
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import api, strings
 
 SAMPLE_ROWS = 1024
 
 
-def _contiguous_sample(series: pd.Series, sample_rows: int) -> pd.Series:
+def _contiguous_sample(arr: pa.Array, sample_rows: int) -> pa.Array:
     """~sample_rows drawn as 4 CONTIGUOUS chunks spread over the column.
 
     A strided sample (every n/1024-th row) destroys exactly the
@@ -33,44 +34,49 @@ def _contiguous_sample(series: pd.Series, sample_rows: int) -> pd.Series:
     chunks keep runs and neighbor prefixes intact; four of them spread
     chunk-boundary artifacts (3 artificial run breaks) and still span
     the block for cardinality/entropy."""
-    n = len(series)
+    n = len(arr)
     if n <= sample_rows:
-        return series
+        return arr
     k = 4
     chunk = sample_rows // k
     starts = [round(i * (n - chunk) / (k - 1)) for i in range(k)]
-    return pd.concat(
-        [series.iloc[s : s + chunk] for s in starts], ignore_index=True
-    )
+    return pa.concat_arrays([arr.slice(s, chunk) for s in starts])
 
 
-def column_stats(series: pd.Series, sample_rows: int = SAMPLE_ROWS) -> dict:
-    n = len(series)
-    s = _contiguous_sample(series, sample_rows)
-    vals = s.dropna()
+def _pairs(arr: pa.Array, op) -> int:
+    """How many consecutive pairs (arr[i], arr[i+1]) satisfy ``op``."""
+    if len(arr) < 2:
+        return 0
+    return int(pc.sum(op(arr.slice(1), arr.slice(0, len(arr) - 1))).as_py())
+
+
+def column_stats(values, sample_rows: int = SAMPLE_ROWS) -> dict:
+    arr = strings.as_large_utf8(values)
+    n = len(arr)
+    s = _contiguous_sample(arr, sample_rows)
+    vals = s.drop_null()
     nn = len(vals)
     if nn == 0:
         return {"n": n, "distinct_ratio": 0.0, "mean_run": float(n or 1),
                 "avg_len": 0.0, "entropy": 0.0, "hex": False, "null_ratio": 1.0}
-    # np.unique, not pandas nunique: pandas' C-string hashing truncates
-    # values at embedded NUL bytes and under-counts distincts
-    distinct = len(np.unique(vals.to_numpy(dtype=object)))
-    arr = s.fillna("\x00NULL").to_numpy(dtype=object)
-    changes = 1 + int(np.sum(arr[1:] != arr[:-1])) if len(arr) > 1 else 1
-    data = "".join(vals.iloc[:256].tolist()).encode("utf-8")[:65536]
+    # Arrow hashes length-prefixed strings: values with embedded NUL
+    # bytes stay distinct (pandas' C-string hashing would merge them)
+    distinct = len(pc.unique(vals))
+    changes = 1 + _pairs(s.fill_null("\x00NULL"), pc.not_equal)
+    data = strings.utf8_view(vals.slice(0, 256))[1][:65536]
     if data:
-        counts = np.array(list(Counter(data).values()), dtype=np.float64)
-        p = counts / counts.sum()
+        counts = np.bincount(np.frombuffer(data, dtype=np.uint8), minlength=256)
+        p = counts[counts > 0] / len(data)
         entropy = float(-(p * np.log2(p)).sum())
     else:
         entropy = 0.0
-    va = vals.to_numpy(dtype=object)
-    asc = float(np.mean(va[1:] >= va[:-1])) if len(va) > 1 else 0.0
+    asc = _pairs(vals, pc.greater_equal) / (nn - 1) if nn > 1 else 0.0
+    chars = pc.utf8_length(vals).to_numpy()
     return {
         "n": n,
         "distinct_ratio": distinct / nn,
-        "mean_run": len(arr) / changes,
-        "avg_len": float(vals.str.len().mean()),
+        "mean_run": len(s) / changes,
+        "avg_len": float(chars.sum() / nn),
         "entropy": entropy,
         "hex": strings.hex_eligible(vals),
         "null_ratio": 1.0 - nn / max(1, len(s)),
@@ -81,14 +87,14 @@ def column_stats(series: pd.Series, sample_rows: int = SAMPLE_ROWS) -> dict:
     }
 
 
-def shortlist(stats: dict, series: pd.Series | None = None) -> list[str]:
+def shortlist(stats: dict, arr: pa.Array | None = None) -> list[str]:
     cands = ["plain"]
     if stats["hex"]:
         # the stats sample said hex — but encode_hex requires EVERY row
         # to be canonical lowercase even-length hex (bytes.fromhex also
         # accepts uppercase and would silently lowercase on decode), so
         # validate the full column before hex may be chosen
-        if series is None or strings.hex_eligible(series.dropna()):
+        if arr is None or strings.hex_eligible(arr):
             cands.append("hex")
     if stats["distinct_ratio"] <= 0.5:
         cands.append("dict")
@@ -118,16 +124,15 @@ def shortlist(stats: dict, series: pd.Series | None = None) -> list[str]:
     return cands
 
 
-def select_codec(series: pd.Series, sample_rows: int = SAMPLE_ROWS) -> tuple[str, dict]:
-    winner, stats, _buf = select_and_encode(series, sample_rows, want_buffer=False)
+def select_codec(values, sample_rows: int = SAMPLE_ROWS) -> tuple[str, dict]:
+    winner, stats, _buf = select_and_encode(values, sample_rows)
     return winner, stats
 
 
-def select_and_encode(
-    series: pd.Series, sample_rows: int = SAMPLE_ROWS, want_buffer: bool = True
-) -> tuple[str, dict, bytes | None]:
-    """Pick the min-size codec by trial-encoding deterministic samples;
-    optionally return the winner's encoded block.
+def select_and_encode(values, sample_rows: int = SAMPLE_ROWS) -> tuple[str, dict, bytes]:
+    """Pick the min-size codec by trial-encoding deterministic samples
+    and return it with the column stats and the winner's encoded block.
+    ``values`` is a LargeStringArray or anything ``as_large_utf8`` takes.
 
     Block size splits into a fixed part (symbol/dictionary tables, zstd
     headers) and a per-row part; which dominates differs per codec
@@ -137,31 +142,32 @@ def select_and_encode(
     trials ARE full encodes, so the winning buffer is returned directly
     (no re-encode in the caller).
     """
-    stats = column_stats(series, sample_rows)
-    cands = shortlist(stats, series)
-    n = len(series)
+    arr = strings.as_large_utf8(values)
+    stats = column_stats(arr, sample_rows)
+    cands = shortlist(stats, arr)
+    n = len(arr)
     if n <= sample_rows:
         sizes: dict[str, float] = {}
         bufs: dict[str, bytes] = {}
         for codec in cands:
             try:
-                bufs[codec] = api.encode_block(series.reset_index(drop=True), codec)
+                bufs[codec] = api.encode_block(arr, codec)
                 sizes[codec] = float(len(bufs[codec]))
             except Exception:
                 continue
         winner = min(sizes, key=lambda c: (sizes[c], c))
         stats["trial_sizes"] = sizes
-        return winner, stats, (bufs[winner] if want_buffer else None)
+        return winner, stats, bufs[winner]
 
     # contiguous chunks, not a stride: the trial must see the same run /
     # shared-prefix structure the full encode will (see _contiguous_sample)
-    full = _contiguous_sample(series, sample_rows).reset_index(drop=True)
-    half = full.iloc[: max(1, len(full) // 2)]
+    full = _contiguous_sample(arr, sample_rows)
+    half = full.slice(0, max(1, len(full) // 2))
     est: dict[str, float] = {}
     for codec in cands:
         try:
             s_full = len(api.encode_block(full, codec))
-            s_half = len(api.encode_block(half.reset_index(drop=True), codec))
+            s_half = len(api.encode_block(half, codec))
         except Exception:
             continue
         per_row = max(0.0, (s_full - s_half) / max(1, len(full) - len(half)))
@@ -174,13 +180,13 @@ def select_and_encode(
     # sub-linear codec estimating within 2.5x and the next linear codec
     # within 1.35x — get a REAL full encode and measured bytes decide.
     # The extra encodes are metadata-cheap (code streams, not data) and
-    # the winning buffer is returned either way (no re-encode later).
-    # NOTE (ADVICE r06): a want_buffer=False fast path returning the
+    # the winning buffer is returned (no re-encode later).
+    # NOTE (ADVICE r06): a stats-only fast path returning the
     # extrapolation leader without finalist encodes was tried and
     # KILLED: the fit cannot rank the sub-linear codecs (comment
     # above), and the pick then misses the 15% near-optimality
-    # contract (test_selector_near_optimal).  Stats-only callers pay
-    # the finalist encodes because the measured bytes ARE the picker.
+    # contract (test_selector_near_optimal).  select_codec pays the
+    # finalist encodes because the measured bytes ARE the picker.
     order = sorted(est, key=lambda c: (est[c], c))  # deterministic
     stats["trial_sizes"] = est
     lead = max(est[order[0]], 1.0)
@@ -190,6 +196,6 @@ def select_and_encode(
         if (c in cheap and est[c] <= 2.5 * lead)
         or (c not in cheap and est[c] <= 1.35 * lead)
     ][:2]
-    bufs = {c: api.encode_block(series, c) for c in finalists}
+    bufs = {c: api.encode_block(arr, c) for c in finalists}
     winner = min(bufs, key=lambda c: (len(bufs[c]), c))
-    return winner, stats, (bufs[winner] if want_buffer else None)
+    return winner, stats, bufs[winner]

@@ -1,6 +1,14 @@
-"""String column codecs: PLAIN, DICT, RLE, HEX.
+"""String column codecs: PLAIN, DICT, RLE, FRONT, HEX.
 
-All kernels are vectorized (numpy / pandas / single C-level calls);
+Every encoder takes one input form, a ``pa.LargeStringArray``: the null
+mask comes from ``arr.is_null()`` and the bytes from :func:`utf8_view`
+over the array's (offsets, data) buffers, the form FSST and other
+scan-side string compressors work on.  Anything else (a pandas Series,
+a chunked or utf8 array) converts once, through :func:`as_large_utf8`,
+where it enters ``api.encode_block`` or the selector.  Decoders return
+pandas Series.
+
+All kernels are vectorized (numpy / Arrow / single C-level calls);
 zero per-row Python in hot paths.  Nulls are exact: a null round-trips
 to a null, and a value->null transition is representable — fixing the
 ``OptionDelta`` ``Some -> None`` ambiguity the reference documents in
@@ -13,6 +21,8 @@ Reference bases:
     (/root/reference/deltoid/src/vec.rs:61-64) generalized to value runs.
   PLAIN — full-replacement String delta
     (/root/reference/deltoid/src/string.rs:16-32) + zstd.
+  FRONT — RLE runs whose values are front-coded against the previous
+    run value (see the FRONT section).
   HEX — engine-new: 2x nibble-packing for hex columns (commit shas).
 """
 
@@ -23,16 +33,32 @@ import binascii
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import blocks
 from .intcodec import pack_ints, pack_ints_z, unpack_ints, unpack_ints_z
 
 
-def _prep(series: pd.Series) -> tuple[np.ndarray, pd.Series]:
-    """Null mask (True == null) + null-replaced-by-"" values."""
-    mask = series.isna().to_numpy()
-    vals = series.fillna("")
-    return mask, vals
+def as_large_utf8(values) -> pa.Array:
+    """The encoders' one input form.  A pandas Series (None or NaN is
+    null), a chunked array or a utf8 array converts here, once."""
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    elif not isinstance(values, pa.Array):
+        values = pa.array(values, type=pa.large_utf8(), from_pandas=True)
+    return values if values.type == pa.large_utf8() else values.cast(pa.large_utf8())
+
+
+def null_mask(arr: pa.Array) -> np.ndarray:
+    """True == null."""
+    if not arr.null_count:
+        return np.zeros(len(arr), dtype=bool)
+    return arr.is_null().to_numpy(zero_copy_only=False)
+
+
+def _filled(arr: pa.Array) -> pa.Array:
+    """Nulls replaced by "": DICT/RLE/FRONT code a null row as ""."""
+    return arr.fill_null("") if arr.null_count else arr
 
 
 def _mask_meta(meta: dict, mask: np.ndarray) -> bytes:
@@ -65,8 +91,11 @@ def _restore_nulls(values: list | np.ndarray, mask: np.ndarray | None) -> pd.Ser
 # (offsets, data) buffers — no per-string Python encode or join.
 
 
-def arrow_utf8_view(arr: pa.Array) -> tuple[np.ndarray, bytes]:
-    """(byte_lengths, concatenated utf-8 data) of a LargeStringArray."""
+def utf8_view(arr: pa.Array) -> tuple[np.ndarray, bytes]:
+    """(byte_lengths, concatenated utf-8 data) of a LargeStringArray,
+    slice offset honoured.  A null slot reads as its stored bytes, which
+    every Arrow producer here (pandas conversion, take, Spark) leaves
+    empty."""
     if len(arr) == 0:
         return np.zeros(0, np.int64), b""
     bufs = arr.buffers()
@@ -76,39 +105,13 @@ def arrow_utf8_view(arr: pa.Array) -> tuple[np.ndarray, bytes]:
     return lengths, data
 
 
-def utf8_view(series: pd.Series) -> tuple[np.ndarray, bytes]:
-    """(byte_lengths, concatenated utf-8 data) via Arrow buffers (C path)."""
-    return arrow_utf8_view(pa.Array.from_pandas(series, type=pa.large_utf8()))
-
-
-def _frame_plain(
-    n: int, mask: np.ndarray, lengths: np.ndarray, data: bytes, level
-) -> bytes:
+def encode_plain(arr: pa.Array, level: int | None = None) -> bytes:
+    lengths, data = utf8_view(arr)
     lmeta, lpay = pack_ints(lengths)
     comp = blocks.compress(data, level)
-    meta = {"n": n, "lens": lmeta, "lplen": len(lpay), "raw": len(data)}
-    mb = _mask_meta(meta, mask)
+    meta = {"n": len(arr), "lens": lmeta, "lplen": len(lpay), "raw": len(data)}
+    mb = _mask_meta(meta, null_mask(arr))
     return blocks.frame("plain", meta, mb + lpay + comp)
-
-
-def encode_plain(series: pd.Series, level: int | None = None) -> bytes:
-    mask = series.isna().to_numpy()
-    lengths, data = utf8_view(series)
-    return _frame_plain(len(series), mask, lengths, data, level)
-
-
-def encode_plain_arrow(arr: pa.Array, level: int | None = None) -> bytes:
-    """encode_plain straight off a LargeStringArray — no python strings."""
-    if arr.type != pa.large_utf8():
-        arr = arr.cast(pa.large_utf8())
-    if arr.null_count:
-        import pyarrow.compute as pc
-
-        mask = pc.is_null(arr).to_numpy(zero_copy_only=False)
-    else:
-        mask = np.zeros(len(arr), dtype=bool)
-    lengths, data = arrow_utf8_view(arr)
-    return _frame_plain(len(arr), mask, lengths, data, level)
 
 
 def decode_plain_arrow(meta: dict, payload: bytes) -> tuple[pa.Array, np.ndarray | None]:
@@ -141,32 +144,29 @@ def decode_plain(meta: dict, payload: bytes) -> pd.Series:
 # ----------------------------------------------------------------- DICT ----
 
 
-def _factorize_exact(vals: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """NUL-safe factorize: pd.factorize hashes C strings, so values with
-    embedded ``\\x00`` collide ('' vs '\\x00').  Arrow strings are
-    length-prefixed (NUL-safe); ``dictionary_encode`` runs at C++ rate,
-    and only the U uniques — not all n values — are then sorted with
-    Python compares, keeping the deterministic sorted unique order
-    (A8 analog) byte-identical to the ``np.unique`` formulation this
-    replaces (python ``<`` on str == np.unique's object compare)."""
-    if len(vals) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=object)
-    d = pa.Array.from_pandas(vals, type=pa.large_utf8()).dictionary_encode()
+def _factorize_exact(arr: pa.Array) -> tuple[np.ndarray, pa.Array]:
+    """(codes, sorted uniques) of a null-free LargeStringArray.  Arrow
+    hashes length-prefixed strings, so values with embedded ``\\x00``
+    stay apart ('' vs '\\x00'; pd.factorize hashes C strings and
+    collides them).  The U uniques sort bytewise, and utf-8 byte order
+    is code-point order, so the deterministic sorted unique order (A8
+    analog) is the ``np.unique`` / python ``<`` order."""
+    if len(arr) == 0:
+        return np.zeros(0, dtype=np.int64), arr
+    d = arr.dictionary_encode()
     codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    uniq = d.dictionary.to_pandas().to_numpy(dtype=object)
-    order = np.argsort(uniq, kind="stable")
-    rank = np.empty(len(uniq), dtype=np.int64)
-    rank[order] = np.arange(len(uniq), dtype=np.int64)
-    return rank[codes], uniq[order]
+    order = pc.sort_indices(d.dictionary).to_numpy()
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order), dtype=np.int64)
+    return rank[codes], d.dictionary.take(order)
 
 
-def encode_dict(series: pd.Series, level: int | None = None) -> bytes:
-    mask, vals = _prep(series)
-    codes, uniques = _factorize_exact(vals)
+def encode_dict(arr: pa.Array, level: int | None = None) -> bytes:
+    codes, uniques = _factorize_exact(_filled(arr))
     cmeta, cpay = pack_ints_z(codes)
-    inner = encode_plain(pd.Series(uniques, dtype=object), level)
-    meta = {"n": len(series), "codes": cmeta, "cplen": len(cpay), "card": len(uniques)}
-    mb = _mask_meta(meta, mask)
+    inner = encode_plain(uniques, level)
+    meta = {"n": len(arr), "codes": cmeta, "cplen": len(cpay), "card": len(uniques)}
+    mb = _mask_meta(meta, null_mask(arr))
     return blocks.frame("dict", meta, mb + cpay + inner)
 
 
@@ -184,12 +184,11 @@ def decode_dict(meta: dict, payload: bytes) -> pd.Series:
 # ------------------------------------------------------------------ RLE ----
 
 
-def encode_rle(series: pd.Series, level: int | None = None) -> bytes:
-    mask, vals = _prep(series)
-    n = len(series)
+def encode_rle(arr: pa.Array, level: int | None = None) -> bytes:
+    n = len(arr)
     # factorize so null participates as code -1 -> runs computed on codes
-    codes, uniques = _factorize_exact(vals)
-    codes[mask] = -1
+    codes, uniques = _factorize_exact(_filled(arr))
+    codes[null_mask(arr)] = -1
     if n:
         starts = np.flatnonzero(np.concatenate(([True], codes[1:] != codes[:-1])))
         run_lens = np.diff(np.concatenate((starts, [n])))
@@ -199,7 +198,7 @@ def encode_rle(series: pd.Series, level: int | None = None) -> bytes:
         run_codes = np.zeros(0, np.int64)
     rmeta, rpay = pack_ints_z(run_codes)
     lmeta, lpay = pack_ints_z(run_lens)
-    inner = encode_plain(pd.Series(uniques, dtype=object), level)
+    inner = encode_plain(uniques, level)
     meta = {
         "n": n, "runs": len(run_lens),
         "rcodes": rmeta, "rclen": len(rpay),
@@ -275,14 +274,14 @@ def _within(lens: np.ndarray) -> np.ndarray:
 _FRONT_MAX_WIDTH = 4096  # max shared-prefix len; beyond: per-run decode fallback
 
 
-def encode_front(series: pd.Series, level: int | None = None) -> bytes:
-    mask, vals = _prep(series)
-    n = len(series)
-    arr_obj = vals.to_numpy(dtype=object)
+def encode_front(arr: pa.Array, level: int | None = None) -> bytes:
+    mask = null_mask(arr)
+    n = len(arr)
     if n:
-        # run boundary iff the (value, null) STATE changes; fillna("")
-        # means a real "" must not merge with a null neighbor
-        eq = arr_obj[1:] == arr_obj[:-1]
+        # run boundary iff the (value, null) STATE changes; a null reads
+        # as "" here, so a real "" must not merge with a null neighbor
+        filled = _filled(arr)
+        eq = pc.equal(filled.slice(1), filled.slice(0, n - 1)).to_numpy(zero_copy_only=False)
         same = (mask[1:] == mask[:-1]) & (mask[1:] | eq)
         starts = np.flatnonzero(np.concatenate(([True], ~same)))
         run_lens = np.diff(np.concatenate((starts, [n])))
@@ -291,11 +290,7 @@ def encode_front(series: pd.Series, level: int | None = None) -> bytes:
         starts = np.zeros(0, dtype=np.int64)
         run_lens = np.zeros(0, dtype=np.int64)
         run_null = np.zeros(0, dtype=bool)
-    nn_starts = starts[~run_null]
-    varr = pa.Array.from_pandas(
-        pd.Series(arr_obj[nn_starts], dtype=object), type=pa.large_utf8()
-    )
-    lens, data = arrow_utf8_view(varr)
+    lens, data = utf8_view(arr.take(pa.array(starts[~run_null], type=pa.int64())))
     plens = _prefix_lens(lens, data)
     slens = lens - plens
     buf = np.frombuffer(data, dtype=np.uint8)
@@ -417,43 +412,38 @@ def decode_front(meta: dict, payload: bytes) -> pd.Series:
 
 # ------------------------------------------------------------------ HEX ----
 
-_HEX_OK = r"\A(?:[0-9a-f]{2})*\Z"
-
-
 _HEX_LUT = np.zeros(256, dtype=bool)
 _HEX_LUT[np.frombuffer(b"0123456789abcdef", dtype=np.uint8)] = True
 
 
-def hex_eligible(series: pd.Series) -> bool:
-    """True iff every non-null value is even-length lowercase hex.
+def hex_eligible(arr: pa.Array) -> bool:
+    """True iff there is a non-null value and every one is even-length
+    lowercase hex.
 
-    One pass over the Arrow byte view (hex is ascii, so bytes == chars):
-    even lengths + an all-hex-digit LUT check on the concatenated data —
-    the per-value regex this replaces cost ~19 ms per 1024-row selector
-    sample, ~4% of the encode kernel."""
-    vals = series.dropna()
-    if vals.empty:
+    One pass over the Arrow byte view (hex is ascii, so bytes == chars;
+    null slots are empty): even lengths + an all-hex-digit LUT check on
+    the concatenated data — the per-value regex this replaces cost
+    ~19 ms per 1024-row selector sample, ~4% of the encode kernel."""
+    if arr.null_count == len(arr):
         return False
-    arr = pa.Array.from_pandas(vals.reset_index(drop=True), type=pa.large_utf8())
-    lens, data = arrow_utf8_view(arr)
+    lens, data = utf8_view(arr)
     if (lens % 2).any():
         return False
     buf = np.frombuffer(data, dtype=np.uint8)
     return bool(_HEX_LUT[buf].all())
 
 
-def encode_hex(series: pd.Series) -> bytes:
-    mask, vals = _prep(series)
+def encode_hex(arr: pa.Array) -> bytes:
     # hex is ascii, so the Arrow byte view IS the char view: lengths and
     # concatenated digits come straight off the (offsets, data) buffers —
     # no python-string materialization (unhexlify accepts bytes)
-    lengths, data = utf8_view(vals)
+    lengths, data = utf8_view(arr)
     packed = binascii.unhexlify(data)  # single C call
     comp = blocks.compress(packed)  # structured hex (shared prefixes) compresses further
     half = lengths // 2
     lmeta, lpay = pack_ints(half)
-    meta = {"n": len(series), "lens": lmeta, "lplen": len(lpay), "raw": len(packed)}
-    mb = _mask_meta(meta, mask)
+    meta = {"n": len(arr), "lens": lmeta, "lplen": len(lpay), "raw": len(packed)}
+    mb = _mask_meta(meta, null_mask(arr))
     return blocks.frame("hex", meta, mb + lpay + comp)
 
 

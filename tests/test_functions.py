@@ -163,6 +163,28 @@ def test_banded_near_dup_recall_on_planted_dups(spark):
     assert n_cand < 150 * 149 / 2 * 0.25
 
 
+def test_hyperplane_buckets_on_empty_frame(spark):
+    """An empty embeddings frame buckets to an empty frame with the
+    bucket schema, and building either plan runs no Spark job (the
+    vector dimension used to be probed with ``first()``, which raised
+    TypeError on no rows)."""
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>, label int")
+    sc = spark.sparkContext
+    group = "hyperplane-empty-plan"
+    try:
+        sc.setJobGroup(group, group)
+        single = similarity.random_hyperplane_buckets(emb)
+        banded = similarity.banded_hyperplane_buckets(emb)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert single.columns == ["vec_id", "label", "embedding", "bucket"]
+    assert banded.columns == ["vec_id", "band", "bucket"]
+    assert single.collect() == [] and banded.collect() == []
+    assert similarity.cosine_near_dup_pairs(emb).collect() == []
+
+
 def test_near_dup_bucket_cap_guards_mega_buckets(spark):
     """A degenerate corpus (all-identical vectors) lands in one bucket
     per band; the cap excludes those mega-buckets instead of exploding

@@ -13,6 +13,7 @@ import random
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from deltoid_spark.kernels import api, blocks, chain, fsst, selector, strings
@@ -104,10 +105,71 @@ def test_hex_roundtrip():
 
 
 def test_hex_eligibility():
-    assert strings.hex_eligible(pd.Series(["00ff", "abcd"]))
-    assert not strings.hex_eligible(pd.Series(["0g"]))
-    assert not strings.hex_eligible(pd.Series(["abc"]))  # odd length
-    assert not strings.hex_eligible(pd.Series([None], dtype=object))
+    def ok(vals):
+        return strings.hex_eligible(pa.array(vals, pa.large_utf8()))
+
+    assert ok(["00ff", "abcd"])
+    assert ok(["00ff", None, "abcd"])
+    assert not ok(["0g"])
+    assert not ok(["abc"])  # odd length
+    assert not ok(["00FF"])  # uppercase would come back lowercased
+    assert not ok([None])
+
+
+# Columns for the pandas-vs-Arrow input parity check: nulls, "" next to
+# null, NUL bytes, non-ASCII, all-null, empty, uppercase hex, and one
+# sorted column past SAMPLE_ROWS so the selector's sampled trial path
+# runs.  The flag says whether the hex codec may encode the column.
+PARITY_COLUMNS = {
+    "nulls": (["a", None, "b", None, None, "c", "a", "a"], False),
+    "empty_next_to_null": (["", None, "", None, "x", "", None], False),
+    "nul_bytes": (["\x00", "", "a\x00b", "\x00", None, "a", "\x00\x00"], False),
+    "non_ascii": (["héllo", "日本語", "émoji 🎉", "", None, "日本語", "ß"], False),
+    "all_null": ([None] * 40, False),
+    "empty": ([], False),
+    "upper_hex": (["00FF", "abcd", "DEAD", None] * 8, False),
+    "hex": (["%040x" % random.Random(3).getrandbits(160) for _ in range(60)] + [None], True),
+    "sorted_paths": (
+        [None if i % 97 == 0 else f"src/m{i // 40:03d}/f{i // 4 % 10}.py" for i in range(3000)],
+        False,
+    ),
+}
+
+
+def _arrow_forms(vals):
+    """The same column as a plain, a sliced (non-zero offset) and a
+    chunked Arrow array."""
+    t = pa.large_utf8()
+    padded = pa.array(["pad"] * 5 + vals + ["pad"] * 3, t).slice(5, len(vals))
+    k = len(vals) // 2
+    chunked = pa.chunked_array([pa.array(vals[:k], t), pa.array(vals[k:], t)], t)
+    return {"plain": pa.array(vals, t), "sliced": padded, "chunked": chunked}
+
+
+def _encode_or_error(values, codec):
+    try:
+        return api.encode_block(values, codec)
+    except Exception as exc:  # noqa: BLE001 — both inputs must fail alike
+        return type(exc).__name__
+
+
+@pytest.mark.parametrize("name", list(PARITY_COLUMNS))
+def test_pandas_and_arrow_input_agree(name):
+    """A pandas Series and a LargeStringArray holding the same values
+    give the same block bytes for every string codec, the same selector
+    pick and buffer, and the same column stats."""
+    vals, hex_ok = PARITY_COLUMNS[name]
+    series = pd.Series(vals, dtype=object)
+    codecs = [c for c in api.STRING_CODECS if c != "hex" or hex_ok]
+    want = {c: _encode_or_error(series, c) for c in codecs}
+    assert all(isinstance(b, bytes) for b in want.values()), want
+    pick = selector.select_and_encode(series)
+    stats = selector.column_stats(series)
+    for form, arr in _arrow_forms(vals).items():
+        for c in codecs:
+            assert _encode_or_error(arr, c) == want[c], (form, c)
+        assert selector.select_and_encode(arr) == pick, form
+        assert selector.column_stats(arr) == stats, form
 
 
 def test_bitpack_roundtrip():

@@ -445,9 +445,12 @@ def _token_hash_halves(docs: DataFrame) -> DataFrame:
     Duplicate tokens collapse BEFORE the hash (natural text repeats
     tokens ~2-3x), so md5 and the 64 vote sums run per DISTINCT
     (doc, token) with an exact count ``c`` — the totals are identical
-    because every downstream vote is weighted by ``c``.  The dedup
-    groupBy adds NO exchange: spread() already hash-partitions by
-    doc_id, which satisfies the (doc_id, tok) clustering requirement.
+    because every downstream vote is weighted by ``c``.  When spread()
+    repartitions (fewer scan splits than cores) it hash-partitions by
+    doc_id, which satisfies the (doc_id, tok) clustering requirement,
+    and the dedup groupBy reuses that exchange.  When spread() is a
+    no-op (the scan already parallelises), the groupBy shuffles on its
+    own.
 
     h = first 16 hex chars of md5(token) = first 8 digest bytes
     big-endian; hi/lo carry bits 63..32 / 31..0.  conv() on 8 hex chars

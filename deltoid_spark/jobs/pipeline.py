@@ -43,6 +43,7 @@ into the kernels.
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 import time
@@ -561,8 +562,13 @@ def _slice_encoder(
                 raise RuntimeError(f"injected failure for {fail_inject!r}")
             tails = tail_counts = None
             if prior is not None:
+                # only the chains this slice continues replay
+                cont = set(_key_series(pdf, key_cols))
                 _rows, tails, tail_counts = _decode_fragments(
-                    prior, spec, key_cols, content_col
+                    prior, spec, key_cols, content_col,
+                    lambda _frame, keys: np.fromiter(
+                        (k in cont for k in keys), dtype=bool, count=len(keys)
+                    ),
                 )
             pdf = pdf.sort_values(sort_cols, kind="mergesort")
             content = None
@@ -1338,13 +1344,25 @@ def _decode_fragments(
     spec: list[tuple[str, str]],
     key_cols: tuple[str, ...],
     content_col: str | None,
+    select=None,
 ) -> tuple[pd.DataFrame, dict, dict]:
     """Decode one partition's block rows fragment by fragment, threading
     chain tails: a fragment appended by a later run (higher gen) may
     seed its chain groups from earlier fragments' last versions.
 
+    ``select(frame, keys)`` chooses rows before any content is
+    replayed.  It gets the non-content columns of every fragment,
+    concatenated in replay order (version order per key), and their
+    (key...) ids (None when the key columns were not decoded), and
+    returns a boolean mask over those rows.  The content chains then
+    replay only for keys that hold a selected row — in every fragment,
+    because a later fragment's group may seed from an earlier one's
+    tail — and only the selected rows are returned.  ``None`` selects
+    every row.
+
     Returns (rows_df, tails, tail_counts) so an append can seed its
-    chains from the threaded state directly.
+    chains from the threaded state directly; ``tails`` holds the
+    replayed keys, ``tail_counts`` every key.
     """
     names = [n for n, _ in spec]
     if "gen" not in pdf.columns:
@@ -1352,9 +1370,7 @@ def _decode_fragments(
     pdf = pdf.drop_duplicates(subset=["gen", "part_id", "frag_id", "column"]).sort_values(
         ["gen", "frag_id", "column"], kind="mergesort"
     )
-    frames: list[pd.DataFrame] = []
-    tails: dict = {}
-    tail_counts: dict = {}
+    frags: list[tuple[dict, pd.DataFrame, np.ndarray | None]] = []
     for (_gen, _frag), sub in pdf.groupby(["gen", "frag_id"], sort=True):
         bufs = {
             r["column"]: bytes(r["payload"])
@@ -1385,61 +1401,92 @@ def _decode_fragments(
                 except ValueError:
                     pass
             fr[name] = _from_storage(api.decode_block(bufs[name]), ddl)
+        frame = pd.DataFrame(fr)
+        keys = None  # (key...) ids: chain groups and version/key selection
+        if (content_col is not None or select is not None) and all(k in fr for k in key_cols):
+            keys = _key_series(frame, key_cols).to_numpy(dtype=object)
+        frags.append((bufs, frame, keys))
+    if not frags:
+        empty = {n: _from_storage(pd.Series([], dtype=object), ddl) for n, ddl in spec}
+        return pd.DataFrame(empty), {}, {}
+
+    keep = need = None
+    if select is not None:
+        all_keys = None if frags[0][2] is None else np.concatenate([k for _, _, k in frags])
+        keep = np.asarray(
+            select(pd.concat([f for _, f, _ in frags], ignore_index=True), all_keys),
+            dtype=bool,
+        )
         if content_col is not None:
-            keys = (
-                _key_series(pd.DataFrame(fr), key_cols)
-                if fr
-                else pd.Series([], dtype=object)
-            )
-            gsizes = _group_sizes(keys)
+            need = set(all_keys[keep])
+    frames: list[pd.DataFrame] = []
+    tails: dict = {}
+    tail_counts: dict = {}
+    row0 = 0
+    for bufs, frame, keys in frags:
+        n = len(frame)
+        m = None if keep is None else keep[row0 : row0 + n]
+        row0 += n
+        out = {c: frame[c] if m is None else frame[c][m].reset_index(drop=True) for c in frame}
+        if content_col is not None:
+            gsizes = _group_sizes(pd.Series(keys, dtype=object))
             starts = _group_starts(gsizes)
-            gkeys = keys.to_numpy(dtype=object)[starts] if len(starts) else []
+            gkeys = keys[starts] if len(starts) else np.zeros(0, dtype=object)
+            gsel = None if need is None else np.fromiter(
+                (k in need for k in gkeys), dtype=bool, count=len(gkeys)
+            )
             # Arrow-native content: the chain kernel returns a
             # LargeStringArray and the column rides to the applyInPandas
             # boundary as an Arrow-backed pandas column — Python strings
             # are materialized only for the per-group tails (chain seeds)
-            seeds = [tails.get(k) for k in gkeys]
-            try:
-                content_arr = api.decode_block_arrow(
-                    bufs[content_col], base_texts=seeds
-                ).cast(pa.string())
-            except ValueError:  # codec without an arrow path (dict/rle/...)
-                content_arr = pa.Array.from_pandas(
-                    api.decode_block(bufs[content_col], base_texts=seeds),
-                    type=pa.string(),
-                )
-            fr[content_col] = pd.Series(
+            content_arr = _content_rows(
+                bufs[content_col], [tails.get(k) for k in gkeys], gsel, gsizes
+            )
+            # update threaded tails: last version per replayed key group
+            # (keys are group-contiguous, so group ends == per-key last rows)
+            rsizes, rkeys = (gsizes, gkeys) if gsel is None else (gsizes[gsel], gkeys[gsel])
+            if len(rkeys):
+                ends = np.cumsum(rsizes) - 1
+                tails.update(zip(rkeys, content_arr.take(pa.array(ends)).to_pylist()))
+            for k, c in zip(gkeys, gsizes):
+                tail_counts[k] = tail_counts.get(k, 0) + int(c)
+            if m is not None:
+                # every selected row lies in a replayed group; its place
+                # among the replayed rows is a running count
+                pos = np.cumsum(np.repeat(gsel, gsizes))[m] - 1
+                content_arr = content_arr.take(pa.array(pos, type=pa.int64()))
+            out[content_col] = pd.Series(
                 pd.arrays.ArrowExtensionArray(content_arr), dtype=pd.ArrowDtype(pa.string())
             )
-            # update threaded tails: last version per key group (keys are
-            # group-contiguous, so group ends == per-key last rows)
-            if len(keys):
-                ends = starts + gsizes - 1
-                tail_vals = content_arr.take(pa.array(ends, type=pa.int64())).to_pylist()
-                tails.update(zip(gkeys, tail_vals))
-                for k, c in zip(gkeys, gsizes):
-                    tail_counts[k] = tail_counts.get(k, 0) + int(c)
-        frames.append(pd.DataFrame({n: fr[n] for n in names}))
-    if not frames:
-        empty = {n: _from_storage(pd.Series([], dtype=object), ddl) for n, ddl in spec}
-        return pd.DataFrame(empty), tails, tail_counts
-    out = pd.concat(frames, ignore_index=True)
-    return out, tails, tail_counts
+        frames.append(pd.DataFrame({c: out[c] for c in names}))
+    return pd.concat(frames, ignore_index=True), tails, tail_counts
 
 
-def _version_select(
-    out: pd.DataFrame,
-    key_cols: tuple[str, ...],
-    latest_only: bool,
-    at_version: int | None,
-) -> pd.DataFrame:
-    """Version pruning: keep each key's head (latest_only) or its
-    version index ``at_version`` (0-based).  Fragment replay order IS
-    version order per key, so a stable comparison sort on the key
-    (NUL-safe, unlike hash tables) gives group-contiguous versions."""
-    if len(out) == 0:
-        return out
-    keys = _key_series(out, key_cols).to_numpy(dtype=object)
+def _content_rows(
+    buf: bytes, seeds: list, groups: np.ndarray | None, gsizes: np.ndarray
+) -> pa.Array:
+    """The content rows of the selected chain groups (every group when
+    ``groups`` is None) as a string array.  A chain block replays only
+    those groups; a block of any other codec decodes whole and is
+    filtered."""
+    codec, meta, payload = blocks_mod.unframe(buf)
+    if codec == "chain":
+        arr = chain_kernel.decode_chain_arrow(meta, payload, base_texts=seeds, groups=groups)
+    else:
+        try:
+            arr = api.decode_block_arrow(buf)
+        except ValueError:  # codec without an arrow path (dict/rle/...)
+            arr = pa.Array.from_pandas(api.decode_block(buf), type=pa.string())
+        if groups is not None:
+            arr = arr.filter(pa.array(np.repeat(groups, gsizes)))
+    return arr.cast(pa.string())
+
+
+def _version_mask(keys: np.ndarray, latest_only: bool, at_version: int | None) -> np.ndarray:
+    """Version pruning over rows in replay order (version order per
+    key): each key's head (latest_only) or its version ``at_version``
+    (0-based).  A stable comparison sort on the key (NUL-safe, unlike
+    pandas' string hash tables) makes each key's versions contiguous."""
     order = np.argsort(keys, kind="stable")
     sk = keys[order]
     starts = np.concatenate(([True], sk[1:] != sk[:-1]))
@@ -1450,7 +1497,46 @@ def _version_select(
         run_lens = np.diff(np.concatenate((run_starts, [len(sk)])))
         pos = np.arange(len(sk)) - np.repeat(run_starts, run_lens)
         sel = pos == int(at_version)
-    return out.iloc[order[sel]]
+    mask = np.zeros(len(keys), dtype=bool)
+    mask[order[sel]] = True
+    return mask
+
+
+def _pred_mask(s: pd.Series, p: _Pred) -> np.ndarray:
+    """The rows of decoded column ``s`` that can meet ``p``, compared in
+    the zone-map key space (``_where_value``'s keys; the storage
+    mapping encode applies, ``_storage_int64`` or ``_float_keys``).  A
+    superset of the rows the residual filter keeps: nulls never meet a
+    predicate, and float NaNs always pass, leaving their semantics to
+    the residual filter."""
+    if p.ddl == "string":
+        a = strings.as_large_utf8(s)
+        m = pc.is_valid(a)
+        if p.points is not None:
+            vals = pa.array([k for _, k in p.points], type=pa.large_utf8())
+            m = pc.and_(m, pc.is_in(a, value_set=vals))
+        if p.lo is not None:
+            m = pc.and_(m, pc.greater_equal(a, pa.scalar(p.lo[1], pa.large_utf8())))
+        if p.hi is not None:
+            m = pc.and_(m, pc.less_equal(a, pa.scalar(p.hi[1], pa.large_utf8())))
+        return m.fill_null(False).to_numpy(zero_copy_only=False)
+    if p.ddl in ("float", "double"):
+        v = s.to_numpy(dtype=np.float64, na_value=np.nan)
+        nan = np.isnan(v)  # NaN and null: left to the residual filter
+        k = _float_keys(np.where(nan, 0.0, v))
+        m = ~nan
+    else:
+        st = _storage_int64(s, p.ddl)
+        nan = np.zeros(len(st), dtype=bool)
+        k = st.to_numpy(dtype=np.int64, na_value=0)
+        m = ~st.isna().to_numpy()
+    if p.points is not None:
+        m &= np.isin(k, np.array([key for _, key in p.points], dtype=np.int64))
+    if p.lo is not None:
+        m &= k >= p.lo[1]
+    if p.hi is not None:
+        m &= k <= p.hi[1]
+    return m | nan
 
 
 def make_decode_kernel(
@@ -1461,8 +1547,25 @@ def make_decode_kernel(
     latest_only: bool = False,
     at_version: int | None = None,
     on_error: str = "raise",
+    preds: list[_Pred] = (),
 ):
+    """groupBy(part_id).applyInArrow decode kernel: one partition's
+    blocks -> its rows.  Version selection (``latest_only`` /
+    ``at_version``) and then ``preds`` (``_pred_mask``, which never
+    drops a row the residual filter keeps) pick the rows before any
+    content replays, so only the chains of keys holding a picked row
+    replay and only the picked rows cross the Python->JVM boundary."""
     names = out_names if out_names is not None else [n for n, _ in spec]
+    select = None
+    if preds or latest_only or at_version is not None:
+
+        def select(frame: pd.DataFrame, keys: np.ndarray | None) -> np.ndarray:
+            m = np.ones(len(frame), dtype=bool)
+            if latest_only or at_version is not None:
+                m = _version_mask(keys, latest_only, at_version)
+            for p in preds:
+                m &= _pred_mask(frame[p.col], p)
+            return m
 
     def decode_partition(pdf: pd.DataFrame) -> pd.DataFrame:
         if on_error == "skip":
@@ -1476,13 +1579,8 @@ def make_decode_kernel(
         return _decode_partition_body(pdf)
 
     def _decode_partition_body(pdf: pd.DataFrame) -> pd.DataFrame:
-        out, _tails, _counts = _decode_fragments(pdf, spec, key_cols, content_col)
-        out = out.reset_index(drop=True)
-        if latest_only or at_version is not None:
-            # chains still replay fully (keyframe-bounded), but only the
-            # requested version per key crosses the Python->JVM boundary
-            out = _version_select(out, key_cols, latest_only, at_version)
-        out = out.reset_index(drop=True)[names]
+        out, _tails, _counts = _decode_fragments(pdf, spec, key_cols, content_col, select)
+        out = out[names]
         # Spark's serializer struct-packs plain Arrays; pd.concat across
         # fragments leaves Arrow-backed columns chunked -> combine once
         for c in out.columns:
@@ -1630,8 +1728,10 @@ def _where_value(v, ddl: str) -> tuple:
         f = float(v)
         return f, int(_float_keys(np.array([f], dtype=np.float64))[0])
     if ddl == "timestamp":
-        t = pd.Timestamp(v)
-        return t.to_pydatetime(), int(t.value)  # epoch ns
+        # the residual filter compares with a microsecond literal, so the
+        # key is that literal's epoch ns, not the finer value's
+        t = pd.Timestamp(v).to_pydatetime()
+        return t, int(pd.Timestamp(t).value)
     if ddl == "date":
         t = pd.Timestamp(v)
         return t.date(), int(t.value // _NS_PER_DAY)
@@ -1684,27 +1784,39 @@ def _where_parts(
 ) -> set[int]:
     """Partition pruning for where=: the part_ids in which EVERY predicate
     has a block that can hold a match, from one metadata-only pass over
-    ``blocks`` (no payload is read).  A block of a predicate's column
-    hits when its zone map meets the predicate — (zmin, zmax) in key
-    space for numeric and temporal columns, the UTF-8-byte-ordered
-    (smin, smax) for strings (see _string_zone) — AND, for string point
-    sets, its Bloom filter admits at least one value
-    (kernels/bloom.bloom_maybe_any).  An IN-list beyond ``_IN_ZONE_MAX``
-    values tests one loose [min, max] zone range instead of a per-value
-    OR: a plan-size guard, looser but never wrong.
+    ``blocks`` (no payload is read; ``_where_hits`` is the pass).
 
-    Null zone bounds and Bloom filters (older tables, all-null
-    fragments, truncation-dropped string extremes, low-cardinality
-    columns), and columns ``blocks`` lacks, count as possible matches:
-    pruning is only ever an optimization, and the residual row filter
-    after decode keeps exact semantics.  ``live`` (committed
-    (part_id, run_id) fragments) drops the hits of superseded fragments
-    that share a live run's directory.
+    ``live`` (committed (part_id, run_id) fragments) drops the hits of
+    superseded fragments that share a live run's directory.
 
     Headroom: the collected hit list holds one row per fragment of a
     predicate column — partitions-sized, so <= ~10^6 rows per column at
     100 TB with >= 100 MB partitions.  Pinned by
     test_partition_count_headroom_100k."""
+    hits = _where_hits(blocks, preds).toPandas()
+    if live is not None:
+        live = live[["part_id", "run_id"]].astype({"part_id": "int64"})
+        hits = hits.merge(live, on=["part_id", "run_id"])
+    ok = hits.groupby("part_id")[[f"h{i}" for i in range(len(preds))]].any().all(axis=1)
+    return {int(p) for p, keep in ok.items() if keep}
+
+
+def _where_hits(blocks: DataFrame, preds: list[_Pred]) -> DataFrame:
+    """One row per predicate-column block: ``part_id``, ``run_id`` and
+    one boolean ``h<i>`` per predicate, all JVM expressions.  A block of
+    a predicate's column hits when its zone map meets the predicate —
+    (zmin, zmax) in key space for numeric and temporal columns, the
+    UTF-8-byte-ordered (smin, smax) for strings (see _string_zone) —
+    AND, for string point sets, its Bloom filter admits at least one
+    value (``_bloom_hit``).  An IN-list beyond ``_IN_ZONE_MAX`` values
+    tests one loose [min, max] zone range instead of a per-value OR: a
+    plan-size guard, looser but never wrong.
+
+    Null zone bounds and Bloom filters (older tables, all-null
+    fragments, truncation-dropped string extremes, low-cardinality
+    columns), and columns ``blocks`` lacks, count as possible matches:
+    pruning is only ever an optimization, and the residual row filter
+    after decode keeps exact semantics."""
     have = set(blocks.columns)
 
     def meets(mn: str, mx: str, lo, hi):
@@ -1734,32 +1846,31 @@ def _where_parts(
                 for k in keys:
                     hit = hit | meets(mn, mx, k, k)
             if p.ddl == "string" and "bloom" in have:
-                hit = hit & _bloom_any(keys)(F.col("bloom"))
+                hit = hit & _bloom_hit(keys)
         hit_cols.append(((F.col("column") == p.col) & hit).alias(f"h{i}"))
-    hits = (
-        blocks.filter(F.col("column").isin(sorted({p.col for p in preds})))
-        .select("part_id", "run_id", *hit_cols)
-        .toPandas()
+    return blocks.filter(F.col("column").isin(sorted({p.col for p in preds}))).select(
+        "part_id", "run_id", *hit_cols
     )
-    if live is not None:
-        live = live[["part_id", "run_id"]].astype({"part_id": "int64"})
-        hits = hits.merge(live, on=["part_id", "run_id"])
-    ok = hits.groupby("part_id")[[f"h{i}" for i in range(len(preds))]].any().all(axis=1)
-    return {int(p) for p, keep in ok.items() if keep}
 
 
-def _bloom_any(values: list[str]):
-    """pandas UDF over a Bloom column: False only where the filter proves
-    every one of ``values`` absent.  The probe list ships in the
-    closure, and each block answers it with one vectorized FNV sweep."""
-
-    @F.pandas_udf("boolean")
-    def maybe_any(b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [x is None or bloom_kernel.bloom_maybe_any(x, values) for x in b]
-        )
-
-    return maybe_any
+def _bloom_hit(values: list[str]):
+    """JVM expression over the ``bloom`` column: False only where the
+    filter proves every one of ``values`` absent.  The driver hashes the values
+    once (``probe_positions``, modulo the largest filter size); each
+    block masks a position to its own size, ``pos & (8*length(bloom)-1)``,
+    and reads that bit little-endian from its filter bytes.  The
+    positions ship as one JSON string literal: a nested ``F.lit`` list
+    costs a Py4J call per element.  A null or empty filter proves
+    nothing."""
+    pos = json.dumps(bloom_kernel.probe_positions(values).tolist())
+    bit = (
+        "shiftright(CAST(conv(hex(substring(bloom, "
+        "shiftright(q & (8 * length(bloom) - 1), 3) + 1, 1)), 16, 10) AS INT), q & 7) & 1 = 1"
+    )
+    return F.expr(
+        "bloom IS NULL OR length(bloom) = 0 OR "
+        f"exists(from_json('{pos}', 'array<array<int>>'), ks -> forall(ks, q -> {bit}))"
+    )
 
 
 def decode(
@@ -1807,13 +1918,19 @@ def decode(
     its zone map (per-block min/max recorded at encode, the A13 Range
     semantics; UTF-8-byte-ordered smin/smax for strings, unicode
     included) meets the range or any listed value AND, for string
-    IN-lists, its Bloom filter admits some listed value; a partition
-    survives when every predicate has a hitting block.  A residual
-    row filter (range compares, exact ``isin``) then restores exact
-    semantics.  Predicate columns are always included in the output
-    (the residual filter reads them).  Tables encoded before zone maps
-    or Bloom filters existed decode fine — pruning silently degrades
-    to scan-all.
+    IN-lists, its Bloom filter admits some listed value (a JVM
+    expression, ``_bloom_hit``); a partition survives when every
+    predicate has a hitting block.  Inside each surviving partition the
+    kernel decodes the predicate and key columns first, keeps the rows
+    that can meet every predicate (compared in the same key space,
+    ``_pred_mask``), replays content chains only for the keys holding
+    a kept row, and returns only the kept rows.  Spark's residual row
+    filter (range compares, exact ``isin``) then defines the exact
+    semantics, collation and NaN included.  A predicate on the content
+    column is left to the residual filter alone.  Predicate columns are
+    always included in the output (the residual filter reads them).
+    Tables encoded before zone maps or Bloom filters existed decode
+    fine — pruning silently degrades to scan-all.
 
     on_error="skip" is READ-side failure isolation (the decode mirror
     of encode's fail-the-partition-not-the-job taxonomy): a partition
@@ -1827,9 +1944,9 @@ def decode(
     the materialized head, snapshot/delta.rs:81-95,137-151):
     latest_only=True emits ONE row per (key...) — the chain head, the
     common "fetch current corpus" read; at_version=k emits each key's
-    k-th version (0-based) where it exists.  Chains replay internally
-    (decode depth stays keyframe-bounded) but only the requested
-    version per key leaves the worker.
+    k-th version (0-based) where it exists.  Version selection runs
+    before the where= row filter, and only the requested version per
+    key leaves the worker.
     """
     if latest_only and at_version is not None:
         raise ValueError("latest_only and at_version are mutually exclusive")
@@ -1866,16 +1983,9 @@ def decode(
     else:
         decode_spec = out_spec = spec
     row_schema = ", ".join(f"{name} {ddl}" for name, ddl in out_spec)
-    content = info["content_col"] if any(n == info["content_col"] for n, _ in decode_spec) else None
-    kernel = make_decode_kernel(
-        decode_spec, info["key_cols"], content,
-        out_names=[n for n, _ in out_spec],
-        latest_only=latest_only, at_version=at_version,
-        on_error=on_error,
-    )
-    # String zone/Bloom pruning assumes the residual filter compares
-    # strings under binary (UTF-8 byte) order — the order (smin, smax)
-    # were recorded in at encode.  A session whose DEFAULT COLLATION is
+    # String zone/Bloom pruning and the kernel's string row filter
+    # assume the residual filter compares strings under binary (UTF-8
+    # byte) order — the order (smin, smax) were recorded in at encode.  A session whose DEFAULT COLLATION is
     # not UTF8_BINARY (e.g. UTF8_LCASE) makes the residual filter
     # case-insensitive while pruning stays byte-ordered, silently
     # dropping matching partitions (ADVICE r06) — so string pruning is
@@ -1893,6 +2003,15 @@ def decode(
         except Exception:
             pass
     prunable = [p for p in preds if p.ddl != "string" or string_prune_ok]
+    content = info["content_col"] if any(n == info["content_col"] for n, _ in decode_spec) else None
+    kernel = make_decode_kernel(
+        decode_spec, info["key_cols"], content,
+        out_names=[n for n, _ in out_spec],
+        latest_only=latest_only, at_version=at_version,
+        on_error=on_error,
+        # the content column is known only after its replay
+        preds=[p for p in prunable if p.col != info["content_col"]],
+    )
     if prunable:
         # the surviving partitions narrow the resolved manifest, as
         # parts= does, so the block selection below stays one join

@@ -27,9 +27,11 @@ Sizing: ~10 bits per DISTINCT key, k=4 probes (FPR ~1%), clamped to
 [1 Ki, 256 Ki] bits -> at most 32 KiB of metadata per (partition,
 column); at 100 TB with >= 100 MB partitions that is <= ~0.06% of data
 size.  Filters never reach the driver: decode's one prune pass
-(``jobs/pipeline._where_parts``) probes them distributed over the
-blocks DataFrame with ``bloom_maybe_any``, together with the zone test
-of the same block, and collects only the partitions-sized hit list.
+(``jobs/pipeline._where_parts``) probes them as a JVM expression over
+the blocks DataFrame, together with the zone test of the same block,
+and collects only the partitions-sized hit list.  The driver hashes
+the probe values once (``probe_positions``); each block tests those
+bit positions masked to its own filter size, with no Python stage.
 Low-cardinality columns (repo, lang; <= 64 distincts) skip the filter
 — their zone maps and dictionary blocks already answer point probes.
 """
@@ -143,18 +145,11 @@ def bloom_build(arr: pa.Array) -> bytes | None:
     return np.packbits(bits, bitorder="little").tobytes()
 
 
-def bloom_maybe_any(bloom: bytes | None, values: list[str]) -> bool:
-    """False ONLY when the filter proves EVERY value absent from the
-    block; None/empty filters answer True (possible), and a point probe
-    is a one-value list.  One padded byte matrix + FNV column sweep
-    covers the whole probe list (same kernels as bloom_build), so a
-    K-value probe costs one vectorized pass, not K python round-trips."""
-    if not bloom:
-        return True
-    if not values:
-        return False
-    m_bits = len(bloom) * 8
+def probe_positions(values: list[str]) -> np.ndarray:
+    """(len(values), BLOOM_K) bit positions of each value, modulo
+    ``_MAX_BITS``.  Every filter's size is a power of two no larger
+    than ``_MAX_BITS``, so ``pos & (m_bits - 1)`` is the position inside
+    a filter of ``m_bits`` bits: one hash sweep serves every block."""
     mat, lens = _byte_matrix([v.encode("utf-8") for v in values])
     h1, h2 = _fnv_pair_matrix(mat, lens)
-    bits = np.unpackbits(np.frombuffer(bloom, dtype=np.uint8), bitorder="little")
-    return bool(bits[_positions_vec(h1, h2, m_bits)].all(axis=1).any())
+    return _positions_vec(h1, h2, _MAX_BITS)

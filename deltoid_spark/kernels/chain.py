@@ -99,6 +99,29 @@ def _version_deltas(a: np.ndarray, b: np.ndarray):
     )
 
 
+def _seed_code_table(texts: list[str], line_dict: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Map seed texts' lines into a block's line-code space in one pass:
+    (codes, offsets), text ``j``'s codes being ``codes[offsets[j]:offsets[j+1]]``.
+
+    One ``split_pattern`` and one ``index_in`` per block (the hash set
+    over the block's line dictionary is built once, not once per seeded
+    group).  Dictionary hits get their code; lines outside the
+    dictionary get negative ids, numbered in first-appearance order
+    across the texts, so equal seed lines share one id and no id ever
+    equals a code."""
+    la = pc.split_pattern(pa.array(texts, type=pa.large_utf8()), pattern="\n")
+    lines = la.values
+    codes = (
+        pc.index_in(lines, value_set=line_dict)
+        .fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
+    )
+    miss = codes < 0
+    if miss.any():
+        unseen = pc.dictionary_encode(lines.filter(pa.array(miss))).indices
+        codes[miss] = -(unseen.to_numpy(zero_copy_only=False).astype(np.int64) + 1)
+    return codes, la.offsets.to_numpy().astype(np.int64)
+
+
 def _script_cost(n_lines_chars: int, n_ints: int) -> int:
     return n_lines_chars + 8 * n_ints
 
@@ -308,27 +331,6 @@ def encode_chain(
         base_versions = np.zeros(n_groups, dtype=np.int64)
     seeded = np.array([t is not None for t in base_texts], dtype=bool)
 
-    unseen: dict[str, int] = {}
-
-    def _seed_codes(text: str) -> np.ndarray:
-        """Map a seed text's lines into code space: dictionary hits get
-        their code, lines outside the dictionary get stable negative
-        ids (equal seed lines share one id; never equal to any code)."""
-        lines = text.split("\n")
-        hits = pc.index_in(
-            pa.array(lines, type=pa.large_utf8()), value_set=line_dict
-        ).fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
-        if (hits < 0).any():
-            hits = hits.copy()
-            for j, ln in enumerate(lines):
-                if hits[j] < 0:
-                    code = unseen.get(ln)
-                    if code is None:
-                        code = -(len(unseen) + 1)
-                        unseen[ln] = code
-                    hits[j] = code
-        return hits
-
     is_key = np.zeros(n, dtype=bool)
     key_idx: list[int] = []
     # per delta row: cnt1/cnt2/cnt3 are (edit_count, add_count,
@@ -425,11 +427,21 @@ def encode_chain(
             char_streams_data=None,
         )
 
+    # seeded continuations (a group whose first version deltas against
+    # its base text) map their seed lines into code space in one pass
+    gstarts = np.concatenate(([0], np.cumsum(gs)))[:-1]
+    cont = np.flatnonzero(
+        seeded & (gs > 0)
+        & (np.asarray(base_versions, dtype=np.int64) % keyframe_interval != 0)
+    )
+    cont = cont[~is_null[gstarts[cont]]]
+    seed_slot = {int(g): j for j, g in enumerate(cont)}
+    seed_codes, seed_offs = _seed_code_table([base_texts[g] for g in cont], line_dict)
+
     cursor = 0
 
     row = 0
     for g, gsize in enumerate(group_sizes):
-        v0 = int(base_versions[g])
         for v in range(int(gsize)):
             i = row + v
             cur_null = bool(is_null[i])
@@ -472,16 +484,11 @@ def encode_chain(
                     delta_lines.append(codes[lo + m_ : hi])
                     force_key = False
                 # ch == 0: neither script pays -> keyframe
-            elif (
-                v == 0
-                and seeded[g]
-                and not cur_null
-                and (v0 % keyframe_interval) != 0
-            ):
+            elif v == 0 and g in seed_slot:
                 # seeded continuation: first version deltas against the
                 # supplied base text (rare; per-group python path)
-                seed_lines = base_texts[g].split("\n")
-                seed_arr = _seed_codes(base_texts[g])
+                j = seed_slot[g]
+                seed_arr = seed_codes[seed_offs[j] : seed_offs[j + 1]]
                 lo, hi = loffs[i], loffs[i + 1]
                 eidx, elines, adds, rem, sp, sdel, sins = _version_deltas(
                     seed_arr, codes[lo:hi]
@@ -508,7 +515,7 @@ def encode_chain(
                     t_cd: list = []
                     t_frags: list = []
                     kept = _char_refine(
-                        line_dict, seed_lines, eidx, elines,
+                        line_dict, base_texts[g].split("\n"), eidx, elines,
                         t_bits, t_cs, t_cd, t_frags,
                     )
                     if any(t_bits):
@@ -662,9 +669,21 @@ def _pack_chain(
 
 
 def decode_chain_arrow(
-    meta: dict, payload: bytes, base_texts: list | None = None
+    meta: dict,
+    payload: bytes,
+    base_texts: list | None = None,
+    groups: np.ndarray | None = None,
 ) -> pa.Array:
     """Chain decode in dictionary-code space, returning a LargeStringArray.
+
+    ``groups`` (a boolean mask over the block's chain groups) replays
+    only the selected groups and returns only their rows, in block
+    order; ``None`` selects every group.  The streams are restricted
+    before the fold: each group's cursors into the keyframe, delta-row,
+    edit, char-splice and delta-line streams are cumulative sums of the
+    per-row counts, so an unselected group's keyframe texts and delta
+    lines are never split, dictionary-encoded or folded.
+    ``base_texts`` stays indexed by the block's group number.
 
     The left-fold over versions is inherently sequential per group, but
     nothing about it needs Python strings: keyframe texts, delta lines
@@ -685,8 +704,6 @@ def decode_chain_arrow(
     gplen = meta["gplen"]
     group_sizes = unpack_ints(meta["groups"], payload[p : p + gplen]); p += gplen
     seeded = blocks.unpack_mask(payload[p : p + meta["sd_len"]], len(group_sizes)); p += meta["sd_len"]
-    if meta.get("seeded") and base_texts is None:
-        raise ValueError("chain block has seeded groups; decode needs base_texts")
     is_key = blocks.unpack_mask(payload[p : p + meta["kb_len"]], n); p += meta["kb_len"]
     is_null = blocks.unpack_mask(payload[p : p + meta["nb_len"]], n); p += meta["nb_len"]
     splice = blocks.unpack_mask(payload[p : p + meta["sb_len"]], meta["n_deltas"]); p += meta["sb_len"]
@@ -698,7 +715,7 @@ def decode_chain_arrow(
     edit_idx_flat = unpack_ints_z(meta["ei"], payload[p : p + meta["eilen"]]); p += meta["eilen"]
     # char-splice refinement streams (absent on blocks encoded without
     # any char-mode edit, including every pre-refinement block)
-    ccum = cb_l = cs_arr = cd_arr = frag_l = None
+    ccum = cb_l = cs_arr = cd_arr = frag_l = char_bits = frag_arr = None
     if "cb_len" in meta:
         char_bits = blocks.unpack_mask(
             payload[p : p + meta["cb_len"]], meta["n_edits"]
@@ -707,13 +724,43 @@ def decode_chain_arrow(
         cd_arr = unpack_ints(meta["cd"], payload[p : p + meta["cdlen"]]); p += meta["cdlen"]
         _, fmeta, fpay = blocks.unframe(payload[p : p + meta["frags_len"]]); p += meta["frags_len"]
         frag_arr, _fm = decode_plain_arrow(fmeta, fpay)
-        frag_l = frag_arr.to_pylist()
-        cb_l = char_bits.tolist()
-        ccum = np.concatenate(
-            ([0], np.cumsum(char_bits.astype(np.int64)))
-        ).tolist()
     _, lmeta, lpay = blocks.unframe(payload[p:])
     dl_arr, _dmask = decode_plain_arrow(lmeta, lpay)
+
+    if groups is not None:
+        # restrict every stream to the selected groups' entries
+        gsel = np.asarray(groups, dtype=bool)
+        rsel = np.repeat(gsel, np.asarray(group_sizes, dtype=np.int64))
+        key_arr = key_arr.filter(pa.array(rsel[is_key & ~is_null]))
+        dsel = rsel[~is_key]
+        e_len = np.where(splice, 0, edit_counts)  # splice rows store no indices
+        esel = np.repeat(dsel, e_len)
+        l_len = np.where(splice, edit_counts, edit_counts + add_counts)
+        if char_bits is not None:
+            # a char-mode edit takes its text from the frag stream, not a line
+            eoff = np.concatenate(([0], np.cumsum(e_len)))
+            cum = np.concatenate(([0], np.cumsum(char_bits, dtype=np.int64)))
+            l_len = l_len - (cum[eoff[1:]] - cum[eoff[:-1]])
+            fsel = esel[char_bits]
+            cs_arr, cd_arr = cs_arr[fsel], cd_arr[fsel]
+            frag_arr = frag_arr.filter(pa.array(fsel))
+            char_bits = char_bits[esel]
+        dl_arr = dl_arr.filter(pa.array(np.repeat(dsel, l_len)))
+        edit_idx_flat = edit_idx_flat[esel]
+        splice, edit_counts, add_counts, remove_counts = (
+            x[dsel] for x in (splice, edit_counts, add_counts, remove_counts)
+        )
+        is_key, is_null = is_key[rsel], is_null[rsel]
+        group_sizes, seeded = group_sizes[gsel], seeded[gsel]
+        if base_texts is not None:
+            base_texts = [base_texts[g] for g in np.flatnonzero(gsel)]
+        n = int(rsel.sum())
+    if seeded.any() and base_texts is None:
+        raise ValueError("chain block has seeded groups; decode needs base_texts")
+    if char_bits is not None:
+        frag_l = frag_arr.to_pylist()
+        cb_l = char_bits.tolist()
+        ccum = np.concatenate(([0], np.cumsum(char_bits, dtype=np.int64))).tolist()
 
     # line universe = keyframe lines ++ delta lines ++ seeded base lines,
     # dictionary-encoded once; every fold step below is int-code numpy

@@ -416,28 +416,35 @@ _HEX_LUT = np.zeros(256, dtype=bool)
 _HEX_LUT[np.frombuffer(b"0123456789abcdef", dtype=np.uint8)] = True
 
 
+def _lower_hex(lens: np.ndarray, data: bytes) -> bool:
+    """Every value of a utf-8 view (null slots are empty) is even-length
+    lowercase hex: even lengths + an all-hex-digit LUT check on the
+    concatenated data (hex is ascii, so bytes == chars)."""
+    return not (lens % 2).any() and bool(_HEX_LUT[np.frombuffer(data, dtype=np.uint8)].all())
+
+
 def hex_eligible(arr: pa.Array) -> bool:
     """True iff there is a non-null value and every one is even-length
     lowercase hex.
 
-    One pass over the Arrow byte view (hex is ascii, so bytes == chars;
-    null slots are empty): even lengths + an all-hex-digit LUT check on
-    the concatenated data — the per-value regex this replaces cost
-    ~19 ms per 1024-row selector sample, ~4% of the encode kernel."""
+    One pass over the Arrow byte view — the per-value regex this
+    replaces cost ~19 ms per 1024-row selector sample, ~4% of the
+    encode kernel."""
     if arr.null_count == len(arr):
         return False
-    lens, data = utf8_view(arr)
-    if (lens % 2).any():
-        return False
-    buf = np.frombuffer(data, dtype=np.uint8)
-    return bool(_HEX_LUT[buf].all())
+    return _lower_hex(*utf8_view(arr))
 
 
 def encode_hex(arr: pa.Array) -> bytes:
+    """HEX packs each pair of digits into one byte.  Any other value is
+    refused: uppercase digits would decode lowercased, a silent data
+    change, and odd lengths or non-digits cannot pack."""
     # hex is ascii, so the Arrow byte view IS the char view: lengths and
     # concatenated digits come straight off the (offsets, data) buffers —
     # no python-string materialization (unhexlify accepts bytes)
     lengths, data = utf8_view(arr)
+    if not _lower_hex(lengths, data):
+        raise ValueError("hex codec needs even-length lowercase hex values")
     packed = binascii.unhexlify(data)  # single C call
     comp = blocks.compress(packed)  # structured hex (shared prefixes) compresses further
     half = lengths // 2

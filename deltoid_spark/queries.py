@@ -1930,9 +1930,10 @@ def _q60_in_list_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5(text) of doc_ids 0/70/140, all present) plus one fabricated
     absent value in a single decode.  A partition survives the scan
     only when some probe value can land in its zones AND its Bloom
-    filter admits at least one value (kernels/bloom.bloom_maybe_any:
-    the whole list is answered by one vectorized FNV sweep per block);
-    the residual ``isin`` restores exact semantics, so the oracle is
+    filter admits at least one value (a JVM expression over the
+    positions the driver hashes once, jobs/pipeline._bloom_hit); the
+    kernel returns only the rows whose commit is listed, and the
+    residual ``isin`` restores exact semantics, so the oracle is
     the same rows derived straight from documents.  This is the
     "fetch these N commits" read path — the batched generalization of
     q59's single probe."""

@@ -104,6 +104,17 @@ def test_hex_roundtrip():
     assert len(buf) < len(plain)
 
 
+def test_hex_encode_rejects_non_lowercase_hex():
+    # uppercase would decode lowercased: a silent data change, so the
+    # codec refuses it (as it refuses odd lengths and non-hex digits)
+    for vals in (["00FF", "ab"], ["abc"], ["0g"], ["ab", None, "Ab"]):
+        with pytest.raises(ValueError, match="lowercase hex"):
+            api.encode_block(pd.Series(vals, dtype=object), "hex")
+    # all-null and empty columns still encode
+    _roundtrip(pd.Series([None, None], dtype=object), "hex")
+    _roundtrip(pd.Series([], dtype=object), "hex")
+
+
 def test_hex_eligibility():
     def ok(vals):
         return strings.hex_eligible(pa.array(vals, pa.large_utf8()))

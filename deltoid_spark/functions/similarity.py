@@ -352,15 +352,17 @@ def list_id_col(cents: list[tuple[int, list[float]]]) -> Column:
     """Nearest-centroid list assignment as a Column: the
     exact-sequential Arrow kernel (_list_id_seq) at every codebook
     size — every cosine in the literal fold's IEEE order, so doubles
-    match _list_id_expr (the executable spec) and the DuckDB oracle
-    bit-for-bit (q29/q42 green), with a plan that stays FLAT in n_lists
-    instead of growing a literal array per centroid."""
+    match the literal-argmax expression (the executable spec, kept in
+    the tests) and the DuckDB oracle bit-for-bit (q29/q42 green), with
+    a plan that stays FLAT in n_lists instead of growing a literal
+    array per centroid."""
     return _list_id_seq(cents)(F.col("embedding").cast("array<double>"))
 
 
 def _list_id_seq(cents: list[tuple[int, list[float]]]):
     """Arrow-batched nearest-centroid assignment, bit-identical to the
-    literal-expression argmax (_list_id_expr): per-centroid cosines in
+    literal-expression argmax (``greatest`` over per-centroid
+    ``struct(cosine, -cid, cid)``): per-centroid cosines in
     the folds' exact IEEE order (see the kernel block at the top),
     argmax = first maximum over columns in cid-ascending order (ties,
     including all-NaN zero vectors, resolve to the lowest cid exactly
@@ -391,26 +393,6 @@ def _list_id_seq(cents: list[tuple[int, list[float]]]):
         return res
 
     return assign
-
-
-def _list_id_expr(cents: list[tuple[int, list[float]]]) -> Column:
-    """argmax over literal-broadcast centroid cosines (cos desc, cid
-    asc tie-break) via lexicographic struct greatest — one projection."""
-
-    def cos_to_const(vec: list[float]) -> Column:
-        carr = F.array(*[F.lit(float(x)) for x in vec])
-        return cosine(F.col("embedding").cast("array<double>"), carr)
-
-    return F.greatest(
-        *[
-            F.struct(
-                cos_to_const(cv).alias("c"),
-                F.lit(-cid).alias("n"),
-                F.lit(cid).alias("cid"),
-            )
-            for cid, cv in cents
-        ]
-    )["cid"]
 
 
 def ivf_topk(

@@ -153,8 +153,8 @@ def table_spec(df: DataFrame) -> list[tuple[str, str]]:
 # ------------------------------------------------------------- J1 encode ----
 
 
-def _group_sizes(keys: pd.Series) -> np.ndarray:
-    arr = keys.to_numpy(dtype=object)
+def _group_sizes(keys: np.ndarray) -> np.ndarray:
+    arr = np.asarray(keys, dtype=object)
     n = len(arr)
     if n == 0:
         return np.zeros(0, dtype=np.int64)
@@ -162,11 +162,41 @@ def _group_sizes(keys: pd.Series) -> np.ndarray:
     return np.diff(np.concatenate((starts, [n]))).astype(np.int64)
 
 
-def _key_series(pdf: pd.DataFrame, key_cols: tuple[str, ...]) -> pd.Series:
-    out = pdf[key_cols[0]].astype(str)
-    for k in key_cols[1:]:
-        out = out + "\x00" + pdf[k].astype(str)
-    return out
+_KEY_SEP = pa.scalar("\x00", pa.large_utf8())
+_KEY_NULL = "\x01\x02"  # no escaped value contains it
+
+
+def _key_ids(cols: list[pa.Array]) -> np.ndarray:
+    r"""One id per row of the (key...) columns, as an object array of
+    str.  Injective: each value is cast to a string and escaped (``\x01``
+    becomes ``\x01\x01``, NUL becomes ``\x01\x00``), a null becomes
+    ``\x01\x02``, and the parts join with a NUL, so an unescaped NUL
+    only ever separates parts and two rows share an id only when their
+    key tuples are equal.  Both sides pass the columns in their storage
+    form: encode through ``_key_arrays``, decode as the blocks decode."""
+    parts = []
+    for a in cols:
+        a = strings.as_large_utf8(a)
+        a = pc.replace_substring(a, "\x01", "\x01\x01")
+        parts.append(pc.replace_substring(a, "\x00", "\x01\x00"))
+    ids = pc.binary_join_element_wise(
+        *parts, _KEY_SEP, null_handling="replace", null_replacement=_KEY_NULL
+    )
+    return ids.to_numpy(zero_copy_only=False)
+
+
+def _key_arrays(
+    pdf: pd.DataFrame, key_cols: tuple[str, ...], ddls: dict[str, str]
+) -> list[pa.Array]:
+    """The encode side's key columns in the form their blocks decode to:
+    int-family, boolean and temporal columns as the int64 values
+    ``_storage_int64`` stores, strings and floats as they are."""
+    return [
+        pa.array(_storage_int64(pdf[k], ddls[k]))
+        if ddls[k] in _WIDTHS and ddls[k] not in ("float", "double")
+        else pa.array(pdf[k], from_pandas=True)
+        for k in key_cols
+    ]
 
 
 def _storage_int64(s: pd.Series, ddl: str) -> pd.Series:
@@ -396,7 +426,7 @@ def _encode_typed(
 
 
 def _group_starts(gsizes: np.ndarray) -> np.ndarray:
-    return np.concatenate(([0], np.cumsum(gsizes)[:-1])).astype(np.int64)
+    return (np.cumsum(gsizes) - gsizes).astype(np.int64)
 
 
 def _encode_content(
@@ -441,10 +471,10 @@ def _encode_content(
 
 def _encode_rows(
     pdf: pd.DataFrame,
+    keys: np.ndarray,
     part_id: int,
     frag_id: int,
     spec: list[tuple[str, str]],
-    key_cols: tuple[str, ...],
     content_col: str | None,
     keyframe_interval: int,
     level,
@@ -454,7 +484,8 @@ def _encode_rows(
     tail_counts: dict | None = None,
     content_arr: pa.Array | None = None,
 ) -> list[tuple]:
-    """Encode one sorted slice of rows into per-column block rows.
+    """Encode one sorted slice of rows, whose (key...) ids
+    (``_key_ids``) are ``keys``, into per-column block rows.
 
     tails / tail_counts (from decoded prior fragments) seed chain groups
     that continue an existing (key...) chain — the incremental
@@ -463,13 +494,11 @@ def _encode_rows(
     it never existed as pandas, so the dominant column skips both
     python-string materialization boundaries."""
     out = []
-    keys = _key_series(pdf, key_cols)
     gsizes = _group_sizes(keys)
     base_texts = None
     base_versions = None
     if tails:
-        starts = _group_starts(gsizes)
-        gkeys = keys.to_numpy(dtype=object)[starts] if len(starts) else []
+        gkeys = keys[_group_starts(gsizes)]
         base_texts = [tails.get(k) for k in gkeys]
         base_versions = np.array(
             [tail_counts.get(k, 0) if tails.get(k) is not None else 0 for k in gkeys],
@@ -551,19 +580,21 @@ def _slice_encoder(
     it the error propagates and fails the job."""
     sort_cols = [*key_cols, *order_cols]
     arrow_cols = _arrow_content_col(spec, content_col)
+    ddls = dict(spec)
 
     def encode_slice(
-        tbl: pa.Table, part_id: int, frag_id: int, prior: pd.DataFrame | None = None
+        tbl: pa.Table, part_id: int, frag_id: int, prior: pa.Table | None = None
     ) -> pa.Table:
         t0 = time.time()
         pdf, arrows = _table_to_pdf(tbl, spec, arrow_cols)
         try:
             if fail_inject is not None and (pdf[key_cols[0]] == fail_inject).any():
                 raise RuntimeError(f"injected failure for {fail_inject!r}")
+            keys = _key_ids(_key_arrays(pdf, key_cols, ddls))
             tails = tail_counts = None
             if prior is not None:
                 # only the chains this slice continues replay
-                cont = set(_key_series(pdf, key_cols))
+                cont = set(keys)
                 _rows, tails, tail_counts = _decode_fragments(
                     prior, spec, key_cols, content_col,
                     lambda _frame, keys: np.fromiter(
@@ -571,11 +602,10 @@ def _slice_encoder(
                     ),
                 )
             pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            content = None
-            if arrows:
-                content = arrows[content_col].take(pa.array(pdf.index.to_numpy(dtype=np.int64)))
+            order = pdf.index.to_numpy(dtype=np.int64)
+            content = arrows[content_col].take(pa.array(order)) if arrows else None
             rows = _encode_rows(
-                pdf.reset_index(drop=True), part_id, frag_id, spec, key_cols,
+                pdf.reset_index(drop=True), keys[order], part_id, frag_id, spec,
                 content_col, keyframe_interval, level, run_id, t0,
                 tails=tails, tail_counts=tail_counts, content_arr=content,
             )
@@ -1129,10 +1159,10 @@ def make_append_kernel(
     def append_partition(left_t: pa.Table, right_t: pa.Table) -> pa.Table:
         if left_t.num_rows == 0:
             return BLOCK_ARROW.empty_table()
-        right = right_t.to_pandas()  # block rows: binary payloads, exact
-        frag_id = int(right["frag_id"].max()) + 1 if len(right) else 0
+        last = pc.max(right_t.column("frag_id")).as_py()
         return encode_slice(
-            left_t, left_t.column("part_id")[0].as_py(), frag_id, prior=right
+            left_t, left_t.column("part_id")[0].as_py(),
+            0 if last is None else last + 1, prior=right_t,
         )
 
     return append_partition
@@ -1246,19 +1276,18 @@ def make_compact_kernel(
 ):
     """groupBy(part_id) kernel over one partition's active blocks: replay
     its fragments (``_decode_fragments``) and encode the rows as one
-    fresh fragment.  The rows take the Arrow form ``decode`` hands Spark
-    (``_pdf_to_arrow``), the form an encode kernel reads back, so the
-    payloads are the bytes ``make_encode_kernel`` makes of the
-    partition's decoded rows.  Failures are not isolated: a partition
-    that cannot be replayed or re-encoded fails the job."""
+    fresh fragment.  The rows are the Arrow table ``decode`` hands Spark,
+    the form an encode kernel reads back, so the payloads are the bytes
+    ``make_encode_kernel`` makes of the partition's decoded rows.
+    Failures are not isolated: a partition that cannot be replayed or
+    re-encoded fails the job."""
     encode_slice = _slice_encoder(
         spec, key_cols, order_cols, content_col, run_id=run_id, isolate=False
     )
 
     def compact_partition(tbl: pa.Table) -> pa.Table:
-        blocks = tbl.to_pandas()
-        rows, _tails, _counts = _decode_fragments(blocks, spec, key_cols, content_col)
-        return encode_slice(_pdf_to_arrow(rows, spec), int(blocks["part_id"].iloc[0]), 0)
+        rows, _tails, _counts = _decode_fragments(tbl, spec, key_cols, content_col)
+        return encode_slice(rows, tbl.column("part_id")[0].as_py(), 0)
 
     return compact_partition
 
@@ -1312,134 +1341,123 @@ def compact(
 # ------------------------------------------------------------- J2 decode ----
 
 
-def _from_storage(s: pd.Series, ddl: str) -> pd.Series:
-    """Cast a decoded storage series back to the column's pandas shape."""
-    if ddl == "string" or ddl.startswith(("map<", "array<", "struct<")):
-        if isinstance(s.dtype, pd.ArrowDtype):
-            return s  # Arrow-backed column: crosses the boundary as-is
-        return s.astype(object) if len(s) else pd.Series([], dtype=object)
-    if ddl in ("float", "double"):
-        return s  # FP codec already yields Float32/Float64 nullable
-    vals = s.astype("Int64")
-    mask = vals.isna().to_numpy()
-    raw = vals.fillna(0).astype("int64")
+# Spark-side Arrow type per DDL for the decode job's applyInArrow
+# return boundary.  Timestamps are tz-aware UTC (storage is UTC-epoch
+# nanoseconds — the cast reinterprets, it does not shift).
+_SPARK_SCALAR_ARROW = {
+    "string": pa.string(), "bigint": pa.int64(), "int": pa.int32(),
+    "smallint": pa.int16(), "tinyint": pa.int8(), "boolean": pa.bool_(),
+    "float": pa.float32(), "double": pa.float64(),
+    "timestamp": pa.timestamp("us", tz="UTC"), "date": pa.date32(),
+}
+
+
+def _spark_arrow_type(ddl: str) -> pa.DataType:
+    if ddl in _SPARK_SCALAR_ARROW:
+        return _SPARK_SCALAR_ARROW[ddl]
+    from ..kernels import nested as nested_kernel
+
+    return nested_kernel.spark_arrow_type(nested_kernel.parse_ddl(ddl))
+
+
+def _to_spark(arr: pa.Array, ddl: str) -> pa.Array:
+    """A decoded storage array (``api.decode_block``) -> the Arrow array
+    Spark's applyInArrow verifier expects for ``ddl``: epoch-ns int64
+    through ``timestamp("ns")`` to UTC microseconds, epoch days to
+    date32, 0/1 to boolean, and large strings, lists and maps (nested
+    trees too) to their Spark-side types."""
     if ddl == "timestamp":
-        out = pd.Series(raw.to_numpy().astype("datetime64[ns]"))
-        out[mask] = pd.NaT
-        return out
-    if ddl == "date":
-        out = pd.Series((raw.to_numpy() * _NS_PER_DAY).astype("datetime64[ns]")).dt.date
-        out = out.astype(object)
-        out[mask] = None
-        return out
-    if ddl == "boolean":
-        out = vals.astype("boolean")
-        return out
-    pd_type = {"bigint": "Int64", "int": "Int32", "smallint": "Int16", "tinyint": "Int8"}[ddl]
-    return vals.astype(pd_type)
+        arr = arr.cast(pa.timestamp("ns"))
+    elif ddl == "date":
+        arr = arr.cast(pa.int32())
+    return arr.cast(_spark_arrow_type(ddl))
+
+
+def _spark_column(arrays: list[pa.Array], ddl: str) -> pa.Array:
+    """One output column from its per-fragment storage arrays."""
+    if not arrays:
+        return pa.array([], type=_spark_arrow_type(ddl))
+    return _to_spark(arrays[0] if len(arrays) == 1 else pa.concat_arrays(arrays), ddl)
+
+
+def _fragments(tbl: pa.Table, names: set[str]) -> list[dict[str, bytes]]:
+    """One partition's block rows -> each fragment's {column: payload},
+    in replay order (gen, then frag_id).  A repeated (gen, frag_id,
+    column) row counts once; rows of other columns (error rows
+    included) are skipped."""
+    cols = tbl.column("column").to_pylist()
+    gens = tbl.column("gen").to_pylist() if "gen" in tbl.column_names else [0] * len(cols)
+    payloads = tbl.column("payload")
+    frags: dict[tuple, dict[str, bytes]] = {}
+    for i, (gen, frag, col) in enumerate(zip(gens, tbl.column("frag_id").to_pylist(), cols)):
+        bufs = frags.setdefault((gen, frag), {})
+        if col in names and col not in bufs:
+            bufs[col] = payloads[i].as_py()
+    return [frags[k] for k in sorted(frags) if frags[k]]
 
 
 def _decode_fragments(
-    pdf: pd.DataFrame,
+    tbl: pa.Table,
     spec: list[tuple[str, str]],
     key_cols: tuple[str, ...],
     content_col: str | None,
     select=None,
-) -> tuple[pd.DataFrame, dict, dict]:
+) -> tuple[pa.Table, dict, dict]:
     """Decode one partition's block rows fragment by fragment, threading
     chain tails: a fragment appended by a later run (higher gen) may
     seed its chain groups from earlier fragments' last versions.
 
     ``select(frame, keys)`` chooses rows before any content is
-    replayed.  It gets the non-content columns of every fragment,
-    concatenated in replay order (version order per key), and their
-    (key...) ids (None when the key columns were not decoded), and
-    returns a boolean mask over those rows.  The content chains then
-    replay only for keys that hold a selected row — in every fragment,
-    because a later fragment's group may seed from an earlier one's
-    tail — and only the selected rows are returned.  ``None`` selects
-    every row.
+    replayed.  It gets the non-content columns of every fragment as
+    storage arrays (``api.decode_block``), concatenated in replay order
+    (version order per key), and their (key...) ids (``_key_ids``; None
+    when the key columns were not decoded), and returns a boolean mask
+    over those rows.  The content chains then replay only for keys that
+    hold a selected row — in every fragment, because a later fragment's
+    group may seed from an earlier one's tail — and only the selected
+    rows are returned.  ``None`` selects every row.
 
-    Returns (rows_df, tails, tail_counts) so an append can seed its
-    chains from the threaded state directly; ``tails`` holds the
+    Returns (rows, tails, tail_counts): the rows as the Arrow table
+    Spark reads (``_to_spark``), and the threaded chain state, so an
+    append can seed its chains from it directly; ``tails`` holds the
     replayed keys, ``tail_counts`` every key.
     """
     names = [n for n, _ in spec]
-    if "gen" not in pdf.columns:
-        pdf = pdf.assign(gen=0)
-    pdf = pdf.drop_duplicates(subset=["gen", "part_id", "frag_id", "column"]).sort_values(
-        ["gen", "frag_id", "column"], kind="mergesort"
-    )
-    frags: list[tuple[dict, pd.DataFrame, np.ndarray | None]] = []
-    for (_gen, _frag), sub in pdf.groupby(["gen", "frag_id"], sort=True):
-        bufs = {
-            r["column"]: bytes(r["payload"])
-            for _, r in sub.iterrows()
-            if r["column"] in names
-        }
-        if not bufs:
-            continue  # error rows only (excluded upstream; belt here)
-        fr: dict[str, pd.Series] = {}
-        for name, ddl in spec:
-            if name == content_col:
-                continue
-            if ddl.startswith(("struct<", "array<")) and "map<" not in ddl:
-                # map-free nested trees cross the boundary Arrow-backed:
-                # zero python-object materialization AND float NaN inside
-                # leaves stays a value (Spark's own pandas->Arrow
-                # conversion would null NaN found in object cells).
-                # Map cells MUST stay python dicts — Spark's serializer
-                # runs a per-cell dict converter (convert_map) on them.
-                # strlist/mapdelta-coded blocks have no arrow path and
-                # fall back to exact python objects.
-                try:
-                    a = api.decode_block_arrow(bufs[name])
-                    fr[name] = pd.Series(
-                        pd.arrays.ArrowExtensionArray(a), dtype=pd.ArrowDtype(a.type)
-                    )
-                    continue
-                except ValueError:
-                    pass
-            fr[name] = _from_storage(api.decode_block(bufs[name]), ddl)
-        frame = pd.DataFrame(fr)
+    frags = []
+    for bufs in _fragments(tbl, set(names)):
+        cols = {n: api.decode_block(bufs[n]) for n in names if n != content_col}
         keys = None  # (key...) ids: chain groups and version/key selection
-        if (content_col is not None or select is not None) and all(k in fr for k in key_cols):
-            keys = _key_series(frame, key_cols).to_numpy(dtype=object)
-        frags.append((bufs, frame, keys))
-    if not frags:
-        empty = {n: _from_storage(pd.Series([], dtype=object), ddl) for n, ddl in spec}
-        return pd.DataFrame(empty), {}, {}
+        if (content_col is not None or select is not None) and all(k in cols for k in key_cols):
+            keys = _key_ids([cols[k] for k in key_cols])
+        frags.append((bufs, cols, keys))
 
     keep = need = None
-    if select is not None:
+    if select is not None and frags:
         all_keys = None if frags[0][2] is None else np.concatenate([k for _, _, k in frags])
-        keep = np.asarray(
-            select(pd.concat([f for _, f, _ in frags], ignore_index=True), all_keys),
-            dtype=bool,
-        )
+        frame = {c: pa.concat_arrays([f[c] for _, f, _ in frags]) for c in frags[0][1]}
+        keep = np.asarray(select(frame, all_keys), dtype=bool)
+        del frame  # a copy of every non-content column: free it before the replay
         if content_col is not None:
             need = set(all_keys[keep])
-    frames: list[pd.DataFrame] = []
+    parts: dict[str, list[pa.Array]] = {n: [] for n in names}
     tails: dict = {}
     tail_counts: dict = {}
     row0 = 0
-    for bufs, frame, keys in frags:
-        n = len(frame)
+    for bufs, cols, keys in frags:
+        n = len(keys) if keys is not None else max(map(len, cols.values()), default=0)
         m = None if keep is None else keep[row0 : row0 + n]
         row0 += n
-        out = {c: frame[c] if m is None else frame[c][m].reset_index(drop=True) for c in frame}
+        for c, a in cols.items():
+            parts[c].append(a if m is None else a.filter(pa.array(m)))
         if content_col is not None:
-            gsizes = _group_sizes(pd.Series(keys, dtype=object))
-            starts = _group_starts(gsizes)
-            gkeys = keys[starts] if len(starts) else np.zeros(0, dtype=object)
+            gsizes = _group_sizes(keys)
+            gkeys = keys[_group_starts(gsizes)]
             gsel = None if need is None else np.fromiter(
                 (k in need for k in gkeys), dtype=bool, count=len(gkeys)
             )
-            # Arrow-native content: the chain kernel returns a
-            # LargeStringArray and the column rides to the applyInPandas
-            # boundary as an Arrow-backed pandas column — Python strings
-            # are materialized only for the per-group tails (chain seeds)
-            content_arr = _content_rows(
+            # Python strings are materialized only for the per-group
+            # tails (chain seeds); the rows stay one LargeStringArray
+            content = _content_rows(
                 bufs[content_col], [tails.get(k) for k in gkeys], gsel, gsizes
             )
             # update threaded tails: last version per replayed key group
@@ -1447,46 +1465,45 @@ def _decode_fragments(
             rsizes, rkeys = (gsizes, gkeys) if gsel is None else (gsizes[gsel], gkeys[gsel])
             if len(rkeys):
                 ends = np.cumsum(rsizes) - 1
-                tails.update(zip(rkeys, content_arr.take(pa.array(ends)).to_pylist()))
+                tails.update(zip(rkeys, content.take(pa.array(ends)).to_pylist()))
             for k, c in zip(gkeys, gsizes):
                 tail_counts[k] = tail_counts.get(k, 0) + int(c)
             if m is not None:
                 # every selected row lies in a replayed group; its place
                 # among the replayed rows is a running count
                 pos = np.cumsum(np.repeat(gsel, gsizes))[m] - 1
-                content_arr = content_arr.take(pa.array(pos, type=pa.int64()))
-            out[content_col] = pd.Series(
-                pd.arrays.ArrowExtensionArray(content_arr), dtype=pd.ArrowDtype(pa.string())
-            )
-        frames.append(pd.DataFrame({c: out[c] for c in names}))
-    return pd.concat(frames, ignore_index=True), tails, tail_counts
+                content = content.take(pa.array(pos, type=pa.int64()))
+            parts[content_col].append(content)
+    rows = pa.Table.from_arrays(
+        [_spark_column(parts[n], ddl) for n, ddl in spec], names=names
+    )
+    return rows, tails, tail_counts
 
 
 def _content_rows(
     buf: bytes, seeds: list, groups: np.ndarray | None, gsizes: np.ndarray
 ) -> pa.Array:
     """The content rows of the selected chain groups (every group when
-    ``groups`` is None) as a string array.  A chain block replays only
-    those groups; a block of any other codec decodes whole and is
+    ``groups`` is None) as a LargeStringArray.  A chain block replays
+    only those groups; a block of any other codec decodes whole and is
     filtered."""
     codec, meta, payload = blocks_mod.unframe(buf)
     if codec == "chain":
-        arr = chain_kernel.decode_chain_arrow(meta, payload, base_texts=seeds, groups=groups)
-    else:
-        try:
-            arr = api.decode_block_arrow(buf)
-        except ValueError:  # codec without an arrow path (dict/rle/...)
-            arr = pa.Array.from_pandas(api.decode_block(buf), type=pa.string())
-        if groups is not None:
-            arr = arr.filter(pa.array(np.repeat(groups, gsizes)))
-    return arr.cast(pa.string())
+        return chain_kernel.decode_chain_arrow(meta, payload, base_texts=seeds, groups=groups)
+    arr = api.decode_block(buf)
+    if groups is not None:
+        arr = arr.filter(pa.array(np.repeat(groups, gsizes)))
+    return arr
 
 
 def _version_mask(keys: np.ndarray, latest_only: bool, at_version: int | None) -> np.ndarray:
     """Version pruning over rows in replay order (version order per
     key): each key's head (latest_only) or its version ``at_version``
-    (0-based).  A stable comparison sort on the key (NUL-safe, unlike
-    pandas' string hash tables) makes each key's versions contiguous."""
+    (0-based).  A stable sort on the key ids (``_key_ids``, injective,
+    compared as exact Python strings) makes each key's versions
+    contiguous."""
+    if len(keys) == 0:
+        return np.zeros(0, dtype=bool)
     order = np.argsort(keys, kind="stable")
     sk = keys[order]
     starts = np.concatenate(([True], sk[1:] != sk[:-1]))
@@ -1502,15 +1519,15 @@ def _version_mask(keys: np.ndarray, latest_only: bool, at_version: int | None) -
     return mask
 
 
-def _pred_mask(s: pd.Series, p: _Pred) -> np.ndarray:
-    """The rows of decoded column ``s`` that can meet ``p``, compared in
-    the zone-map key space (``_where_value``'s keys; the storage
-    mapping encode applies, ``_storage_int64`` or ``_float_keys``).  A
-    superset of the rows the residual filter keeps: nulls never meet a
-    predicate, and float NaNs always pass, leaving their semantics to
-    the residual filter."""
+def _pred_mask(a: pa.Array, p: _Pred) -> np.ndarray:
+    """The rows of decoded storage array ``a`` that can meet ``p``.  The
+    storage values are the zone-map keys ``_where_value`` makes
+    (int64 for int-family, boolean and temporal columns — timestamps as
+    epoch ns, dates as epoch days — strings as they are); floats map
+    through ``_float_keys``.  A superset of the rows the residual filter
+    keeps: nulls never meet a predicate, and float NaNs always pass,
+    leaving their semantics to the residual filter."""
     if p.ddl == "string":
-        a = strings.as_large_utf8(s)
         m = pc.is_valid(a)
         if p.points is not None:
             vals = pa.array([k for _, k in p.points], type=pa.large_utf8())
@@ -1521,15 +1538,14 @@ def _pred_mask(s: pd.Series, p: _Pred) -> np.ndarray:
             m = pc.and_(m, pc.less_equal(a, pa.scalar(p.hi[1], pa.large_utf8())))
         return m.fill_null(False).to_numpy(zero_copy_only=False)
     if p.ddl in ("float", "double"):
-        v = s.to_numpy(dtype=np.float64, na_value=np.nan)
+        v = np.asarray(a.to_numpy(zero_copy_only=False), dtype=np.float64)
         nan = np.isnan(v)  # NaN and null: left to the residual filter
         k = _float_keys(np.where(nan, 0.0, v))
         m = ~nan
     else:
-        st = _storage_int64(s, p.ddl)
-        nan = np.zeros(len(st), dtype=bool)
-        k = st.to_numpy(dtype=np.int64, na_value=0)
-        m = ~st.isna().to_numpy()
+        nan = np.zeros(len(a), dtype=bool)
+        k = a.fill_null(0).to_numpy()
+        m = ~strings.null_mask(a)
     if p.points is not None:
         m &= np.isin(k, np.array([key for _, key in p.points], dtype=np.int64))
     if p.lo is not None:
@@ -1550,100 +1566,39 @@ def make_decode_kernel(
     preds: list[_Pred] = (),
 ):
     """groupBy(part_id).applyInArrow decode kernel: one partition's
-    blocks -> its rows.  Version selection (``latest_only`` /
-    ``at_version``) and then ``preds`` (``_pred_mask``, which never
-    drops a row the residual filter keeps) pick the rows before any
-    content replays, so only the chains of keys holding a picked row
-    replay and only the picked rows cross the Python->JVM boundary."""
+    block rows -> its rows, as the Arrow table Spark reads.  Version
+    selection (``latest_only`` / ``at_version``) and then ``preds``
+    (``_pred_mask``, which never drops a row the residual filter keeps)
+    pick the rows before any content replays, so only the chains of
+    keys holding a picked row replay and only the picked rows cross the
+    Python->JVM boundary."""
     names = out_names if out_names is not None else [n for n, _ in spec]
+    ddls = dict(spec)
     select = None
     if preds or latest_only or at_version is not None:
 
-        def select(frame: pd.DataFrame, keys: np.ndarray | None) -> np.ndarray:
-            m = np.ones(len(frame), dtype=bool)
+        def select(frame: dict[str, pa.Array], keys: np.ndarray | None) -> np.ndarray:
+            m = np.ones(len(next(iter(frame.values()))), dtype=bool)
             if latest_only or at_version is not None:
                 m = _version_mask(keys, latest_only, at_version)
             for p in preds:
                 m &= _pred_mask(frame[p.col], p)
             return m
 
-    def decode_partition(pdf: pd.DataFrame) -> pd.DataFrame:
+    def decode_partition(tbl: pa.Table) -> pa.Table:
         if on_error == "skip":
             try:
-                return _decode_partition_body(pdf)
+                return _decode_fragments(tbl, spec, key_cols, content_col, select)[0].select(names)
             except Exception:  # noqa: BLE001 — read-side isolation opt-in
                 # corrupt/unreadable partition -> zero rows, job survives
                 # (the read-side mirror of encode's failure isolation;
                 # run verify()/metrics to see what went missing)
-                return pd.DataFrame({n: pd.Series([], dtype=object) for n in names})
-        return _decode_partition_body(pdf)
-
-    def _decode_partition_body(pdf: pd.DataFrame) -> pd.DataFrame:
-        out, _tails, _counts = _decode_fragments(pdf, spec, key_cols, content_col, select)
-        out = out[names]
-        # Spark's serializer struct-packs plain Arrays; pd.concat across
-        # fragments leaves Arrow-backed columns chunked -> combine once
-        for c in out.columns:
-            if isinstance(out[c].dtype, pd.ArrowDtype):
-                ca = out[c].array.__arrow_array__()
-                if isinstance(ca, pa.ChunkedArray):
-                    out[c] = pd.Series(
-                        pd.arrays.ArrowExtensionArray(ca.combine_chunks()),
-                        dtype=out[c].dtype,
-                    )
-        return out
+                return pa.Table.from_arrays(
+                    [_spark_column([], ddls[n]) for n in names], names=names
+                )
+        return _decode_fragments(tbl, spec, key_cols, content_col, select)[0].select(names)
 
     return decode_partition
-
-
-# Spark-side Arrow type per DDL for the decode job's applyInArrow
-# return boundary.  Timestamps are tz-aware UTC (storage is UTC-epoch
-# micros — the cast reinterprets, it does not shift).
-_SPARK_SCALAR_ARROW = {
-    "string": pa.string(), "bigint": pa.int64(), "int": pa.int32(),
-    "smallint": pa.int16(), "tinyint": pa.int8(), "boolean": pa.bool_(),
-    "float": pa.float32(), "double": pa.float64(),
-    "timestamp": pa.timestamp("us", tz="UTC"), "date": pa.date32(),
-}
-
-
-def _spark_arrow_type(ddl: str) -> pa.DataType:
-    if ddl in _SPARK_SCALAR_ARROW:
-        return _SPARK_SCALAR_ARROW[ddl]
-    from ..kernels import nested as nested_kernel
-
-    return nested_kernel.spark_arrow_type(nested_kernel.parse_ddl(ddl))
-
-
-def _col_to_arrow(s: pd.Series, ddl: str) -> pa.Array:
-    """One decoded column -> the exact Arrow array Spark's applyInArrow
-    verifier expects.  We own this conversion (instead of letting
-    Spark's pandas serializer do it) because the pandas path nulls NaN
-    found inside nested float cells — Spark treats NaN as a VALUE."""
-    t = _spark_arrow_type(ddl)
-    if isinstance(s.dtype, pd.ArrowDtype):
-        a = s.array.__arrow_array__()
-        if isinstance(a, pa.ChunkedArray):
-            a = a.combine_chunks()
-        return a if a.type == t else a.cast(t)
-    if len(s) == 0:
-        return pa.array([], type=t)
-    if ddl.startswith(("struct<", "array<", "map<")):
-        from ..kernels.nested import _obj_list
-
-        return pa.array(_obj_list(s), type=t)
-    if ddl == "timestamp":
-        return pa.Array.from_pandas(s).cast(t)
-    if ddl == "date":
-        return pa.array(
-            [None if v is None or v is pd.NaT else v for v in s.tolist()], type=t
-        )
-    return pa.Array.from_pandas(s, type=t)
-
-
-def _pdf_to_arrow(out: pd.DataFrame, out_spec: list[tuple[str, str]]) -> pa.Table:
-    arrays = [_col_to_arrow(out[name], ddl) for name, ddl in out_spec]
-    return pa.Table.from_arrays(arrays, names=[n for n, _ in out_spec])
 
 
 def _active_blocks(
@@ -2040,29 +1995,23 @@ def decode(
                 cond = cond & (c <= F.lit(p.hi[0]))
         return df.filter(cond)
 
-    # applyInArrow, not applyInPandas: the return boundary mirrors the
-    # encode side — we own the pandas -> Arrow conversion, so NaN inside
-    # (nested) float columns crosses as a VALUE (Spark's own pandas
-    # serializer nulls it) and Arrow-backed columns (content, map-free
-    # nested trees) cross zero-copy with no python materialization.
+    # applyInArrow, not applyInPandas: the kernel decodes to Arrow and
+    # returns Arrow, so no column becomes pandas or Python objects on the
+    # way, and NaN inside (nested) float columns crosses as a VALUE
+    # (Spark's own pandas serializer nulls it).
     if with_part_id:
 
         def kernel_with_part(tbl: pa.Table) -> pa.Table:
-            pdf = tbl.to_pandas()
-            out = _pdf_to_arrow(kernel(pdf), out_spec)
-            pid = pa.array([int(pdf["part_id"].iloc[0])] * len(out), type=pa.int64())
-            return out.add_column(0, "part_id", pid)
+            out = kernel(tbl)
+            pid = np.full(out.num_rows, tbl.column("part_id")[0].as_py(), dtype=np.int64)
+            return out.add_column(0, "part_id", pa.array(pid))
 
         return _residual(
             blocks.groupBy("part_id").applyInArrow(
                 kernel_with_part, f"part_id long, {row_schema}"
             )
         )
-
-    def kernel_arrow(tbl: pa.Table) -> pa.Table:
-        return _pdf_to_arrow(kernel(tbl.to_pandas()), out_spec)
-
-    return _residual(blocks.groupBy("part_id").applyInArrow(kernel_arrow, row_schema))
+    return _residual(blocks.groupBy("part_id").applyInArrow(kernel, row_schema))
 
 
 # ------------------------------------------------------------- J3 verify ----

@@ -5,7 +5,7 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from . import blocks, chain, floats, fsst, intcodec, mapdelta, nested, strings
 
@@ -47,59 +47,32 @@ def encode_block(series, codec: str, **kw) -> bytes:
     raise ValueError(f"unknown codec {codec!r}")
 
 
-def decode_block(buf: bytes, **kw) -> pd.Series:
+_DECODERS = {
+    "plain": strings.decode_plain,
+    "dict": strings.decode_dict,
+    "rle": strings.decode_rle,
+    "front": strings.decode_front,
+    "hex": strings.decode_hex,
+    "fsst": fsst.decode_fsst,
+    "for": intcodec.decode_for,
+    "dint": intcodec.decode_dint,
+    "fp": floats.decode_fp,
+    "chain": chain.decode_chain_arrow,
+    "mapdelta": mapdelta.decode_mapdelta,
+    "strlist": mapdelta.decode_strlist,
+    "nested": nested.decode_nested_arrow,
+}
+
+
+def decode_block(buf: bytes, **kw) -> pa.Array:
+    """Decode one block to a ``pa.Array`` in its storage type, nulls in
+    the validity bitmap: ``large_utf8`` for the string codecs and chain,
+    int64 for dint/for (timestamps as epoch ns, dates as epoch days,
+    booleans as 0/1), float32/float64 for fp, a MapArray for mapdelta,
+    a LargeListArray for strlist and the rebuilt tree for nested.
+    ``kw`` goes to the decoder (chain: ``base_texts``, ``groups``)."""
     codec, meta, payload = blocks.unframe(buf)
-    if codec == "chain" and kw:
-        return chain.decode_chain(meta, payload, **kw)
-    if codec == "plain":
-        return strings.decode_plain(meta, payload)
-    if codec == "dict":
-        return strings.decode_dict(meta, payload)
-    if codec == "rle":
-        return strings.decode_rle(meta, payload)
-    if codec == "front":
-        return strings.decode_front(meta, payload)
-    if codec == "hex":
-        return strings.decode_hex(meta, payload)
-    if codec == "fsst":
-        return fsst.decode_fsst(meta, payload)
-    if codec == "for":
-        return intcodec.decode_for(meta, payload)
-    if codec == "dint":
-        return intcodec.decode_dint(meta, payload)
-    if codec == "fp":
-        return floats.decode_fp(meta, payload)
-    if codec == "chain":
-        return chain.decode_chain(meta, payload)
-    if codec == "mapdelta":
-        return mapdelta.decode_mapdelta(meta, payload)
-    if codec == "strlist":
-        return mapdelta.decode_strlist(meta, payload)
-    if codec == "nested":
-        return nested.decode_nested(meta, payload)
-    raise ValueError(f"unknown codec {codec!r}")
-
-
-def decode_block_arrow(buf: bytes, **kw):
-    """Arrow-native decode for codecs with a zero-object path (chain,
-    plain): returns a LargeStringArray (nulls in the validity bitmap)
-    that crosses the Spark boundary without materializing Python
-    strings.  Other codecs raise — callers fall back to decode_block.
-    """
-    codec, meta, payload = blocks.unframe(buf)
-    if codec == "chain":
-        return chain.decode_chain_arrow(meta, payload, **kw)
-    if codec == "plain":  # kw (chain base_texts) is a no-op for plain
-        arr, mask = strings.decode_plain_arrow(meta, payload)
-        if mask is not None and mask.any():
-            import pyarrow as pa
-
-            idx = np.arange(len(arr), dtype=np.int64)
-            return arr.take(pa.array(idx, mask=mask))
-        return arr
-    if codec == "nested":
-        return nested.decode_nested_arrow(meta, payload)
-    raise ValueError(f"no arrow decode path for codec {codec!r}")
+    return _DECODERS[codec](meta, payload, **kw)
 
 
 def block_codec(buf: bytes) -> str:

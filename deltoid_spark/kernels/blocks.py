@@ -107,6 +107,24 @@ def unpack_mask(data: bytes, n: int) -> np.ndarray:
     return bits[:n].astype(bool)
 
 
+def split_mask(meta: dict, payload: bytes, n: int) -> tuple[np.ndarray | None, bytes]:
+    """(null mask or None, the rest of the payload) of a block whose meta
+    records ``has_null`` and ``mask_len``: the packed mask leads the
+    payload."""
+    if not meta.get("has_null"):
+        return None, payload
+    ml = meta["mask_len"]
+    return unpack_mask(payload[:ml], n), payload[ml:]
+
+
+def validity_buffer(mask: np.ndarray | None) -> tuple[pa.Buffer | None, int]:
+    """(Arrow validity bitmap, null count) of a null mask (True == null);
+    (None, 0) when nothing is null."""
+    if mask is None or not mask.any():
+        return None, 0
+    return pa.py_buffer(np.packbits(~mask, bitorder="little").tobytes()), int(mask.sum())
+
+
 # ------------------------------------------------- bit-packed int arrays ----
 
 

@@ -24,7 +24,8 @@ alphabet (``EltDelta::{Edit{index,item}, Add(delta), Remove{count}}``,
   (/root/reference/deltoid-quickcheck-tests/src/main.rs:14-22).
 
 Round-trip law (reference: deltoid-quickcheck-tests/src/main.rs:26-32):
-``decode_chain(encode_chain(contents, groups)) == contents`` bytewise.
+``decode_chain_arrow(*unframe(encode_chain(contents, groups))[1:])``
+equals ``contents`` bytewise, nulls included.
 """
 
 from __future__ import annotations
@@ -693,12 +694,10 @@ def decode_chain_arrow(
     materialize at the end through a single Arrow take + binary_join —
     one C pass over the line buffers instead of a ``"\\n".join`` per
     row.  The Arrow result crosses the Spark boundary without ever
-    materializing Python strings (the decode job wraps it in an
-    Arrow-backed pandas column); output is byte-identical to the old
-    per-row loop (pinned by the golden-sha and e2e parity tests).
+    materializing Python strings (the decode job returns it through
+    applyInArrow); output is byte-identical to the old per-row loop
+    (pinned by the golden-sha and e2e parity tests).
     """
-    from .strings import decode_plain_arrow
-
     n = meta["n"]
     p = 0
     gplen = meta["gplen"]
@@ -708,7 +707,7 @@ def decode_chain_arrow(
     is_null = blocks.unpack_mask(payload[p : p + meta["nb_len"]], n); p += meta["nb_len"]
     splice = blocks.unpack_mask(payload[p : p + meta["sb_len"]], meta["n_deltas"]); p += meta["sb_len"]
     _, kmeta, kpay = blocks.unframe(payload[p : p + meta["keys_len"]]); p += meta["keys_len"]
-    key_arr, _kmask = decode_plain_arrow(kmeta, kpay)
+    key_arr = decode_plain(kmeta, kpay)
     edit_counts = unpack_ints(meta["ec"], payload[p : p + meta["eclen"]]); p += meta["eclen"]
     add_counts = unpack_ints(meta["ac"], payload[p : p + meta["aclen"]]); p += meta["aclen"]
     remove_counts = unpack_ints(meta["rc"], payload[p : p + meta["rclen"]]); p += meta["rclen"]
@@ -723,9 +722,9 @@ def decode_chain_arrow(
         cs_arr = unpack_ints(meta["cs"], payload[p : p + meta["cslen"]]); p += meta["cslen"]
         cd_arr = unpack_ints(meta["cd"], payload[p : p + meta["cdlen"]]); p += meta["cdlen"]
         _, fmeta, fpay = blocks.unframe(payload[p : p + meta["frags_len"]]); p += meta["frags_len"]
-        frag_arr, _fm = decode_plain_arrow(fmeta, fpay)
+        frag_arr = decode_plain(fmeta, fpay)
     _, lmeta, lpay = blocks.unframe(payload[p:])
-    dl_arr, _dmask = decode_plain_arrow(lmeta, lpay)
+    dl_arr = decode_plain(lmeta, lpay)
 
     if groups is not None:
         # restrict every stream to the selected groups' entries
@@ -930,11 +929,3 @@ def decode_chain_arrow(
         return joined.take(pa.array(np.arange(n, dtype=np.int64), mask=is_null))
     return joined
 
-
-def decode_chain(meta: dict, payload: bytes, base_texts: list | None = None) -> pd.Series:
-    """Object-series facade over :func:`decode_chain_arrow` (kernel API
-    contract: pandas in / pandas out, nulls as None)."""
-    arr = decode_chain_arrow(meta, payload, base_texts)
-    if len(arr) == 0:
-        return pd.Series([], dtype=object)
-    return arr.to_pandas().astype(object)

@@ -18,16 +18,18 @@ division — the identical operation the encode-side check performed, so
 conforming values round-trip bit-for-bit.  Non-finite values and -0.0
 (whose sign a decimal int can't carry) go to the exception list.
 
-Nulls are carried in the packed validity mask.  Note the pandas/Arrow
-boundary conflates NaN and null for float columns — both round-trip as
-null (documented engine-wide; the mask still makes the encoding itself
-exact for whatever the boundary delivered).
+Nulls are carried in the packed validity mask, and decode returns a
+float32/float64 ``pa.Array`` with them in its validity bitmap.  Encode
+reads a pandas column, where NaN and null are one marker: both land in
+the mask (documented engine-wide; the mask still makes the encoding
+itself exact for whatever the boundary delivered).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from . import blocks
 from .intcodec import pack_ints_z, unpack_ints_z
@@ -104,13 +106,8 @@ def encode_fp(series: pd.Series, width: int = 8) -> bytes:
     return dec if len(dec) < len(lanes) else lanes
 
 
-def decode_fp(meta: dict, payload: bytes) -> pd.Series:
-    n = meta["n"]
-    mask = None
-    if meta.get("has_null"):
-        ml = meta["mask_len"]
-        mask = blocks.unpack_mask(payload[:ml], n)
-        payload = payload[ml:]
+def decode_fp(meta: dict, payload: bytes) -> pa.Array:
+    mask, payload = blocks.split_mask(meta, payload, meta["n"])
     if meta.get("mode") == "dec":
         d = unpack_ints_z(meta["ints"], payload[: meta["ilen"]])
         payload = payload[meta["ilen"]:]
@@ -121,14 +118,7 @@ def decode_fp(meta: dict, payload: bytes) -> pd.Series:
             vals[exc_pos] = np.frombuffer(
                 payload, dtype=np.float64, count=meta["nexc"]
             )
-        out = pd.Series(vals, dtype="Float64")
-        if mask is not None:
-            out[mask] = pd.NA
-        return out
+        return pa.array(vals, type=pa.float64(), mask=mask)
     raw = blocks.decompress(payload, meta["raw"])
     dt = np.float64 if meta["w"] == 8 else np.float32
-    vals = np.frombuffer(raw, dtype=dt).copy()
-    out = pd.Series(vals, dtype="Float64" if meta["w"] == 8 else "Float32")
-    if mask is not None:
-        out[mask] = pd.NA
-    return out
+    return pa.array(np.frombuffer(raw, dtype=dt), mask=mask)

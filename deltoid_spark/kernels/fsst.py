@@ -33,12 +33,11 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from . import blocks
 from .intcodec import pack_ints, unpack_ints
-from .strings import _apply_mask, _mask_meta, null_mask, utf8_view
+from .strings import _mask_meta, _offsets, large_utf8_array, null_mask, utf8_view
 
 ESCAPE = 0xFF
 MAX_SYMBOLS = 255  # codes 0..254; 255 reserved for escape
@@ -358,9 +357,9 @@ def encode_fsst(arr: pa.Array) -> bytes:
     return blocks.frame("fsst", meta, mb + tlens + table + lpay + blocks.compress(codes))
 
 
-def decode_fsst(meta: dict, payload: bytes) -> pd.Series:
+def decode_fsst(meta: dict, payload: bytes) -> pa.Array:
     n = meta["n"]
-    mask, payload = _apply_mask(meta, payload, n)
+    mask, payload = blocks.split_mask(meta, payload, n)
     p = 0
     tlplen = meta["tlplen"]
     tlens = unpack_ints(meta["tlens"], payload[p : p + tlplen]); p += tlplen
@@ -373,13 +372,4 @@ def decode_fsst(meta: dict, payload: bytes) -> pd.Series:
     codes = payload[p:]
     if meta["zstd"]:
         codes = blocks.decompress(codes, meta["codes_raw"])
-    data = decompress_bytes(codes, symbols)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offs[1:])
-    arr = pa.Array.from_buffers(
-        pa.large_utf8(), n, [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(data)]
-    )
-    out = arr.to_pandas().astype(object)
-    if mask is not None:
-        out[mask] = None
-    return out if n else pd.Series([], dtype=object)
+    return large_utf8_array(_offsets(lengths), decompress_bytes(codes, symbols), mask)

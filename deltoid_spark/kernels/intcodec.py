@@ -12,13 +12,15 @@ Two layers:
   other codecs (offsets, run lengths, edit indices).  Meta travels in
   the host codec's meta dict.
 * ``encode_for`` / ``decode_for`` — a framed standalone block for
-  int64 columns with optional nulls.
+  int64 columns with optional nulls.  Framed decoders return an int64
+  ``pa.Array`` with nulls in its validity bitmap.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from . import blocks
 
@@ -100,8 +102,11 @@ def pack_dint_z(values: np.ndarray) -> tuple[dict, bytes]:
 
 
 def unpack_dint_z(meta: dict, payload: bytes) -> np.ndarray:
-    packed = unpack_ints_z(meta, payload)
-    mode = meta.get("m", "f")
+    return _undelta(unpack_ints_z(meta, payload), meta.get("m", "f"), meta)
+
+
+def _undelta(packed: np.ndarray, mode: str, meta: dict) -> np.ndarray:
+    """Invert a DINT mode ("f", "d1" or "d2"; first values in meta)."""
     if mode == "f":
         return packed
     if mode == "d1":
@@ -135,16 +140,9 @@ def encode_for(series: pd.Series) -> bytes:
     return blocks.frame("for", meta, payload)
 
 
-def decode_for(meta: dict, payload: bytes) -> pd.Series:
-    n = meta["n"]
-    if meta.get("has_null"):
-        ml = meta["mask_len"]
-        mask = blocks.unpack_mask(payload[:ml], n)
-        vals = unpack_ints(meta, payload[ml:])
-        out = pd.Series(vals, dtype="Int64")
-        out[mask] = pd.NA
-        return out
-    return pd.Series(unpack_ints(meta, payload), dtype="int64")
+def decode_for(meta: dict, payload: bytes) -> pa.Array:
+    mask, payload = blocks.split_mask(meta, payload, meta["n"])
+    return pa.array(unpack_ints(meta, payload), type=pa.int64(), mask=mask)
 
 
 # ----------------------------------------------------- delta-int family ----
@@ -204,36 +202,7 @@ def encode_dint(series: pd.Series) -> bytes:
     return blocks.frame("dint", meta, payload)
 
 
-def decode_dint(meta: dict, payload: bytes) -> pd.Series:
-    n = meta["rows"]
-    if meta.get("has_null"):
-        ml = meta["mask_len"]
-        mask = blocks.unpack_mask(payload[:ml], n)
-        payload = payload[ml:]
-    else:
-        mask = None
-    packed = unpack_ints(meta, payload)
-    mode = meta["mode"]
-    if mode == "f":
-        vals = packed
-    elif mode == "d1":
-        d1 = _unzigzag(packed.view(np.uint64))
-        with np.errstate(over="ignore"):
-            vals = np.concatenate(
-                ([meta["v0"]], np.int64(meta["v0"]) + np.cumsum(d1))
-            ).astype(np.int64)
-    else:  # d2
-        d2 = _unzigzag(packed.view(np.uint64))
-        with np.errstate(over="ignore"):
-            first_d = np.int64(meta["v1"]) - np.int64(meta["v0"])
-            d1 = np.concatenate(([first_d], first_d + np.cumsum(d2))).astype(
-                np.int64
-            )
-            vals = np.concatenate(
-                ([meta["v0"]], np.int64(meta["v0"]) + np.cumsum(d1))
-            ).astype(np.int64)
-    if mask is not None:
-        out = pd.Series(vals, dtype="Int64")
-        out[mask] = pd.NA
-        return out
-    return pd.Series(vals, dtype="int64")
+def decode_dint(meta: dict, payload: bytes) -> pa.Array:
+    mask, payload = blocks.split_mask(meta, payload, meta["rows"])
+    vals = _undelta(unpack_ints(meta, payload), meta["mode"], meta)
+    return pa.array(vals, type=pa.int64(), mask=mask)

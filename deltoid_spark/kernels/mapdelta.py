@@ -17,14 +17,13 @@ factorize), ranks the small key dictionary lexicographically, and
 computes the keyed diff by stable argsorts on composite (row, key)
 int64 keys with adjacent-pair matching; value equality is integer code
 equality.  Decode turns the put/del streams into per-(segment, key)
-visibility intervals, expands them with np.repeat, and rebuilds the
-output dicts through one Arrow MapArray (C-level dict
-materialization).  No per-row Python anywhere; the wire format is
+visibility intervals, expands them with np.repeat, and returns one
+Arrow MapArray.  No per-row Python anywhere; the wire format is
 unchanged and byte-identical to the round-2 encoder.
 
 ARRAY codec: array<string> columns store FoR-packed lengths + the
 flattened element stream through PLAIN(+zstd); null list vs empty list
-is exact via the validity mask.
+is exact via the validity mask.  It decodes to a LargeListArray.
 """
 
 from __future__ import annotations
@@ -36,7 +35,7 @@ import pyarrow.compute as pc
 
 from . import blocks
 from .intcodec import pack_ints, pack_ints_z, unpack_ints, unpack_ints_z
-from .strings import decode_plain, decode_plain_arrow, encode_plain
+from .strings import decode_plain, encode_plain
 
 DEFAULT_KEYFRAME_INTERVAL = 32
 
@@ -65,7 +64,7 @@ def _rows_kinds(
     n: int, gsz: np.ndarray, is_null: np.ndarray, keyframe_interval: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """(is_delta, is_key) per row — vectorized keyframe cadence."""
-    starts = np.concatenate(([0], np.cumsum(gsz)[:-1]))
+    starts = np.cumsum(gsz) - gsz
     v = np.arange(n, dtype=np.int64) - np.repeat(starts, gsz)
     prev_null = np.concatenate(([True], is_null[:-1])) if n else is_null
     is_delta = (v != 0) & (v % keyframe_interval != 0) & ~is_null & ~prev_null
@@ -192,7 +191,7 @@ def encode_mapdelta(
     return blocks.frame("mapdelta", meta, payload)
 
 
-def decode_mapdelta(meta: dict, payload: bytes) -> pd.Series:
+def decode_mapdelta(meta: dict, payload: bytes) -> pa.Array:
     n = meta["n"]
     p = 0
     group_sizes = unpack_ints(meta["groups"], payload[p : p + meta["gplen"]]); p += meta["gplen"]
@@ -201,14 +200,14 @@ def decode_mapdelta(meta: dict, payload: bytes) -> pd.Series:
     put_counts = unpack_ints_z(meta["pc"], payload[p : p + meta["pclen"]]); p += meta["pclen"]
     del_counts = unpack_ints_z(meta["dc"], payload[p : p + meta["dclen"]]); p += meta["dclen"]
     _, m1, p1 = blocks.unframe(payload[p : p + meta["pk_len"]]); p += meta["pk_len"]
-    pk_arr, _pkm = decode_plain_arrow(m1, p1)
+    pk_arr = decode_plain(m1, p1)
     _, m2, p2 = blocks.unframe(payload[p : p + meta["pv_len"]]); p += meta["pv_len"]
-    put_vals, pv_mask = decode_plain_arrow(m2, p2)
+    put_vals = decode_plain(m2, p2)
     _, m3, p3 = blocks.unframe(payload[p:])
-    dk_arr, _dkm = decode_plain_arrow(m3, p3)
+    dk_arr = decode_plain(m3, p3)
 
     if n == 0:
-        return pd.Series([], dtype=object)
+        return pa.array([], type=_MAP_TYPE)
     _ = group_sizes  # group heads are keyframes: intervals cannot cross
 
     # state segments: every keyframe (incl. null) starts a new segment,
@@ -219,20 +218,17 @@ def decode_mapdelta(meta: dict, payload: bytes) -> pd.Series:
 
     rp = np.repeat(np.arange(n, dtype=np.int64), put_counts.astype(np.int64))
     rd = np.repeat(np.arange(n, dtype=np.int64), del_counts.astype(np.int64))
-    kcodes, ukeys = _dict_codes(
-        pa.concat_arrays([pk_arr, dk_arr]) if len(dk_arr) else pk_arr
-    )
+    keys = pc.dictionary_encode(pa.concat_arrays([pk_arr, dk_arr]))
+    kcodes = keys.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    ukeys = keys.dictionary
     U = len(ukeys) + 1
     ev_r = np.concatenate((rp, rd))
     ev_s = seg[ev_r] if len(ev_r) else ev_r
     ev_put = np.concatenate(
         (np.ones(len(rp), dtype=bool), np.zeros(len(rd), dtype=bool))
     )
-    pvals = put_vals.to_numpy(zero_copy_only=False)
-    if pv_mask is not None:
-        pvals = pvals.copy()
-        pvals[pv_mask] = None
-    ev_v = np.concatenate((pvals, np.full(len(rd), None, dtype=object)))
+    # an event's value is its index into the put values (-1: a delete)
+    ev_v = np.concatenate((np.arange(len(rp), dtype=np.int64), np.full(len(rd), -1)))
 
     # group by (segment, key) keeping row order: stable argsort by row,
     # then stable argsort by composite (segment, key) int64
@@ -250,7 +246,7 @@ def decode_mapdelta(meta: dict, payload: bytes) -> pd.Series:
 
     # each put is visible from its row until the next event on the same
     # (segment, key) or the segment end — expand to one entry per
-    # visible row, then rebuild all dicts through one Arrow MapArray
+    # visible row, then build one Arrow MapArray
     vis = (end - ev_r)[ev_put]
     pr0 = ev_r[ev_put]
     pk = kcodes[ev_put]
@@ -266,15 +262,16 @@ def decode_mapdelta(meta: dict, payload: bytes) -> pd.Series:
     order = np.argsort(out_r, kind="stable")
     offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(np.bincount(out_r, minlength=n)[:n], out=offsets[1:])
-    ma = pa.MapArray.from_arrays(
-        pa.array(offsets.astype(np.int32)),
-        pa.array(ukeys[out_k[order]] if total else np.zeros(0, object), type=pa.large_utf8()),
-        pa.array(out_v[order], type=pa.large_utf8()),
+    entries = pa.StructArray.from_arrays(
+        [ukeys.take(pa.array(out_k[order], type=pa.int64())),
+         put_vals.take(pa.array(out_v[order], type=pa.int64()))],
+        fields=[_MAP_TYPE.key_field, _MAP_TYPE.item_field],
     )
-    out = ma.to_pandas(maps_as_pydicts="strict").astype(object)
-    out[is_null] = None
-    out.index = pd.RangeIndex(n)
-    return out
+    validity, nulls = blocks.validity_buffer(is_null)
+    return pa.Array.from_buffers(
+        _MAP_TYPE, n, [validity, pa.py_buffer(offsets.astype(np.int32).tobytes())],
+        null_count=nulls, children=[entries],
+    )
 
 
 # ------------------------------------------------------ array<string> ----
@@ -310,27 +307,14 @@ def encode_strlist(series: pd.Series, level: int | None = None) -> bytes:
     return blocks.frame("strlist", meta, mb + lpay + elems)
 
 
-def decode_strlist(meta: dict, payload: bytes) -> pd.Series:
+def decode_strlist(meta: dict, payload: bytes) -> pa.Array:
     n = meta["n"]
-    mask = None
-    if meta.get("has_null"):
-        ml = meta["mask_len"]
-        mask = blocks.unpack_mask(payload[:ml], n)
-        payload = payload[ml:]
+    mask, payload = blocks.split_mask(meta, payload, n)
     lengths = unpack_ints_z(meta["lens"], payload[: meta["lplen"]])
     _, emeta, epay = blocks.unframe(payload[meta["lplen"] :])
-    earr, emask = decode_plain_arrow(emeta, epay)
-    if emask is not None:
-        # re-apply elementwise nulls (rare: None inside a list)
-        flat = earr.to_numpy(zero_copy_only=False).copy()
-        flat[emask] = None
-        earr = pa.array(flat, type=pa.large_utf8())
     offs = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lengths, out=offs[1:])
-    la = pa.LargeListArray.from_arrays(pa.array(offs), earr)
-    out = pd.Series(la.to_pylist(), dtype=object)  # one C pass -> lists
-    if mask is not None:
-        out[mask] = None
-    if n == 0:
-        return pd.Series([], dtype=object)
-    return out
+    return pa.LargeListArray.from_arrays(
+        pa.array(offs), decode_plain(emeta, epay),
+        mask=None if mask is None else pa.array(mask),
+    )

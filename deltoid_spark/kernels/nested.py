@@ -342,12 +342,11 @@ def _dec(meta: dict, node, payload: bytes, p: int) -> tuple[pa.Array, int]:
         st = meta["t"]
         atype = _SCALAR_ARROW[st]
         if st == "string":
-            from .strings import decode_plain_arrow
+            from .strings import decode_plain
 
             _codec, imeta, ipay = blocks.unframe(payload[p : p + meta["len"]])
             p += meta["len"]
-            arr, _m = decode_plain_arrow(imeta, ipay)
-            bufs = arr.buffers()
+            bufs = decode_plain(imeta, ipay).buffers()
             out = pa.Array.from_buffers(
                 pa.large_utf8(), n, [validity, bufs[1], bufs[2]], null_count=nulls
             )
@@ -424,54 +423,6 @@ def _dec(meta: dict, node, payload: bytes, p: int) -> tuple[pa.Array, int]:
     return out, p
 
 
-def _pydict_converter(node):
-    """Cell converter turning arrow's (k, v)-tuple map representation
-    into python dicts (what Spark's pandas->arrow boundary expects),
-    walking only map-bearing paths; None where the subtree has no map."""
-    kind = node[0]
-    if kind == "scalar":
-        return None
-    if kind == "array":
-        f = _pydict_converter(node[1])
-        if f is None:
-            return None
-        return lambda v: None if v is None else [f(x) for x in v]
-    if kind == "map":
-        fv = _pydict_converter(node[2])
-        if fv is None:
-            return lambda v: None if v is None else dict(v)
-        return lambda v: None if v is None else {k: fv(x) for k, x in v}
-    convs = {name: _pydict_converter(t) for name, t in node[1]}
-    if all(c is None for c in convs.values()):
-        return None
-
-    def conv_struct(v):
-        if v is None:
-            return None
-        return {
-            k: (x if convs.get(k) is None else convs[k](x)) for k, x in v.items()
-        }
-
-    return conv_struct
-
-
-def decode_nested(meta: dict, payload: bytes) -> pd.Series:
-    node = parse_ddl(meta["ddl"])
-    arr, _p = _dec(meta["tree"], node, payload, 0)
-    if len(arr) == 0:
-        return pd.Series([], dtype=object)
-    # to_pylist, not to_pandas: pandas materializes list<int64>-with-
-    # nulls cells as float64 arrays, silently rounding past 2^53 — the
-    # pylist path yields exact python ints.  Map cells come back as
-    # (k, v) tuple lists; a type-tree-guided converter rebuilds dicts
-    # along map-bearing paths only (Spark's boundary requires dicts).
-    out = arr.to_pylist()
-    conv = _pydict_converter(node)
-    if conv is not None:
-        out = [conv(v) for v in out]
-    return pd.Series(out, dtype=object)
-
-
 def spark_arrow_type(node) -> pa.DataType:
     """The non-large Arrow type Spark's arrow serializer expects for
     this node (utf8/list_, not large_utf8/large_utf8; timestamps
@@ -491,13 +442,10 @@ def spark_arrow_type(node) -> pa.DataType:
 
 
 def decode_nested_arrow(meta: dict, payload: bytes) -> pa.Array:
-    """Arrow-native decode: the rebuilt tree cast to the Spark-side
-    (non-large) Arrow type, ready to cross the applyInPandas boundary
-    as an ArrowExtensionArray-backed column.  Crossing in Arrow (a) is
-    zero-object (no python list/dict materialization on the read path)
-    and (b) preserves NaN inside float leaves as a VALUE — the
-    python-object path cannot, because Spark's own pandas -> Arrow
-    conversion nulls NaN found in object cells."""
+    """The rebuilt tree in its storage type (``arrow_type``: large
+    strings and lists, naive timestamps).  The decode job casts it to
+    ``spark_arrow_type`` at the applyInArrow boundary.  Staying in Arrow
+    builds no Python list or dict and keeps NaN inside float leaves a
+    VALUE, distinct from null."""
     node = parse_ddl(meta["ddl"])
-    arr, _p = _dec(meta["tree"], node, payload, 0)
-    return arr.cast(spark_arrow_type(node))
+    return _dec(meta["tree"], node, payload, 0)[0]

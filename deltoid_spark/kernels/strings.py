@@ -6,7 +6,8 @@ over the array's (offsets, data) buffers, the form FSST and other
 scan-side string compressors work on.  Anything else (a pandas Series,
 a chunked or utf8 array) converts once, through :func:`as_large_utf8`,
 where it enters ``api.encode_block`` or the selector.  Decoders return
-pandas Series.
+the same form, a ``pa.LargeStringArray`` with nulls in its validity
+bitmap.
 
 All kernels are vectorized (numpy / Arrow / single C-level calls);
 zero per-row Python in hot paths.  Nulls are exact: a null round-trips
@@ -31,7 +32,6 @@ from __future__ import annotations
 import binascii
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -71,18 +71,27 @@ def _mask_meta(meta: dict, mask: np.ndarray) -> bytes:
     return mb
 
 
-def _apply_mask(meta: dict, payload: bytes, n: int) -> tuple[np.ndarray | None, bytes]:
-    if not meta.get("has_null"):
-        return None, payload
-    ml = meta["mask_len"]
-    return blocks.unpack_mask(payload[:ml], n), payload[ml:]
+def large_utf8_array(offs: np.ndarray, data: bytes, mask: np.ndarray | None = None) -> pa.Array:
+    """A LargeStringArray over int64 ``offs`` and the utf-8 ``data``,
+    nulls (``mask`` True) in the validity bitmap."""
+    validity, nulls = blocks.validity_buffer(mask)
+    return pa.Array.from_buffers(
+        pa.large_utf8(), len(offs) - 1,
+        [validity, pa.py_buffer(offs.tobytes()), pa.py_buffer(data)], null_count=nulls,
+    )
 
 
-def _restore_nulls(values: list | np.ndarray, mask: np.ndarray | None) -> pd.Series:
-    out = pd.Series(values, dtype=object)
-    if mask is not None:
-        out[mask] = None
-    return out
+def _offsets(lengths: np.ndarray) -> np.ndarray:
+    offs = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offs[1:])
+    return offs
+
+
+def _take(values: pa.Array, idx: np.ndarray, mask: np.ndarray | None) -> pa.Array:
+    """``values[idx]``, null where ``mask`` is True."""
+    if mask is not None and not mask.any():
+        mask = None
+    return values.take(pa.array(idx, type=pa.int64(), mask=mask))
 
 
 # ---------------------------------------------------------------- PLAIN ----
@@ -114,31 +123,13 @@ def encode_plain(arr: pa.Array, level: int | None = None) -> bytes:
     return blocks.frame("plain", meta, mb + lpay + comp)
 
 
-def decode_plain_arrow(meta: dict, payload: bytes) -> tuple[pa.Array, np.ndarray | None]:
-    """(LargeStringArray over the raw buffers, null mask) — callers that
-    stay in Arrow (dictionary codes, list rebuilds) skip the python-str
-    materialization entirely."""
-    n = meta["n"]
-    mask, payload = _apply_mask(meta, payload, n)
+def decode_plain(meta: dict, payload: bytes) -> pa.Array:
+    """A LargeStringArray straight over the decompressed buffers."""
+    mask, payload = blocks.split_mask(meta, payload, meta["n"])
     lplen = meta["lplen"]
     lengths = unpack_ints(meta["lens"], payload[:lplen])
     data = blocks.decompress(payload[lplen:], meta["raw"])
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offs[1:])
-    arr = pa.Array.from_buffers(
-        pa.large_utf8(), n, [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(data)]
-    )
-    return arr, mask
-
-
-def decode_plain(meta: dict, payload: bytes) -> pd.Series:
-    arr, mask = decode_plain_arrow(meta, payload)
-    out = arr.to_pandas().astype(object)  # to_pandas is C-speed
-    if mask is not None:
-        out[mask] = None
-    elif len(arr) == 0:
-        return pd.Series([], dtype=object)
-    return out
+    return large_utf8_array(_offsets(lengths), data, mask)
 
 
 # ----------------------------------------------------------------- DICT ----
@@ -170,15 +161,12 @@ def encode_dict(arr: pa.Array, level: int | None = None) -> bytes:
     return blocks.frame("dict", meta, mb + cpay + inner)
 
 
-def decode_dict(meta: dict, payload: bytes) -> pd.Series:
-    n = meta["n"]
-    mask, payload = _apply_mask(meta, payload, n)
+def decode_dict(meta: dict, payload: bytes) -> pa.Array:
+    mask, payload = blocks.split_mask(meta, payload, meta["n"])
     cplen = meta["cplen"]
     codes = unpack_ints_z(meta["codes"], payload[:cplen])
     _, imeta, ipay = blocks.unframe(payload[cplen:])
-    uniques = decode_plain(imeta, ipay).to_numpy(dtype=object)
-    out = uniques[codes] if n else np.zeros(0, dtype=object)
-    return _restore_nulls(out, mask)
+    return _take(decode_plain(imeta, ipay), codes, mask)
 
 
 # ------------------------------------------------------------------ RLE ----
@@ -207,18 +195,14 @@ def encode_rle(arr: pa.Array, level: int | None = None) -> bytes:
     return blocks.frame("rle", meta, rpay + lpay + inner)
 
 
-def decode_rle(meta: dict, payload: bytes) -> pd.Series:
-    n = meta["n"]
+def decode_rle(meta: dict, payload: bytes) -> pa.Array:
     rclen, rllen = meta["rclen"], meta["rllen"]
     run_codes = unpack_ints_z(meta["rcodes"], payload[:rclen])
     run_lens = unpack_ints_z(meta["rlens"], payload[rclen : rclen + rllen])
     _, imeta, ipay = blocks.unframe(payload[rclen + rllen :])
-    uniques = decode_plain(imeta, ipay).to_numpy(dtype=object)
-    codes = np.repeat(run_codes, run_lens) if n else np.zeros(0, np.int64)
-    mask = codes == 0
-    safe = np.where(mask, 1, codes) - 1
-    out = uniques[safe] if n else np.zeros(0, dtype=object)
-    return _restore_nulls(out, mask if mask.any() else None)
+    codes = np.repeat(run_codes, run_lens)
+    mask = codes == 0  # code 0 is a null run
+    return _take(decode_plain(imeta, ipay), np.maximum(codes - 1, 0), mask)
 
 
 # ---------------------------------------------------------------- FRONT ----
@@ -375,7 +359,7 @@ def _front_values(plens: np.ndarray, slens: np.ndarray, suffix: bytes) -> tuple[
     return out.tobytes(), L
 
 
-def decode_front(meta: dict, payload: bytes) -> pd.Series:
+def decode_front(meta: dict, payload: bytes) -> pa.Array:
     n, runs = meta["n"], meta["runs"]
     p = 0
     rn_len = meta.get("rn_len", 0)
@@ -390,24 +374,15 @@ def decode_front(meta: dict, payload: bytes) -> pd.Series:
     slens = unpack_ints_z(meta["sl"], payload[p : p + meta["sllen"]]); p += meta["sllen"]
     suffix = blocks.decompress(payload[p:], meta["raw"])
     data, L = _front_values(plens, slens, suffix)
-    offs = np.zeros(len(L) + 1, dtype=np.int64)
-    np.cumsum(L, out=offs[1:])
-    values = pa.Array.from_buffers(
-        pa.large_utf8(), len(L), [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(data)]
-    )
+    if len(L) == 0:  # all rows null (or empty block)
+        return pa.nulls(n, pa.large_utf8())
     # expand runs to rows: null runs take a masked slot
     run_codes = np.cumsum(~run_null) - 1  # id of each non-null run
-    row_codes = np.repeat(run_codes, run_lens) if n else np.zeros(0, np.int64)
-    row_null = np.repeat(run_null, run_lens) if n else np.zeros(0, dtype=bool)
-    if len(L) == 0:  # all rows null (or empty block)
-        return _restore_nulls([None] * n, None)
-    arr = values.take(pa.array(np.maximum(row_codes, 0), type=pa.int64()))
-    out = arr.to_pandas().astype(object)
-    if row_null.any():
-        out[row_null] = None
-    elif n == 0:
-        return pd.Series([], dtype=object)
-    return out
+    row_codes = np.repeat(run_codes, run_lens)
+    return _take(
+        large_utf8_array(_offsets(L), data), np.maximum(row_codes, 0),
+        np.repeat(run_null, run_lens),
+    )
 
 
 # ------------------------------------------------------------------ HEX ----
@@ -454,22 +429,11 @@ def encode_hex(arr: pa.Array) -> bytes:
     return blocks.frame("hex", meta, mb + lpay + comp)
 
 
-def decode_hex(meta: dict, payload: bytes) -> pd.Series:
-    n = meta["n"]
-    mask, payload = _apply_mask(meta, payload, n)
+def decode_hex(meta: dict, payload: bytes) -> pa.Array:
+    mask, payload = blocks.split_mask(meta, payload, meta["n"])
     lplen = meta["lplen"]
     half = unpack_ints(meta["lens"], payload[:lplen])
     data = blocks.decompress(payload[lplen:], meta["raw"]).hex().encode()  # one C call
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(half * 2, out=offs[1:])
-    # rebuild strings over the ascii buffer via Arrow offsets (as
-    # decode_plain does) — no per-row slicing loop
-    arr = pa.Array.from_buffers(
-        pa.large_utf8(), n, [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(data)]
-    )
-    out = arr.to_pandas().astype(object)
-    if n == 0:
-        return pd.Series([], dtype=object)
-    if mask is not None:
-        out[mask] = None
-    return out
+    # strings over the ascii buffer via Arrow offsets (as decode_plain
+    # does) — no per-row slicing loop
+    return large_utf8_array(_offsets(half * 2), data, mask)

@@ -574,20 +574,31 @@ ORDER BY doc_id
 """
 
 
-_Q49_TABLES: dict[str, str] = {}
+_ENCODED_TABLES: dict[tuple[str, str], str] = {}
 
 
-def _q49_encoded_table(spark: SparkSession, sf_dir: str) -> str:
-    """Encode the documents-derived code table once per sf_dir (q49 and
-    q52 both decode from it; the cache keeps the correctness run from
-    paying the encode twice)."""
-    out = _Q49_TABLES.get(sf_dir)
-    if out is not None:
-        return out
-    from .jobs import encode
+def _encoded_table(
+    spark: SparkSession, sf_dir: str, name: str, build, target_rows: int
+) -> str:
+    """The directory of ``build(spark, sf_dir)`` encoded at
+    ``target_rows``, encoded once per (name, sf_dir) in this process:
+    the correctness run and repeated calls pay the deterministic encode
+    once."""
+    out = _ENCODED_TABLES.get((name, sf_dir))
+    if out is None:
+        from .jobs import encode
 
+        out = tempfile.mkdtemp(prefix=f"ds{name}_")
+        encode(spark, build(spark, sf_dir), out, target_rows=target_rows)
+        _ENCODED_TABLES[(name, sf_dir)] = out
+    return out
+
+
+def _q49_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A code table derived from the documents (q49 and q52 both decode
+    it)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0)
-    df = docs.select(
+    return docs.select(
         F.concat(
             F.lit("org/repo-"),
             F.lpad((F.col("doc_id") % 40).cast("string"), 2, "0"),
@@ -599,10 +610,10 @@ def _q49_encoded_table(spark: SparkSession, sf_dir: str) -> str:
         F.col("text").alias("content"),
         F.col("n_chars").alias("size"),
     )
-    out = tempfile.mkdtemp(prefix="dsq49_")
-    encode(spark, df, out, target_rows=200)
-    _Q49_TABLES[sf_dir] = out
-    return out
+
+
+def _q49_encoded_table(spark: SparkSession, sf_dir: str) -> str:
+    return _encoded_table(spark, sf_dir, "q49", _q49_rows, 200)
 
 
 def _q49_string_zone_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -645,25 +656,18 @@ GROUP BY repo ORDER BY repo
 """
 
 
-_Q58_TABLES: dict[str, str] = {}
-
 _Q58_PREFIXES = ("альфа", "бета", "京都", "🚀")  # ascending code-point order
 
 
-def _q58_encoded_table(spark: SparkSession, sf_dir: str) -> str:
-    """Encode a documents-derived table whose repo names are UNICODE
-    (Cyrillic / CJK / supplementary-plane), cached per sf_dir."""
-    out = _Q58_TABLES.get(sf_dir)
-    if out is not None:
-        return out
-    from .jobs import encode
-
+def _q58_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A documents-derived table whose repo names are UNICODE
+    (Cyrillic / CJK / supplementary-plane)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
     prefix = F.element_at(
         F.array(*[F.lit(p) for p in _Q58_PREFIXES]),
         (F.col("doc_id") % 4 + 1).cast("int"),
     )
-    df = docs.select(
+    return docs.select(
         F.concat(
             prefix, F.lit("/repo-"),
             F.lpad((F.floor(F.col("doc_id") / 20) % 10).cast("string"), 2, "0"),
@@ -675,10 +679,6 @@ def _q58_encoded_table(spark: SparkSession, sf_dir: str) -> str:
         F.col("text").alias("content"),
         F.col("n_chars").alias("size"),
     )
-    out = tempfile.mkdtemp(prefix="dsq58_")
-    encode(spark, df, out, target_rows=100)
-    _Q58_TABLES[sf_dir] = out
-    return out
 
 
 def _q58_unicode_zone_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,7 +692,7 @@ def _q58_unicode_zone_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .jobs import decode
 
     dec = decode(
-        spark, _q58_encoded_table(spark, sf_dir),
+        spark, _encoded_table(spark, sf_dir, "q58", _q58_rows, 100),
         where=("repo", "бета/", "бета/я"),
     )
     return (
@@ -849,7 +849,21 @@ GROUP BY reason ORDER BY reason
 """
 
 
-_Q54_TABLES: dict[str, str] = {}
+def _q54_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A code-shaped table carrying a DOUBLE price column derived from
+    lineitem."""
+    li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
+    return li.select(
+        F.concat(
+            F.lit("ord/"), F.lpad((F.col("l_orderkey") % 30).cast("string"), 2, "0")
+        ).alias("repo"),
+        F.concat_ws("-", "l_orderkey", "l_linenumber").alias("path"),
+        F.md5(F.concat_ws(":", "l_orderkey", "l_linenumber")).alias("commit"),
+        F.lit("sql").alias("lang"),
+        F.concat_ws("|", "l_returnflag", "l_linestatus", "l_shipdate")
+        .alias("content"),
+        F.col("l_extendedprice").alias("price"),
+    )
 
 
 def _q54_float_zone_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -859,27 +873,11 @@ def _q54_float_zone_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE-754 sortable-int64 (zmin, zmax) recorded at encode and the
     residual filter restores exact semantics.  Money aggregates use
     the q01 integer-cents idiom.  The encoded table caches per sf_dir
-    within the process (the q49/q58 pattern) so repeated invocations
+    within the process (``_encoded_table``) so repeated invocations
     pay the deterministic encode once."""
-    from .jobs import decode, encode
+    from .jobs import decode
 
-    out = _Q54_TABLES.get(sf_dir)
-    if out is None:
-        li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-        df = li.select(
-            F.concat(
-                F.lit("ord/"), F.lpad((F.col("l_orderkey") % 30).cast("string"), 2, "0")
-            ).alias("repo"),
-            F.concat_ws("-", "l_orderkey", "l_linenumber").alias("path"),
-            F.md5(F.concat_ws(":", "l_orderkey", "l_linenumber")).alias("commit"),
-            F.lit("sql").alias("lang"),
-            F.concat_ws("|", "l_returnflag", "l_linestatus", "l_shipdate")
-            .alias("content"),
-            F.col("l_extendedprice").alias("price"),
-        )
-        out = tempfile.mkdtemp(prefix="dsq54_")
-        encode(spark, df, out, target_rows=300)
-        _Q54_TABLES[sf_dir] = out
+    out = _encoded_table(spark, sf_dir, "q54", _q54_rows, 300)
     dec = decode(spark, out, where=("price", 2000.0, 30000.0))
     return dec.select(
         F.count("*").alias("n_rows"),
@@ -1550,8 +1548,9 @@ def _q42_oracle(
     iters: int = 2, scale: int = 1_000_000,
 ) -> str:
     """Trained-IVF oracle: the SAME deterministic Lloyd's iterations
-    unrolled as CTE chains.  Assignment argmax mirrors _list_id_expr
-    (cos desc, cid asc; sequential folds); the centroid update is the
+    unrolled as CTE chains.  Assignment argmax is the literal argmax
+    that similarity.list_id_col matches bit-for-bit (cos desc, cid asc;
+    sequential folds); the centroid update is the
     same integer arithmetic (exact scaled-long sums, floor division) so
     every centroid — and hence every list and probe — is bit-identical
     to similarity.kmeans_centroids."""

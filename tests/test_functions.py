@@ -1150,6 +1150,28 @@ def test_stratified_sample_rates_and_determinism(spark):
         packing.stratified_sample(df, rates={"en": 1001})
 
 
+def _list_id_expr(cents: list[tuple[int, list[float]]]):
+    """The executable spec of IVF list assignment: argmax over
+    literal-broadcast centroid cosines (cos desc, cid asc tie-break)
+    via lexicographic struct greatest — one projection."""
+    import pyspark.sql.functions as F  # noqa: PLC0415
+
+    def cos_to_const(vec: list[float]):
+        carr = F.array(*[F.lit(float(x)) for x in vec])
+        return similarity.cosine(F.col("embedding").cast("array<double>"), carr)
+
+    return F.greatest(
+        *[
+            F.struct(
+                cos_to_const(cv).alias("c"),
+                F.lit(-cid).alias("n"),
+                F.lit(cid).alias("cid"),
+            )
+            for cid, cv in cents
+        ]
+    )["cid"]
+
+
 def test_list_id_gate_paths_agree_and_plan_flat(spark):
     """IVF list assignment runs the exact-sequential Arrow kernel
     (_list_id_seq) at every codebook size.  On a well-separated fixture
@@ -1173,7 +1195,7 @@ def test_list_id_gate_paths_agree_and_plan_flat(spark):
              for c in range(dim)]
 
     lit = {r["vec_id"]: r["lid"] for r in
-           emb.select("vec_id", similarity._list_id_expr(cents).alias("lid")).collect()}
+           emb.select("vec_id", _list_id_expr(cents).alias("lid")).collect()}
     seq = {r["vec_id"]: r["lid"] for r in
            emb.select("vec_id", similarity._list_id_seq(cents)(
                F.col("embedding")).alias("lid")).collect()}
@@ -1191,7 +1213,7 @@ def test_list_id_gate_paths_agree_and_plan_flat(spark):
         return [(c, [float(x) for x in rng.rand(dim)]) for c in range(n_lists)]
 
     def lit_plan_len(cs):
-        df = emb.select("vec_id", similarity._list_id_expr(cs).alias("lid"))
+        df = emb.select("vec_id", _list_id_expr(cs).alias("lid"))
         return len(df._jdf.queryExecution().optimizedPlan().toString())
 
     # the literal expression's plan grows linearly in n_lists...

@@ -10,9 +10,12 @@ reference's golden serialized-delta assertions,
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
+
 from deltoid_spark.fixtures import codegen
 from deltoid_spark.jobs.pipeline import make_encode_kernel
-from deltoid_spark.kernels import api
+from deltoid_spark.kernels import api, blocks
 
 
 def _run_kernel(pdf):
@@ -114,3 +117,198 @@ def test_encoded_bytes_golden():
     )
     assert frag.column("frag_id").to_pylist() == [1] * 5
     assert _rows_sha(frag) == GOLDEN_APPEND_SHA
+
+
+# ------------------------------------------------------------- decode golden ----
+#
+# One partition whose columns cover every codec, encoded column by
+# column with a fixed codec (the selector is not asked), plus a
+# zero-row partition of the same columns.  The decode kernel's output
+# is pinned by a sha256 over the Arrow IPC stream of a canonical copy
+# of it: the values and the Spark-side types count, the bytes under
+# null slots and the chunking do not.
+
+NESTED_DDL = "struct<a:map<string,array<double>>,b:bigint,t:timestamp>"
+GOLDEN_DECODE_SHA = "a71dae615deaf6a892d8d4750fc4f87b33d88c91973208feb2eb6d26fa26c2db"
+
+
+def _decode_fixture(n: int):
+    """(spec, [(column, codec, payload)]) for an ``n``-row partition."""
+    import itertools
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from deltoid_spark.kernels import chain, mapdelta, nested
+
+    rng = np.random.default_rng(11)
+    repo = [f"org/r{i // 8}" for i in range(n)]
+    path = [f"src/p{(i // 3) % 3}.py" for i in range(n)]
+    keys = list(zip(repo, path))
+    gsizes = np.array([len(list(g)) for _, g in itertools.groupby(keys)], dtype=np.int64)
+    content = [None if i % 11 == 5 else f"line {i // 3}\nbody {i % 3}\nend" for i in range(n)]
+    big = [None if i % 7 == 3 else 2**53 + 17 * i - (2**62 if i % 2 else 0) for i in range(n)]
+    ts = [None if i % 9 == 4 else 1_700_000_000_000_000_000 + i * 1_000_123_000 for i in range(n)]
+
+    def nested_row(i):
+        if i % 10 == 6:
+            return None
+        floats = [float("nan"), -0.0, None, 1.5 + i][: 1 + i % 4]
+        return {
+            "a": None if i % 5 == 2 else {f"k{i % 3}": floats, "z": []},
+            "b": 2**53 + i if i % 4 else None,
+            "t": pd.Timestamp(1_600_000_000_000_000 * 1000 + i * 10**9) if i % 6 else None,
+        }
+
+    string_cols = {
+        "repo": ("dict", repo),
+        "path": ("front", path),
+        "commit": ("hex", [f"{i * 7919:040x}" if i % 13 != 8 else None for i in range(n)]),
+        "lang": ("rle", [["py", "rs", None][i % 3] for i in range(n)]),
+        "s_plain": ("plain", [None if i % 4 == 1 else f"v\x00{i}é" for i in range(n)]),
+        "s_fsst": ("fsst", [f"/usr/lib/python3/{i % 5}/mod{i}.py" for i in range(n)]),
+        "s_null": ("front", [None] * n),
+    }
+    cols = []
+    spec = []
+    for name, (codec, vals) in string_cols.items():
+        spec.append((name, "string"))
+        cols.append((name, codec, api.encode_block(pa.array(vals, pa.large_utf8()), codec)))
+    spec.append(("content", "string"))
+    cols.append(("content", "chain", chain.encode_chain(
+        pa.array(content, pa.large_utf8()), gsizes, keyframe_interval=4)))
+    ints = [
+        ("big", "bigint", "dint", big),
+        ("big_for", "bigint", "for", big),
+        ("small", "int", "dint", [None if i % 5 == 0 else i - 40 for i in range(n)]),
+        ("ts", "timestamp", "dint", ts),
+        ("d", "date", "dint", [None if i % 8 == 7 else 19_000 + i for i in range(n)]),
+        ("flag", "boolean", "dint", [None if i % 6 == 0 else i % 2 for i in range(n)]),
+        ("i_null", "bigint", "dint", [None] * n),
+    ]
+    for name, ddl, codec, vals in ints:
+        spec.append((name, ddl))
+        cols.append((name, codec, api.encode_block(pd.Series(vals, dtype="Int64"), codec)))
+    floats = [
+        ("f_lanes", "double", 8, rng.standard_normal(n)),
+        ("f_dec", "double", 8, np.round(rng.uniform(-50, 50, n), 2)),
+        ("f32", "float", 4, rng.standard_normal(n).astype(np.float32)),
+    ]
+    for name, ddl, width, vals in floats:
+        s = pd.Series(vals, dtype="Float64" if width == 8 else "Float32")
+        s[s.index % 9 == 2] = pd.NA
+        spec.append((name, ddl))
+        cols.append((name, "fp", api.encode_block(s, "fp", width=width)))
+    maps = pd.Series(
+        [None if i % 12 == 10 else {"a": str(i // 4), "b": None if i % 3 else "x"} for i in range(n)],
+        dtype=object,
+    )
+    lists = pd.Series(
+        [None if i % 7 == 0 else [f"e{j}" if j % 3 else None for j in range(i % 4)] for i in range(n)],
+        dtype=object,
+    )
+    spec += [("m", "map<string,string>"), ("l", "array<string>"), ("nest", NESTED_DDL)]
+    cols.append(("m", "mapdelta", mapdelta.encode_mapdelta(maps, gsizes, keyframe_interval=4)))
+    cols.append(("l", "strlist", mapdelta.encode_strlist(lists)))
+    rows = pd.Series([nested_row(i) for i in range(n)], dtype=object)
+    cols.append(("nest", "nested", nested.encode_nested(rows, NESTED_DDL)))
+    return spec, cols
+
+
+def _block_table(part_id: int, cols):
+    import pyarrow as pa
+
+    names, codecs, payloads = zip(*cols)
+    return pa.table({
+        "part_id": pa.array([part_id] * len(cols), pa.int64()),
+        "frag_id": pa.array([0] * len(cols), pa.int64()),
+        "column": pa.array(names, pa.string()),
+        "codec": pa.array(codecs, pa.string()),
+        "payload": pa.array(payloads, pa.binary()),
+    })
+
+
+def _canonical_ipc_sha(tbl) -> str:
+    import hashlib
+
+    import pyarrow as pa
+
+    canon = pa.table(
+        [pa.array(tbl.column(c).to_pylist(), type=tbl.schema.field(c).type) for c in tbl.column_names],
+        names=tbl.column_names,
+    )
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, canon.schema) as w:
+        w.write_table(canon)
+    return hashlib.sha256(sink.getvalue().to_pybytes()).hexdigest()
+
+
+def _decode_golden_sha(decode_kernel) -> str:
+    """sha256 over the canonical IPC digests of both partitions' decode
+    outputs; ``decode_kernel(spec, blocks, content_col)`` returns the
+    Arrow table."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for part_id, n in ((0, 40), (1, 0)):
+        spec, cols = _decode_fixture(n)
+        content = "content" if n else None
+        if content is None:  # an empty content block has its own test
+            spec = [c for c in spec if c[0] != "content"]
+            cols = [c for c in cols if c[0] != "content"]
+        out = decode_kernel(spec, _block_table(part_id, cols), content)
+        assert out.num_rows == n
+        h.update(_canonical_ipc_sha(out).encode())
+    return h.hexdigest()
+
+
+def test_decode_output_golden():
+    from deltoid_spark.jobs import pipeline
+
+    def kernel(spec, blk, content):
+        return pipeline.make_decode_kernel(spec, ("repo", "path"), content)(blk)
+
+    assert _decode_golden_sha(kernel) == GOLDEN_DECODE_SHA
+
+
+@pytest.mark.parametrize("codec", sorted(blocks.CODEC_IDS))
+def test_decode_block_casts_to_spark_type(codec):
+    """Every codec decodes to a ``pa.Array`` whose one cast lands on the
+    type Spark's applyInArrow verifier expects for the column."""
+    import pyarrow as pa
+
+    from deltoid_spark.jobs import pipeline
+
+    for n in (40, 0):
+        spec, cols = _decode_fixture(n)
+        ddls = dict(spec)
+        picked = [(name, buf) for name, c, buf in cols if c == codec]
+        assert picked, codec
+        for name, buf in picked:
+            arr = api.decode_block(buf)
+            assert isinstance(arr, pa.Array) and len(arr) == n, name
+            assert pipeline._to_spark(arr, ddls[name]).type == pipeline._spark_arrow_type(
+                ddls[name]
+            ), name
+
+
+def test_decode_empty_content_block():
+    """A zero-row partition with a content chain decodes to zero rows of
+    the Spark-side types."""
+    import pyarrow as pa
+
+    from deltoid_spark.jobs import pipeline
+    from deltoid_spark.kernels import chain
+
+    spec = pipeline.DEFAULT_SPEC
+    cols = [
+        (name, "plain", api.encode_block(pa.array([], pa.large_utf8()), "plain"))
+        for name, _ in spec if name != "content"
+    ]
+    cols.append(("content", "chain", chain.encode_chain(
+        pa.array([], pa.large_utf8()), np.zeros(0, dtype=np.int64))))
+    for kw in ({}, {"latest_only": True}):
+        out = pipeline.make_decode_kernel(spec, **kw)(_block_table(3, cols))
+        assert out.num_rows == 0
+        assert out.schema == pa.schema([(n, pa.string()) for n, _ in spec])

@@ -116,7 +116,7 @@ def test_chain_roundtrip(groups, k):
     s = pd.Series(contents, dtype=object)
     buf = chain.encode_chain(s, np.array(sizes), keyframe_interval=k)
     _, meta, payload = blocks.unframe(buf)
-    out = chain.decode_chain(meta, payload)
+    out = chain.decode_chain_arrow(meta, payload)
     assert _eq(s, out)
 
 
@@ -163,7 +163,7 @@ def test_mapdelta_roundtrip_property(groups):
     dec = api.decode_block(
         api.encode_block(s, "mapdelta", group_sizes=sizes, keyframe_interval=3)
     )
-    assert dec.tolist() == rows
+    assert [r if r is None else dict(r) for r in dec.to_pylist()] == rows
 
 
 @given(
@@ -196,7 +196,7 @@ def test_seeded_chain_continuation_property(groups):
         pd.Series(base_rows, dtype=object), np.array(sizes_a), keyframe_interval=3
     )
     _, meta_a, pay_a = blocks.unframe(buf_a)
-    dec_a = chain.decode_chain(meta_a, pay_a)
+    dec_a = chain.decode_chain_arrow(meta_a, pay_a)
     assert dec_a.tolist() == base_rows
     if cont_rows:
         buf_b = chain.encode_chain(
@@ -207,7 +207,7 @@ def test_seeded_chain_continuation_property(groups):
             base_versions=np.array(base_versions),
         )
         codec, meta, payload = blocks.unframe(buf_b)
-        dec_b = chain.decode_chain(meta, payload, base_texts=base_texts)
+        dec_b = chain.decode_chain_arrow(meta, payload, base_texts=base_texts)
         assert dec_b.tolist() == cont_rows
 
 
@@ -270,10 +270,13 @@ def test_nested_dint_alp_leaf_roundtrip_property(int_rows, dbl_rows):
     import math
 
     from deltoid_spark.kernels import blocks as blk
-    from deltoid_spark.kernels.nested import decode_nested, encode_nested
+    from deltoid_spark.kernels.nested import decode_nested_arrow, encode_nested
+
+    def decode_rows(meta, payload):
+        return decode_nested_arrow(meta, payload).to_pylist()
 
     ser = pd.Series(int_rows, dtype=object)
-    got = decode_nested(*blk.unframe(encode_nested(ser, "array<bigint>"))[1:])
+    got = decode_rows(*blk.unframe(encode_nested(ser, "array<bigint>"))[1:])
     assert len(got) == len(int_rows)
     for g, e in zip(got, int_rows):
         if e is None:
@@ -282,7 +285,7 @@ def test_nested_dint_alp_leaf_roundtrip_property(int_rows, dbl_rows):
             assert [x for x in g] == e
 
     ser_d = pd.Series(dbl_rows, dtype=object)
-    got_d = decode_nested(*blk.unframe(encode_nested(ser_d, "array<double>"))[1:])
+    got_d = decode_rows(*blk.unframe(encode_nested(ser_d, "array<double>"))[1:])
     assert len(got_d) == len(dbl_rows)
     for g, e in zip(got_d, dbl_rows):
         if e is None:

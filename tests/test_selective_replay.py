@@ -207,8 +207,8 @@ def two_fragment_blocks():
         pipeline.DEFAULT_SPEC, pipeline.DEFAULT_KEY_COLS, pipeline.DEFAULT_ORDER_COLS,
         pipeline.DEFAULT_CONTENT_COL, 32, None, "local",
     )(pa.Table.from_pandas(rows[~first].reset_index(drop=True), preserve_index=False), base)
-    blk = pa.concat_tables([base, frag]).to_pandas()
-    blk["gen"] = blk["frag_id"]
+    blk = pa.concat_tables([base, frag])
+    blk = blk.append_column("gen", blk.column("frag_id"))
     return rows.drop(columns="part_id").reset_index(drop=True), blk
 
 
@@ -229,11 +229,12 @@ def _replayed_rows(monkeypatch):
 def test_decode_kernel_replays_only_the_picked_keys(two_fragment_blocks, monkeypatch):
     rows, blk = two_fragment_blocks
     spec, keys = pipeline.DEFAULT_SPEC, pipeline.DEFAULT_KEY_COLS
-    assert sorted(blk["codec"][blk["column"] == "content"].unique()) == ["chain"]
+    content = blk.filter(pc.equal(blk.column("column"), "content"))
+    assert sorted(set(content.column("codec").to_pylist())) == ["chain"]
     probes = rows["commit"].sample(5, random_state=1).tolist()
     preds = pipeline._parse_where(("commit", probes), spec)
     seen = _replayed_rows(monkeypatch)
-    out = pipeline.make_decode_kernel(spec, keys, "content", preds=preds)(blk)
+    out = pipeline.make_decode_kernel(spec, keys, "content", preds=preds)(blk).to_pandas()
     want = rows[rows["commit"].isin(probes)]
     assert sorted(out["commit"]) == sorted(want["commit"])
     assert dict(zip(out["commit"], out["content"])) == dict(
@@ -249,7 +250,7 @@ def test_decode_kernel_replays_only_the_picked_keys(two_fragment_blocks, monkeyp
 
     seen.clear()
     full = pipeline.make_decode_kernel(spec, keys, "content")(blk)
-    assert sum(seen) == len(rows) == len(full)
+    assert sum(seen) == len(rows) == full.num_rows
 
 
 def test_decode_kernel_version_then_predicate(two_fragment_blocks):
@@ -267,8 +268,10 @@ def test_decode_kernel_version_then_predicate(two_fragment_blocks):
     for where, cond in cases:
         preds = pipeline._parse_where(where, spec)
         for kw in ({"latest_only": True}, {"at_version": 0}, {"at_version": 2}):
-            full = pipeline.make_decode_kernel(spec, keys, "content", **kw)(blk)
-            got = pipeline.make_decode_kernel(spec, keys, "content", preds=preds, **kw)(blk)
+            full = pipeline.make_decode_kernel(spec, keys, "content", **kw)(blk).to_pandas()
+            got = pipeline.make_decode_kernel(
+                spec, keys, "content", preds=preds, **kw
+            )(blk).to_pandas()
             want = full[cond(full)]
             assert len(got) and len(got) < len(full)
             assert sorted(map(tuple, got.astype(str).to_numpy())) == sorted(
@@ -278,16 +281,92 @@ def test_decode_kernel_version_then_predicate(two_fragment_blocks):
 
 def test_append_kernel_replays_only_continued_chains(two_fragment_blocks, monkeypatch):
     rows, blk = two_fragment_blocks
-    base = blk[blk["frag_id"] == 0].drop(columns="gen")
+    base = blk.filter(pc.equal(blk.column("frag_id"), 0)).drop(["gen"])
     one_key = rows[(rows["repo"] == rows["repo"].iloc[0]) & (rows["path"] == rows["path"].iloc[0])]
     batch = one_key.tail(1).assign(commit="z" * 40, part_id=0)
     seen = _replayed_rows(monkeypatch)
     pipeline.make_append_kernel(
         pipeline.DEFAULT_SPEC, pipeline.DEFAULT_KEY_COLS, pipeline.DEFAULT_ORDER_COLS,
         pipeline.DEFAULT_CONTENT_COL, 32, None, "local",
-    )(pa.Table.from_pandas(batch, preserve_index=False), pa.Table.from_pandas(base))
+    )(pa.Table.from_pandas(batch, preserve_index=False), base)
     # the prior fragment replays only the one continued chain
     assert seen[0] == (len(one_key) + 1) // 2
+
+
+# ------------------------------------------------------------- key ids ----
+
+# Two (repo, path) keys that a separator-joined key string would merge:
+# "ab" + NUL + "c" and "a" + NUL + "bc" lose the NUL to numpy's U dtype,
+# and a null repo prints as the repo "None".  Rows are listed in the
+# encode sort order, so the two keys are neighbours in the block.
+COLLIDING_KEYS = {
+    "separator": (["a", "ab"], ["bc", "c"]),
+    "null_vs_None": (["None", None], ["p", "p"]),
+}
+
+
+def _text(head: str, tail: str) -> str:
+    """Long enough that an edit of the last line is a delta, not a keyframe."""
+    return "\n".join([head, *(f"shared line {i}" for i in range(20)), tail])
+
+
+@pytest.mark.parametrize("case", sorted(COLLIDING_KEYS))
+def test_colliding_key_strings_stay_apart(case):
+    repos, paths = COLLIDING_KEYS[case]
+    spec, keys = pipeline.DEFAULT_SPEC, pipeline.DEFAULT_KEY_COLS
+    first, second, next_first = _text("first", "x"), _text("second", "y"), _text("first", "z")
+    pdf = pd.DataFrame({
+        "repo": repos, "path": paths, "commit": ["c0", "c1"], "lang": ["py", "py"],
+        "content": [first, second], "part_id": 0,
+    })
+    base = pipeline.make_encode_kernel()(pa.Table.from_pandas(pdf, preserve_index=False))
+    for kw in ({"latest_only": True}, {"at_version": 0}):
+        out = pipeline.make_decode_kernel(spec, keys, "content", **kw)(base)
+        assert out.num_rows == 2, kw
+        assert sorted(out.column("content").to_pylist()) == sorted(pdf["content"])
+
+    # an append continuing the first key seeds its chain from that key's
+    # own tail, and the table decodes exactly
+    batch = pdf.iloc[[0]].assign(commit="c2", content=next_first)
+    frag = pipeline.make_append_kernel(
+        spec, keys, pipeline.DEFAULT_ORDER_COLS, "content", 32, None, "local",
+    )(pa.Table.from_pandas(batch, preserve_index=False), base)
+    content = frag.filter(pc.equal(frag.column("column"), "content"))
+    assert content.column("codec").to_pylist() == ["chain"]
+    _, meta, payload = blocks.unframe(content.column("payload")[0].as_py())
+    assert meta["seeded"]
+    assert meta["n_deltas"] == 1  # a delta against the seed, not a keyframe
+    got = chain.decode_chain_arrow(meta, payload, base_texts=[first])
+    assert got.to_pylist() == [next_first]
+    # the script edits only the last line: it was taken against this
+    # key's tail, not against the neighbour key's
+    other = chain.decode_chain_arrow(meta, payload, base_texts=[second])
+    assert other.to_pylist() != [next_first]
+
+    both = pa.concat_tables([base, frag])
+    full = pipeline.make_decode_kernel(spec, keys, "content")(both)
+    want = pd.concat([pdf, batch]).drop(columns="part_id")
+    assert sorted(map(str, full.to_pylist())) == sorted(
+        map(str, want.to_dict("records"))
+    )
+    heads = pipeline.make_decode_kernel(spec, keys, "content", latest_only=True)(both)
+    assert sorted(heads.column("content").to_pylist()) == sorted([next_first, second])
+
+
+def test_key_ids_are_injective():
+    """Distinct (key...) tuples get distinct ids: NULs and the escape
+    byte inside values, empty strings and nulls included."""
+    tuples = [
+        ("ab", "c"), ("a", "bc"), (None, "p"), ("None", "p"), ("a\x00", "b"),
+        ("a", "\x00b"), ("a\x01", "b"), ("a", "\x01b"), ("\x01\x02", "p"),
+        ("\x01", "\x02p"), ("", ""), ("", None), (None, ""), (None, None),
+        ("a\x00\x00b", ""), ("a\x00", "\x00b"), ("a", "\x00\x00b"),
+    ]
+    cols = [pa.array(list(c), type=pa.large_utf8()) for c in zip(*tuples)]
+    ids = pipeline._key_ids(cols)
+    assert len(set(ids.tolist())) == len(tuples)
+    # a repeated tuple keeps its id
+    assert pipeline._key_ids([c.take([0, 0]) for c in cols]).tolist() == [ids[0]] * 2
 
 
 def test_where_decode_matches_full_decode_filtered(spark, tmp_path_factory):
@@ -377,7 +456,7 @@ def test_timestamp_bound_key_matches_the_residual_literal():
     filter compares with the microsecond literal, so the zone/row key
     must be that literal's, or the kernel drops a row Spark keeps."""
     t = pd.Timestamp("2024-01-01 00:00:00.000001")
-    col = pd.Series([t]).astype("datetime64[ns]")
+    col = pa.array([t.value], type=pa.int64())  # the decoded storage: epoch ns
     with pytest.warns(UserWarning):  # pandas: nanoseconds discarded
         (p,) = pipeline._parse_where(("ts", t + pd.Timedelta(500, "ns"), None), [("ts", "timestamp")])
     assert p.lo[0] == t.to_pydatetime()

@@ -56,7 +56,7 @@ def test_package_zip_self_contained(tmp_path):
         "import pandas as pd; "
         "from deltoid_spark.kernels import encode_block, decode_block; "
         "s = pd.Series(['a','b','a'], dtype=object); "
-        "assert decode_block(encode_block(s, 'dict')).tolist() == s.tolist(); "
+        "assert decode_block(encode_block(s, 'dict')).to_pylist() == s.tolist(); "
         "print('zip-ok')" % zip_path
     )
     out = subprocess.run(

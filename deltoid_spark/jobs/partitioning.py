@@ -19,12 +19,17 @@ map-side-combined shuffle over (repo) — output rows == number of
 repos.  Only repos *above threshold* are collected to the driver
 (bounded: at most total_rows/target of them); everything else flows
 through a broadcast-joined map, so no driver-side iteration over data.
+The map is handed to Spark as an Arrow table, which plans as a local
+relation (empty or not): no Python job builds it.  A map built from a
+Python list (or an empty pandas frame) would plan as an RDD scan and
+run a plain Python-RDD job on every encode and append.
 """
 
 from __future__ import annotations
 
 import math
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -97,9 +102,13 @@ def apply_partition_map(
     hash into the shared small-bucket range, so the map stays valid as
     the table grows (compaction can rebalance later)."""
     group_col, salt_col = key_cols[0], key_cols[1]
+    grp, base_id, n_salts = zip(*salt_map) if salt_map else ((), (), ())
     small_rows = df.sparkSession.createDataFrame(
-        [(r, b, s) for r, b, s in salt_map],
-        f"{group_col} string, base_id long, n_salts long",
+        pa.table({
+            group_col: pa.array(grp, pa.string()),
+            "base_id": pa.array(base_id, pa.int64()),
+            "n_salts": pa.array(n_salts, pa.int64()),
+        })
     )
     return (
         df.join(F.broadcast(small_rows), group_col, "left")

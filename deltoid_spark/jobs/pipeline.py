@@ -57,7 +57,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernels import (
@@ -205,6 +205,16 @@ def _storage_int64(s: pd.Series, ddl: str) -> pd.Series:
     mask = s.isna()
     if ddl == "timestamp":
         vals = s.fillna(pd.Timestamp(0)).astype("datetime64[ns]").astype("int64")
+        # Spark timestamps are whole microseconds: a finer value could
+        # be stored but never cast back (decode's _to_spark), so refuse it
+        ns = vals.to_numpy()
+        frac = ns % 1000 != 0
+        if frac.any():
+            raise ValueError(
+                f"timestamp column holds {int(frac.sum())} sub-microsecond value(s) "
+                f"(first: {int(ns[frac][0])} epoch ns); Spark timestamps are whole "
+                "microseconds"
+            )
     elif ddl == "date":
         vals = pd.to_datetime(s).fillna(pd.Timestamp(0)).astype("int64") // _NS_PER_DAY
     elif ddl == "boolean":
@@ -931,11 +941,9 @@ def encode(
     if resume and _exists(spark, manifest_path):
         active = _active_of(_read_manifest(spark, out_dir))
         committed = active.loc[
-            (active["kind"] == "replace") & (active["status"] == "committed"), ["part_id"]
+            (active["kind"] == "replace") & (active["status"] == "committed"), "part_id"
         ]
-        df = df.join(
-            F.broadcast(spark.createDataFrame(committed, "part_id long")), "part_id", "left_anti"
-        )
+        df = _without_parts(df, committed)
 
     run_id = uuid.uuid4().hex
     gen = time.time_ns()
@@ -950,13 +958,13 @@ def encode(
         # applyInArrow, not applyInPandas: the kernel owns the Arrow ->
         # pandas conversion (exact nullable ints, exact nested trees)
         blocks = df.groupBy("part_id").applyInArrow(make_encode_kernel(**kw), BLOCK_SCHEMA)
-    _write_blocks(blocks, blocks_path)
+    written = _write_blocks(blocks, blocks_path)
 
-    # manifest rows for THIS run only (from the tiny written blocks
-    # table: one metadata-sized scan, no re-encode), appended with a new
-    # generation — readers resolve each part to its latest gen
+    # manifest rows for THIS run only, from the block metadata its write
+    # reported, appended with a new generation — readers resolve each
+    # part to its latest gen
     _manifest_rows_for_run(
-        spark, out_dir, run_id, gen, spec, "replace", origin=origin, message=message
+        spark, out_dir, written, run_id, gen, spec, "replace", origin=origin, message=message
     )
     return _manifest_active(spark, manifest_path)
 
@@ -1023,18 +1031,44 @@ def _read_blocks(spark: SparkSession, blocks_path: str) -> DataFrame:
     than inferred from the directory names."""
     if _exists(spark, blocks_path):
         return spark.read.schema(BLOCK_SCHEMA).parquet(blocks_path)
-    return spark.createDataFrame([], BLOCK_SCHEMA)
+    return spark.createDataFrame(BLOCK_ARROW.empty_table())
 
 
-def _write_blocks(blocks: DataFrame, blocks_path: str) -> None:
+def _without_parts(df: DataFrame, part_ids) -> DataFrame:
+    """``df`` minus the rows of the driver-side ``part_ids``: a broadcast
+    anti-join against an Arrow local relation (the resume and batch_id
+    skip lists).  An empty list plans away."""
+    ids = pa.table({"part_id": pa.array(list(part_ids), pa.int64())})
+    return df.join(F.broadcast(df.sparkSession.createDataFrame(ids)), "part_id", "left_anti")
+
+
+def _write_blocks(blocks: DataFrame, blocks_path: str) -> list:
+    """Append ``blocks`` to the blocks dir and return the metadata of
+    every block row written: its ids, codec, sizes, digest and time,
+    and as ``error`` the payload of an error row (a failed partition's
+    error text).
+
+    The write reports them itself: an ``Observation`` collects them as
+    the rows stream into the files, so no job reads the new blocks back.
+    The observation is the last node before the write, in the write's
+    result stage; Spark applies a result task's accumulator updates once
+    per partition, so a retried task or stage cannot count a block
+    twice (``tests/test_write_commit.py`` checks the plan)."""
     # payloads are already zstd'd — parquet re-compression (snappy) would
     # burn CPU + memory bandwidth on the dominant column for ~0 size win.
-    # Files partition by run_id so per-run reads (the manifest rebuild)
-    # and active-run filters (decode) prune whole directories instead of
-    # scanning every historical run's blocks.
-    blocks.write.mode("append").option("compression", "none").partitionBy(
-        "run_id"
-    ).parquet(blocks_path)
+    # Files partition by run_id so active-run filters (decode, append,
+    # compact) prune whole directories instead of scanning every
+    # historical run's blocks.
+    seen = Observation()
+    meta = F.struct(
+        "part_id", "frag_id", "column", "codec", "n_rows", "raw_bytes", "enc_bytes",
+        "sha256", "wall_s",
+        F.when(F.col("codec") == "error", F.substring("payload", 1, 4096)).alias("error"),
+    )
+    blocks.observe(seen, F.collect_list(meta).alias("rows")).write.mode("append").option(
+        "compression", "none"
+    ).partitionBy("run_id").parquet(blocks_path)
+    return seen.get["rows"]
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -1064,74 +1098,55 @@ def _exists(spark: SparkSession, path: str) -> bool:
 
 
 def _manifest_rows_for_run(
-    spark: SparkSession, out_dir: str, run_id: str, gen: int,
+    spark: SparkSession, out_dir: str, written: list, run_id: str, gen: int,
     spec: list[tuple[str, str]], kind: str, batch_id: str | None = None,
     origin: str | None = None, message: str | None = None,
 ) -> None:
-    """Aggregate this run's written blocks into manifest rows (append).
+    """Aggregate the run's ``written`` block metadata (``_write_blocks``)
+    into one manifest row per part_id on the driver, and append them.
 
-    Only the blocks' metadata columns are read back — ``payload`` holds
-    the encoded data and is read only for the error rows of failed
-    partitions, whose payload is the error text.  The aggregate is
-    partitions-sized, so it is collected and written from the driver.
-    The new file lands under the run's own name: the manifest is
-    append-only, one file per run."""
-    blocks_path = os.path.join(out_dir, "blocks")
-    written = (
-        _read_blocks(spark, blocks_path)
-        .filter(F.col("run_id") == run_id)
-        .select(
-            "part_id", "frag_id", "column", "codec", "n_rows", "raw_bytes",
-            "enc_bytes", "sha256", "wall_s",
-        )
-        # one shuffle on part_id serves both the dedup and the aggregate
-        .repartition("part_id")
-        .dropDuplicates(["part_id", "frag_id", "column"])
-    )
+    A (part_id, frag_id, column) block counts once.  ``n_rows`` counts
+    the first spec column's blocks (or a failed partition's error row),
+    ``codecs`` maps each column to its codec (the smallest name when
+    fragments differ), and a partition with an error row is ``failed``
+    with the greatest error text as its error.  The rows are
+    partitions-sized, and the new file lands under the run's own name:
+    the manifest is append-only, one file per run."""
     first_col = spec[0][0]
-    rows = written.groupBy("part_id").agg(
-        F.sum(
-            F.when(F.col("column").isin(first_col, "*"), F.col("n_rows")).otherwise(0)
-        ).alias("n_rows"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.to_json(
-            F.create_map(
-                *[
-                    part
-                    for c, _ in spec
-                    for part in (
-                        F.lit(c),
-                        F.min(F.when(F.col("column") == c, F.col("codec"))),
-                    )
-                ]
-            )
-        ).alias("codecs"),
-        F.max("sha256").alias("content_sha256"),
-        F.max("wall_s").alias("wall_s"),
-        F.when(
-            F.sum(F.when(F.col("codec") == "error", 1).otherwise(0)) > 0, "failed"
-        ).otherwise("committed").alias("status"),
-    ).toPandas()
-    rows["error"] = None
-    if (rows["status"] == "failed").any():
-        errors = (
-            _read_blocks(spark, blocks_path)
-            .filter((F.col("run_id") == run_id) & (F.col("codec") == "error"))
-            .groupBy("part_id")
-            .agg(F.max(F.col("payload").cast("string")).alias("error"))
-            .toPandas()
-        )
-        rows = rows.drop(columns="error").merge(errors, on="part_id", how="left")
-    rows = rows.assign(
-        run_id=run_id, gen=gen, kind=kind, batch_id=batch_id, origin=origin, msg=message
-    )
-    table = pa.Table.from_pandas(
-        rows[MANIFEST_ARROW.names], schema=MANIFEST_ARROW, preserve_index=False
-    )
+    parts: dict[int, dict] = {}
+    for b in {(b["part_id"], b["frag_id"], b["column"]): b for b in written}.values():
+        p = parts.setdefault(b["part_id"], {
+            "part_id": b["part_id"], "n_rows": 0, "raw_bytes": 0, "enc_bytes": 0,
+            "codecs": {c: None for c, _ in spec}, "content_sha256": None,
+            "wall_s": None, "status": "committed", "error": None,
+        })
+        if b["column"] in (first_col, "*"):
+            p["n_rows"] += b["n_rows"]
+        p["raw_bytes"] += b["raw_bytes"]
+        p["enc_bytes"] += b["enc_bytes"]
+        if b["column"] in p["codecs"]:
+            p["codecs"][b["column"]] = _sql_agg(min, p["codecs"][b["column"]], b["codec"])
+        p["content_sha256"] = _sql_agg(max, p["content_sha256"], b["sha256"])
+        p["wall_s"] = _sql_agg(max, p["wall_s"], b["wall_s"])
+        if b["codec"] == "error":
+            p["status"] = "failed"
+            text = bytes(b["error"]).decode("utf-8", "replace")
+            p["error"] = _sql_agg(max, p["error"], text)
+    rows = [
+        {**p, "codecs": json.dumps(p["codecs"], separators=(",", ":"), ensure_ascii=False),
+         "run_id": run_id, "gen": gen, "kind": kind, "batch_id": batch_id,
+         "origin": origin, "msg": message}
+        for _, p in sorted(parts.items())
+    ]
+    table = pa.Table.from_pylist(rows, schema=MANIFEST_ARROW)
     _write_small(
         spark, table, os.path.join(out_dir, "manifest"), f"part-{run_id}.parquet", False
     )
+
+
+def _sql_agg(f, a, b):
+    """``f(a, b)`` (min or max) skipping nulls, as SQL's aggregates do."""
+    return b if a is None else a if b is None else f(a, b)
 
 
 def make_append_kernel(
@@ -1217,13 +1232,9 @@ def encode_append(
             (manifest["kind"] == "append")
             & (manifest["status"] == "committed")
             & (manifest["batch_id"] == batch_id),
-            ["part_id"],
+            "part_id",
         ].drop_duplicates()
-        if len(already):
-            dfp = dfp.join(
-                F.broadcast(spark.createDataFrame(already, "part_id long")),
-                "part_id", "left_anti",
-            )
+        dfp = _without_parts(dfp, already)
 
     # refuse to append onto a FAILED base: the appended generation would
     # be superseded (and its rows stranded) the moment a healing
@@ -1259,9 +1270,9 @@ def encode_append(
         .cogroup(existing.groupBy("part_id"))
         .applyInArrow(kernel, BLOCK_SCHEMA)
     )
-    _write_blocks(new_blocks, os.path.join(out_dir, "blocks"))
+    written = _write_blocks(new_blocks, os.path.join(out_dir, "blocks"))
     _manifest_rows_for_run(
-        spark, out_dir, run_id, gen, spec, "append", batch_id,
+        spark, out_dir, written, run_id, gen, spec, "append", batch_id,
         origin=origin, message=message,
     )
     return _manifest_active(spark, os.path.join(out_dir, "manifest"))
@@ -1327,12 +1338,12 @@ def compact(
         info["spec"], info["key_cols"], info["order_cols"], info["content_col"], run_id
     )
     blocks = _active_blocks(spark, out_dir, active=multi)
-    _write_blocks(
+    written = _write_blocks(
         blocks.groupBy("part_id").applyInArrow(kernel, BLOCK_SCHEMA),
         os.path.join(out_dir, "blocks"),
     )
     _manifest_rows_for_run(
-        spark, out_dir, run_id, gen, info["spec"], "replace",
+        spark, out_dir, written, run_id, gen, info["spec"], "replace",
         origin=origin, message=message or "compact",
     )
     return _manifest_active(spark, os.path.join(out_dir, "manifest"))
@@ -1610,12 +1621,15 @@ def _active_blocks(
     ``active`` is the operation's resolved manifest (``TableMeta``),
     possibly narrowed to some partitions; it is resolved here when not
     given.  The run_id directories of dead runs drop out of the scan,
-    and the committed (part_id, run_id, gen) rows select the blocks
-    through one broadcast join."""
+    and the committed (part_id, run_id, gen) rows, an Arrow local
+    relation, select the blocks through one broadcast join."""
     if active is None:
         active = _active_of(_read_manifest(spark, out_dir))
-    live = active.loc[active["status"] == "committed", ["part_id", "run_id", "gen"]]
-    live_df = spark.createDataFrame(live, "part_id long, run_id string, gen long")
+    cols = ["part_id", "run_id", "gen"]
+    live = active.loc[active["status"] == "committed", cols]
+    live_df = spark.createDataFrame(pa.Table.from_pandas(
+        live, schema=pa.schema([MANIFEST_ARROW.field(c) for c in cols]), preserve_index=False
+    ))
     return _live_run_blocks(spark, out_dir, live).join(
         F.broadcast(live_df), ["part_id", "run_id"]
     )

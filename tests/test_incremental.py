@@ -29,19 +29,6 @@ from deltoid_spark.jobs.pipeline import (
 )
 
 
-@pytest.fixture(scope="module")
-def split_batches():
-    """The fixture table split MID-CHAIN: every (repo, path) group's
-    first half of versions lands in batch A, the rest in batch B."""
-    pdf = codegen.generate(2_000).sort_values(
-        ["repo", "path", "commit"], kind="mergesort"
-    )
-    rank = pdf.groupby(["repo", "path"]).cumcount()
-    sizes = pdf.groupby(["repo", "path"])["commit"].transform("size")
-    first_half = rank < (sizes + 1) // 2
-    return pdf, pdf[first_half].reset_index(drop=True), pdf[~first_half].reset_index(drop=True)
-
-
 def _enc_bytes(manifest):
     return metrics_summary(manifest)["enc_bytes"]
 

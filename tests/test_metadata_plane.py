@@ -17,26 +17,12 @@ import glob
 import os
 
 import pyarrow.parquet as pq
-import pytest
 
 from deltoid_spark.fixtures import codegen
 from deltoid_spark.jobs import compact, decode, encode, encode_append, history, vacuum, verify
 from deltoid_spark.jobs.pipeline import DEFAULT_SPEC, _active_blocks, _parse_where, _where_parts
 
 ZONE_COLS = ["zmin", "zmax", "smin", "smax", "bloom"]
-
-
-@pytest.fixture(scope="module")
-def split_batches():
-    """The fixture table split mid-chain: the first half of every
-    (repo, path) group's versions is the base, the rest the batch."""
-    pdf = codegen.generate(2_000).sort_values(
-        ["repo", "path", "commit"], kind="mergesort"
-    )
-    rank = pdf.groupby(["repo", "path"]).cumcount()
-    sizes = pdf.groupby(["repo", "path"])["commit"].transform("size")
-    first = rank < (sizes + 1) // 2
-    return pdf, pdf[first].reset_index(drop=True), pdf[~first].reset_index(drop=True)
 
 
 def _strip_columns(files: list[str], drop: list[str]) -> None:
@@ -120,15 +106,18 @@ def test_older_footers_read_as_null(spark, split_batches, tmp_path_factory):
 # compact 21 jobs (as on the benchmark's roundtrip table).  The metadata
 # tables are now read and written on the driver, so what remains is
 # data work: the input scan, the kernel shuffles and block writes, the
-# broadcast joins of the partition map and the active manifest, and the
-# manifest aggregate; see README "Metadata plane".  A where= read adds
+# broadcast joins of the partition map and the active manifest; see
+# README "Metadata plane".  A where= read adds
 # one job to a decode: the single prune pass that collects the hit
 # list.  Separate zone and Bloom passes, each with its own aggregate and
 # broadcast join, took lookup 8 and range_read 6 jobs here.  Compaction
 # took 6 while it ran a decode job and shuffled the decoded rows into a
-# separate encode job; its one replay-and-encode kernel takes 5.
+# separate encode job; its one replay-and-encode kernel took 5.  Each
+# write now reports its blocks' metadata itself: the two jobs that read
+# the run's blocks back and aggregated them into manifest rows are gone
+# (encode 9, append 10 and compact 5 before).
 MAX_JOBS = {
-    "encode": 9, "decode": 3, "append": 10, "lookup": 5, "range_read": 5, "compact": 5,
+    "encode": 7, "decode": 3, "append": 8, "lookup": 5, "range_read": 5, "compact": 3,
 }
 
 

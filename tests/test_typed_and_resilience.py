@@ -927,6 +927,41 @@ def test_zone_map_pruning_timestamps(spark, tmp_path_factory):
     assert pruned < allp
 
 
+def test_sub_microsecond_timestamp_fails_the_partition():
+    """Spark timestamps are microseconds, but the kernels take
+    nanoseconds.  A value that is not a whole microsecond has no Spark
+    form, so decode could not cast it back: the partition fails with
+    that error instead of storing it.  Whole microseconds round-trip."""
+    import pyarrow as pa
+
+    from deltoid_spark.jobs.pipeline import make_decode_kernel, make_encode_kernel
+
+    spec = [("repo", "string"), ("path", "string"), ("commit", "string"), ("ts", "timestamp")]
+    base = 1_700_000_000_000_000_000
+
+    def table(ns: list) -> pa.Table:
+        n = len(ns)
+        return pa.table({
+            "part_id": pa.array([0] * n, pa.int64()),
+            "repo": ["org/r"] * n,
+            "path": [f"f{i % 2}.py" for i in range(n)],
+            "commit": [f"c{i:04d}" for i in range(n)],
+            "ts": pa.array(ns, pa.timestamp("ns")),
+        })
+
+    kw = dict(spec=spec, order_cols=("commit",), content_col=None)
+    bad = make_encode_kernel(**kw)(table([base, base + 1, None, base + 2_000]))
+    assert bad.column("codec").to_pylist() == ["error"]
+    assert b"sub-microsecond" in bad.column("payload")[0].as_py()
+
+    good = [base, base + 1_000, None, -1_000]
+    blocks = make_encode_kernel(**kw)(table(good))
+    assert "error" not in blocks.column("codec").to_pylist()
+    out = make_decode_kernel(spec, content_col=None)(blocks)
+    got = dict(zip(out.column("commit").to_pylist(), out.column("ts").cast(pa.int64()).to_pylist()))
+    assert got == {f"c{i:04d}": None if v is None else v // 1_000 for i, v in enumerate(good)}
+
+
 def test_nested_nan_is_a_value_not_null(spark, tmp_path_factory):
     """Spark treats float NaN as a VALUE, distinct from null.  The
     python-object boundary (pandas -> Arrow inside Spark's own

@@ -9,7 +9,7 @@ deltoid-style inter-version content deltas over ``(repo, path)`` commit
 chains, orchestrated with the PySpark DataFrame API and Arrow UDFs.
 
 Layout:
-  kernels/    pure numpy/pandas codecs — no Spark imports (unit-testable)
+  kernels/    numpy/Arrow codecs — no Spark or pandas imports (unit-testable)
   fixtures/   deterministic synthetic code-repository table generator
   jobs/       Spark encode / decode / verify jobs + manifest / partitioning
   functions/  training-data-pipeline ops (dedup + clustering, similarity,

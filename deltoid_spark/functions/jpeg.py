@@ -352,43 +352,6 @@ def encode_jpeg(
 # --------------------------------------------------------------- decoder ---
 
 
-class _BitReader:
-    """Bit reader over a destuffed scan byte list (RSTs handled by caller)."""
-
-    def __init__(self, data: bytes) -> None:
-        self.bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8)).tolist()
-        self.pos = 0
-
-    def read_bit(self) -> int:
-        b = self.bits[self.pos]
-        self.pos += 1
-        return b
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        bits = self.bits
-        p = self.pos
-        for _ in range(n):
-            v = (v << 1) | bits[p]
-            p += 1
-        self.pos = p
-        return v
-
-
-def _extend(v: int, size: int) -> int:
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
-def _read_symbol(reader: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for ln in range(1, 17):
-        code = (code << 1) | reader.read_bit()
-        sym = table.get((ln, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid huffman code in scan")
-
-
 def _parse_segments(data: bytes):
     """Yield (marker, payload) up to SOS; return (state, scan_offset)."""
     if data[:2] != b"\xff\xd8":
@@ -406,48 +369,6 @@ def _parse_segments(data: bytes):
         if marker == 0xDA:
             return
         i += 2 + ln
-
-
-def _entropy_decode_reference(
-    intervals, comps, dc_tables, ac_tables, per_int, n_mcus, mcus_x
-) -> None:
-    """Per-symbol bit-at-a-time entropy decode — the straight-off-the-
-    spec implementation, kept as the byte-identity reference the fast
-    LUT decoder is A/B-tested against (tests pin zz equality on every
-    stream shape: 4:4:4, 4:2:0, grayscale, restart intervals)."""
-    for c in comps:
-        c["zz"] = np.zeros((c["bh"] * c["bw"], 64), dtype=np.int64)
-    mi = 0
-    for interval in intervals:
-        reader = _BitReader(interval)
-        preds = {c["id"]: 0 for c in comps}
-        for _ in range(min(per_int, n_mcus - mi)):
-            my, mx = divmod(mi, mcus_x)
-            for c in comps:
-                dct = dc_tables[c["td"]]
-                act = ac_tables[c["ta"]]
-                for dy in range(c["v"]):
-                    for dx in range(c["h"]):
-                        row = np.zeros(64, dtype=np.int64)
-                        size = _read_symbol(reader, dct)
-                        diff = _extend(reader.read_bits(size), size) if size else 0
-                        preds[c["id"]] += diff
-                        row[0] = preds[c["id"]]
-                        k = 1
-                        while k < 64:
-                            rs = _read_symbol(reader, act)
-                            if rs == 0x00:
-                                break
-                            if rs == 0xF0:
-                                k += 16
-                                continue
-                            k += rs >> 4
-                            size = rs & 0xF
-                            row[k] = _extend(reader.read_bits(size), size)
-                            k += 1
-                        bi = (my * c["v"] + dy) * c["bw"] + mx * c["h"] + dx
-                        c["zz"][bi] = row
-            mi += 1
 
 
 def _huff_lut(table: dict[tuple[int, int], int]) -> tuple[list[int], list[int]]:
@@ -483,7 +404,8 @@ def _entropy_decode_fast(
     a precomputed 48-bit sliding window, instead of bit-at-a-time code
     walking (measured >=10x the reference's MB/s; BASELINE.md "JPEG
     entropy decode" table).  Produces bit-identical coefficients — the
-    tests A/B every stream shape against _entropy_decode_reference.
+    tests A/B every stream shape against a per-symbol reference decoder
+    (tests/test_jpeg.py).
 
     The huffman stream itself is inherently sequential (a symbol's
     position is only known after decoding its predecessor), so the
@@ -716,15 +638,12 @@ def _entropy_decode_lockstep(
         raise ValueError("truncated scan")
 
 
-def decode_jpeg(data: bytes, _entropy: str = "fast") -> np.ndarray:
+def decode_jpeg(data: bytes) -> np.ndarray:
     """Decode baseline sequential JPEG to uint8 pixels.
 
     Returns (H, W) for grayscale, (H, W, 3) RGB otherwise.  Supports
     SOF0, 8-bit samples, 1 or 3 components, sampling factors 1-2
     (4:4:4, 4:2:2, 4:2:0), restart intervals, byte stuffing.
-    _entropy selects the entropy decoder: "fast" (table-driven LUT,
-    the default) or "reference" (per-symbol; kept for A/B identity
-    tests).
     """
     quants: dict[int, np.ndarray] = {}
     dc_tables: dict[int, dict] = {}
@@ -820,9 +739,7 @@ def decode_jpeg(data: bytes, _entropy: str = "fast") -> np.ndarray:
 
     n_mcus = mcus_x * mcus_y
     per_int = restart if restart else n_mcus
-    if _entropy == "reference":
-        decoder = _entropy_decode_reference
-    elif _entropy == "lut" or (_entropy == "fast" and len(intervals) < 8):
+    if len(intervals) < 8:
         # too few restart intervals for lockstep width — table-driven
         # sequential decode (still ~2-3x the reference; a huffman
         # stream without restart markers has NO intra-stream

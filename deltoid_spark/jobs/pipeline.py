@@ -6,10 +6,10 @@ J3 ``verify``  — digest-parity audit of table vs table'
 
 Dataflow (J1): read parquet -> skew-aware deterministic ``part_id``
 (partitioning.py) -> **one planned shuffle** (``groupBy(part_id)``)
--> ``applyInArrow`` encode kernel (executor-local numpy; whole
-partition visible so (key...) chains are complete; the kernel owns the
-Arrow -> pandas conversion so nullable ints and nested trees stay
-bit-exact) -> blocks parquet + manifest parquet.
+-> ``applyInArrow`` encode kernel (executor-local numpy and Arrow;
+whole partition visible so (key...) chains are complete; each column
+converts once to its storage array, ``_storage``, so nullable ints and
+nested trees stay bit-exact) -> blocks parquet + manifest parquet.
 
 Typed columns: every scalar Spark type routes to a kernel — strings
 through the codec selector (the designated content column through the
@@ -130,8 +130,6 @@ _WIDTHS = {**_INT_DDL, "boolean": 1, "timestamp": 8, "date": 4, "float": 4, "dou
 _NESTED_DDL = {"array<string>", "map<string,string>"}
 SUPPORTED_DDL = {"string", *_WIDTHS, *_NESTED_DDL}
 
-_NS_PER_DAY = 86_400 * 10**9
-
 
 def table_spec(df: DataFrame) -> list[tuple[str, str]]:
     """(name, ddl) per column; rejects unsupported types up front."""
@@ -173,7 +171,7 @@ def _key_ids(cols: list[pa.Array]) -> np.ndarray:
     ``\x01\x02``, and the parts join with a NUL, so an unescaped NUL
     only ever separates parts and two rows share an id only when their
     key tuples are equal.  Both sides pass the columns in their storage
-    form: encode through ``_key_arrays``, decode as the blocks decode."""
+    form: encode through ``_storage``, decode as the blocks decode."""
     parts = []
     for a in cols:
         a = strings.as_large_utf8(a)
@@ -185,29 +183,35 @@ def _key_ids(cols: list[pa.Array]) -> np.ndarray:
     return ids.to_numpy(zero_copy_only=False)
 
 
-def _key_arrays(
-    pdf: pd.DataFrame, key_cols: tuple[str, ...], ddls: dict[str, str]
-) -> list[pa.Array]:
-    """The encode side's key columns in the form their blocks decode to:
-    int-family, boolean and temporal columns as the int64 values
-    ``_storage_int64`` stores, strings and floats as they are."""
-    return [
-        pa.array(_storage_int64(pdf[k], ddls[k]))
-        if ddls[k] in _WIDTHS and ddls[k] not in ("float", "double")
-        else pa.array(pdf[k], from_pandas=True)
-        for k in key_cols
-    ]
-
-
-def _storage_int64(s: pd.Series, ddl: str) -> pd.Series:
-    """Convert a non-string scalar column to a nullable Int64 series the
-    FoR kernel can encode (timestamps as epoch ns, dates as epoch days)."""
-    mask = s.isna()
+def _storage(arr: pa.Array | pa.ChunkedArray, ddl: str) -> pa.Array:
+    """A column as Spark's Arrow batch types it -> the storage array its
+    block decodes to (``api.decode_block``); the exact inverse of
+    ``_to_spark``.  The int family becomes int64, timestamps the
+    epoch-ns UTC instant, dates epoch days, booleans 0/1; top-level
+    float NaN becomes null (so NaN and null share one mask bit, see
+    ``kernels/floats``); strings, lists, maps and nested trees take
+    their large Arrow types.  Key ids, the sort, zone maps and every
+    encoder read these arrays."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if ddl == "string":
+        return strings.as_large_utf8(arr)
+    if ddl in ("float", "double"):
+        arr = arr.cast(pa.float32() if ddl == "float" else pa.float64())
+        return pc.if_else(pc.is_nan(arr), pa.scalar(None, arr.type), arr)
     if ddl == "timestamp":
-        vals = s.fillna(pd.Timestamp(0)).astype("datetime64[ns]").astype("int64")
+        scale = {"s": 10**9, "ms": 10**6, "us": 10**3, "ns": 1}[arr.type.unit]
+        v = arr.cast(pa.int64()).fill_null(0).to_numpy()
+        lim = np.iinfo(np.int64).max // scale
+        far = (v > lim) | (v < -lim)
+        if far.any():
+            raise ValueError(
+                f"timestamp column holds {int(far.sum())} value(s) outside the epoch-ns "
+                f"range, years 1677-2262 (first: {arr[int(np.flatnonzero(far)[0])].as_py()})"
+            )
+        ns = v * scale
         # Spark timestamps are whole microseconds: a finer value could
         # be stored but never cast back (decode's _to_spark), so refuse it
-        ns = vals.to_numpy()
         frac = ns % 1000 != 0
         if frac.any():
             raise ValueError(
@@ -215,95 +219,25 @@ def _storage_int64(s: pd.Series, ddl: str) -> pd.Series:
                 f"(first: {int(ns[frac][0])} epoch ns); Spark timestamps are whole "
                 "microseconds"
             )
-    elif ddl == "date":
-        vals = pd.to_datetime(s).fillna(pd.Timestamp(0)).astype("int64") // _NS_PER_DAY
-    elif ddl == "boolean":
-        vals = s.fillna(False).astype("int64")
-    else:
-        # int family.  The encode jobs enter through applyInArrow and
-        # convert with exact Int* dtypes (_table_to_pdf), so s arrives
-        # as int64/Int64 here; a float64 arrival means a caller on the
-        # lossy pandas boundary, where values past 2^53 may already be
-        # rounded — fail the partition rather than corrupt silently
-        # (ADVICE r02).
-        if s.dtype.kind == "f":
-            nn = s.dropna().to_numpy()
-            if len(nn) and float(np.abs(nn).max()) >= float(2**53):
+        return pa.array(ns, mask=strings.null_mask(arr))
+    if ddl == "date":
+        return arr.cast(pa.date32()).cast(pa.int32()).cast(pa.int64())
+    if ddl in _WIDTHS:  # the int family and boolean
+        if pa.types.is_floating(arr.type):
+            # a float column handed in for an int one: values past 2^53
+            # may already be rounded, so fail rather than corrupt
+            # silently (ADVICE r02); a fractional value fails the cast
+            big = pc.max(pc.abs(arr)).as_py()
+            if big is not None and big >= float(2**53):
                 raise ValueError(
-                    f"int column ({ddl}) arrived as float64 with |v| >= 2^53; "
-                    "exact round-trip is not provable at the Arrow->pandas "
-                    "boundary — encode via the job API (nullable ints are "
-                    "shielded there) or pass an exact integer dtype"
+                    f"int column ({ddl}) arrived as {arr.type} with |v| >= 2^53; "
+                    "exact round-trip is not provable — pass an exact integer type"
                 )
-        vals = s.fillna(0).astype("int64")
-    out = pd.Series(np.asarray(vals, dtype=np.int64), dtype="Int64")
-    out[mask.to_numpy()] = pd.NA
-    return out
+        return arr.cast(pa.int64())
+    from ..kernels import nested as nested_kernel
 
-
-# Spark's applyInPandas boundary converts nullable int columns to
-# float64 (rounding |v| > 2^53) and nested int leaves likewise (ADVICE
-# r02).  The encode kernels therefore take their input through
-# applyInArrow / mapInArrow and convert Arrow -> pandas THEMSELVES:
-# nullable ints map to pandas' exact Int* extension dtypes, nested
-# trees stay python objects via to_pylist — bit-exact end to end.
-_PA_NULLABLE_INTS = {
-    pa.int64(): pd.Int64Dtype(),
-    pa.int32(): pd.Int32Dtype(),
-    pa.int16(): pd.Int16Dtype(),
-    pa.int8(): pd.Int8Dtype(),
-}
-
-
-def _table_to_pdf(
-    tbl: pa.Table, spec: list[tuple[str, str]], arrow_cols: tuple[str, ...] = ()
-) -> tuple[pd.DataFrame, dict[str, pa.Array]]:
-    """(pandas frame, still-Arrow columns).  Columns named in
-    ``arrow_cols`` never become pandas at all — the content column's
-    python-string materialization was the single largest encode cost
-    (measured ~32 s for the 2 GB fixture at 1 core in round 2)."""
-    ddls = dict(spec)
-    cols: dict[str, pd.Series] = {}
-    arrows: dict[str, pa.Array] = {}
-    for name in tbl.schema.names:
-        col = tbl.column(name)
-        ddl = ddls.get(name, "")
-        if name in arrow_cols:
-            # Spark ships strings as utf8 (int32 offsets); the buffer
-            # views/kernels expect large_utf8 — cast once (data shared)
-            arrows[name] = strings.as_large_utf8(col)
-        elif ddl.startswith(("struct<", "array<", "map<")):
-            if ddl != "array<string>":
-                # nested trees stay Arrow end-to-end: the NESTED codec
-                # consumes the array directly (kernels/nested._input_arrow),
-                # so no python list/dict is ever materialized on encode —
-                # and bigints past 2^53 / NaN-vs-null survive by
-                # construction (round-6)
-                one = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-                cols[name] = pd.Series(
-                    pd.arrays.ArrowExtensionArray(one), dtype=pd.ArrowDtype(one.type)
-                )
-            else:
-                # array<string> routes to STRLIST, which takes exact
-                # python lists
-                cols[name] = pd.Series(col.to_pylist(), dtype=object)
-        elif ddl == "timestamp":
-            s = col.to_pandas()
-            if getattr(s.dtype, "tz", None) is not None:
-                s = s.dt.tz_localize(None)  # session-local wall time
-            cols[name] = s
-        else:
-            cols[name] = col.to_pandas(types_mapper=_PA_NULLABLE_INTS.get)
-    return pd.DataFrame(cols), arrows
-
-
-def _arrow_content_col(
-    spec: list[tuple[str, str]], content_col: str | None
-) -> tuple[str, ...]:
-    """content stays Arrow iff it is a plain string column."""
-    if content_col is not None and dict(spec).get(content_col) == "string":
-        return (content_col,)
-    return ()
+    # array<string>, map<string,string> and every other tree
+    return blocks_mod.as_type(arr, nested_kernel.arrow_type(nested_kernel.parse_ddl(ddl)))
 
 
 def _float_sortable(a: np.ndarray) -> np.ndarray:
@@ -327,11 +261,11 @@ def _float_keys(a: np.ndarray) -> np.ndarray:
     return _float_sortable(np.where(a == 0.0, 0.0, a))
 
 
-def _float_zone(s: pd.Series) -> tuple[int | None, int | None]:
+def _float_zone(arr: pa.Array) -> tuple[int | None, int | None]:
     """(zmin, zmax) for a float/double column in sortable-int64 space;
     NaNs and nulls are excluded (like nulls on int columns), so an
     all-NaN/null block stays unprunable."""
-    a = s.to_numpy(dtype=np.float64, na_value=np.nan)
+    a = np.asarray(arr.to_numpy(zero_copy_only=False), dtype=np.float64)
     a = a[~np.isnan(a)]
     if len(a) == 0:
         return None, None
@@ -394,19 +328,19 @@ def _string_zone(arr: pa.Array) -> tuple[str | None, str | None]:
 
 
 def _encode_typed(
-    s: pd.Series, ddl: str
+    arr: pa.Array, ddl: str
 ) -> tuple[str, bytes, int, int | None, int | None]:
-    """Encode one non-string column; returns (codec, buf, raw_bytes,
-    zmin, zmax).  The zone map (min/max of the int64 STORAGE values,
-    nulls excluded; None for non-int and all-null columns) lands on the
-    block row so ``decode(where=...)`` prunes whole partitions from the
-    block table — the A13 Range semantics turned into an actual
-    pushed-down scan bound."""
+    """Encode one non-string storage column (``_storage``); returns
+    (codec, buf, raw_bytes, zmin, zmax).  The zone map (min/max of the
+    int64 STORAGE values, nulls excluded; None for non-int and all-null
+    columns) lands on the block row so ``decode(where=...)`` prunes
+    whole partitions from the block table — the A13 Range semantics
+    turned into an actual pushed-down scan bound."""
     if ddl == "array<string>":
         return (
             "strlist",
-            mapdelta_kernel.encode_strlist(s),
-            mapdelta_kernel.strlist_raw_bytes(s),
+            mapdelta_kernel.encode_strlist(arr),
+            mapdelta_kernel.strlist_raw_bytes(arr),
             None,
             None,
         )
@@ -415,24 +349,17 @@ def _encode_typed(
 
         return (
             "nested",
-            nested_kernel.encode_nested(s, ddl),
-            nested_kernel.nested_raw_bytes(s, ddl),
+            nested_kernel.encode_nested(arr, ddl),
+            nested_kernel.nested_raw_bytes(arr, ddl),
             None,
             None,
         )
-    raw = _WIDTHS[ddl] * len(s)
+    raw = _WIDTHS[ddl] * len(arr)
     if ddl in ("float", "double"):
-        zmin, zmax = _float_zone(s)
-        return "fp", floats.encode_fp(s, width=_WIDTHS[ddl]), raw, zmin, zmax
-    st = _storage_int64(s, ddl)
-    zmin, zmax = st.min(), st.max()
-    return (
-        "dint",
-        api.encode_block(st, "dint"),
-        raw,
-        None if pd.isna(zmin) else int(zmin),
-        None if pd.isna(zmax) else int(zmax),
-    )
+        zmin, zmax = _float_zone(arr)
+        return "fp", floats.encode_fp(arr, width=_WIDTHS[ddl]), raw, zmin, zmax
+    mm = pc.min_max(arr)
+    return "dint", api.encode_block(arr, "dint"), raw, mm["min"].as_py(), mm["max"].as_py()
 
 
 def _group_starts(gsizes: np.ndarray) -> np.ndarray:
@@ -480,7 +407,7 @@ def _encode_content(
 
 
 def _encode_rows(
-    pdf: pd.DataFrame,
+    cols: dict[str, pa.Array],
     keys: np.ndarray,
     part_id: int,
     frag_id: int,
@@ -492,17 +419,14 @@ def _encode_rows(
     t0: float,
     tails: dict | None = None,
     tail_counts: dict | None = None,
-    content_arr: pa.Array | None = None,
 ) -> list[tuple]:
-    """Encode one sorted slice of rows, whose (key...) ids
-    (``_key_ids``) are ``keys``, into per-column block rows.
+    """Encode one sorted slice of rows, given as its storage columns
+    (``_storage``) and its (key...) ids (``_key_ids``), into per-column
+    block rows.
 
     tails / tail_counts (from decoded prior fragments) seed chain groups
     that continue an existing (key...) chain — the incremental
-    ``push_snapshot`` path (delta.rs:108-125).  content_arr, when given,
-    is the (already sort-permuted) Arrow form of the content column —
-    it never existed as pandas, so the dominant column skips both
-    python-string materialization boundaries."""
+    ``push_snapshot`` path (delta.rs:108-125)."""
     out = []
     gsizes = _group_sizes(keys)
     base_texts = None
@@ -515,17 +439,14 @@ def _encode_rows(
             dtype=np.int64,
         )
     for col, ddl in spec:
+        arr = cols[col]
         zmin = zmax = None
         smin = smax = None
         blm = None
         if ddl == "string":
-            # one Arrow array per string column, shared by raw-size, the
+            # one view per string column, shared by raw-size, the
             # selector, the PLAIN-gate sample, the content digest, and
-            # the string zone map; the content column arrives as Arrow
-            if col == content_col and content_arr is not None:
-                arr = content_arr
-            else:
-                arr = strings.as_large_utf8(pdf[col])
+            # the string zone map
             view = strings.utf8_view(arr)
             raw = int(view[0].sum())
             if col == content_col and (len(gsizes) < len(arr) or tails):
@@ -551,15 +472,15 @@ def _encode_rows(
             # content column uses (reference HashMap::delta)
             codec = "mapdelta"
             buf = mapdelta_kernel.encode_mapdelta(
-                pdf[col], gsizes, keyframe_interval=keyframe_interval, level=level
+                arr, gsizes, keyframe_interval=keyframe_interval, level=level
             )
-            raw = mapdelta_kernel.map_raw_bytes(pdf[col])
+            raw = mapdelta_kernel.map_raw_bytes(arr)
             sha = None
         else:
-            codec, buf, raw, zmin, zmax = _encode_typed(pdf[col], ddl)
+            codec, buf, raw, zmin, zmax = _encode_typed(arr, ddl)
             sha = None
         out.append(
-            (part_id, frag_id, col, codec, buf, len(pdf), raw, len(buf), sha,
+            (part_id, frag_id, col, codec, buf, len(keys), raw, len(buf), sha,
              time.time() - t0, run_id, zmin, zmax, smin, smax, blm)
         )
     return out
@@ -578,29 +499,28 @@ def _slice_encoder(
 ):
     """The one encode path every kernel (encode, fragment, append,
     compact) runs: ``encode_slice(tbl, part_id, frag_id, prior)`` turns
-    one partition's rows, in any order, into its block rows.  It sorts
-    them on the key and order columns, permutes the Arrow content
-    column alike, and encodes the slice; ``prior`` block rows (a
-    partition's stored fragments) are replayed first so the slice's
-    chains continue theirs.
+    one partition's rows, in any order, into its block rows.  Each
+    column converts once to its storage form (``_storage``); the rows
+    sort stably on the key and order columns' storage arrays, nulls
+    last, and the slice is encoded; ``prior`` block rows (a partition's
+    stored fragments) are replayed first so the slice's chains continue
+    theirs.
 
     ``isolate`` is the failure taxonomy: a slice that raises becomes one
     ``codec="error"`` block row (manifest ``status="failed"``) — "fail
     the partition, not the job" (reference taxonomy error.rs).  Without
     it the error propagates and fails the job."""
-    sort_cols = [*key_cols, *order_cols]
-    arrow_cols = _arrow_content_col(spec, content_col)
-    ddls = dict(spec)
+    sort_keys = [(c, "ascending") for c in dict.fromkeys([*key_cols, *order_cols])]
 
     def encode_slice(
         tbl: pa.Table, part_id: int, frag_id: int, prior: pa.Table | None = None
     ) -> pa.Table:
         t0 = time.time()
-        pdf, arrows = _table_to_pdf(tbl, spec, arrow_cols)
         try:
-            if fail_inject is not None and (pdf[key_cols[0]] == fail_inject).any():
+            cols = {name: _storage(tbl.column(name), ddl) for name, ddl in spec}
+            if fail_inject is not None and fail_inject in cols[key_cols[0]].to_pylist():
                 raise RuntimeError(f"injected failure for {fail_inject!r}")
-            keys = _key_ids(_key_arrays(pdf, key_cols, ddls))
+            keys = _key_ids([cols[k] for k in key_cols])
             tails = tail_counts = None
             if prior is not None:
                 # only the chains this slice continues replay
@@ -611,19 +531,22 @@ def _slice_encoder(
                         (k in cont for k in keys), dtype=bool, count=len(keys)
                     ),
                 )
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            order = pdf.index.to_numpy(dtype=np.int64)
-            content = arrows[content_col].take(pa.array(order)) if arrows else None
+            # NaN is already null (_storage): Arrow alone would sort NaN
+            # before null, where NaN and null are one missing value here
+            order = pc.sort_indices(
+                pa.table({c: cols[c] for c, _ in sort_keys}),
+                sort_keys=sort_keys, null_placement="at_end",
+            )
             rows = _encode_rows(
-                pdf.reset_index(drop=True), keys[order], part_id, frag_id, spec,
-                content_col, keyframe_interval, level, run_id, t0,
-                tails=tails, tail_counts=tail_counts, content_arr=content,
+                {n: a.take(order) for n, a in cols.items()}, keys[order.to_numpy()],
+                part_id, frag_id, spec, content_col, keyframe_interval, level,
+                run_id, t0, tails=tails, tail_counts=tail_counts,
             )
         except Exception as exc:  # noqa: BLE001 — isolation is the point
             if not isolate:
                 raise
             msg = f"{type(exc).__name__}: {exc}".encode("utf-8", "replace")[:4096]
-            rows = [(part_id, frag_id, "*", "error", msg, len(pdf), 0, 0, None,
+            rows = [(part_id, frag_id, "*", "error", msg, tbl.num_rows, 0, 0, None,
                      time.time() - t0, run_id, None, None, None, None, None)]
         return pa.Table.from_pylist(
             [dict(zip(BLOCK_ARROW.names, r)) for r in rows], schema=BLOCK_ARROW
@@ -955,8 +878,8 @@ def encode(
     if mode == "clustered":
         blocks = df.mapInArrow(make_fragment_kernel(**kw), BLOCK_SCHEMA)
     else:
-        # applyInArrow, not applyInPandas: the kernel owns the Arrow ->
-        # pandas conversion (exact nullable ints, exact nested trees)
+        # applyInArrow, not applyInPandas: the kernel reads the Arrow
+        # batch itself (exact nullable ints, exact nested trees)
         blocks = df.groupBy("part_id").applyInArrow(make_encode_kernel(**kw), BLOCK_SCHEMA)
     written = _write_blocks(blocks, blocks_path)
 
@@ -1687,10 +1610,10 @@ def _where_value(v, ddl: str) -> tuple:
     """A where= value -> (typed, key).  ``typed`` is the Python value the
     residual row filter compares with the decoded column; ``key`` is
     the value in the zone map's space: the int64 storage value for
-    int-family and temporal columns (the mapping _storage_int64 applies
-    at encode), the sortable int64 for floats (_float_keys, as
-    _float_zone), the string itself for strings (smin/smax compare
-    directly under the pinned binary collation)."""
+    int-family and temporal columns (dates through ``_storage``, the
+    mapping encode applies), the sortable int64 for floats
+    (_float_keys, as _float_zone), the string itself for strings
+    (smin/smax compare directly under the pinned binary collation)."""
     if ddl == "string":
         return str(v), str(v)
     if ddl in ("float", "double"):
@@ -1702,8 +1625,8 @@ def _where_value(v, ddl: str) -> tuple:
         t = pd.Timestamp(v).to_pydatetime()
         return t, int(pd.Timestamp(t).value)
     if ddl == "date":
-        t = pd.Timestamp(v)
-        return t.date(), int(t.value // _NS_PER_DAY)
+        d = pa.array(np.array([v], dtype="datetime64[D]"))
+        return d[0].as_py(), _storage(d, "date")[0].as_py()
     return int(v), int(v)
 
 
@@ -2001,12 +1924,15 @@ def decode(
         cond = F.lit(True)
         for p in preds:
             c = F.col(p.col)
+            # PySpark builds a date literal through strftime, which drops
+            # the zero padding of a year before 1000: go through ISO text
+            lit = (lambda v: F.lit(v.isoformat()).cast("date")) if p.ddl == "date" else F.lit
             if p.points is not None:
-                cond = cond & c.isin([v for v, _ in p.points])
+                cond = cond & c.isin([lit(v) for v, _ in p.points])
             if p.lo is not None:
-                cond = cond & (c >= F.lit(p.lo[0]))
+                cond = cond & (c >= lit(p.lo[0]))
             if p.hi is not None:
-                cond = cond & (c <= F.lit(p.hi[0]))
+                cond = cond & (c <= lit(p.hi[0]))
         return df.filter(cond)
 
     # applyInArrow, not applyInPandas: the kernel decodes to Arrow and

@@ -15,7 +15,8 @@ STRING_CODECS = ("plain", "dict", "rle", "front", "hex", "fsst")
 def encode_block(series, codec: str, **kw) -> bytes:
     """Encode one column with ``codec``.  A string codec takes any
     column form (pandas Series, Arrow array) and converts it once to
-    the LargeStringArray every string encoder reads."""
+    the LargeStringArray every string encoder reads; the others take a
+    ``pa.Array`` in its storage type (``decode_block`` lists them)."""
     if codec in STRING_CODECS:
         series = strings.as_large_utf8(series)
     if codec == "plain":

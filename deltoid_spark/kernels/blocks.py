@@ -92,7 +92,38 @@ def decompress(data: bytes, raw_size: int) -> bytes:
     return pa.decompress(data, decompressed_size=raw_size, codec="zstd", asbytes=True)
 
 
-# ----------------------------------------------------------- null masks ----
+# ------------------------------------------- Arrow inputs and null masks ----
+
+
+def as_type(arr: pa.Array | pa.ChunkedArray, t: pa.DataType) -> pa.Array:
+    """``arr`` as one unsliced array of type ``t``: the encoders read
+    large strings and lists, where Spark ships utf8 and list, and the
+    list, map and struct encoders read child arrays whole, which a
+    slice's offset does not reach."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if arr.offset:
+        arr = pa.concat_arrays([arr])
+    return arr if arr.type == t else arr.cast(t)
+
+
+def null_mask(arr: pa.Array) -> np.ndarray:
+    """True == null."""
+    if not arr.null_count:
+        return np.zeros(len(arr), dtype=bool)
+    return arr.is_null().to_numpy(zero_copy_only=False)
+
+
+def mask_part(meta: dict, mask: np.ndarray) -> bytes:
+    """The packed null mask that leads a block's payload (b"" when
+    nothing is null); records ``has_null`` and ``mask_len`` in ``meta``
+    for ``split_mask``."""
+    meta["has_null"] = bool(mask.any())
+    if not meta["has_null"]:
+        return b""
+    mb = pack_mask(mask)
+    meta["mask_len"] = len(mb)
+    return mb
 
 
 def pack_mask(mask: np.ndarray) -> bytes:

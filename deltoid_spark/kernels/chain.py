@@ -31,7 +31,6 @@ equals ``contents`` bytewise, nulls included.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -270,7 +269,7 @@ def _precompute_deltas(
 
 
 def encode_chain(
-    contents: pd.Series,
+    contents: pa.Array,
     group_sizes: np.ndarray,
     keyframe_interval: int = DEFAULT_KEYFRAME_INTERVAL,
     level: int | None = None,
@@ -288,7 +287,7 @@ def encode_chain(
     base texts (the previous fragment's tails) — meta records which
     groups are seeded.
 
-    Accepts either a pandas Series or a pyarrow string array; the whole
+    Takes a string array (or anything ``as_large_utf8`` converts); the whole
     kernel is Arrow-native (round 3): lines are dictionary-encoded ONCE
     and every per-version comparison runs on int codes (exact: Arrow's
     hashing is byte-aware), keyframe texts and delta lines leave via

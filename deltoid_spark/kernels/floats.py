@@ -18,17 +18,19 @@ division — the identical operation the encode-side check performed, so
 conforming values round-trip bit-for-bit.  Non-finite values and -0.0
 (whose sign a decimal int can't carry) go to the exception list.
 
-Nulls are carried in the packed validity mask, and decode returns a
-float32/float64 ``pa.Array`` with them in its validity bitmap.  Encode
-reads a pandas column, where NaN and null are one marker: both land in
-the mask (documented engine-wide; the mask still makes the encoding
-itself exact for whatever the boundary delivered).
+Encode reads a ``pa.Array``.  Nulls are carried in the packed validity
+mask, and decode returns a float32/float64 ``pa.Array`` with them in
+its validity bitmap; a NaN is a value here, kept bit-exact in the lanes
+or the exception list.  A top-level float column of a table is a
+different matter: the encode job's storage mapping
+(``jobs.pipeline._storage``) turns its NaNs into nulls first, so there
+NaN and null share the mask bit and a NaN decodes as null.  NaN inside
+a nested float leaf stays a value (kernels/nested).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from . import blocks
@@ -63,25 +65,21 @@ def _decimal_probe(vals: np.ndarray, mask: np.ndarray) -> tuple[int, np.ndarray]
     return None
 
 
-def encode_fp(series: pd.Series, width: int = 8) -> bytes:
+def encode_fp(arr: pa.Array, width: int = 8) -> bytes:
     """Encode a float column; width 4 (float32) or 8 (float64).
     float64 columns additionally try the pseudo-decimal mode and keep
     whichever encoding is smaller."""
-    mask = series.isna().to_numpy()
+    mask = blocks.null_mask(arr)
     dt = np.float64 if width == 8 else np.float32
-    vals = series.to_numpy(dtype=dt, na_value=0.0, copy=True)
-    vals[mask] = 0.0  # deterministic bytes under any null payload
+    # 0.0 under every null: deterministic bytes under any null payload
+    vals = np.asarray(arr.fill_null(0.0).to_numpy(zero_copy_only=False), dtype=dt)
     raw = vals.tobytes()
     comp = blocks.compress(raw)
-    meta = {"n": len(series), "w": width, "raw": len(raw)}
-    meta["has_null"] = bool(mask.any())
-    mb = b""
-    if meta["has_null"]:
-        mb = blocks.pack_mask(mask)
-        meta["mask_len"] = len(mb)
+    meta = {"n": len(arr), "w": width, "raw": len(raw)}
+    mb = blocks.mask_part(meta, mask)
     lanes = blocks.frame("fp", meta, mb + comp)
 
-    if width != 8 or len(series) == 0:
+    if width != 8 or len(arr) == 0:
         return lanes
     probe = _decimal_probe(vals, mask)
     if probe is None:
@@ -95,7 +93,7 @@ def encode_fp(series: pd.Series, width: int = 8) -> bytes:
     pmeta, ppay = pack_ints_z(exc_pos)
     exc_raw = vals[exc_pos].tobytes()
     dmeta = {
-        "n": len(series), "w": width, "mode": "dec", "e": e,
+        "n": len(arr), "w": width, "mode": "dec", "e": e,
         "ints": imeta, "ilen": len(ipay),
         "epos": pmeta, "eplen": len(ppay), "nexc": len(exc_pos),
         "has_null": meta["has_null"],

@@ -37,7 +37,7 @@ import pyarrow as pa
 
 from . import blocks
 from .intcodec import pack_ints, unpack_ints
-from .strings import _mask_meta, _offsets, large_utf8_array, null_mask, utf8_view
+from .strings import _offsets, large_utf8_array, null_mask, utf8_view
 
 ESCAPE = 0xFF
 MAX_SYMBOLS = 255  # codes 0..254; 255 reserved for escape
@@ -353,7 +353,7 @@ def encode_fsst(arr: pa.Array) -> bytes:
         "lens": lmeta, "lplen": len(lpay),
         "zstd": True, "codes_raw": len(codes),
     }
-    mb = _mask_meta(meta, null_mask(arr))
+    mb = blocks.mask_part(meta, null_mask(arr))
     return blocks.frame("fsst", meta, mb + tlens + table + lpay + blocks.compress(codes))
 
 

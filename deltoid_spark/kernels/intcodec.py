@@ -19,7 +19,6 @@ Two layers:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from . import blocks
@@ -127,17 +126,19 @@ def _undelta(packed: np.ndarray, mode: str, meta: dict) -> np.ndarray:
 # --------------------------------------------------------------- framed ----
 
 
-def encode_for(series: pd.Series) -> bytes:
+def _filled_ints(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(null mask, int64 values with 0 under every null) of an int
+    ``pa.Array``."""
+    vals = arr.fill_null(0).to_numpy(zero_copy_only=False)
+    return blocks.null_mask(arr), np.asarray(vals, dtype=np.int64)
+
+
+def encode_for(arr: pa.Array) -> bytes:
     """Encode an int64 column (nullable) as a framed FoR block."""
-    mask = series.isna().to_numpy()
-    vals = series.fillna(0).to_numpy(dtype=np.int64)
+    mask, vals = _filled_ints(arr)
     meta, payload = pack_ints(vals)
-    meta["has_null"] = bool(mask.any())
-    if meta["has_null"]:
-        mb = blocks.pack_mask(mask)
-        meta["mask_len"] = len(mb)
-        payload = mb + payload
-    return blocks.frame("for", meta, payload)
+    mb = blocks.mask_part(meta, mask)
+    return blocks.frame("for", meta, mb + payload)
 
 
 def decode_for(meta: dict, payload: bytes) -> pa.Array:
@@ -159,7 +160,7 @@ def _unzigzag(z: np.ndarray) -> np.ndarray:
     )
 
 
-def encode_dint(series: pd.Series) -> bytes:
+def encode_dint(arr: pa.Array) -> bytes:
     """Best-of {FoR, zigzag-delta, zigzag-delta-of-delta} for an int64
     column (nullable) — the Gorilla-style upgrade for the sequences
     FoR leaves on the table: sorted ids / offsets pack to the delta's
@@ -170,8 +171,7 @@ def encode_dint(series: pd.Series) -> bytes:
     modular int64 (numpy wrapping) on BOTH sides, so extreme values
     (the 2^63-boundary adversarial rows) round-trip exactly even when
     a diff overflows."""
-    mask = series.isna().to_numpy()
-    vals = series.fillna(0).to_numpy(dtype=np.int64)
+    mask, vals = _filled_ints(arr)
     n = len(vals)
     cands: dict[str, tuple[dict, bytes]] = {"f": pack_ints(vals)}
     if n >= 2:
@@ -193,13 +193,9 @@ def encode_dint(series: pd.Series) -> bytes:
         meta["v0"] = int(vals[0])
     elif mode == "d2":
         meta["v0"], meta["v1"] = int(vals[0]), int(vals[1])
-    meta["has_null"] = bool(mask.any())
-    if meta["has_null"]:
-        mb = blocks.pack_mask(mask)
-        meta["mask_len"] = len(mb)
-        payload = mb + payload
+    mb = blocks.mask_part(meta, mask)
     meta["rows"] = n
-    return blocks.frame("dint", meta, payload)
+    return blocks.frame("dint", meta, mb + payload)
 
 
 def decode_dint(meta: dict, payload: bytes) -> pa.Array:

@@ -29,7 +29,6 @@ is exact via the validity mask.  It decodes to a LargeListArray.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -71,10 +70,10 @@ def _rows_kinds(
     return is_delta, ~is_delta  # nulls are explicit keyframe states
 
 
-def map_raw_bytes(series: pd.Series) -> int:
+def map_raw_bytes(arr: pa.Array) -> int:
     """Uncompressed size proxy: utf-8 bytes of all keys + non-null
     values (vectorized; replaces the round-2 per-row loop)."""
-    ma = pa.array(series, type=_MAP_TYPE, from_pandas=True)
+    ma = blocks.as_type(arr, _MAP_TYPE)
     if len(ma.keys) == 0:
         return 0
     kb = pc.sum(pc.binary_length(ma.keys.cast(pa.large_binary()))).as_py() or 0
@@ -83,18 +82,16 @@ def map_raw_bytes(series: pd.Series) -> int:
 
 
 def encode_mapdelta(
-    series: pd.Series,
+    arr: pa.Array,
     group_sizes: np.ndarray,
     keyframe_interval: int = DEFAULT_KEYFRAME_INTERVAL,
     level: int | None = None,
 ) -> bytes:
-    n = len(series)
+    ma = blocks.as_type(arr, _MAP_TYPE)
+    n = len(ma)
     gsz = np.asarray(group_sizes, dtype=np.int64)
     assert int(gsz.sum()) == n, "group sizes must cover all rows"
-    ma = pa.array(series, type=_MAP_TYPE, from_pandas=True)
-    is_null = (
-        pc.is_null(ma).to_numpy(zero_copy_only=False) if n else np.zeros(0, dtype=bool)
-    )
+    is_null = blocks.null_mask(ma)
     is_delta, is_key = _rows_kinds(n, gsz, is_null, keyframe_interval)
 
     offs = ma.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
@@ -279,31 +276,26 @@ def decode_mapdelta(meta: dict, payload: bytes) -> pa.Array:
 _LIST_TYPE = pa.large_list(pa.large_utf8())
 
 
-def strlist_raw_bytes(series: pd.Series) -> int:
+def strlist_raw_bytes(arr: pa.Array) -> int:
     """utf-8 bytes of all elements (vectorized raw-size proxy)."""
-    la = pa.array(series, type=_LIST_TYPE, from_pandas=True)
+    la = blocks.as_type(arr, _LIST_TYPE)
     if len(la.values) == 0:
         return 0
     return int(pc.sum(pc.binary_length(la.values.cast(pa.large_binary()))).as_py() or 0)
 
 
-def encode_strlist(series: pd.Series, level: int | None = None) -> bytes:
+def encode_strlist(arr: pa.Array, level: int | None = None) -> bytes:
     """array<string> column: FoR-packed lengths + flattened elements.
 
     Vectorized via Arrow LargeListArray buffers (round 2 looped per row
     to collect lengths and elements)."""
-    mask = series.isna().to_numpy()
-    la = pa.array(series, type=_LIST_TYPE, from_pandas=True)
+    la = blocks.as_type(arr, _LIST_TYPE)
     offs = la.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    lengths = np.diff(offs) if len(series) else np.zeros(0, dtype=np.int64)
+    lengths = np.diff(offs) if len(la) else np.zeros(0, dtype=np.int64)
     lmeta, lpay = pack_ints_z(lengths)
     elems = encode_plain(la.values, level)
-    meta = {"n": len(series), "lens": lmeta, "lplen": len(lpay)}
-    meta["has_null"] = bool(mask.any())
-    mb = b""
-    if meta["has_null"]:
-        mb = blocks.pack_mask(mask)
-        meta["mask_len"] = len(mb)
+    meta = {"n": len(la), "lens": lmeta, "lplen": len(lpay)}
+    mb = blocks.mask_part(meta, blocks.null_mask(la))
     return blocks.frame("strlist", meta, mb + lpay + elems)
 
 

@@ -22,7 +22,6 @@ concatenation of each node's parts.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -129,32 +128,6 @@ def is_supported_ddl(ddl: str) -> bool:
 # --------------------------------------------------------------- encode ----
 
 
-def _obj_list(series: pd.Series) -> list:
-    """pandas object Series -> python list with row-level missing
-    markers (None / float NaN used by pandas as a cell-absent marker
-    for non-float cells) normalized to None.  NaN INSIDE a nested
-    float leaf is untouched — it arrives wrapped in a list/dict cell."""
-    out = series.tolist() if isinstance(series, pd.Series) else list(series)
-    return [None if v is None or (isinstance(v, float) and v != v) else v
-            for v in out]
-
-
-def _null_mask(arr: pa.Array) -> np.ndarray:
-    if arr.null_count == 0:
-        return np.zeros(len(arr), dtype=bool)
-    return pc.is_null(arr).to_numpy(zero_copy_only=False)
-
-
-def _mask_part(meta: dict, arr: pa.Array) -> list[bytes]:
-    mask = _null_mask(arr)
-    meta["has_null"] = bool(mask.any())
-    if not meta["has_null"]:
-        return []
-    mb = blocks.pack_mask(mask)
-    meta["mask_len"] = len(mb)
-    return [mb]
-
-
 def _try_decimal_leaf(vals: np.ndarray) -> tuple[dict, bytes] | None:
     """ALP pseudo-decimal for a nested double leaf (same idea, probe,
     and exactness argument as kernels/floats.encode_fp): scaled int64s
@@ -199,8 +172,7 @@ def _enc(arr: pa.Array, node, level, parts: list[bytes]) -> dict:
     arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
     kind = node[0]
     meta: dict = {"k": kind, "n": len(arr)}
-    parts_mask = _mask_part(meta, arr)
-    parts.extend(parts_mask)
+    parts.append(blocks.mask_part(meta, blocks.null_mask(arr)))
     if kind == "scalar":
         st = node[1]
         meta["t"] = st
@@ -268,36 +240,29 @@ def _enc(arr: pa.Array, node, level, parts: list[bytes]) -> dict:
     return meta
 
 
-def _input_arrow(series, node) -> pa.Array:
-    """Series -> the codec's internal Arrow tree.  An Arrow-backed
-    series (pd.ArrowDtype — the encode job hands nested columns over
-    without ever materializing python objects) is cast zero-copy-ish to
-    the internal large types; an object series converts WITHOUT
-    from_pandas coercion: None still maps to null, but a float NaN
-    inside a nested double leaf stays a VALUE — Spark treats NaN as a
-    value (round-6 fix)."""
-    if isinstance(series, pd.Series) and isinstance(series.dtype, pd.ArrowDtype):
-        a = series.array.__arrow_array__()
-        if isinstance(a, pa.ChunkedArray):
-            a = a.combine_chunks()
-        t = arrow_type(node)
-        return a if a.type == t else a.cast(t)
-    return pa.array(_obj_list(series), type=arrow_type(node))
+def _input_arrow(arr: pa.Array, node) -> pa.Array:
+    """A column (as Spark's Arrow batch types it, or already in storage
+    form) -> the codec's internal tree, ``arrow_type(node)``: utf8 and
+    list become their large types and UTC timestamps naive ones, a
+    cast that shares the leaf buffers.  No Python object is built, and
+    a float NaN inside a nested double leaf stays a VALUE, distinct
+    from null — Spark treats NaN as a value (round-6 fix)."""
+    return blocks.as_type(arr, arrow_type(node))
 
 
-def encode_nested(series: pd.Series, ddl: str, level: int | None = None) -> bytes:
+def encode_nested(arr: pa.Array, ddl: str, level: int | None = None) -> bytes:
     node = parse_ddl(ddl)
-    arr = _input_arrow(series, node)
+    arr = _input_arrow(arr, node)
     parts: list[bytes] = []
     tree = _enc(arr, node, level, parts)
     meta = {"ddl": ddl, "tree": tree}
     return blocks.frame("nested", meta, b"".join(parts))
 
 
-def nested_raw_bytes(series: pd.Series, ddl: str) -> int:
+def nested_raw_bytes(arr: pa.Array, ddl: str) -> int:
     """Uncompressed-size proxy: leaf strings' utf-8 bytes + fixed widths."""
     node = parse_ddl(ddl)
-    arr = _input_arrow(series, node)
+    arr = _input_arrow(arr, node)
 
     def walk(a: pa.Array, nd) -> int:
         a = a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a

@@ -36,6 +36,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from . import blocks
+from .blocks import null_mask
 from .intcodec import pack_ints, pack_ints_z, unpack_ints, unpack_ints_z
 
 
@@ -49,26 +50,9 @@ def as_large_utf8(values) -> pa.Array:
     return values if values.type == pa.large_utf8() else values.cast(pa.large_utf8())
 
 
-def null_mask(arr: pa.Array) -> np.ndarray:
-    """True == null."""
-    if not arr.null_count:
-        return np.zeros(len(arr), dtype=bool)
-    return arr.is_null().to_numpy(zero_copy_only=False)
-
-
 def _filled(arr: pa.Array) -> pa.Array:
     """Nulls replaced by "": DICT/RLE/FRONT code a null row as ""."""
     return arr.fill_null("") if arr.null_count else arr
-
-
-def _mask_meta(meta: dict, mask: np.ndarray) -> bytes:
-    """Record the null mask in meta; return packed bytes (maybe empty)."""
-    meta["has_null"] = bool(mask.any())
-    if not meta["has_null"]:
-        return b""
-    mb = blocks.pack_mask(mask)
-    meta["mask_len"] = len(mb)
-    return mb
 
 
 def large_utf8_array(offs: np.ndarray, data: bytes, mask: np.ndarray | None = None) -> pa.Array:
@@ -119,7 +103,7 @@ def encode_plain(arr: pa.Array, level: int | None = None) -> bytes:
     lmeta, lpay = pack_ints(lengths)
     comp = blocks.compress(data, level)
     meta = {"n": len(arr), "lens": lmeta, "lplen": len(lpay), "raw": len(data)}
-    mb = _mask_meta(meta, null_mask(arr))
+    mb = blocks.mask_part(meta, null_mask(arr))
     return blocks.frame("plain", meta, mb + lpay + comp)
 
 
@@ -157,7 +141,7 @@ def encode_dict(arr: pa.Array, level: int | None = None) -> bytes:
     cmeta, cpay = pack_ints_z(codes)
     inner = encode_plain(uniques, level)
     meta = {"n": len(arr), "codes": cmeta, "cplen": len(cpay), "card": len(uniques)}
-    mb = _mask_meta(meta, null_mask(arr))
+    mb = blocks.mask_part(meta, null_mask(arr))
     return blocks.frame("dict", meta, mb + cpay + inner)
 
 
@@ -425,7 +409,7 @@ def encode_hex(arr: pa.Array) -> bytes:
     half = lengths // 2
     lmeta, lpay = pack_ints(half)
     meta = {"n": len(arr), "lens": lmeta, "lplen": len(lpay), "raw": len(packed)}
-    mb = _mask_meta(meta, null_mask(arr))
+    mb = blocks.mask_part(meta, null_mask(arr))
     return blocks.frame("hex", meta, mb + lpay + comp)
 
 

@@ -82,14 +82,16 @@ def test_bigint_beyond_2p53_appends_exactly(spark, tmp_path_factory):
 def test_storage_int64_rejects_unprovable_floats():
     """Direct (unshielded) kernel callers with float64 past 2^53 fail
     loudly instead of corrupting."""
-    from deltoid_spark.jobs.pipeline import _storage_int64
+    import pyarrow as pa
 
-    s = pd.Series([float(2**53 + 2), None], dtype="float64")
+    from deltoid_spark.jobs.pipeline import _storage
+
+    s = pa.array([float(2**53 + 2), None], pa.float64())
     with pytest.raises(ValueError, match="2\\^53"):
-        _storage_int64(s, "bigint")
+        _storage(s, "bigint")
     # small floats (the benign legacy boundary) still pass
-    ok = _storage_int64(pd.Series([1.0, None], dtype="float64"), "bigint")
-    assert ok.tolist()[0] == 1 and ok.isna().tolist() == [False, True]
+    ok = _storage(pa.array([1.0, None], pa.float64()), "bigint")
+    assert ok.to_pylist()[0] == 1 and ok.is_null().to_pylist() == [False, True]
 
 
 def test_verify_detects_multiset_swap(spark):

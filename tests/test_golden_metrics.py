@@ -119,6 +119,96 @@ def test_encoded_bytes_golden():
     assert _rows_sha(frag) == GOLDEN_APPEND_SHA
 
 
+# sha256 over the rows of a Spark-typed partition's kernel output (every
+# scalar type, NaN/null/-0.0/inf floats, a duplicate-key map, null and
+# empty lists, a nested struct with NaN leaves, a non-string key column
+# with nulls and a float order column holding both NaN and null) and of
+# one appended fragment.  Same pyarrow/zstd caveat as above.
+TYPED_SPEC = [
+    ("repo", "string"), ("kid", "int"), ("ord", "double"), ("big", "bigint"),
+    ("n", "int"), ("flag", "boolean"), ("ts", "timestamp"), ("d", "date"),
+    ("x", "double"), ("f", "float"), ("m", "map<string,string>"),
+    ("l", "array<string>"), ("nest", "struct<a:array<double>,b:bigint,t:timestamp>"),
+    ("content", "string"),
+]
+TYPED_KW = dict(key_cols=("repo", "kid"), order_cols=("ord",), content_col="content")
+GOLDEN_TYPED_ENCODE_SHA = "f15c6065eca9413352a449418af3f6ce0a40981411c871006e66a30ec814c588"
+GOLDEN_TYPED_APPEND_SHA = "e2bd2a7b01b3536308efe9e04afae91be66936ee7b47ced846c43cfd75f1d9d6"
+
+
+def _typed_table(lo: int, hi: int):
+    """Rows [lo, hi) of the typed fixture, typed as Spark's applyInArrow
+    hands them to a kernel (utf8 strings, UTC microsecond timestamps)."""
+    import pyarrow as pa
+
+    nan, inf = float("nan"), float("inf")
+    rows = range(lo, hi)
+    ts_us = pa.timestamp("us", tz="UTC")
+    ords = [1.0, nan, None, 0.0, -0.0, nan, None, -1.0]
+    xs = [None, nan, -0.0, inf, -inf, 2.5, 1e-300, 0.1]
+    nest_t = pa.struct([
+        ("a", pa.list_(pa.float64())), ("b", pa.int64()), ("t", ts_us),
+    ])
+    cols = {
+        "part_id": pa.array([0] * len(rows), pa.int64()),
+        "repo": pa.array([None if i % 17 == 9 else f"org/r{i % 3}" for i in rows], pa.string()),
+        "kid": pa.array([None if i % 5 == 4 else i % 2 for i in rows], pa.int32()),
+        "ord": pa.array([ords[i % 8] for i in rows], pa.float64()),
+        "big": pa.array(
+            [None if i % 7 == 3 else 2**53 + 17 * i - (2**62 if i % 2 else 0) for i in rows],
+            pa.int64(),
+        ),
+        "n": pa.array([i * 37 - 500 for i in rows], pa.int32()),
+        "flag": pa.array([None if i % 6 == 0 else i % 4 == 1 for i in rows], pa.bool_()),
+        "ts": pa.array(
+            [None if i % 9 == 4 else 1_700_000_000_000_000 + i * 1_000_123 for i in rows], ts_us
+        ),
+        "d": pa.array([None if i % 8 == 7 else 19_000 + 3 * i - 400 for i in rows], pa.date32()),
+        "x": pa.array([xs[i % 8] if i % 3 else round(i * 0.37, 2) for i in rows], pa.float64()),
+        "f": pa.array([None if i % 10 == 1 else i / 8 for i in rows], pa.float32()),
+        "m": pa.array(
+            [None if i % 12 == 10 else [("a", str(i // 4)), ("b", None), ("a", f"dup{i % 3}")]
+             for i in rows],
+            pa.map_(pa.string(), pa.string()),
+        ),
+        "l": pa.array(
+            [None if i % 7 == 0 else [f"e{j}" if j % 3 else None for j in range(i % 4)] for i in rows],
+            pa.list_(pa.string()),
+        ),
+        "nest": pa.array(
+            [None if i % 10 == 6 else {
+                "a": None if i % 5 == 2 else [nan, -0.0, None, 1.5 + i][: i % 4],
+                "b": 2**53 + i if i % 4 else None,
+                "t": 1_600_000_000_000_000 + i * 10**6 if i % 6 else None,
+            } for i in rows],
+            nest_t,
+        ),
+        "content": pa.array(
+            [None if i % 11 == 5 else f"line {i // 3}\nbody {i % 3}\nend" for i in rows],
+            pa.string(),
+        ),
+    }
+    return pa.table(cols)
+
+
+def test_typed_encode_golden():
+    """The typed encode paths (every non-string codec, typed key and
+    order columns, NaN/null edges) are byte-pinned like the string
+    ones: the kernel's blocks and an appended fragment's."""
+    from deltoid_spark.jobs import pipeline
+
+    base = make_encode_kernel(spec=TYPED_SPEC, keyframe_interval=4, **TYPED_KW)(_typed_table(0, 60))
+    assert "error" not in base.column("codec").to_pylist()
+    assert _rows_sha(base) == GOLDEN_TYPED_ENCODE_SHA
+    append = pipeline.make_append_kernel(
+        TYPED_SPEC, TYPED_KW["key_cols"], TYPED_KW["order_cols"], TYPED_KW["content_col"],
+        4, None, "local",
+    )
+    frag = append(_typed_table(60, 90), base)
+    assert frag.column("frag_id").to_pylist() == [1] * len(TYPED_SPEC)
+    assert _rows_sha(frag) == GOLDEN_TYPED_APPEND_SHA
+
+
 # ------------------------------------------------------------- decode golden ----
 #
 # One partition whose columns cover every codec, encoded column by
@@ -189,29 +279,30 @@ def _decode_fixture(n: int):
     ]
     for name, ddl, codec, vals in ints:
         spec.append((name, ddl))
-        cols.append((name, codec, api.encode_block(pd.Series(vals, dtype="Int64"), codec)))
+        cols.append((name, codec, api.encode_block(pa.array(vals, pa.int64()), codec)))
     floats = [
         ("f_lanes", "double", 8, rng.standard_normal(n)),
         ("f_dec", "double", 8, np.round(rng.uniform(-50, 50, n), 2)),
         ("f32", "float", 4, rng.standard_normal(n).astype(np.float32)),
     ]
     for name, ddl, width, vals in floats:
-        s = pd.Series(vals, dtype="Float64" if width == 8 else "Float32")
-        s[s.index % 9 == 2] = pd.NA
+        s = pa.array(vals, mask=np.arange(n) % 9 == 2)
         spec.append((name, ddl))
         cols.append((name, "fp", api.encode_block(s, "fp", width=width)))
-    maps = pd.Series(
+    maps = pa.array(
         [None if i % 12 == 10 else {"a": str(i // 4), "b": None if i % 3 else "x"} for i in range(n)],
-        dtype=object,
+        pa.map_(pa.large_utf8(), pa.large_utf8()),
     )
-    lists = pd.Series(
+    lists = pa.array(
         [None if i % 7 == 0 else [f"e{j}" if j % 3 else None for j in range(i % 4)] for i in range(n)],
-        dtype=object,
+        pa.large_list(pa.large_utf8()),
     )
     spec += [("m", "map<string,string>"), ("l", "array<string>"), ("nest", NESTED_DDL)]
     cols.append(("m", "mapdelta", mapdelta.encode_mapdelta(maps, gsizes, keyframe_interval=4)))
     cols.append(("l", "strlist", mapdelta.encode_strlist(lists)))
-    rows = pd.Series([nested_row(i) for i in range(n)], dtype=object)
+    rows = pa.array(
+        [nested_row(i) for i in range(n)], nested.arrow_type(nested.parse_ddl(NESTED_DDL))
+    )
     cols.append(("nest", "nested", nested.encode_nested(rows, NESTED_DDL)))
     return spec, cols
 

@@ -20,8 +20,29 @@ from deltoid_spark.kernels import api, blocks, chain, fsst, selector, strings
 from deltoid_spark.kernels.intcodec import pack_ints, unpack_ints
 
 STRING_CODECS = ["plain", "dict", "rle", "front", "fsst"]
+_MAP = pa.map_(pa.large_utf8(), pa.large_utf8())
+_STRLIST = pa.large_list(pa.large_utf8())
 
 rng = random.Random(42)
+
+
+def test_kernels_import_without_pandas(tmp_path):
+    """The codec kernels read and write numpy and Arrow arrays only: a
+    fresh interpreter that imports them has no pandas loaded."""
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    code = (
+        "import sys; sys.path.insert(0, %r); import deltoid_spark.kernels; "
+        "print('pandas' in sys.modules)" % str(root)
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd=str(tmp_path)
+    )
+    assert out.returncode == 0, out.stderr[-500:]
+    assert out.stdout.strip() == "False"
 
 
 def _roundtrip(series: pd.Series, codec: str):
@@ -506,22 +527,23 @@ def test_fp_decimal_mode():
     from deltoid_spark.kernels.floats import encode_fp
 
     r = np.random.default_rng(5)
-    prices = pd.Series(np.round(r.uniform(1, 100000, 20000), 2))
-    randoms = pd.Series(r.standard_normal(20000))
-    mixed = pd.Series(
+    prices = pa.array(np.round(r.uniform(1, 100000, 20000), 2))
+    randoms = pa.array(r.standard_normal(20000))
+    mixed = pa.array(
         np.where(r.random(20000) < 0.95,
                  np.round(r.uniform(0, 1000, 20000), 2),
                  r.standard_normal(20000))
     )
-    edges = pd.Series(
+    # NaN and None both null, as in the nullable pandas column this was
+    edges = pa.array(
         [0.0, -0.0, np.inf, -np.inf, 1e300, -1e-300, 123.45,
          None, np.nan, 2.5, -2.5] * 50,
-        dtype="Float64",
+        pa.float64(), from_pandas=True,
     )
 
     def rt(s, **kw):
         out = api.decode_block(encode_fp(s, **kw))
-        for x, y in zip(s.tolist(), out.tolist()):
+        for x, y in zip(s.to_pylist(), out.tolist()):
             assert (pd.isna(x) and pd.isna(y)) or x == y, (x, y)
         return blk.unframe(encode_fp(s, **kw))[1].get("mode", "lanes")
 
@@ -529,8 +551,8 @@ def test_fp_decimal_mode():
     assert rt(mixed) == "dec"      # 5% stragglers ride the exception list
     assert rt(randoms) == "lanes"  # not decimal: size pick keeps lanes
     assert rt(edges) == "lanes"
-    assert rt(pd.Series([], dtype="float64")) == "lanes"
-    f32 = pd.Series(np.round(r.uniform(0, 100, 500), 2).astype(np.float32))
+    assert rt(pa.array([], pa.float64())) == "lanes"
+    f32 = pa.array(np.round(r.uniform(0, 100, 500), 2).astype(np.float32))
     assert rt(f32, width=4) == "lanes"  # decimal mode is float64-only
     # the size win that motivates the mode (vs lanes+zstd)
     import deltoid_spark.kernels.floats as FL
@@ -554,27 +576,26 @@ def test_dint_modes_and_roundtrip():
     from deltoid_spark.kernels.intcodec import encode_dint, encode_for
 
     r = np.random.default_rng(3)
-    regular_ts = pd.Series(
+    regular_ts = pa.array(
         10**15 + np.arange(20_000, dtype=np.int64) * 60_000_000_000
         + r.integers(0, 1000, 20_000),
-        dtype="int64",
+        pa.int64(),
     )
     cases = {
-        "random": pd.Series(r.integers(-2**40, 2**40, 20_000), dtype="int64"),
-        "sorted": pd.Series(np.sort(r.integers(0, 2**50, 20_000)), dtype="int64"),
+        "random": pa.array(r.integers(-2**40, 2**40, 20_000), pa.int64()),
+        "sorted": pa.array(np.sort(r.integers(0, 2**50, 20_000)), pa.int64()),
         "regular_ts": regular_ts,
-        "extremes": pd.Series(
-            [-2**63, 2**63 - 1, 0, -1, 2**62, -2**62] * 100, dtype="int64"
+        "extremes": pa.array(
+            [-2**63, 2**63 - 1, 0, -1, 2**62, -2**62] * 100, pa.int64()
         ),
-        "nullable": pd.Series([1, None, 3, None, 10**18], dtype="Int64"),
-        "empty": pd.Series([], dtype="int64"),
-        "single": pd.Series([7], dtype="int64"),
-        "allnull": pd.Series([None, None], dtype="Int64"),
+        "nullable": pa.array([1, None, 3, None, 10**18], pa.int64()),
+        "empty": pa.array([], pa.int64()),
+        "single": pa.array([7], pa.int64()),
+        "allnull": pa.array([None, None], pa.int64()),
     }
     for name, s in cases.items():
         buf = encode_dint(s)
-        want = [None if pd.isna(v) else v for v in s.tolist()]
-        assert api.decode_block(buf).to_pylist() == want, name
+        assert api.decode_block(buf).to_pylist() == s.to_pylist(), name
     # mode selection: deltas win exactly where they should
     mode = lambda s: blk.unframe(encode_dint(s))[1]["mode"]  # noqa: E731
     assert mode(cases["random"]) == "f"        # no sequential structure
@@ -639,9 +660,9 @@ class TestFloats:
 
         from deltoid_spark.kernels import api
 
-        s = pd.Series([0.0, -1.5, 3.14159, np.inf, -np.inf, 1e-308, None])
+        s = pa.array([0.0, -1.5, 3.14159, np.inf, -np.inf, 1e-308, None])
         dec = api.decode_block(api.encode_block(s, "fp"))
-        for a, b in zip(s.tolist(), dec.tolist()):
+        for a, b in zip(s.to_pylist(), dec.tolist()):
             if pd.isna(a):
                 assert pd.isna(b)
             else:
@@ -653,9 +674,9 @@ class TestFloats:
 
         from deltoid_spark.kernels import api
 
-        s = pd.Series(np.array([1.25, -0.5, 65504.0], dtype=np.float32))
+        s = pa.array(np.array([1.25, -0.5, 65504.0], dtype=np.float32))
         dec = api.decode_block(api.encode_block(s, "fp", width=4))
-        assert dec.tolist() == s.tolist()
+        assert dec.tolist() == s.to_pylist()
         assert dec.type == pa.float32()
 
     def test_empty(self):
@@ -663,7 +684,7 @@ class TestFloats:
 
         from deltoid_spark.kernels import api
 
-        dec = api.decode_block(api.encode_block(pd.Series([], dtype="float64"), "fp"))
+        dec = api.decode_block(api.encode_block(pa.array([], pa.float64()), "fp"))
         assert len(dec) == 0
 
 
@@ -674,7 +695,7 @@ class TestMapDelta:
 
         from deltoid_spark.kernels import api
 
-        s = pd.Series(rows, dtype=object)
+        s = pa.array(rows, _MAP)
         buf = api.encode_block(s, "mapdelta", group_sizes=np.array(gsizes), **kw)
         dec = api.decode_block(buf)
         got = [r if r is None else dict(r) for r in dec.to_pylist()]  # (k, v) pairs -> dict
@@ -703,7 +724,7 @@ class TestMapDelta:
 
         base = {f"key_{i}": f"value_{i}" * 4 for i in range(50)}
         rows = [dict(base, **{"key_0": f"v{v}"}) for v in range(32)]
-        s = pd.Series(rows, dtype=object)
+        s = pa.array(rows, _MAP)
         delta = api.encode_block(s, "mapdelta", group_sizes=np.array([32]))
         key_every = api.encode_block(
             s, "mapdelta", group_sizes=np.array([32]), keyframe_interval=1
@@ -724,7 +745,7 @@ class TestStrList:
         from deltoid_spark.kernels import api
 
         rows = [["a", "b"], [], None, ["unicode 日本", ""], ["x"] * 100]
-        dec = api.decode_block(api.encode_block(pd.Series(rows, dtype=object), "strlist"))
+        dec = api.decode_block(api.encode_block(pa.array(rows, _STRLIST), "strlist"))
         assert dec.tolist() == rows
 
     def test_empty_column(self):
@@ -732,8 +753,35 @@ class TestStrList:
 
         from deltoid_spark.kernels import api
 
-        dec = api.decode_block(api.encode_block(pd.Series([], dtype=object), "strlist"))
+        dec = api.decode_block(api.encode_block(pa.array([], _STRLIST), "strlist"))
         assert dec.tolist() == []
+
+
+def test_sliced_arrays_encode_their_own_rows():
+    """A slice of a list, map or struct array (offset > 0) encodes its
+    own rows: those encoders read the child arrays, which the slice's
+    offset does not reach."""
+    from deltoid_spark.kernels import nested
+
+    lists = pa.array([["a"], None, ["b", "c"], [], ["d"]], _STRLIST)
+    maps = pa.array([[("k", "1")], [("k", "2"), ("j", None)], None, [("k", "3")]], _MAP)
+    ddl = "struct<a:array<double>,m:map<string,bigint>,b:bigint>"
+    trees = pa.array(
+        [{"a": [1.0], "m": [("x", 1)], "b": 1}, None,
+         {"a": [float("nan"), 2.5], "m": [], "b": None}, {"a": None, "m": [("y", 2)], "b": 3}],
+        nested.arrow_type(nested.parse_ddl(ddl)),
+    )
+    for arr, codec, kw in (
+        (lists, "strlist", {}),
+        (maps, "mapdelta", {"group_sizes": np.array([2])}),
+        (trees, "nested", {"ddl": ddl}),
+    ):
+        part = arr.slice(1, 2) if codec == "mapdelta" else arr.slice(2)
+        got = api.decode_block(api.encode_block(part, codec, **kw)).to_pylist()
+        want = part.to_pylist()
+        if codec == "mapdelta":  # stored in key order
+            got, want = ([r if r is None else sorted(r) for r in x] for x in (got, want))
+        assert str(got) == str(want), codec  # str: NaN equals itself
 
 
 def test_nested_leaf_dint_and_decimal():
@@ -755,12 +803,11 @@ def test_nested_leaf_dint_and_decimal():
 
     # regular timestamp leaves: delta-of-delta packs a near-constant
     # cadence to ~0 bits/value
-    ts = pd.Series(
-        [[1_700_000_000_000 + 60_000 * (8 * i + j) for j in range(8)]
-         for i in range(300)],
-        dtype=object,
-    )
-    buf_ts = encode_nested(ts, "array<bigint>")
+    ints = pa.large_list(pa.int64())
+    doubles = pa.large_list(pa.float64())
+    ts = [[1_700_000_000_000 + 60_000 * (8 * i + j) for j in range(8)]
+          for i in range(300)]
+    buf_ts = encode_nested(pa.array(ts, ints), "array<bigint>")
     _c, meta_ts, _p = blk.unframe(buf_ts)
     leaf = meta_ts["tree"]["child"]["i"]
     assert leaf.get("m") in ("d1", "d2")        # delta family actually won
@@ -771,12 +818,9 @@ def test_nested_leaf_dint_and_decimal():
     # decimal measurement leaves: pseudo-decimal beats lanes+zstd
     rngp = np.random.RandomState(0)  # irregular cents walk (seeded)
     cents = np.cumsum(rngp.randint(-60, 60, 2400)) + 100000
-    prices = pd.Series(
-        [[float(cents[8 * i + j]) / 100.0 for j in range(8)]
-         for i in range(300)],
-        dtype=object,
-    )
-    buf_pr = encode_nested(prices, "array<double>")
+    prices = [[float(cents[8 * i + j]) / 100.0 for j in range(8)]
+              for i in range(300)]
+    buf_pr = encode_nested(pa.array(prices, doubles), "array<double>")
     _c, meta_pr, _p = blk.unframe(buf_pr)
     assert "e10" in meta_pr["tree"]["child"]     # decimal mode engaged
     # counterfactual: lanes+zstd of the same doubles is much larger
@@ -789,12 +833,9 @@ def test_nested_leaf_dint_and_decimal():
 
     # adversarial doubles: exceptions (NaN/inf/-0.0) round-trip exactly
     # and non-decimal leaves fall back to lanes
-    weird = pd.Series(
-        [[1.25, float("nan"), float("inf"), -0.0, 3.5],
-         [np.pi, np.e, 2**-40, -np.pi, 1e300]],
-        dtype=object,
-    )
-    buf_w = encode_nested(weird, "array<double>")
+    weird = [[1.25, float("nan"), float("inf"), -0.0, 3.5],
+             [np.pi, np.e, 2**-40, -np.pi, 1e300]]
+    buf_w = encode_nested(pa.array(weird, doubles), "array<double>")
     got = decode_rows(*blk.unframe(buf_w)[1:])
     for a, b in zip(got, weird):
         for x, y in zip(a, b):
@@ -805,9 +846,8 @@ def test_nested_leaf_dint_and_decimal():
 
     # irregular ints keep round-tripping (mode may be plain FoR)
     rng = np.random.RandomState(3)
-    rnd = pd.Series([[int(v) for v in rng.randint(-2**60, 2**60, 5)]
-                     for _ in range(50)], dtype=object)
-    buf_r = encode_nested(rnd, "array<bigint>")
+    rnd = [[int(v) for v in rng.randint(-2**60, 2**60, 5)] for _ in range(50)]
+    buf_r = encode_nested(pa.array(rnd, ints), "array<bigint>")
     got = decode_rows(*blk.unframe(buf_r)[1:])
     assert [list(x) for x in got] == [list(x) for x in rnd]
 

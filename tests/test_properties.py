@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -159,7 +160,7 @@ def test_mapdelta_roundtrip_property(groups):
 
     rows = [m for g in groups for m in g]
     sizes = np.array([len(g) for g in groups])
-    s = pd.Series(rows, dtype=object)
+    s = pa.array(rows, pa.map_(pa.large_utf8(), pa.large_utf8()))
     dec = api.decode_block(
         api.encode_block(s, "mapdelta", group_sizes=sizes, keyframe_interval=3)
     )
@@ -222,7 +223,7 @@ def test_seeded_chain_continuation_property(groups):
 )
 @settings(max_examples=40, deadline=None)
 def test_strlist_roundtrip_property(rows):
-    s = pd.Series(rows, dtype=object)
+    s = pa.array(rows, pa.large_list(pa.large_utf8()))
     dec = api.decode_block(api.encode_block(s, "strlist"))
     assert dec.tolist() == rows
 
@@ -275,7 +276,7 @@ def test_nested_dint_alp_leaf_roundtrip_property(int_rows, dbl_rows):
     def decode_rows(meta, payload):
         return decode_nested_arrow(meta, payload).to_pylist()
 
-    ser = pd.Series(int_rows, dtype=object)
+    ser = pa.array(int_rows, pa.large_list(pa.int64()))
     got = decode_rows(*blk.unframe(encode_nested(ser, "array<bigint>"))[1:])
     assert len(got) == len(int_rows)
     for g, e in zip(got, int_rows):
@@ -284,7 +285,7 @@ def test_nested_dint_alp_leaf_roundtrip_property(int_rows, dbl_rows):
         else:
             assert [x for x in g] == e
 
-    ser_d = pd.Series(dbl_rows, dtype=object)
+    ser_d = pa.array(dbl_rows, pa.large_list(pa.float64()))
     got_d = decode_rows(*blk.unframe(encode_nested(ser_d, "array<double>"))[1:])
     assert len(got_d) == len(dbl_rows)
     for g, e in zip(got_d, dbl_rows):

@@ -962,6 +962,59 @@ def test_sub_microsecond_timestamp_fails_the_partition():
     assert got == {f"c{i:04d}": None if v is None else v // 1_000 for i, v in enumerate(good)}
 
 
+def test_dates_outside_the_nanosecond_range_round_trip(spark, tmp_path_factory):
+    """Dates are stored as epoch days, so every Spark date (0001-01-01
+    to 9999-12-31) encodes and decodes, far outside the epoch-ns range,
+    and a where= bound on one maps through the same storage mapping.
+    Timestamps are stored as epoch ns: one past 2262 fails its
+    partition with a named error."""
+    import pyarrow as pa
+
+    from deltoid_spark.jobs.pipeline import make_decode_kernel, make_encode_kernel
+
+    first, last = datetime.date(1, 1, 1), datetime.date(9999, 12, 31)
+    days = [first, None, datetime.date(2024, 2, 29), last]
+    spec = [("repo", "string"), ("path", "string"), ("commit", "string"), ("d", "date")]
+    tbl = pa.table({
+        "part_id": pa.array([0] * 4, pa.int64()),
+        "repo": ["org/r"] * 4,
+        "path": ["a.py", "b.py", "a.py", "b.py"],
+        "commit": [f"c{i}" for i in range(4)],
+        "d": pa.array(days, pa.date32()),
+    })
+    kw = dict(spec=spec, order_cols=("commit",), content_col=None)
+    blocks = make_encode_kernel(**kw)(tbl)
+    assert "error" not in blocks.column("codec").to_pylist()
+    out = make_decode_kernel(spec, content_col=None)(blocks)
+    assert dict(zip(out.column("commit").to_pylist(), out.column("d").to_pylist())) == {
+        f"c{i}": d for i, d in enumerate(days)
+    }
+
+    late = tbl.drop(["d"]).append_column(
+        "ts", pa.array([0, None, 10**15, 9_300_000_000_000_000], pa.timestamp("us", tz="UTC"))
+    )
+    bad = make_encode_kernel(**{**kw, "spec": [*spec[:3], ("ts", "timestamp")]})(late)
+    assert bad.column("codec").to_pylist() == ["error"]
+    assert bad.column("payload")[0].as_py().startswith(
+        b"ValueError: timestamp column holds 1 value(s) outside the epoch-ns range"
+    )
+
+    df = spark.createDataFrame(
+        [(f"org/r{i % 2}", f"f{i}.py", f"c{i}", f"body {i}", d) for i, d in enumerate(days)],
+        "repo string, path string, commit string, content string, d date",
+    )
+    path = str(tmp_path_factory.mktemp("wide_dates"))
+    encode(spark, df, path, target_rows=2)
+    assert {r["commit"]: r["d"] for r in decode(spark, path).collect()} == {
+        f"c{i}": d for i, d in enumerate(days)
+    }
+    assert [r["commit"] for r in decode(spark, path, where=("d", last, None)).collect()] == ["c3"]
+    assert [r["commit"] for r in decode(spark, path, where=("d", None, first)).collect()] == ["c0"]
+    assert sorted(
+        r["commit"] for r in decode(spark, path, where=("d", [last, datetime.date(2024, 2, 29)])).collect()
+    ) == ["c2", "c3"]
+
+
 def test_nested_nan_is_a_value_not_null(spark, tmp_path_factory):
     """Spark treats float NaN as a VALUE, distinct from null.  The
     python-object boundary (pandas -> Arrow inside Spark's own

@@ -35,7 +35,6 @@ MEDIA_SCHEMA = (
 
 FEATURE_SCHEMA = "media_id long, kind string, n_bytes long, feature array<float>"
 
-FEATURE_DIM = 8
 WAV_RATE = 8000
 
 

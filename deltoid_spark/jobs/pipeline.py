@@ -370,7 +370,6 @@ def _encode_content(
     arr: pa.Array,
     gsizes: np.ndarray,
     keyframe_interval: int,
-    level,
     base_texts: list | None,
     base_versions: np.ndarray | None,
     view: tuple,
@@ -386,7 +385,7 @@ def _encode_content(
     only when the bound lands within 30% of CHAIN's actual size.
     """
     buf = chain_kernel.encode_chain(
-        arr, gsizes, keyframe_interval=keyframe_interval, level=level,
+        arr, gsizes, keyframe_interval=keyframe_interval,
         base_texts=base_texts, base_versions=base_versions,
     )
     if base_texts is not None and any(t is not None for t in base_texts):
@@ -396,7 +395,7 @@ def _encode_content(
     _lengths, data = view
     sample = data[: max(4096, len(data) // 8)]
     if sample:
-        est_plain = len(blocks_mod.compress(sample, level)) / len(sample) * len(data)
+        est_plain = len(blocks_mod.compress(sample)) / len(sample) * len(data)
     else:
         est_plain = 0.0
     if est_plain < len(buf) * 1.3:
@@ -414,7 +413,6 @@ def _encode_rows(
     spec: list[tuple[str, str]],
     content_col: str | None,
     keyframe_interval: int,
-    level,
     run_id: str,
     t0: float,
     tails: dict | None = None,
@@ -451,7 +449,7 @@ def _encode_rows(
             raw = int(view[0].sum())
             if col == content_col and (len(gsizes) < len(arr) or tails):
                 codec, buf = _encode_content(
-                    arr, gsizes, keyframe_interval, level, base_texts,
+                    arr, gsizes, keyframe_interval, base_texts,
                     base_versions, view,
                 )
             else:  # no multi-version chains: the selector picks
@@ -472,7 +470,7 @@ def _encode_rows(
             # content column uses (reference HashMap::delta)
             codec = "mapdelta"
             buf = mapdelta_kernel.encode_mapdelta(
-                arr, gsizes, keyframe_interval=keyframe_interval, level=level
+                arr, gsizes, keyframe_interval=keyframe_interval
             )
             raw = mapdelta_kernel.map_raw_bytes(arr)
             sha = None
@@ -492,7 +490,6 @@ def _slice_encoder(
     order_cols: tuple[str, ...],
     content_col: str | None,
     keyframe_interval: int = 32,
-    level: int | None = None,
     run_id: str = "local",
     fail_inject: str | None = None,
     isolate: bool = True,
@@ -539,7 +536,7 @@ def _slice_encoder(
             )
             rows = _encode_rows(
                 {n: a.take(order) for n, a in cols.items()}, keys[order.to_numpy()],
-                part_id, frag_id, spec, content_col, keyframe_interval, level,
+                part_id, frag_id, spec, content_col, keyframe_interval,
                 run_id, t0, tails=tails, tail_counts=tail_counts,
             )
         except Exception as exc:  # noqa: BLE001 — isolation is the point
@@ -557,7 +554,6 @@ def _slice_encoder(
 
 def make_encode_kernel(
     keyframe_interval: int = 32,
-    level: int | None = None,
     spec: list[tuple[str, str]] | None = None,
     key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
     order_cols: tuple[str, ...] = DEFAULT_ORDER_COLS,
@@ -569,7 +565,7 @@ def make_encode_kernel(
     block rows (fragment 0)."""
     encode_slice = _slice_encoder(
         spec or DEFAULT_SPEC, key_cols, order_cols, content_col,
-        keyframe_interval, level, run_id, fail_inject,
+        keyframe_interval, run_id, fail_inject,
     )
 
     def encode_partition(tbl: pa.Table) -> pa.Table:
@@ -580,7 +576,6 @@ def make_encode_kernel(
 
 def make_fragment_kernel(
     keyframe_interval: int = 32,
-    level: int | None = None,
     spec: list[tuple[str, str]] | None = None,
     key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
     order_cols: tuple[str, ...] = DEFAULT_ORDER_COLS,
@@ -595,7 +590,7 @@ def make_fragment_kernel(
     """
     encode_slice = _slice_encoder(
         spec or DEFAULT_SPEC, key_cols, order_cols, content_col,
-        keyframe_interval, level, run_id, fail_inject,
+        keyframe_interval, run_id, fail_inject,
     )
 
     def encode_split(batches):
@@ -804,7 +799,6 @@ def encode(
     key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
     order_cols: tuple[str, ...] | None = None,
     content_col: str | None = "auto",
-    level: int | None = None,
     origin: str | None = None,
     message: str | None = None,
     _fail_inject: str | None = None,
@@ -871,7 +865,7 @@ def encode(
     run_id = uuid.uuid4().hex
     gen = time.time_ns()
     kw = dict(
-        keyframe_interval=keyframe_interval, level=level, spec=spec,
+        keyframe_interval=keyframe_interval, spec=spec,
         key_cols=key_cols, order_cols=order_cols, content_col=content_col,
         run_id=run_id, fail_inject=_fail_inject,
     )
@@ -900,10 +894,9 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
     manifest down to the active committed set and swaps the directories.
     Maintenance operation: requires exclusive access to out_dir (the
     swap is two renames; a concurrent reader could see the gap), exactly
-    like table-format vacuums.
+    like table-format vacuums.  The swap goes through the session's
+    Hadoop file system, so any scheme the session can read works.
     """
-    import shutil
-
     blocks_path = os.path.join(out_dir, "blocks")
     manifest_path = os.path.join(out_dir, "manifest")
     active = _active_of(_read_manifest(spark, out_dir))
@@ -921,7 +914,9 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
     keep.write.mode("overwrite").option("compression", "none").partitionBy(
         "run_id"
     ).parquet(tmp_blocks)
-    os.makedirs(tmp_blocks, exist_ok=True)  # fully-dead state writes nothing
+    jvm, fs, _ = _hadoop(spark, out_dir)
+    Path = jvm.org.apache.hadoop.fs.Path
+    fs.mkdirs(Path(tmp_blocks))  # fully-dead state writes nothing
     _write_small(
         spark,
         pa.Table.from_pandas(active, schema=MANIFEST_ARROW, preserve_index=False),
@@ -931,10 +926,10 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
         F.count("*").alias("n"), F.sum("enc_bytes").alias("b")
     ).collect()[0]
     for live, tmp in ((blocks_path, tmp_blocks), (manifest_path, tmp_manifest)):
-        old = live + "_old"
-        os.rename(live, old)
-        os.rename(tmp, live)
-        shutil.rmtree(old, ignore_errors=True)
+        old = Path(live + "_old")
+        if not (fs.rename(Path(live), old) and fs.rename(Path(tmp), Path(live))):
+            raise OSError(f"could not swap {tmp} into {live}")
+        fs.delete(old, True)
     return {
         "block_rows_before": int(before["n"]),
         "block_rows_after": int(after["n"]),
@@ -1078,7 +1073,6 @@ def make_append_kernel(
     order_cols: tuple[str, ...],
     content_col: str | None,
     keyframe_interval: int,
-    level: int | None,
     run_id: str,
     fail_inject: str | None = None,
 ):
@@ -1090,8 +1084,8 @@ def make_append_kernel(
     tails (reference ``push_snapshot``, delta.rs:108-125).
     """
     encode_slice = _slice_encoder(
-        spec, key_cols, order_cols, content_col, keyframe_interval, level,
-        run_id, fail_inject,
+        spec, key_cols, order_cols, content_col, keyframe_interval, run_id,
+        fail_inject,
     )
 
     def append_partition(left_t: pa.Table, right_t: pa.Table) -> pa.Table:
@@ -1111,7 +1105,6 @@ def encode_append(
     source: DataFrame | str,
     out_dir: str,
     keyframe_interval: int = 32,
-    level: int | None = None,
     batch_id: str | None = None,
     origin: str | None = None,
     message: str | None = None,
@@ -1186,7 +1179,7 @@ def encode_append(
     gen = time.time_ns()
     kernel = make_append_kernel(
         spec, key_cols, info["order_cols"], info["content_col"],
-        keyframe_interval, level, run_id, fail_inject=_fail_inject,
+        keyframe_interval, run_id, fail_inject=_fail_inject,
     )
     new_blocks = (
         dfp.groupBy("part_id")

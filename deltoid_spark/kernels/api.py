@@ -76,11 +76,6 @@ def decode_block(buf: bytes, **kw) -> pa.Array:
     return _DECODERS[codec](meta, payload, **kw)
 
 
-def block_codec(buf: bytes) -> str:
-    codec, _, _ = blocks.unframe(buf)
-    return codec
-
-
 def sha256_column_arrow(arr, view: tuple | None = None) -> str:
     """Order-sensitive digest of a LargeStringArray (null-aware).
 

@@ -68,24 +68,18 @@ def unframe(buf: bytes) -> tuple[str, dict, bytes]:
 # ---------------------------------------------------------------- zstd ----
 
 
-# zstd level: ratio/CPU knob. On the code fixture: level 3 -> 0.066,
-# 9 -> 0.058, 12 -> 0.049 total ratio; higher levels are search-heavy
-# (memory-bandwidth-hungry), which costs parallel efficiency on
-# bandwidth-starved hosts. Override per-run with DS_ZSTD_LEVEL.
-import os as _os
-
-DEFAULT_LEVEL = int(_os.environ.get("DS_ZSTD_LEVEL", "9"))
-
-_codecs: dict[int, pa.Codec] = {}
+# zstd level 9, a constant: the encoded bytes (pinned by the golden
+# digests) depend on it, so no setting may change it per process.
+# Any level decodes.  On the code fixture: level 3 ->
+# 0.066, 9 -> 0.058, 12 -> 0.049 total ratio; higher levels are
+# search-heavy (memory-bandwidth-hungry), which costs parallel
+# efficiency on bandwidth-starved hosts.
+_ZSTD = pa.Codec("zstd", compression_level=9)
 
 
-def compress(data: bytes, level: int | None = None) -> bytes:
+def compress(data: bytes) -> bytes:
     """zstd via pyarrow (JVM-free, vectorized C path)."""
-    lvl = DEFAULT_LEVEL if level is None else level
-    codec = _codecs.get(lvl)
-    if codec is None:
-        codec = _codecs[lvl] = pa.Codec("zstd", compression_level=lvl)
-    return codec.compress(data, asbytes=True)
+    return _ZSTD.compress(data, asbytes=True)
 
 
 def decompress(data: bytes, raw_size: int) -> bytes:

@@ -18,10 +18,21 @@ alphabet (``EltDelta::{Edit{index,item}, Add(delta), Remove{count}}``,
   (vec.rs:61-64);
 * a delta that would be larger than the full text degrades to a
   keyframe (short-circuit, analog of gen/structs.rs:457 equality check);
+* a delta row may instead store one splice (clean prefix and suffix
+  kept, the middle replaced), whichever script is smaller;
+* an appended fragment's group may continue a stored chain: its first
+  version deltas against the base text (the stored tail), and may store
+  a few changed chars of a long line instead of the whole line;
 * nulls are explicit states: any null->x or x->null transition forces a
   keyframe, so value->null round-trips exactly — fixing the
   ``OptionDelta`` ambiguity the reference documents
   (/root/reference/deltoid-quickcheck-tests/src/main.rs:14-22).
+
+Encoding is one vectorized pass per block: every delta row, a seeded
+first version included, gets both scripts and their costs from one
+segmented compare over int line codes (``_precompute_deltas``), and
+every stream is assembled by index gathers.  Only the char-splice trial
+of a seeded first version runs Python per group.
 
 Round-trip law (reference: deltoid-quickcheck-tests/src/main.rs:26-32):
 ``decode_chain_arrow(*unframe(encode_chain(contents, groups))[1:])``
@@ -39,64 +50,6 @@ from .intcodec import pack_ints, pack_ints_z, unpack_ints, unpack_ints_z
 from .strings import as_large_utf8, decode_plain, encode_plain, null_mask
 
 DEFAULT_KEYFRAME_INTERVAL = 32
-
-
-def _line_delta(prev: list[str], new: list[str]) -> tuple[np.ndarray, list[str], list[str], int]:
-    """Positional edit script prev -> new (deltoid Vec semantics).
-
-    Thin wrapper over _version_deltas kept for tests/direct callers."""
-    e_idx, elines, adds, remove, _p, _d, _i = _version_deltas(
-        np.array(prev, dtype=object), np.array(new, dtype=object)
-    )
-    return e_idx, list(elines), list(adds), remove
-
-
-def _splice_delta(prev: list[str], new: list[str]) -> tuple[int, int, list[str]]:
-    """Single-splice script: common prefix/suffix trim, middle replaced.
-
-    Engine upgrade over the reference's purely positional diff
-    (vec.rs:8-11 admits it's stack-like): a middle insert shifts every
-    later line, which positional diff encodes as edits-to-end-of-file;
-    the splice encodes just (start, n_deleted, inserted_lines).
-    Returns (start, del_count, ins_lines).
-    """
-    _e, _el, _a, _r, p, sdel, sins = _version_deltas(
-        np.array(prev, dtype=object), np.array(new, dtype=object)
-    )
-    return p, sdel, list(sins)
-
-
-def _version_deltas(a: np.ndarray, b: np.ndarray):
-    """BOTH delta scripts (positional + splice) from one elementwise
-    comparison of two line arrays — the hot path converts each version
-    to an object array exactly once and shares the prefix comparison.
-
-    Returns (edit_idx, edit_lines, adds, remove, splice_start,
-    splice_del, splice_ins) with the array results as object ndarrays.
-    """
-    na, nb = len(a), len(b)
-    m = min(na, nb)
-    if m:
-        neq = a[:m] != b[:m]
-        edit_idx = np.nonzero(neq)[0]
-        p = int(edit_idx[0]) if len(edit_idx) else m
-    else:
-        edit_idx = np.zeros(0, dtype=np.int64)
-        p = 0
-    elines = b[:m][edit_idx] if m else b[:0]
-    adds = b[m:] if nb > m else b[:0]
-    remove = na - nb if na > nb else 0
-    max_s = m - p
-    if max_s > 0:
-        ne_tail = (a[na - max_s :] != b[nb - max_s :])[::-1]
-        last_ne = np.nonzero(ne_tail)[0]
-        s = int(last_ne[0]) if len(last_ne) else max_s
-    else:
-        s = 0
-    return (
-        edit_idx, elines, adds, remove,
-        p, na - p - s, b[p : nb - s],
-    )
 
 
 def _seed_code_table(texts: list[str], line_dict: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -122,40 +75,31 @@ def _seed_code_table(texts: list[str], line_dict: pa.Array) -> tuple[np.ndarray,
     return codes, la.offsets.to_numpy().astype(np.int64)
 
 
-def _script_cost(n_lines_chars: int, n_ints: int) -> int:
-    return n_lines_chars + 8 * n_ints
-
-
 # --- char-level intra-line refinement (the reference's own admitted gap:
 # string.rs:37 "TODO: Improve delta space efficiency" — line-granular
 # splices are wasteful when a version changes a few chars inside a LONG
-# line, the minified/one-line-file case).  Applied per edited line, only
-# in positional scripts touching <= CHAR_EDIT_MAX lines, and only when
-# the char splice actually beats storing the full new line (cost gate) —
-# so corpora without long-line edits encode byte-identically to before.
+# line, the minified/one-line-file case).  Tried only on a seeded
+# group's first version with <= CHAR_EDIT_MAX edited lines, per edited
+# line only when the char splice beats storing the full new line, and
+# kept only when the whole script beats every line-level one (cost
+# gate) — so corpora without long-line edits encode byte-identically.
 CHAR_EDIT_MAX = 2
 _CHAR_INT_COST = 6  # cs + cd as packed ints, amortized
 
 
 def _char_refine(
-    line_dict: pa.Array,
-    old_lines: list,
-    idxs: np.ndarray,
-    new_codes: np.ndarray,
-    bits: list,
-    cs_out: list,
-    cd_out: list,
-    frags: list,
-) -> np.ndarray:
+    old_lines: list, idxs: np.ndarray, new_lines: list
+) -> tuple[list, list, list, list]:
     """Try char-splice mode for each (old line -> new line) edit pair:
     store (col_start, del_count, fragment) instead of the whole new
-    line when that is smaller.  Appends per-edit bookkeeping; returns
-    the codes of edits that stay full-line (their entries in the delta
-    line stream)."""
-    keep: list[int] = []
-    for idx, ncode in zip(idxs.tolist(), new_codes.tolist()):
+    line when that is smaller.  Returns the per-edit char-mode bits and
+    the (col_start, del_count, fragment) of each char-mode edit."""
+    bits: list[bool] = []
+    cs: list[int] = []
+    cd: list[int] = []
+    frags: list[str] = []
+    for idx, new in zip(idxs.tolist(), new_lines):
         old = old_lines[idx]
-        new = line_dict[int(ncode)].as_py()
         lim = min(len(old), len(new))
         p = 0
         while p < lim and old[p] == new[p]:
@@ -164,56 +108,56 @@ def _char_refine(
         while s < lim - p and old[len(old) - 1 - s] == new[len(new) - 1 - s]:
             s += 1
         frag = new[p : len(new) - s]
-        if len(frag) + _CHAR_INT_COST < len(new):
-            bits.append(True)
-            cs_out.append(p)
-            cd_out.append(len(old) - p - s)
+        bits.append(len(frag) + _CHAR_INT_COST < len(new))
+        if bits[-1]:
+            cs.append(p)
+            cd.append(len(old) - p - s)
             frags.append(frag)
-        else:
-            bits.append(False)
-            keep.append(ncode)
-    return np.array(keep, dtype=np.int64)
+    return bits, cs, cd, frags
 
 
 def _precompute_deltas(
     codes: np.ndarray,
-    loffs: np.ndarray,
+    prev_lo: np.ndarray,
+    na: np.ndarray,
+    cur_lo: np.ndarray,
+    nb: np.ndarray,
     line_lens: np.ndarray,
     clen: np.ndarray,
-    cand: np.ndarray,
-    keyframe_cost_ints: int = 3,
 ):
-    """Vectorized `_version_deltas` + script-cost evaluation for EVERY
-    candidate delta row at once (cand = ascending row indices whose
-    previous version is the physically preceding row).
+    """Both delta scripts (positional + splice) and their costs for
+    EVERY delta row at once.  Row ``c`` compares its previous version's
+    codes ``codes[prev_lo[c] : prev_lo[c] + na[c]]`` with its own
+    ``codes[cur_lo[c] : cur_lo[c] + nb[c]]``.  ``codes`` is the block's
+    line codes, followed, in a seeded block, by the seed codes of
+    ``_seed_code_table``: a seeded group's first version compares
+    against its base text like any other row against the row before it.
 
-    The per-version loop used to call `_version_deltas` ~|rows| times;
-    the comparisons were already C-speed int-code compares, but the
-    per-call numpy dispatch dominated.  Here all prefix comparisons run
-    as ONE segmented elementwise compare over a gathered index space,
-    per-segment edit lists fall out of a single flatnonzero +
-    searchsorted, and the suffix (splice) comparison is a second
-    segmented pass over only the undecided tails.  Outputs are exactly
-    the values the loop used to compute row by row, so the encoded
-    bytes are identical (pinned by the golden-sha tests).
+    All prefix comparisons run as ONE segmented elementwise compare over
+    a gathered index space, per-segment edit lists fall out of a single
+    flatnonzero + searchsorted, and the suffix (splice) comparison is a
+    second segmented pass over only the undecided tails.
 
-    Returns (choice, ecounts, eoff, local_idx, flat_elines, p, s,
-    na, nb, m) where choice is 0=keyframe, 1=splice, 2=positional.
+    Returns (choice, ecounts, local_idx, p, s, m, pos_cost, spl_cost,
+    text_chars, achars): choice is 0=keyframe, 1=splice, 2=positional;
+    ecounts and local_idx are the positional script's per-row edit
+    count and each edit's line index, flat in row order; p and s are
+    the splice's clean prefix and suffix, m is min(na, nb); the costs
+    (chars + 8 per packed int, all cur-side via the line-length prefix
+    sums ``clen``) are what the choice compared, achars the appended
+    lines' share of pos_cost.
 
-    Index/temporary dtype is int32 when the block's line count allows
-    (always, in practice — blocks are bounded by target_rows): the big
+    Index/temporary dtype is int32 when the code count allows (always,
+    in practice — blocks are bounded by target_rows): the big
     temporaries here (rep, j, the gather indices) are line-count-sized,
     and halving their width halves the traffic on this bandwidth-bound
-    host.  Values are unchanged, so encoded bytes stay identical.
+    kernel.
     """
     idt = np.int32 if len(codes) < (1 << 31) - 64 else np.int64
-    prev_lo = loffs[cand - 1].astype(idt)
-    cur_lo = loffs[cand].astype(idt)
-    cur_hi = loffs[cand + 1].astype(idt)
-    na = cur_lo - prev_lo
-    nb = cur_hi - cur_lo
+    prev_lo, na, cur_lo, nb = (x.astype(idt) for x in (prev_lo, na, cur_lo, nb))
+    cur_hi = cur_lo + nb
     m = np.minimum(na, nb)
-    D = len(cand)
+    D = len(cur_lo)
     seg_off = np.concatenate(([0], np.cumsum(m, dtype=np.int64))).astype(idt)
     tot = int(seg_off[-1]) if D else 0
     rep = np.repeat(np.arange(D, dtype=idt), m)
@@ -222,9 +166,7 @@ def _precompute_deltas(
     nz = np.flatnonzero(neq)
     seg_nz = rep[nz]
     ecounts = np.bincount(seg_nz, minlength=D).astype(np.int64)
-    eoff = np.concatenate(([0], np.cumsum(ecounts)))
     local_idx = (nz - seg_off[seg_nz]).astype(idt)
-    flat_elines = codes[cur_lo[seg_nz] + local_idx]
     # first mismatch per segment (defaults to m: full prefix match)
     p = m.copy()
     if len(nz):
@@ -250,29 +192,28 @@ def _precompute_deltas(
             last_local = nz2[::-1][f2] - off2[u2]
             s_sub[u2] = ms[u2] - 1 - last_local
         s[sub] = s_sub
-    # script costs (all cur-side, via the line-length prefix sums)
+    # script costs: each script also stores 3 per-row ints
     echars = np.zeros(D, dtype=np.int64)
     if len(nz):
         echars = np.bincount(
             seg_nz, weights=line_lens[cur_lo[seg_nz] + local_idx], minlength=D
         ).astype(np.int64)
     achars = clen[cur_hi] - clen[cur_lo + m]
-    pos_cost = echars + achars + 8 * (ecounts + keyframe_cost_ints)
+    pos_cost = echars + achars + 8 * (ecounts + 3)
     sins_cnt = nb - p - s
     spl_chars = clen[cur_lo + p + sins_cnt] - clen[cur_lo + p]
-    spl_cost = spl_chars + 8 * keyframe_cost_ints
+    spl_cost = spl_chars + 8 * 3
     text_chars = clen[cur_hi] - clen[cur_lo] + (nb - 1)
     choice = np.full(D, 2, dtype=np.int8)
     choice[spl_cost < pos_cost] = 1
     choice[np.minimum(pos_cost, spl_cost) >= text_chars] = 0
-    return choice, ecounts, eoff, local_idx, flat_elines, p, s, na, nb, m
+    return choice, ecounts, local_idx, p, s, m, pos_cost, spl_cost, text_chars, achars
 
 
 def encode_chain(
     contents: pa.Array,
     group_sizes: np.ndarray,
     keyframe_interval: int = DEFAULT_KEYFRAME_INTERVAL,
-    level: int | None = None,
     base_texts: list | None = None,
     base_versions: np.ndarray | None = None,
 ) -> bytes:
@@ -288,11 +229,15 @@ def encode_chain(
     groups are seeded.
 
     Takes a string array (or anything ``as_large_utf8`` converts); the whole
-    kernel is Arrow-native (round 3): lines are dictionary-encoded ONCE
-    and every per-version comparison runs on int codes (exact: Arrow's
-    hashing is byte-aware), keyframe texts and delta lines leave via
-    Arrow takes into encode_plain — the content column never
-    materializes as Python strings.
+    kernel is Arrow-native: lines are dictionary-encoded ONCE and every
+    per-version comparison runs on int codes (exact: Arrow's hashing is
+    byte-aware), keyframe texts and delta lines leave via Arrow takes
+    into encode_plain — the content column never materializes as Python
+    strings.  Seeded and unseeded blocks take one vectorized path: a
+    seeded first version is one more delta row of ``_precompute_deltas``
+    (its previous version being the base text's codes), and every stream
+    is gathered with index arrays.  The only per-group Python is the
+    char-splice trial of seeded first versions with few edited lines.
     """
     arr = as_large_utf8(contents)
     n = len(arr)
@@ -314,7 +259,7 @@ def encode_chain(
         line_dict = ld.dictionary
         loffs = la.offsets.to_numpy().astype(np.int64)
         # per-line char counts via the (small) dictionary + prefix sums:
-        # every script-cost term in the loop is O(1) lookups
+        # every script-cost term is O(1) lookups
         dlens = pc.utf8_length(line_dict).to_numpy(zero_copy_only=False).astype(np.int64)
         line_lens = dlens[codes] if len(codes) else np.zeros(0, dtype=np.int64)
         clen = np.concatenate(([0], np.cumsum(line_lens)))
@@ -322,263 +267,176 @@ def encode_chain(
         codes = np.zeros(0, dtype=np.int32)
         line_dict = pa.array([], type=pa.large_utf8())
         loffs = np.zeros(1, dtype=np.int64)
-        line_lens = np.zeros(0, dtype=np.int64)
+        dlens = line_lens = np.zeros(0, dtype=np.int64)
         clen = np.zeros(1, dtype=np.int64)
-    n_groups = len(group_sizes)
+    gs = np.asarray(group_sizes, dtype=np.int64)
     if base_texts is None:
-        base_texts = [None] * n_groups
-    if base_versions is None:
-        base_versions = np.zeros(n_groups, dtype=np.int64)
+        base_texts = [None] * len(gs)
+    v0 = (
+        np.zeros(len(gs), dtype=np.int64) if base_versions is None
+        else np.asarray(base_versions, dtype=np.int64)
+    )
     seeded = np.array([t is not None for t in base_texts], dtype=bool)
 
-    is_key = np.zeros(n, dtype=bool)
-    key_idx: list[int] = []
-    # per delta row: cnt1/cnt2/cnt3 are (edit_count, add_count,
-    # remove_count) for positional scripts, (ins_count, start, del_count)
-    # for splice scripts; splice_flags picks the interpretation
-    edit_counts: list[int] = []
-    add_counts: list[int] = []
-    remove_counts: list[int] = []
-    edit_indices: list[np.ndarray] = []
-    delta_lines: list[np.ndarray] = []  # per-script line arrays, concat once
-    splice_flags: list[bool] = []
-    # char-splice refinement streams (one entry per flat edit entry /
-    # per char-mode edit respectively)
-    char_bits_l: list[bool] = []
+    # delta rows: a version whose previous version is the row before it
+    # (v > 0, neither side null, the cadence doesn't force a keyframe),
+    # and the first version of a seeded group, whose previous version
+    # is its base text.  Cost-degraded keyframes don't affect later
+    # comparisons (the comparison chain is always vs the raw previous
+    # version), so the whole pair set is known upfront.
+    gstarts = np.cumsum(gs) - gs
+    v_pos = np.arange(n, dtype=np.int64) - np.repeat(gstarts, gs)
+    cadence_key = (np.repeat(v0, gs) + v_pos) % keyframe_interval == 0
+    prev_null = np.concatenate(([True], is_null))[:n]
+    cand_mask = ~cadence_key & ~is_null & (v_pos > 0) & ~prev_null
+    seed_g = np.flatnonzero(seeded & (gs > 0))
+    seed_rows = gstarts[seed_g]
+    live = ~cadence_key[seed_rows] & ~is_null[seed_rows]
+    seed_g, seed_rows = seed_g[live], seed_rows[live]
+    cand_mask[seed_rows] = True
+    cand = np.flatnonzero(cand_mask)
+    cur_lo = loffs[cand]
+    nb = loffs[cand + 1] - cur_lo
+    prev_lo = loffs[cand - 1]  # a seed row's range is set below
+    na = cur_lo - prev_lo
+    seed_at = np.searchsorted(cand, seed_rows)  # seed rows' delta-row slots
+    if len(seed_rows):
+        seed_codes, seed_offs = _seed_code_table([base_texts[g] for g in seed_g], line_dict)
+        prev_lo[seed_at] = len(codes) + seed_offs[:-1]
+        na[seed_at] = np.diff(seed_offs)
+        codes = np.concatenate((codes, seed_codes.astype(codes.dtype)))
+    choice, ecounts, local_idx, p, s, m, pos_cost, spl_cost, text_chars, achars = (
+        _precompute_deltas(codes, prev_lo, na, cur_lo, nb, line_lens, clen)
+    )
+
+    # char-splice trial (string.rs:37's admitted gap): a seeded first
+    # version's base text lives in the PREVIOUS fragment's streams, so
+    # zstd can't match against it here — a few changed chars inside a
+    # long line beat every line-level script, including the keyframe
+    # degrade (a single-line file's "new line" IS the whole text,
+    # re-stored per append without this).  Not tried on the other rows,
+    # deliberately — measured: when both versions of a pair sit in the
+    # SAME compressed block, zstd's cross-version matching already
+    # captures the intra-line redundancy, and explicit char deltas came
+    # out net-NEGATIVE on every fixture shape (BASELINE.md round-5
+    # "char-level delta" table).
+    eoff = np.concatenate(([0], np.cumsum(ecounts)))
+    char_e = np.zeros(int(eoff[-1]), dtype=bool)  # per flat edit entry
     char_cs: list[int] = []
     char_cd: list[int] = []
     char_frags: list[str] = []
-
-    # candidate rows for the vectorized delta path: previous version is
-    # the physically preceding row (v > 0), neither side null, cadence
-    # doesn't force a keyframe.  Cost-degraded keyframes don't affect
-    # later comparisons (the comparison chain is always vs the raw
-    # previous version), so the whole pair set is known upfront.
-    gs = np.asarray(group_sizes, dtype=np.int64)
-    if n:
-        group_starts = np.concatenate(([0], np.cumsum(gs)))[:-1]
-        v_pos = np.arange(n, dtype=np.int64) - np.repeat(group_starts, gs)
-        v0_rep = np.repeat(np.asarray(base_versions, dtype=np.int64), gs)
-        cadence_key = (v0_rep + v_pos) % keyframe_interval == 0
-        prev_row_null = np.concatenate(([True], is_null[:-1]))
-        cand_mask = (~cadence_key) & (~is_null) & (v_pos > 0) & (~prev_row_null)
-    else:
-        cand_mask = np.zeros(0, dtype=bool)
-    cand = np.flatnonzero(cand_mask)
-    if len(cand):
-        (vchoice, vecounts, veoff, vlocal, velines, vp, vs, vna, vnb, vm) = (
-            _precompute_deltas(codes, loffs, line_lens, clen, cand)
+    tried = (ecounts[seed_at] > 0) & (ecounts[seed_at] <= CHAR_EDIT_MAX)
+    t_at = seed_at[tried]
+    # the tried rows' new edit lines, in one take
+    t_codes = codes[
+        np.repeat(cur_lo[t_at], ecounts[t_at])
+        + local_idx[_expand_ranges(eoff[t_at], ecounts[t_at])]
+    ]
+    t_new = line_dict.take(pa.array(t_codes)).to_pylist()
+    t_lens = dlens[t_codes].tolist()
+    k1 = 0
+    for c, g in zip(t_at.tolist(), seed_g[tried].tolist()):
+        e0, e1 = int(eoff[c]), int(eoff[c + 1])
+        k0, k1 = k1, k1 + e1 - e0
+        bits, t_cs, t_cd, t_frags = _char_refine(
+            base_texts[g].split("\n"), local_idx[e0:e1], t_new[k0:k1]
         )
-
-    if not seeded.any():
-        # Unseeded blocks (the encode hot path): every delta row comes
-        # from the contiguous candidate set, so ALL per-delta streams
-        # fall out of the precompute vectorized — no per-row python.
-        # The loop below survives only for seeded appends (base text in
-        # a previous fragment), where the char-splice trial and seed
-        # code mapping are inherently per-group.
-        is_key = ~cand_mask
-        if len(cand):
-            is_key[cand[vchoice == 0]] = True
-            dmask = vchoice != 0
-            spl_d = vchoice[dmask] == 1
-            p_d = vp[dmask].astype(np.int64)
-            s_d = vs[dmask].astype(np.int64)
-            na_d = vna[dmask].astype(np.int64)
-            nb_d = vnb[dmask].astype(np.int64)
-            m_d = vm[dmask].astype(np.int64)
-            ec_d = vecounts[dmask]
-            lo_d = loffs[cand[dmask]]
-            splice_arr = spl_d
-            ecnt_arr = np.where(spl_d, nb_d - p_d - s_d, ec_d)
-            acnt_arr = np.where(spl_d, p_d, nb_d - m_d)
-            rcnt_arr = np.where(spl_d, na_d - p_d - s_d, np.maximum(na_d - nb_d, 0))
-            pos_e = np.repeat(vchoice == 2, vecounts)  # per flat edit entry
-            flat_idx = vlocal[pos_e].astype(np.int64)
-            # delta line stream = per delta row, in row order:
-            #   splice     -> codes[lo+p : hi-s]
-            #   positional -> codes at each edit position, then codes[lo+m : hi]
-            # assembled as one gather-index array via range expansion
-            L1 = np.where(spl_d, nb_d - p_d - s_d, ec_d)
-            L2 = np.where(spl_d, 0, nb_d - m_d)
-            out_off = np.concatenate(([0], np.cumsum(L1 + L2)))
-            gidx = np.empty(int(out_off[-1]), dtype=np.int64)
-            dest1 = _expand_ranges(out_off[:-1], L1)
-            mask1 = np.repeat(spl_d, L1)
-            gidx[dest1[mask1]] = _expand_ranges((lo_d + p_d)[spl_d], L1[spl_d])
-            rep_e = np.repeat(np.arange(len(cand), dtype=np.int64), vecounts)
-            gidx[dest1[~mask1]] = (
-                loffs[cand][rep_e[pos_e]] + vlocal[pos_e].astype(np.int64)
-            )
-            gidx[_expand_ranges((out_off[:-1] + L1)[~spl_d], L2[~spl_d])] = (
-                _expand_ranges((lo_d + m_d)[~spl_d], L2[~spl_d])
-            )
-            flat_line_codes = codes[gidx]
-        else:
-            splice_arr = np.zeros(0, dtype=bool)
-            ecnt_arr = acnt_arr = rcnt_arr = np.zeros(0, dtype=np.int64)
-            flat_idx = np.zeros(0, dtype=np.int64)
-            flat_line_codes = np.zeros(0, dtype=np.int64)
-        key_idx_arr = np.flatnonzero(is_key & ~is_null)
-        return _pack_chain(
-            n, keyframe_interval, group_sizes, seeded, is_key, is_null,
-            arr, line_dict, level, key_idx_arr, splice_arr,
-            ecnt_arr, acnt_arr, rcnt_arr, flat_idx, flat_line_codes,
-            char_streams_data=None,
+        if not t_frags:
+            continue
+        char_cost = (
+            sum(w for w, b in zip(t_lens[k0:k1], bits) if not b)
+            + sum(len(f) for f in t_frags) + _CHAR_INT_COST * len(t_frags)
+            + int(achars[c]) + 8 * (e1 - e0 + 3)
         )
+        if char_cost < min(pos_cost[c], spl_cost[c], text_chars[c]):
+            choice[c] = 2
+            char_e[e0:e1] = bits
+            char_cs += t_cs
+            char_cd += t_cd
+            char_frags += t_frags
 
-    # seeded continuations (a group whose first version deltas against
-    # its base text) map their seed lines into code space in one pass
-    gstarts = np.concatenate(([0], np.cumsum(gs)))[:-1]
-    cont = np.flatnonzero(
-        seeded & (gs > 0)
-        & (np.asarray(base_versions, dtype=np.int64) % keyframe_interval != 0)
+    # per delta row: ecnt/acnt/rcnt are (edit_count, add_count,
+    # remove_count) for positional scripts, (ins_count, start, del_count)
+    # for splice scripts; the splice bits pick the interpretation
+    is_key = ~cand_mask
+    is_key[cand[choice == 0]] = True
+    dmask = choice != 0
+    spl_d = choice[dmask] == 1
+    p_d, s_d, na_d, nb_d, m_d = (x[dmask].astype(np.int64) for x in (p, s, na, nb, m))
+    lo_d = cur_lo[dmask]
+    ins_d = nb_d - p_d - s_d
+    ecnt_arr = np.where(spl_d, ins_d, ecounts[dmask])
+    acnt_arr = np.where(spl_d, p_d, nb_d - m_d)
+    rcnt_arr = np.where(spl_d, na_d - p_d - s_d, np.maximum(na_d - nb_d, 0))
+    # per flat edit entry: a positional row's edits go to the edit-index
+    # stream, and the full-line ones (not char mode) ship their new line
+    rep_e = np.repeat(np.arange(len(cand), dtype=np.int64), ecounts)
+    pos_e = np.repeat(choice == 2, ecounts)
+    flat_idx = local_idx[pos_e].astype(np.int64)
+    char_bits = char_e[pos_e]
+    line_e = pos_e & ~char_e
+    # delta line stream = per delta row, in row order:
+    #   splice     -> codes[lo+p : hi-s]
+    #   positional -> codes at each full-line edit, then codes[lo+m : hi]
+    # assembled as one gather-index array via range expansion
+    L1 = np.where(spl_d, ins_d, np.bincount(rep_e[line_e], minlength=len(cand))[dmask])
+    L2 = np.where(spl_d, 0, nb_d - m_d)
+    out_off = np.concatenate(([0], np.cumsum(L1 + L2)))
+    gidx = np.empty(int(out_off[-1]), dtype=np.int64)
+    dest1 = _expand_ranges(out_off[:-1], L1)
+    mask1 = np.repeat(spl_d, L1)
+    gidx[dest1[mask1]] = _expand_ranges((lo_d + p_d)[spl_d], L1[spl_d])
+    gidx[dest1[~mask1]] = cur_lo[rep_e[line_e]] + local_idx[line_e]
+    gidx[_expand_ranges((out_off[:-1] + L1)[~spl_d], L2[~spl_d])] = (
+        _expand_ranges((lo_d + m_d)[~spl_d], L2[~spl_d])
     )
-    cont = cont[~is_null[gstarts[cont]]]
-    seed_slot = {int(g): j for j, g in enumerate(cont)}
-    seed_codes, seed_offs = _seed_code_table([base_texts[g] for g in cont], line_dict)
 
-    cursor = 0
-
-    row = 0
-    for g, gsize in enumerate(group_sizes):
-        for v in range(int(gsize)):
-            i = row + v
-            cur_null = bool(is_null[i])
-            force_key = True
-            if cand_mask[i]:
-                c = cursor
-                cursor += 1
-                lo, hi = loffs[i], loffs[i + 1]
-                ch = vchoice[c]
-                ecnt = int(vecounts[c])
-                # NOTE: no char-splice trial on this (contiguous) path,
-                # deliberately — measured: when both versions of a pair
-                # sit in the SAME compressed block, zstd's cross-version
-                # matching already captures the intra-line redundancy,
-                # and explicit char deltas came out net-NEGATIVE on
-                # every fixture shape (BASELINE.md round-5 "char-level
-                # delta" table).  The refinement pays exactly where the
-                # previous text is NOT in this block's streams: the
-                # seeded append path below.
-                if ch == 1:  # splice wins
-                    p_, s_ = int(vp[c]), int(vs[c])
-                    sins = codes[lo + p_ : hi - s_]
-                    splice_flags.append(True)
-                    edit_counts.append(len(sins))
-                    add_counts.append(p_)
-                    remove_counts.append(int(vna[c]) - p_ - s_)
-                    edit_indices.append(np.zeros(0, dtype=np.int64))
-                    delta_lines.append(sins)
-                    force_key = False
-                elif ch == 2:  # positional wins (full-line edits)
-                    e0, e1 = int(veoff[c]), int(veoff[c + 1])
-                    m_ = int(vm[c])
-                    splice_flags.append(False)
-                    edit_counts.append(ecnt)
-                    add_counts.append(int(vnb[c]) - m_)
-                    remove_counts.append(max(int(vna[c] - vnb[c]), 0))
-                    edit_indices.append(vlocal[e0:e1])
-                    char_bits_l.extend([False] * ecnt)
-                    delta_lines.append(velines[e0:e1])
-                    delta_lines.append(codes[lo + m_ : hi])
-                    force_key = False
-                # ch == 0: neither script pays -> keyframe
-            elif v == 0 and g in seed_slot:
-                # seeded continuation: first version deltas against the
-                # supplied base text (rare; per-group python path)
-                j = seed_slot[g]
-                seed_arr = seed_codes[seed_offs[j] : seed_offs[j + 1]]
-                lo, hi = loffs[i], loffs[i + 1]
-                eidx, elines, adds, rem, sp, sdel, sins = _version_deltas(
-                    seed_arr, codes[lo:hi]
-                )
-                m_ = hi - lo if len(seed_arr) > hi - lo else len(seed_arr)
-                echars = int(line_lens[lo + eidx].sum()) if len(eidx) else 0
-                achars = int(clen[hi] - clen[lo + m_])
-                pos_cost = _script_cost(echars + achars, len(eidx) + 3)
-                spl_cost = _script_cost(
-                    int(clen[lo + sp + len(sins)] - clen[lo + sp]), 3
-                )
-                text_chars = int(clen[hi] - clen[lo]) + (hi - lo - 1)
-                # char-splice trial (string.rs:37's admitted gap): the
-                # base text lives in the PREVIOUS fragment's streams, so
-                # zstd can't match against it here — a few changed chars
-                # inside a long line beat every line-level script,
-                # including the keyframe degrade (a single-line file's
-                # "new line" IS the whole text, re-stored per append
-                # without this)
-                trial = None
-                if 0 < len(eidx) <= CHAR_EDIT_MAX:
-                    t_bits: list = []
-                    t_cs: list = []
-                    t_cd: list = []
-                    t_frags: list = []
-                    kept = _char_refine(
-                        line_dict, base_texts[g].split("\n"), eidx, elines,
-                        t_bits, t_cs, t_cd, t_frags,
-                    )
-                    if any(t_bits):
-                        kept_chars = int(dlens[kept].sum()) if len(kept) else 0
-                        char_cost = (
-                            kept_chars + sum(len(f) for f in t_frags)
-                            + _CHAR_INT_COST * len(t_frags)
-                            + achars + 8 * (len(eidx) + 3)
-                        )
-                        if char_cost < min(pos_cost, spl_cost, text_chars):
-                            trial = (kept, t_bits, t_cs, t_cd, t_frags)
-                if trial is not None:
-                    kept, t_bits, t_cs, t_cd, t_frags = trial
-                    splice_flags.append(False)
-                    edit_counts.append(len(eidx))
-                    add_counts.append(len(adds))
-                    remove_counts.append(rem)
-                    edit_indices.append(eidx)
-                    char_bits_l.extend(t_bits)
-                    char_cs.extend(t_cs)
-                    char_cd.extend(t_cd)
-                    char_frags.extend(t_frags)
-                    delta_lines.append(kept)
-                    delta_lines.append(adds)
-                    force_key = False
-                elif min(pos_cost, spl_cost) >= text_chars:
-                    pass  # degrade to keyframe
-                elif spl_cost < pos_cost:
-                    splice_flags.append(True)
-                    edit_counts.append(len(sins))
-                    add_counts.append(sp)
-                    remove_counts.append(sdel)
-                    edit_indices.append(np.zeros(0, dtype=np.int64))
-                    delta_lines.append(sins)
-                    force_key = False
-                else:
-                    splice_flags.append(False)
-                    edit_counts.append(len(eidx))
-                    add_counts.append(len(adds))
-                    remove_counts.append(rem)
-                    edit_indices.append(eidx)
-                    char_bits_l.extend([False] * len(eidx))
-                    delta_lines.append(elines)
-                    delta_lines.append(adds)
-                    force_key = False
-            if force_key:
-                is_key[i] = True
-                if not cur_null:
-                    key_idx.append(i)
-        row += int(gsize)
-
-    return _pack_chain(
-        n, keyframe_interval, group_sizes, seeded, is_key, is_null, arr,
-        line_dict, level,
-        np.array(key_idx, dtype=np.int64),
-        np.array(splice_flags, dtype=bool),
-        np.array(edit_counts, dtype=np.int64),
-        np.array(add_counts, dtype=np.int64),
-        np.array(remove_counts, dtype=np.int64),
-        np.concatenate(edit_indices) if edit_indices else np.zeros(0, np.int64),
-        np.concatenate(delta_lines) if delta_lines else np.zeros(0, dtype=np.int64),
-        (char_bits_l, char_cs, char_cd, char_frags),
+    gmeta, gpay = pack_ints(gs)
+    seed_bits = blocks.pack_mask(seeded)
+    key_bits = blocks.pack_mask(is_key)
+    null_bits = blocks.pack_mask(is_null)
+    splice_bits = blocks.pack_mask(spl_d)
+    # keyframe texts and delta lines leave as Arrow takes (C gathers),
+    # never as Python strings
+    keys_block = encode_plain(arr.take(pa.array(np.flatnonzero(is_key & ~is_null))))
+    emeta, epay = pack_ints(ecnt_arr)
+    ameta, apay = pack_ints(acnt_arr)
+    rmeta, rpay = pack_ints(rcnt_arr)
+    imeta, ipay = pack_ints_z(flat_idx)
+    lines_block = encode_plain(line_dict.take(pa.array(codes[gidx])))
+    meta = {
+        "n": n, "k": keyframe_interval,
+        "groups": gmeta, "gplen": len(gpay),
+        "kb_len": len(key_bits), "nb_len": len(null_bits),
+        "seeded": bool(seeded.any()), "sd_len": len(seed_bits),
+        "sb_len": len(splice_bits), "n_deltas": len(spl_d),
+        "keys_len": len(keys_block),
+        "ec": emeta, "eclen": len(epay),
+        "ac": ameta, "aclen": len(apay),
+        "rc": rmeta, "rclen": len(rpay),
+        "ei": imeta, "eilen": len(ipay),
+    }
+    char_streams: tuple[bytes, ...] = ()
+    if char_frags:
+        # char-splice streams ship ONLY when at least one edit took the
+        # refinement — blocks without long-line edits stay byte-identical
+        # to the pre-refinement format (golden-shas unchanged)
+        cb = blocks.pack_mask(char_bits)
+        csmeta, cspay = pack_ints(np.array(char_cs, dtype=np.int64))
+        cdmeta, cdpay = pack_ints(np.array(char_cd, dtype=np.int64))
+        frags_block = encode_plain(pa.array(char_frags, type=pa.large_utf8()))
+        meta.update(
+            n_edits=len(char_bits), cb_len=len(cb),
+            cs=csmeta, cslen=len(cspay),
+            cd=cdmeta, cdlen=len(cdpay),
+            frags_len=len(frags_block),
+        )
+        char_streams = (cb, cspay, cdpay, frags_block)
+    payload = b"".join(
+        (gpay, seed_bits, key_bits, null_bits, splice_bits, keys_block,
+         epay, apay, rpay, ipay, *char_streams, lines_block)
     )
+    return blocks.frame("chain", meta, payload)
 
 
 def _expand_ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -589,83 +447,6 @@ def _expand_ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     rep = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
     off = np.concatenate(([0], np.cumsum(lens)))
     return starts[rep] + (np.arange(total, dtype=np.int64) - off[rep])
-
-
-def _pack_chain(
-    n: int,
-    keyframe_interval: int,
-    group_sizes,
-    seeded: np.ndarray,
-    is_key: np.ndarray,
-    is_null: np.ndarray,
-    arr: pa.Array,
-    line_dict: pa.Array,
-    level: int | None,
-    key_idx: np.ndarray,
-    splice_arr: np.ndarray,
-    ecnt_arr: np.ndarray,
-    acnt_arr: np.ndarray,
-    rcnt_arr: np.ndarray,
-    flat_idx: np.ndarray,
-    flat_line_codes: np.ndarray,
-    char_streams_data: tuple | None,
-) -> bytes:
-    """Serialize the chain streams (shared by the vectorized unseeded
-    path and the seeded per-group loop; stream layout unchanged, so
-    blocks stay byte-identical to the pre-split encoder)."""
-    gmeta, gpay = pack_ints(np.asarray(group_sizes, dtype=np.int64))
-    seed_bits = blocks.pack_mask(seeded)
-    key_bits = blocks.pack_mask(is_key)
-    null_bits = blocks.pack_mask(is_null)
-    splice_bits = blocks.pack_mask(splice_arr)
-    # keyframe texts and delta lines leave as Arrow takes (C gathers),
-    # never as Python strings
-    keys_block = encode_plain(
-        arr.take(pa.array(np.asarray(key_idx, dtype=np.int64))), level
-    )
-    emeta, epay = pack_ints(ecnt_arr)
-    ameta, apay = pack_ints(acnt_arr)
-    rmeta, rpay = pack_ints(rcnt_arr)
-    imeta, ipay = pack_ints_z(np.asarray(flat_idx, dtype=np.int64))
-    lines_block = encode_plain(
-        line_dict.take(pa.array(np.asarray(flat_line_codes, dtype=np.int64))), level
-    )
-    meta = {
-        "n": n, "k": keyframe_interval,
-        "groups": gmeta, "gplen": len(gpay),
-        "kb_len": len(key_bits), "nb_len": len(null_bits),
-        "seeded": bool(seeded.any()), "sd_len": len(seed_bits),
-        "sb_len": len(splice_bits), "n_deltas": len(splice_arr),
-        "keys_len": len(keys_block),
-        "ec": emeta, "eclen": len(epay),
-        "ac": ameta, "aclen": len(apay),
-        "rc": rmeta, "rclen": len(rpay),
-        "ei": imeta, "eilen": len(ipay),
-    }
-    char_streams: tuple[bytes, ...] = ()
-    if char_streams_data is not None and any(char_streams_data[0]):
-        # char-splice streams ship ONLY when at least one edit took the
-        # refinement — blocks without long-line edits stay byte-identical
-        # to the pre-refinement format (golden-shas unchanged)
-        char_bits_l, char_cs, char_cd, char_frags = char_streams_data
-        char_bits = blocks.pack_mask(np.array(char_bits_l, dtype=bool))
-        csmeta, cspay = pack_ints(np.array(char_cs, dtype=np.int64))
-        cdmeta, cdpay = pack_ints(np.array(char_cd, dtype=np.int64))
-        frags_block = encode_plain(
-            pa.array(char_frags, type=pa.large_utf8()), level
-        )
-        meta.update(
-            n_edits=len(char_bits_l), cb_len=len(char_bits),
-            cs=csmeta, cslen=len(cspay),
-            cd=cdmeta, cdlen=len(cdpay),
-            frags_len=len(frags_block),
-        )
-        char_streams = (char_bits, cspay, cdpay, frags_block)
-    payload = b"".join(
-        (gpay, seed_bits, key_bits, null_bits, splice_bits, keys_block,
-         epay, apay, rpay, ipay, *char_streams, lines_block)
-    )
-    return blocks.frame("chain", meta, payload)
 
 
 def decode_chain_arrow(

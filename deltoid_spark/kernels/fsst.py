@@ -124,21 +124,6 @@ def _single_luts(symbols: list[bytes]) -> tuple[bytes, np.ndarray, np.ndarray]:
     return lut.tobytes(), lut, known
 
 
-def _encode_gap_escaped(gap: bytes, lut: np.ndarray, known: np.ndarray) -> bytes:
-    """Gap encode when some bytes are outside the single-symbol table:
-    1 output byte for known singles, 2 (escape + literal) otherwise —
-    fully vectorized offset construction."""
-    arr = np.frombuffer(gap, dtype=np.uint8)
-    k = known[arr]
-    starts = np.cumsum(np.where(k, 1, 2)) - np.where(k, 1, 2)
-    out = np.empty(starts[-1] + (1 if k[-1] else 2), dtype=np.uint8)
-    out[starts[k]] = lut[arr[k]]
-    nk = ~k
-    out[starts[nk]] = ESCAPE
-    out[starts[nk] + 1] = arr[nk]
-    return out.tobytes()
-
-
 def _trie_pattern(symbols: list[bytes]) -> re.Pattern:
     """Trie-structured alternation over the multi-byte symbols.
 

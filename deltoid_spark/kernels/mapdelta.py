@@ -85,7 +85,6 @@ def encode_mapdelta(
     arr: pa.Array,
     group_sizes: np.ndarray,
     keyframe_interval: int = DEFAULT_KEYFRAME_INTERVAL,
-    level: int | None = None,
 ) -> bytes:
     ma = blocks.as_type(arr, _MAP_TYPE)
     n = len(ma)
@@ -171,9 +170,9 @@ def encode_mapdelta(
     null_bits = blocks.pack_mask(is_null)
     pmeta, ppay = pack_ints_z(put_counts.astype(np.int64))
     dmeta, dpay = pack_ints_z(del_counts.astype(np.int64))
-    pk_block = encode_plain(pa.array(put_keys, type=pa.large_utf8()), level)
-    pv_block = encode_plain(pa.array(put_vals, type=pa.large_utf8()), level)
-    dk_block = encode_plain(pa.array(del_keys, type=pa.large_utf8()), level)
+    pk_block = encode_plain(pa.array(put_keys, type=pa.large_utf8()))
+    pv_block = encode_plain(pa.array(put_vals, type=pa.large_utf8()))
+    dk_block = encode_plain(pa.array(del_keys, type=pa.large_utf8()))
     meta = {
         "n": n,
         "groups": gmeta, "gplen": len(gpay),
@@ -284,7 +283,7 @@ def strlist_raw_bytes(arr: pa.Array) -> int:
     return int(pc.sum(pc.binary_length(la.values.cast(pa.large_binary()))).as_py() or 0)
 
 
-def encode_strlist(arr: pa.Array, level: int | None = None) -> bytes:
+def encode_strlist(arr: pa.Array) -> bytes:
     """array<string> column: FoR-packed lengths + flattened elements.
 
     Vectorized via Arrow LargeListArray buffers (round 2 looped per row
@@ -293,7 +292,7 @@ def encode_strlist(arr: pa.Array, level: int | None = None) -> bytes:
     offs = la.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
     lengths = np.diff(offs) if len(la) else np.zeros(0, dtype=np.int64)
     lmeta, lpay = pack_ints_z(lengths)
-    elems = encode_plain(la.values, level)
+    elems = encode_plain(la.values)
     meta = {"n": len(la), "lens": lmeta, "lplen": len(lpay)}
     mb = blocks.mask_part(meta, blocks.null_mask(la))
     return blocks.frame("strlist", meta, mb + lpay + elems)

@@ -167,7 +167,7 @@ def _decode_decimal_leaf(meta: dict, payload: bytes) -> np.ndarray:
     return vals
 
 
-def _enc(arr: pa.Array, node, level, parts: list[bytes]) -> dict:
+def _enc(arr: pa.Array, node, parts: list[bytes]) -> dict:
     """Depth-first encode; appends payload chunks, returns meta tree."""
     arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
     kind = node[0]
@@ -179,7 +179,7 @@ def _enc(arr: pa.Array, node, level, parts: list[bytes]) -> dict:
         if st == "string":
             from .strings import encode_plain
 
-            block = encode_plain(arr, level)
+            block = encode_plain(arr)
             meta["len"] = len(block)
             parts.append(block)
         elif st in _INT_LIKE:
@@ -202,7 +202,7 @@ def _enc(arr: pa.Array, node, level, parts: list[bytes]) -> dict:
             np_dt = np.float32 if st == "float" else np.float64
             vals = arr.fill_null(0.0).to_numpy().astype(np_dt, copy=False)
             raw = vals.tobytes()
-            comp = blocks.compress(raw, level)
+            comp = blocks.compress(raw)
             if st == "double":
                 dec = _try_decimal_leaf(vals)
                 if dec is not None and len(dec[1]) < len(comp):
@@ -221,7 +221,7 @@ def _enc(arr: pa.Array, node, level, parts: list[bytes]) -> dict:
         meta["lens"] = lmeta
         meta["len"] = len(lpay)
         parts.append(lpay)
-        meta["child"] = _enc(arr.flatten(), node[1], level, parts)
+        meta["child"] = _enc(arr.flatten(), node[1], parts)
         return meta
     if kind == "map":
         offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
@@ -229,12 +229,12 @@ def _enc(arr: pa.Array, node, level, parts: list[bytes]) -> dict:
         meta["lens"] = lmeta
         meta["len"] = len(lpay)
         parts.append(lpay)
-        meta["keys"] = _enc(arr.keys, node[1], level, parts)
-        meta["items"] = _enc(arr.items, node[2], level, parts)
+        meta["keys"] = _enc(arr.keys, node[1], parts)
+        meta["items"] = _enc(arr.items, node[2], parts)
         return meta
     # struct
     meta["fields"] = [
-        _enc(arr.field(idx), ftype, level, parts)
+        _enc(arr.field(idx), ftype, parts)
         for idx, (_fname, ftype) in enumerate(node[1])
     ]
     return meta
@@ -250,11 +250,11 @@ def _input_arrow(arr: pa.Array, node) -> pa.Array:
     return blocks.as_type(arr, arrow_type(node))
 
 
-def encode_nested(arr: pa.Array, ddl: str, level: int | None = None) -> bytes:
+def encode_nested(arr: pa.Array, ddl: str) -> bytes:
     node = parse_ddl(ddl)
     arr = _input_arrow(arr, node)
     parts: list[bytes] = []
-    tree = _enc(arr, node, level, parts)
+    tree = _enc(arr, node, parts)
     meta = {"ddl": ddl, "tree": tree}
     return blocks.frame("nested", meta, b"".join(parts))
 

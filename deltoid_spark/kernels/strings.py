@@ -98,10 +98,10 @@ def utf8_view(arr: pa.Array) -> tuple[np.ndarray, bytes]:
     return lengths, data
 
 
-def encode_plain(arr: pa.Array, level: int | None = None) -> bytes:
+def encode_plain(arr: pa.Array) -> bytes:
     lengths, data = utf8_view(arr)
     lmeta, lpay = pack_ints(lengths)
-    comp = blocks.compress(data, level)
+    comp = blocks.compress(data)
     meta = {"n": len(arr), "lens": lmeta, "lplen": len(lpay), "raw": len(data)}
     mb = blocks.mask_part(meta, null_mask(arr))
     return blocks.frame("plain", meta, mb + lpay + comp)
@@ -136,10 +136,10 @@ def _factorize_exact(arr: pa.Array) -> tuple[np.ndarray, pa.Array]:
     return rank[codes], d.dictionary.take(order)
 
 
-def encode_dict(arr: pa.Array, level: int | None = None) -> bytes:
+def encode_dict(arr: pa.Array) -> bytes:
     codes, uniques = _factorize_exact(_filled(arr))
     cmeta, cpay = pack_ints_z(codes)
-    inner = encode_plain(uniques, level)
+    inner = encode_plain(uniques)
     meta = {"n": len(arr), "codes": cmeta, "cplen": len(cpay), "card": len(uniques)}
     mb = blocks.mask_part(meta, null_mask(arr))
     return blocks.frame("dict", meta, mb + cpay + inner)
@@ -156,7 +156,7 @@ def decode_dict(meta: dict, payload: bytes) -> pa.Array:
 # ------------------------------------------------------------------ RLE ----
 
 
-def encode_rle(arr: pa.Array, level: int | None = None) -> bytes:
+def encode_rle(arr: pa.Array) -> bytes:
     n = len(arr)
     # factorize so null participates as code -1 -> runs computed on codes
     codes, uniques = _factorize_exact(_filled(arr))
@@ -170,7 +170,7 @@ def encode_rle(arr: pa.Array, level: int | None = None) -> bytes:
         run_codes = np.zeros(0, np.int64)
     rmeta, rpay = pack_ints_z(run_codes)
     lmeta, lpay = pack_ints_z(run_lens)
-    inner = encode_plain(uniques, level)
+    inner = encode_plain(uniques)
     meta = {
         "n": n, "runs": len(run_lens),
         "rcodes": rmeta, "rclen": len(rpay),
@@ -242,7 +242,7 @@ def _within(lens: np.ndarray) -> np.ndarray:
 _FRONT_MAX_WIDTH = 4096  # max shared-prefix len; beyond: per-run decode fallback
 
 
-def encode_front(arr: pa.Array, level: int | None = None) -> bytes:
+def encode_front(arr: pa.Array) -> bytes:
     mask = null_mask(arr)
     n = len(arr)
     if n:
@@ -267,7 +267,7 @@ def encode_front(arr: pa.Array, level: int | None = None) -> bytes:
     rmeta, rpay = pack_ints_z(run_lens)
     pmeta, ppay = pack_ints_z(plens)
     smeta, spay = pack_ints_z(slens)
-    comp = blocks.compress(suffix, level)
+    comp = blocks.compress(suffix)
     meta = {
         "n": n, "runs": len(run_lens),
         "rl": rmeta, "rllen": len(rpay),

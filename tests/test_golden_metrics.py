@@ -110,7 +110,7 @@ def test_encoded_bytes_golden():
     )
     append = pipeline.make_append_kernel(
         pipeline.DEFAULT_SPEC, pipeline.DEFAULT_KEY_COLS, pipeline.DEFAULT_ORDER_COLS,
-        pipeline.DEFAULT_CONTENT_COL, 32, None, "local",
+        pipeline.DEFAULT_CONTENT_COL, 32, "local",
     )
     frag = append(
         pa.Table.from_pandas(rows[~first].reset_index(drop=True), preserve_index=False), base
@@ -202,11 +202,99 @@ def test_typed_encode_golden():
     assert _rows_sha(base) == GOLDEN_TYPED_ENCODE_SHA
     append = pipeline.make_append_kernel(
         TYPED_SPEC, TYPED_KW["key_cols"], TYPED_KW["order_cols"], TYPED_KW["content_col"],
-        4, None, "local",
+        4, "local",
     )
     frag = append(_typed_table(60, 90), base)
     assert frag.column("frag_id").to_pylist() == [1] * len(TYPED_SPEC)
     assert _rows_sha(frag) == GOLDEN_TYPED_APPEND_SHA
+
+
+# sha256 over the ``encode_chain`` bytes of seeded blocks (appended
+# fragments whose groups continue a stored chain).  The hand-made block
+# has one group per script shape a seeded first version can take;
+# the generated ones mix seeded and unseeded groups, nulls and groups
+# longer than the cadence.  Same pyarrow/zstd caveat as above.
+GOLDEN_SEEDED_CHAIN_SHA = "d5b77f29fcfbd05e8e861be8e363d17d53889b0b13785c8a461beb312185b370"
+
+
+def _seeded_chain_cases():
+    """[(rows, group_sizes, base_texts, base_versions, keyframe_interval)]."""
+    from test_selective_replay import _chain_fixture
+
+    lines = [f"line {i}" for i in range(10)]
+    long_line = ";".join(f"tok{i:03d}" for i in range(300))
+    uni = ["col %02d " % i + "§π" * 40 + "tail %d" % i for i in range(20)]
+    uni2 = list(uni)
+    uni2[3] = uni2[3][:10] + "ÆØ" + uni2[3][12:]
+    uni2[17] = uni2[17][:5] + "!" + uni2[17][5:]
+    x1 = "x" * 500
+    x2 = x1[:100] + "A" + x1[101:]
+    x3 = x2[:300] + "B" + x2[301:]
+    mixed = [long_line, "short a", "short b"]
+    shared = [f"a shared line of some length, number {i}" for i in range(3)]
+    groups = [
+        # (base text or None, base version, versions)
+        ("\n".join(lines), 3, [  # splice: a middle insert, then more
+            "\n".join(lines[:5] + ["inserted"] + lines[5:]),
+            "\n".join(lines[:5] + ["inserted", "again"] + lines[5:]),
+        ]),
+        ("\n".join(lines), 5, [  # positional: two scattered short edits
+            "\n".join(["edit 1" if i == 1 else "edit 8" if i == 8 else l
+                       for i, l in enumerate(lines)]),
+        ]),
+        ("abc", 2, ["xyz", "xyz\nmore"]),  # degrades to a keyframe
+        (long_line, 1, [long_line[:50] + "EDIT" + long_line[54:]]),  # one-line file
+        ("\n".join(uni), 9, ["\n".join(uni2)]),  # two-line char edit, unicode
+        (x1, 1, [x2, x3]),  # a char-spliced line edited again
+        ("\n".join(mixed), 6, ["\n".join([long_line[:7] + "Q" + long_line[8:],
+                                          "short a", "other b"])]),  # char + full line
+        ("\n".join(lines), 4, [None, "\n".join(lines), None]),  # null transitions
+        ("\n".join(lines), 8, ["\n".join(lines[:9])]),  # seed on the cadence
+        (None, 0, ["a\nb", None, "a\nb\nc", "a\nc"]),  # unseeded, null inside
+        ("\n".join([shared[0], "gone 1", shared[1], "gone 2"]), 3,  # seed lines
+         ["\n".join([shared[0], "zz", shared[1]]), shared[0]]),  # not in the block
+        ("\n".join(["gone 2", shared[1], "gone 1", shared[2]]), 7,  # shares them
+         ["\n".join(["new", shared[1], "gone 3", shared[2], "tail"])]),
+        ("", 2, ["", "x"]),  # empty seed text
+    ]
+    rows, sizes, bases, versions = [], [], [], []
+    for base, ver, vs in groups:
+        rows += vs
+        sizes.append(len(vs))
+        bases.append(base)
+        versions.append(ver)
+    cases = [(rows, np.array(sizes), bases, np.array(versions), 8)]
+    for seed in range(6):
+        cases.append((*_chain_fixture(seed), 8))
+    cases.append((*_chain_fixture(99, n_groups=60), 32))
+    return cases
+
+
+def test_seeded_chain_golden():
+    """Seeded chain blocks are byte-pinned: splice, positional,
+    keyframe-degrade and char-splice first versions, null transitions,
+    seeds on and off the keyframe cadence and seed lines outside the
+    block's line dictionary."""
+    import hashlib
+
+    import pyarrow as pa
+
+    from deltoid_spark.kernels import chain
+
+    h = hashlib.sha256()
+    n_char = 0
+    for rows, sizes, bases, versions, k in _seeded_chain_cases():
+        buf = chain.encode_chain(
+            pa.array(rows, type=pa.large_utf8()), sizes, keyframe_interval=k,
+            base_texts=bases, base_versions=versions,
+        )
+        _, meta, payload = blocks.unframe(buf)
+        assert chain.decode_chain_arrow(meta, payload, base_texts=bases).to_pylist() == rows
+        n_char += "cb_len" in meta
+        h.update(len(buf).to_bytes(8, "little"))
+        h.update(buf)
+    assert n_char >= 2  # the char-splice streams are among the pinned bytes
+    assert h.hexdigest() == GOLDEN_SEEDED_CHAIN_SHA
 
 
 # ------------------------------------------------------------- decode golden ----

@@ -149,6 +149,30 @@ def test_vacuum_reclaims_superseded_blocks(spark, split_batches, tmp_path_factor
     assert again["bytes_reclaimed"] == 0
 
 
+def test_vacuum_on_uri_out_dir(spark, split_batches, tmp_path_factory, monkeypatch):
+    """vacuum swaps directories through the session's file system, like
+    every other metadata write: a ``file://`` out_dir works and nothing
+    lands under the working directory."""
+    import os
+
+    from deltoid_spark.jobs import vacuum
+
+    pdf, a, b = split_batches
+    cwd = tmp_path_factory.mktemp("vac_cwd")
+    monkeypatch.chdir(cwd)
+    out = "file://" + str(tmp_path_factory.mktemp("vac_uri"))
+    encode(spark, spark.createDataFrame(a), out, target_rows=500)
+    encode_append(spark, spark.createDataFrame(b), out)
+    compact(spark, out)
+    before = spark.read.parquet(f"{out}/blocks").count()
+    stats = vacuum(spark, out)
+    assert stats["block_rows_before"] == before
+    assert stats["block_rows_after"] == spark.read.parquet(f"{out}/blocks").count() < before
+    assert stats["bytes_reclaimed"] > 0
+    assert verify(spark, spark.createDataFrame(pdf), decode(spark, out))["ok"]
+    assert os.listdir(cwd) == []
+
+
 def test_append_on_clustered_base(spark, split_batches, tmp_path_factory):
     """Chains appended onto a zero-shuffle (fragmented) base must still
     round-trip: encode- and decode-side tail threading walk the same

@@ -205,7 +205,7 @@ def two_fragment_blocks():
     )
     frag = pipeline.make_append_kernel(
         pipeline.DEFAULT_SPEC, pipeline.DEFAULT_KEY_COLS, pipeline.DEFAULT_ORDER_COLS,
-        pipeline.DEFAULT_CONTENT_COL, 32, None, "local",
+        pipeline.DEFAULT_CONTENT_COL, 32, "local",
     )(pa.Table.from_pandas(rows[~first].reset_index(drop=True), preserve_index=False), base)
     blk = pa.concat_tables([base, frag])
     blk = blk.append_column("gen", blk.column("frag_id"))
@@ -287,7 +287,7 @@ def test_append_kernel_replays_only_continued_chains(two_fragment_blocks, monkey
     seen = _replayed_rows(monkeypatch)
     pipeline.make_append_kernel(
         pipeline.DEFAULT_SPEC, pipeline.DEFAULT_KEY_COLS, pipeline.DEFAULT_ORDER_COLS,
-        pipeline.DEFAULT_CONTENT_COL, 32, None, "local",
+        pipeline.DEFAULT_CONTENT_COL, 32, "local",
     )(pa.Table.from_pandas(batch, preserve_index=False), base)
     # the prior fragment replays only the one continued chain
     assert seen[0] == (len(one_key) + 1) // 2
@@ -329,7 +329,7 @@ def test_colliding_key_strings_stay_apart(case):
     # own tail, and the table decodes exactly
     batch = pdf.iloc[[0]].assign(commit="c2", content=next_first)
     frag = pipeline.make_append_kernel(
-        spec, keys, pipeline.DEFAULT_ORDER_COLS, "content", 32, None, "local",
+        spec, keys, pipeline.DEFAULT_ORDER_COLS, "content", 32, "local",
     )(pa.Table.from_pandas(batch, preserve_index=False), base)
     content = frag.filter(pc.equal(frag.column("column"), "content"))
     assert content.column("codec").to_pylist() == ["chain"]

@@ -6,13 +6,14 @@ times.  Usage: python tools/preflight.py [sf_dir] [only,names]"""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
@@ -34,7 +35,8 @@ def main() -> None:
     from deltoid_spark.queries import oracle_sql, queries
     from deltoid_spark.session import get_spark
 
-    spark = get_spark(cores=32, app="preflight", shuffle_partitions=32)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count()
+    spark = get_spark(cores=cores, app="preflight", shuffle_partitions=cores)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -115,9 +115,10 @@ def main(argv: list[str] | None = None) -> int:
             where = None
             if args.where:
                 # '|' wins when present so full timestamps ("…T10:00:00")
-                # survive; bounds pass through as RAW text — decode's
-                # _where_value coerces per the target column's DDL (int(),
-                # float(), pd.Timestamp() all parse strings), so an
+                # survive; bounds pass through as RAW text — the column
+                # type's where_value (jobs/coltypes) coerces per the target
+                # column's DDL (int(), float(), pd.Timestamp() and the
+                # boolean "true"/"false" all parse strings), so an
                 # early int() here would mangle numeric-LOOKING string
                 # bounds ('05' -> 5 -> '5') and change the range applied.
                 def _bound(s: str):

@@ -17,7 +17,6 @@ needed.
 
 from __future__ import annotations
 
-import hashlib
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -417,25 +416,6 @@ def contamination(
         )
         .orderBy("doc_id")
     )
-
-
-def _simhash64(text: str) -> int:
-    """Pure-python reference SimHash (the unit-test oracle for simhash()).
-
-    Deterministic 64-bit SimHash over whitespace tokens: h = first 8
-    bytes of md5(token) big-endian; bit b of the output is the sign of
-    the per-bit vote sum across tokens.
-    """
-    acc = [0] * 64
-    for tok in text.split():
-        h = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
-        for b in range(64):
-            acc[b] += 1 if (h >> b) & 1 else -1
-    out = 0
-    for b in range(64):
-        if acc[b] > 0:
-            out |= 1 << b
-    return out - (1 << 64) if out >= (1 << 63) else out  # wrap into int64
 
 
 def _token_hash_halves(docs: DataFrame) -> DataFrame:

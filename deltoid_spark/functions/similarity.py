@@ -19,15 +19,12 @@ from pyspark.sql import Column, DataFrame
 from .spread import spread
 
 
-def _as_double(col) -> Column:
-    return F.col(col).cast("array<double>") if isinstance(col, str) else col
-
-
 # ----------------------------------------------------------------------
 # Exact-sequential numpy kernels (Arrow-batched).
 #
-# The HOF ``aggregate`` folds below (dot / l2norm / projections) are
-# bit-exact cross-engine because they fix the IEEE operation ORDER:
+# The HOF ``aggregate`` folds (the dot / l2norm / cosine spec in
+# tests/test_functions.py, and the oracles' projections) are bit-exact
+# cross-engine because they fix the IEEE operation ORDER:
 # ((0 + x0*c0) + x1*c1) + ...  Spark interprets those lambdas per
 # element (~us each), which made the fold the dominant cost of every
 # similarity operator.  These kernels vectorize across ROWS while
@@ -115,7 +112,8 @@ def _bucket_udf(n_bands: int, n_planes: int, seed: int):
 
 
 def _cosine_pair_udf():
-    """pandas_udf: exact cosine(a, b) — same op order as cosine()."""
+    """pandas_udf: exact cosine(a, b) — same op order as the HOF
+    ``cosine`` spec in tests/test_functions.py."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -137,24 +135,6 @@ def _cosine_pair_udf():
         return res
 
     return cos
-
-
-def dot(a, b) -> Column:
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2norm(a) -> Column:
-    return F.sqrt(F.aggregate(
-        F.transform(_as_double(a), lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v
-    ))
-
-
-def cosine(a, b) -> Column:
-    return dot(a, b) / (l2norm(a) * l2norm(b))
 
 
 def brute_force_topk(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
@@ -329,23 +309,6 @@ def cosine_near_dup_pairs(
         .filter(F.col("cos_x10000") >= threshold_x10000)
         .orderBy("vec_a", "vec_b")
     )
-
-
-def ivf_assignments(emb: DataFrame, n_lists: int = 8) -> DataFrame:
-    """The IVF index build: (vec_id, list_id) via the same zero-shuffle
-    argmax ivf_topk uses — persist this once and join queries onto it
-    instead of recomputing the quantizer per query at scale."""
-    cents = [
-        (int(r["cid"]), list(r["cv"]))
-        for r in emb.orderBy("vec_id")
-        .limit(n_lists)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("cv"),
-        )
-        .collect()
-    ]
-    return emb.select("vec_id", list_id_col(cents).alias("list_id"))
 
 
 def list_id_col(cents: list[tuple[int, list[float]]]) -> Column:

@@ -8,14 +8,14 @@ Dataflow (J1): read parquet -> skew-aware deterministic ``part_id``
 (partitioning.py) -> **one planned shuffle** (``groupBy(part_id)``)
 -> ``applyInArrow`` encode kernel (executor-local numpy and Arrow;
 whole partition visible so (key...) chains are complete; each column
-converts once to its storage array, ``_storage``, so nullable ints and
-nested trees stay bit-exact) -> blocks parquet + manifest parquet.
+converts once to its storage array, ``coltypes.storage``, so nullable
+ints and nested trees stay bit-exact) -> blocks parquet + manifest parquet.
 
-Typed columns: every scalar Spark type routes to a kernel — strings
-through the codec selector (the designated content column through the
-CHAIN trial), int/boolean/timestamp/date through FoR+bit-pack, floats
-through the FP lane codec — mirroring the reference's per-type Delta
-impls from one macro (/root/reference/deltoid/src/core.rs:102-122).
+Typed columns: each type family's storage, codec, zone map and where=
+rules are one record in ``coltypes.py`` — strings through the codec
+selector, int/boolean/timestamp/date through FoR+bit-pack, floats
+through the FP lane codec; the content column, by role, through the
+CHAIN trial.
 
 Commit linearization: chains sort by ``order_cols`` within each key
 group (default: ``ts`` when present, then ``commit``), realizing
@@ -65,11 +65,10 @@ from ..kernels import (
     blocks as blocks_mod,
     bloom as bloom_kernel,
     chain as chain_kernel,
-    floats,
-    mapdelta as mapdelta_kernel,
     selector,
     strings,
 )
+from . import coltypes
 from .partitioning import (
     DEFAULT_TARGET_ROWS,
     apply_partition_map,
@@ -120,30 +119,19 @@ MANIFEST_ARROW = pa.schema([
     ("origin", pa.string()), ("msg", pa.string()),
 ])
 
-# scalar Spark types the encoder routes (simpleString -> logical width)
-_INT_DDL = {"bigint": 8, "int": 4, "smallint": 2, "tinyint": 1}
-_WIDTHS = {**_INT_DDL, "boolean": 1, "timestamp": 8, "date": 4, "float": 4, "double": 8}
-# specialized nested codecs: array<string> -> STRLIST; map<string,string>
-# -> MAPDELTA (keyed Add/Edit/Remove chains, reference hashmap.rs:57-85).
-# Every OTHER struct/array/map tree routes to the recursive NESTED codec
-# (per-field leaf kernels, reference derive gen/mod.rs:423-430).
-_NESTED_DDL = {"array<string>", "map<string,string>"}
-SUPPORTED_DDL = {"string", *_WIDTHS, *_NESTED_DDL}
-
-
 def table_spec(df: DataFrame) -> list[tuple[str, str]]:
     """(name, ddl) per column; rejects unsupported types up front."""
-    from ..kernels import nested as nested_kernel
-
     spec = []
     for f in df.schema.fields:
         ddl = f.dataType.simpleString()
-        if ddl not in SUPPORTED_DDL and not nested_kernel.is_supported_ddl(ddl):
+        try:
+            coltypes.of(ddl)
+        except ValueError:
             raise ValueError(
                 f"column {f.name!r} has unsupported type {ddl!r}; supported: "
-                f"scalars {sorted(SUPPORTED_DDL)} plus arbitrary "
+                f"scalars {coltypes.SCALARS} plus arbitrary "
                 "struct<...>/array<...>/map<...> trees over them"
-            )
+            ) from None
         spec.append((f.name, ddl))
     return spec
 
@@ -171,7 +159,8 @@ def _key_ids(cols: list[pa.Array]) -> np.ndarray:
     ``\x01\x02``, and the parts join with a NUL, so an unescaped NUL
     only ever separates parts and two rows share an id only when their
     key tuples are equal.  Both sides pass the columns in their storage
-    form: encode through ``_storage``, decode as the blocks decode."""
+    form: encode through ``coltypes.storage``, decode as the blocks
+    decode."""
     parts = []
     for a in cols:
         a = strings.as_large_utf8(a)
@@ -181,185 +170,6 @@ def _key_ids(cols: list[pa.Array]) -> np.ndarray:
         *parts, _KEY_SEP, null_handling="replace", null_replacement=_KEY_NULL
     )
     return ids.to_numpy(zero_copy_only=False)
-
-
-def _storage(arr: pa.Array | pa.ChunkedArray, ddl: str) -> pa.Array:
-    """A column as Spark's Arrow batch types it -> the storage array its
-    block decodes to (``api.decode_block``); the exact inverse of
-    ``_to_spark``.  The int family becomes int64, timestamps the
-    epoch-ns UTC instant, dates epoch days, booleans 0/1; top-level
-    float NaN becomes null (so NaN and null share one mask bit, see
-    ``kernels/floats``); strings, lists, maps and nested trees take
-    their large Arrow types.  Key ids, the sort, zone maps and every
-    encoder read these arrays."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if ddl == "string":
-        return strings.as_large_utf8(arr)
-    if ddl in ("float", "double"):
-        arr = arr.cast(pa.float32() if ddl == "float" else pa.float64())
-        return pc.if_else(pc.is_nan(arr), pa.scalar(None, arr.type), arr)
-    if ddl == "timestamp":
-        scale = {"s": 10**9, "ms": 10**6, "us": 10**3, "ns": 1}[arr.type.unit]
-        v = arr.cast(pa.int64()).fill_null(0).to_numpy()
-        lim = np.iinfo(np.int64).max // scale
-        far = (v > lim) | (v < -lim)
-        if far.any():
-            raise ValueError(
-                f"timestamp column holds {int(far.sum())} value(s) outside the epoch-ns "
-                f"range, years 1677-2262 (first: {arr[int(np.flatnonzero(far)[0])].as_py()})"
-            )
-        ns = v * scale
-        # Spark timestamps are whole microseconds: a finer value could
-        # be stored but never cast back (decode's _to_spark), so refuse it
-        frac = ns % 1000 != 0
-        if frac.any():
-            raise ValueError(
-                f"timestamp column holds {int(frac.sum())} sub-microsecond value(s) "
-                f"(first: {int(ns[frac][0])} epoch ns); Spark timestamps are whole "
-                "microseconds"
-            )
-        return pa.array(ns, mask=strings.null_mask(arr))
-    if ddl == "date":
-        return arr.cast(pa.date32()).cast(pa.int32()).cast(pa.int64())
-    if ddl in _WIDTHS:  # the int family and boolean
-        if pa.types.is_floating(arr.type):
-            # a float column handed in for an int one: values past 2^53
-            # may already be rounded, so fail rather than corrupt
-            # silently (ADVICE r02); a fractional value fails the cast
-            big = pc.max(pc.abs(arr)).as_py()
-            if big is not None and big >= float(2**53):
-                raise ValueError(
-                    f"int column ({ddl}) arrived as {arr.type} with |v| >= 2^53; "
-                    "exact round-trip is not provable — pass an exact integer type"
-                )
-        return arr.cast(pa.int64())
-    from ..kernels import nested as nested_kernel
-
-    # array<string>, map<string,string> and every other tree
-    return blocks_mod.as_type(arr, nested_kernel.arrow_type(nested_kernel.parse_ddl(ddl)))
-
-
-def _float_sortable(a: np.ndarray) -> np.ndarray:
-    """IEEE-754 doubles -> int64s whose SIGNED integer order IS the
-    floats' numeric order: non-negatives keep their bit pattern
-    (already ascending, sign bit 0), negatives flip their low 63 bits
-    (reversing their descending bit order while the set sign bit keeps
-    them below every non-negative).  Lets float/double columns share
-    the existing (zmin, zmax) long zone columns instead of growing the
-    block schema by another typed pair."""
-    v = a.view(np.int64)
-    return v ^ ((v >> 63) & np.int64(0x7FFFFFFFFFFFFFFF))
-
-
-def _float_keys(a: np.ndarray) -> np.ndarray:
-    """Float zone-space keys, shared by the zone maps written at encode
-    and the where= bounds probed at decode.  Signed zeros canonicalize
-    first: Spark/Python compare -0.0 == +0.0 but _float_sortable maps
-    them to -1 and 0 — a block whose max is -0.0 must not be pruned by
-    where=(col, 0.0, None)."""
-    return _float_sortable(np.where(a == 0.0, 0.0, a))
-
-
-def _float_zone(arr: pa.Array) -> tuple[int | None, int | None]:
-    """(zmin, zmax) for a float/double column in sortable-int64 space;
-    NaNs and nulls are excluded (like nulls on int columns), so an
-    all-NaN/null block stays unprunable."""
-    a = np.asarray(arr.to_numpy(zero_copy_only=False), dtype=np.float64)
-    a = a[~np.isnan(a)]
-    if len(a) == 0:
-        return None, None
-    st = _float_keys(a)
-    return int(st.min()), int(st.max())
-
-
-_SZONE_PREFIX = 64
-
-
-def _string_zone(arr: pa.Array) -> tuple[str | None, str | None]:
-    """(smin, smax) zone bounds for a string column, or None when a
-    bound can't be recorded safely.
-
-    Collation safety: Spark 4's default UTF8_BINARY collation compares
-    UTF-8 BYTES, and UTF-8 was designed so byte order EQUALS code-point
-    order — which is also the order Arrow's min_max uses here and the
-    order Python string comparison applies.  All four agree for every
-    valid string (verified by test_string_zone_collation_adversarial,
-    whose emoji probe distinguishes this order from legacy UTF-16
-    code-unit order), so bounds are recorded for ANY string, non-ASCII
-    included — unicode repo/path/language columns prune like ASCII
-    ones.  The engine pins the binary collation (session.py does not
-    override spark.sql.collation.defaultCollation); a deployment that
-    overrides the session default to a case-/accent-insensitive
-    collation changes residual-filter semantics and must drop zone
-    bounds — that interlock is the collation test's job, not a per-value
-    gate (an ASCII-only gate would not survive UTF8_LCASE either:
-    'B' < 'a' flips under case folding for pure-ASCII values too).
-
-    Bounded metadata: values truncate to a 64-code-point prefix.  A
-    prefix of the min is still a valid lower bound; for the max the
-    last incrementable code point of the prefix is bumped (strictly
-    above everything sharing the prefix under code-point order),
-    skipping the surrogate gap [U+D800, U+DFFF] which UTF-8 cannot
-    carry; if every prefix position is U+10FFFF the bound drops to
-    null (unprunable side).
-    """
-    if len(arr) == 0 or arr.null_count == len(arr):
-        return None, None
-    mm = pc.min_max(arr)
-    lo, hi = mm["min"].as_py(), mm["max"].as_py()
-
-    def _bound(v: str, is_max: bool) -> str | None:
-        if len(v) <= _SZONE_PREFIX:
-            return v
-        p = v[:_SZONE_PREFIX]
-        if not is_max:
-            return p
-        for i in range(len(p) - 1, -1, -1):
-            c = ord(p[i])
-            if c < 0x10FFFF:
-                nc = c + 1
-                if 0xD800 <= nc <= 0xDFFF:
-                    nc = 0xE000
-                return p[:i] + chr(nc)
-        return None
-
-    return _bound(lo, False), _bound(hi, True)
-
-
-def _encode_typed(
-    arr: pa.Array, ddl: str
-) -> tuple[str, bytes, int, int | None, int | None]:
-    """Encode one non-string storage column (``_storage``); returns
-    (codec, buf, raw_bytes, zmin, zmax).  The zone map (min/max of the
-    int64 STORAGE values, nulls excluded; None for non-int and all-null
-    columns) lands on the block row so ``decode(where=...)`` prunes
-    whole partitions from the block table — the A13 Range semantics
-    turned into an actual pushed-down scan bound."""
-    if ddl == "array<string>":
-        return (
-            "strlist",
-            mapdelta_kernel.encode_strlist(arr),
-            mapdelta_kernel.strlist_raw_bytes(arr),
-            None,
-            None,
-        )
-    if ddl not in _WIDTHS:  # struct<...> / array<...> / map<...> tree
-        from ..kernels import nested as nested_kernel
-
-        return (
-            "nested",
-            nested_kernel.encode_nested(arr, ddl),
-            nested_kernel.nested_raw_bytes(arr, ddl),
-            None,
-            None,
-        )
-    raw = _WIDTHS[ddl] * len(arr)
-    if ddl in ("float", "double"):
-        zmin, zmax = _float_zone(arr)
-        return "fp", floats.encode_fp(arr, width=_WIDTHS[ddl]), raw, zmin, zmax
-    mm = pc.min_max(arr)
-    return "dint", api.encode_block(arr, "dint"), raw, mm["min"].as_py(), mm["max"].as_py()
 
 
 def _group_starts(gsizes: np.ndarray) -> np.ndarray:
@@ -419,8 +229,8 @@ def _encode_rows(
     tail_counts: dict | None = None,
 ) -> list[tuple]:
     """Encode one sorted slice of rows, given as its storage columns
-    (``_storage``) and its (key...) ids (``_key_ids``), into per-column
-    block rows.
+    (``coltypes.storage``) and its (key...) ids (``_key_ids``), into
+    per-column block rows.
 
     tails / tail_counts (from decoded prior fragments) seed chain groups
     that continue an existing (key...) chain — the incremental
@@ -436,50 +246,28 @@ def _encode_rows(
             [tail_counts.get(k, 0) if tails.get(k) is not None else 0 for k in gkeys],
             dtype=np.int64,
         )
-    for col, ddl in spec:
+    for (col, ddl) in spec:
         arr = cols[col]
-        zmin = zmax = None
-        smin = smax = None
-        blm = None
-        if ddl == "string":
-            # one view per string column, shared by raw-size, the
-            # selector, the PLAIN-gate sample, the content digest, and
-            # the string zone map
+        ct = coltypes.of(ddl)
+        # a string content column takes its route by role: it chains,
+        # gets a digest and no zone map (not a range-predicate target)
+        content = col == content_col and ct is coltypes.STRING
+        view = None
+        if content and (len(gsizes) < len(arr) or tails):
+            # one view shared by raw-size, the PLAIN-gate sample and the digest
             view = strings.utf8_view(arr)
             raw = int(view[0].sum())
-            if col == content_col and (len(gsizes) < len(arr) or tails):
-                codec, buf = _encode_content(
-                    arr, gsizes, keyframe_interval, base_texts,
-                    base_versions, view,
-                )
-            else:  # no multi-version chains: the selector picks
-                codec, _stats, buf = selector.select_and_encode(arr)
-            sha = api.sha256_column_arrow(arr, view) if col == content_col else None
-            if col != content_col:
-                # dimension-style string columns (repo/path/lang) get
-                # (smin, smax) zone bounds — the dominant predicate
-                # class over a code corpus ("this repo only"); chained
-                # content bodies don't (not a range-predicate target)
-                smin, smax = _string_zone(arr)
-                # high-cardinality dims (commit/path) additionally get
-                # a Bloom filter: zones answer ranges, blooms answer
-                # the point probes hash-like columns can't zone-prune
-                blm = bloom_kernel.bloom_build(arr)
-        elif ddl == "map<string,string>":
-            # keyed Add/Edit/Remove chains over the same group layout the
-            # content column uses (reference HashMap::delta)
-            codec = "mapdelta"
-            buf = mapdelta_kernel.encode_mapdelta(
-                arr, gsizes, keyframe_interval=keyframe_interval
+            codec, buf = _encode_content(
+                arr, gsizes, keyframe_interval, base_texts, base_versions, view
             )
-            raw = mapdelta_kernel.map_raw_bytes(arr)
-            sha = None
-        else:
-            codec, buf, raw, zmin, zmax = _encode_typed(arr, ddl)
-            sha = None
+        else:  # no multi-version chains: the column type's route
+            codec, buf, raw = ct.encode(arr, ddl, gsizes, keyframe_interval)
+        sha = api.sha256_column_arrow(arr, view) if content else None
+        zone = {} if content or ct.zone is None else dict(zip(ct.zone_cols, ct.zone(arr)))
         out.append(
             (part_id, frag_id, col, codec, buf, len(keys), raw, len(buf), sha,
-             time.time() - t0, run_id, zmin, zmax, smin, smax, blm)
+             time.time() - t0, run_id,
+             *(zone.get(c) for c in ("zmin", "zmax", "smin", "smax", "bloom")))
         )
     return out
 
@@ -497,7 +285,7 @@ def _slice_encoder(
     """The one encode path every kernel (encode, fragment, append,
     compact) runs: ``encode_slice(tbl, part_id, frag_id, prior)`` turns
     one partition's rows, in any order, into its block rows.  Each
-    column converts once to its storage form (``_storage``); the rows
+    column converts once to its storage form (``coltypes.storage``); the rows
     sort stably on the key and order columns' storage arrays, nulls
     last, and the slice is encoded; ``prior`` block rows (a partition's
     stored fragments) are replayed first so the slice's chains continue
@@ -514,7 +302,7 @@ def _slice_encoder(
     ) -> pa.Table:
         t0 = time.time()
         try:
-            cols = {name: _storage(tbl.column(name), ddl) for name, ddl in spec}
+            cols = {name: coltypes.storage(tbl.column(name), ddl) for (name, ddl) in spec}
             if fail_inject is not None and fail_inject in cols[key_cols[0]].to_pylist():
                 raise RuntimeError(f"injected failure for {fail_inject!r}")
             keys = _key_ids([cols[k] for k in key_cols])
@@ -528,7 +316,7 @@ def _slice_encoder(
                         (k in cont for k in keys), dtype=bool, count=len(keys)
                     ),
                 )
-            # NaN is already null (_storage): Arrow alone would sort NaN
+            # NaN is already null (coltypes.storage): Arrow alone would sort NaN
             # before null, where NaN and null are one missing value here
             order = pc.sort_indices(
                 pa.table({c: cols[c] for c, _ in sort_keys}),
@@ -1268,43 +1056,11 @@ def compact(
 # ------------------------------------------------------------- J2 decode ----
 
 
-# Spark-side Arrow type per DDL for the decode job's applyInArrow
-# return boundary.  Timestamps are tz-aware UTC (storage is UTC-epoch
-# nanoseconds — the cast reinterprets, it does not shift).
-_SPARK_SCALAR_ARROW = {
-    "string": pa.string(), "bigint": pa.int64(), "int": pa.int32(),
-    "smallint": pa.int16(), "tinyint": pa.int8(), "boolean": pa.bool_(),
-    "float": pa.float32(), "double": pa.float64(),
-    "timestamp": pa.timestamp("us", tz="UTC"), "date": pa.date32(),
-}
-
-
-def _spark_arrow_type(ddl: str) -> pa.DataType:
-    if ddl in _SPARK_SCALAR_ARROW:
-        return _SPARK_SCALAR_ARROW[ddl]
-    from ..kernels import nested as nested_kernel
-
-    return nested_kernel.spark_arrow_type(nested_kernel.parse_ddl(ddl))
-
-
-def _to_spark(arr: pa.Array, ddl: str) -> pa.Array:
-    """A decoded storage array (``api.decode_block``) -> the Arrow array
-    Spark's applyInArrow verifier expects for ``ddl``: epoch-ns int64
-    through ``timestamp("ns")`` to UTC microseconds, epoch days to
-    date32, 0/1 to boolean, and large strings, lists and maps (nested
-    trees too) to their Spark-side types."""
-    if ddl == "timestamp":
-        arr = arr.cast(pa.timestamp("ns"))
-    elif ddl == "date":
-        arr = arr.cast(pa.int32())
-    return arr.cast(_spark_arrow_type(ddl))
-
-
 def _spark_column(arrays: list[pa.Array], ddl: str) -> pa.Array:
     """One output column from its per-fragment storage arrays."""
     if not arrays:
-        return pa.array([], type=_spark_arrow_type(ddl))
-    return _to_spark(arrays[0] if len(arrays) == 1 else pa.concat_arrays(arrays), ddl)
+        return pa.array([], type=coltypes.spark_type(ddl))
+    return coltypes.to_spark(arrays[0] if len(arrays) == 1 else pa.concat_arrays(arrays), ddl)
 
 
 def _fragments(tbl: pa.Table, names: set[str]) -> list[dict[str, bytes]]:
@@ -1345,7 +1101,7 @@ def _decode_fragments(
     rows are returned.  ``None`` selects every row.
 
     Returns (rows, tails, tail_counts): the rows as the Arrow table
-    Spark reads (``_to_spark``), and the threaded chain state, so an
+    Spark reads (``coltypes.to_spark``), and the threaded chain state, so an
     append can seed its chains from it directly; ``tails`` holds the
     replayed keys, ``tail_counts`` every key.
     """
@@ -1402,7 +1158,7 @@ def _decode_fragments(
                 content = content.take(pa.array(pos, type=pa.int64()))
             parts[content_col].append(content)
     rows = pa.Table.from_arrays(
-        [_spark_column(parts[n], ddl) for n, ddl in spec], names=names
+        [_spark_column(parts[n], ddl) for (n, ddl) in spec], names=names
     )
     return rows, tails, tail_counts
 
@@ -1447,39 +1203,21 @@ def _version_mask(keys: np.ndarray, latest_only: bool, at_version: int | None) -
 
 
 def _pred_mask(a: pa.Array, p: _Pred) -> np.ndarray:
-    """The rows of decoded storage array ``a`` that can meet ``p``.  The
-    storage values are the zone-map keys ``_where_value`` makes
-    (int64 for int-family, boolean and temporal columns — timestamps as
-    epoch ns, dates as epoch days — strings as they are); floats map
-    through ``_float_keys``.  A superset of the rows the residual filter
-    keeps: nulls never meet a predicate, and float NaNs always pass,
-    leaving their semantics to the residual filter."""
-    if p.ddl == "string":
-        m = pc.is_valid(a)
-        if p.points is not None:
-            vals = pa.array([k for _, k in p.points], type=pa.large_utf8())
-            m = pc.and_(m, pc.is_in(a, value_set=vals))
-        if p.lo is not None:
-            m = pc.and_(m, pc.greater_equal(a, pa.scalar(p.lo[1], pa.large_utf8())))
-        if p.hi is not None:
-            m = pc.and_(m, pc.less_equal(a, pa.scalar(p.hi[1], pa.large_utf8())))
-        return m.fill_null(False).to_numpy(zero_copy_only=False)
-    if p.ddl in ("float", "double"):
-        v = np.asarray(a.to_numpy(zero_copy_only=False), dtype=np.float64)
-        nan = np.isnan(v)  # NaN and null: left to the residual filter
-        k = _float_keys(np.where(nan, 0.0, v))
-        m = ~nan
-    else:
-        nan = np.zeros(len(a), dtype=bool)
-        k = a.fill_null(0).to_numpy()
-        m = ~strings.null_mask(a)
+    """The rows of decoded storage array ``a`` that can meet ``p``, in the
+    zone-map key space of the column's type (``where_keys``).  A superset
+    of the rows the residual filter keeps: nulls never meet a predicate;
+    float NaNs always pass, left to the residual filter."""
+    keys, always = p.ct.where_keys(a)
+    m = pc.is_valid(keys)
     if p.points is not None:
-        m &= np.isin(k, np.array([key for _, key in p.points], dtype=np.int64))
+        vals = pa.array([k for _, k in p.points], type=keys.type)
+        m = pc.and_(m, pc.is_in(keys, value_set=vals))
     if p.lo is not None:
-        m &= k >= p.lo[1]
+        m = pc.and_(m, pc.greater_equal(keys, pa.scalar(p.lo[1], keys.type)))
     if p.hi is not None:
-        m &= k <= p.hi[1]
-    return m | nan
+        m = pc.and_(m, pc.less_equal(keys, pa.scalar(p.hi[1], keys.type)))
+    m = m.fill_null(False).to_numpy(zero_copy_only=False)
+    return m if always is None else m | always
 
 
 def make_decode_kernel(
@@ -1587,48 +1325,22 @@ def history(spark: SparkSession, out_dir: str) -> DataFrame:
 class _Pred(NamedTuple):
     """One where= predicate, parsed once (``_parse_where``).  ``lo`` and
     ``hi`` bound a range, ``points`` is an IN-list; every value is a
-    ``(typed, key)`` pair from ``_where_value``."""
+    ``(typed, key)`` pair from the column type's ``where_value``."""
 
     col: str
-    ddl: str
+    ct: coltypes.ColType
     lo: tuple | None
     hi: tuple | None
     points: list[tuple] | None
 
 
-_WHERE_DDL = {*_INT_DDL, "boolean", "timestamp", "date", "string", "float", "double"}
-
-
-def _where_value(v, ddl: str) -> tuple:
-    """A where= value -> (typed, key).  ``typed`` is the Python value the
-    residual row filter compares with the decoded column; ``key`` is
-    the value in the zone map's space: the int64 storage value for
-    int-family and temporal columns (dates through ``_storage``, the
-    mapping encode applies), the sortable int64 for floats
-    (_float_keys, as _float_zone), the string itself for strings
-    (smin/smax compare directly under the pinned binary collation)."""
-    if ddl == "string":
-        return str(v), str(v)
-    if ddl in ("float", "double"):
-        f = float(v)
-        return f, int(_float_keys(np.array([f], dtype=np.float64))[0])
-    if ddl == "timestamp":
-        # the residual filter compares with a microsecond literal, so the
-        # key is that literal's epoch ns, not the finer value's
-        t = pd.Timestamp(v).to_pydatetime()
-        return t, int(pd.Timestamp(t).value)
-    if ddl == "date":
-        d = pa.array(np.array([v], dtype="datetime64[D]"))
-        return d[0].as_py(), _storage(d, "date")[0].as_py()
-    return int(v), int(v)
-
-
 def _parse_where(where: tuple | list[tuple], spec: list[tuple[str, str]]) -> list[_Pred]:
     """decode's where= (one tuple or a list of them, ANDed) -> predicates.
     ``(col, lo, hi)`` is a range (either bound may be None) and
-    ``(col, [v, ...])`` an IN-list.  A string equality range becomes a
-    one-point set, so it prunes through the Bloom filters like an
-    IN-list."""
+    ``(col, [v, ...])`` an IN-list.  Each value maps once through the
+    column type's ``where_value``.  An equality range on a column with
+    Bloom filters (strings) becomes a one-point set, so it prunes
+    through them like an IN-list."""
     ddls = dict(spec)
     preds = []
     for w in ([where] if isinstance(where, tuple) else list(where)):
@@ -1647,17 +1359,21 @@ def _parse_where(where: tuple | list[tuple], spec: list[tuple[str, str]]) -> lis
         ddl = ddls.get(col)
         if ddl is None:
             raise ValueError(f"where column {col!r} not in table")
-        if ddl not in _WHERE_DDL:
+        ct = coltypes.of(ddl)
+        if ct.where_value is None:
             raise ValueError(
                 f"where supports int/boolean/timestamp/date/float/double/"
                 f"string columns; {col!r} is {ddl}"
             )
-        lo, hi = (None if v is None else _where_value(v, ddl) for v in (lo, hi))
-        # deduplicated, and sorted for a deterministic plan/probe order
-        points = None if vals is None else sorted({_where_value(v, ddl) for v in vals})
-        if ddl == "string" and lo is not None and lo == hi:
+        try:
+            lo, hi = (None if v is None else ct.where_value(v) for v in (lo, hi))
+            # deduplicated, and sorted for a deterministic plan/probe order
+            points = None if vals is None else sorted({ct.where_value(v) for v in vals})
+        except (TypeError, ValueError) as exc:
+            raise ValueError(f"where value for {col!r} ({ddl}): {exc}") from None
+        if "bloom" in ct.zone_cols and lo is not None and lo == hi:
             points, lo, hi = [lo], None, None
-        preds.append(_Pred(col, ddl, lo, hi, points))
+        preds.append(_Pred(col, ct, lo, hi, points))
     return preds
 
 
@@ -1691,7 +1407,7 @@ def _where_hits(blocks: DataFrame, preds: list[_Pred]) -> DataFrame:
     one boolean ``h<i>`` per predicate, all JVM expressions.  A block of
     a predicate's column hits when its zone map meets the predicate —
     (zmin, zmax) in key space for numeric and temporal columns, the
-    UTF-8-byte-ordered (smin, smax) for strings (see _string_zone) —
+    UTF-8-byte-ordered (smin, smax) for strings (see coltypes._string_zone) —
     AND, for string point sets, its Bloom filter admits at least one
     value (``_bloom_hit``).  An IN-list beyond ``_IN_ZONE_MAX`` values
     tests one loose [min, max] zone range instead of a per-value OR: a
@@ -1718,7 +1434,7 @@ def _where_hits(blocks: DataFrame, preds: list[_Pred]) -> DataFrame:
 
     hit_cols = []
     for i, p in enumerate(preds):
-        mn, mx = ("smin", "smax") if p.ddl == "string" else ("zmin", "zmax")
+        mn, mx = p.ct.zone_cols[:2]
         if p.points is None:
             lo, hi = (None if b is None else b[1] for b in (p.lo, p.hi))
             hit = meets(mn, mx, lo, hi)
@@ -1730,7 +1446,7 @@ def _where_hits(blocks: DataFrame, preds: list[_Pred]) -> DataFrame:
                 hit = F.lit(False)
                 for k in keys:
                     hit = hit | meets(mn, mx, k, k)
-            if p.ddl == "string" and "bloom" in have:
+            if "bloom" in p.ct.zone_cols and "bloom" in have:
                 hit = hit & _bloom_hit(keys)
         hit_cols.append(((F.col("column") == p.col) & hit).alias(f"h{i}"))
     return blocks.filter(F.col("column").isin(sorted({p.col for p in preds}))).select(
@@ -1796,26 +1512,17 @@ def decode(
     string column; either bound may be None (open-ended).
     where=(col, [v1, v2, ...]) is the IN-list form — batch point probes
     ("fetch these N commits") — and a string equality range (lo == hi)
-    is a one-value IN-list.  Each value is normalized once per column
-    type (``_where_value``).  Before any kernel runs, one metadata-only
-    pass over the live fragments' predicate-column blocks (no payload)
-    decides which partitions to decode: a block hits a predicate when
-    its zone map (per-block min/max recorded at encode, the A13 Range
-    semantics; UTF-8-byte-ordered smin/smax for strings, unicode
-    included) meets the range or any listed value AND, for string
-    IN-lists, its Bloom filter admits some listed value (a JVM
-    expression, ``_bloom_hit``); a partition survives when every
-    predicate has a hitting block.  Inside each surviving partition the
-    kernel decodes the predicate and key columns first, keeps the rows
-    that can meet every predicate (compared in the same key space,
-    ``_pred_mask``), replays content chains only for the keys holding
-    a kept row, and returns only the kept rows.  Spark's residual row
-    filter (range compares, exact ``isin``) then defines the exact
-    semantics, collation and NaN included.  A predicate on the content
-    column is left to the residual filter alone.  Predicate columns are
-    always included in the output (the residual filter reads them).
-    Tables encoded before zone maps or Bloom filters existed decode
-    fine — pruning silently degrades to scan-all.
+    is a one-value IN-list.  Each value maps once through its column
+    type's record (``coltypes``).  Before any kernel runs, one
+    metadata-only pass over the predicate columns' zone maps (the A13
+    Range semantics) and string Bloom filters picks the partitions to
+    decode (``_where_hits``).  Each kernel then keeps only the rows that
+    can meet every predicate (``_pred_mask``) and replays content chains
+    only for their keys.  Spark's residual row filter defines the exact
+    semantics, collation and NaN included; a predicate on the content
+    column is left to it alone.  Predicate columns are always included
+    in the output.  Tables encoded before zone maps or Bloom filters
+    existed decode fine — pruning silently degrades to scan-all.
 
     on_error="skip" is READ-side failure isolation (the decode mirror
     of encode's fail-the-partition-not-the-job taxonomy): a partition
@@ -1867,16 +1574,12 @@ def decode(
         out_spec = [(n, d) for n, d in spec if n in set(columns) or n in wcols]
     else:
         decode_spec = out_spec = spec
-    row_schema = ", ".join(f"{name} {ddl}" for name, ddl in out_spec)
-    # String zone/Bloom pruning and the kernel's string row filter
-    # assume the residual filter compares strings under binary (UTF-8
-    # byte) order — the order (smin, smax) were recorded in at encode.  A session whose DEFAULT COLLATION is
-    # not UTF8_BINARY (e.g. UTF8_LCASE) makes the residual filter
-    # case-insensitive while pruning stays byte-ordered, silently
-    # dropping matching partitions (ADVICE r06) — so string pruning is
-    # disabled there at runtime, not just by test interlock.  Exactness
-    # is unaffected: pruning is an optimization; the residual filter
-    # still applies.
+    row_schema = ", ".join(f"{name} {ddl}" for (name, ddl) in out_spec)
+    # String zones, Bloom filters and the kernel's string row filter are
+    # byte-ordered (UTF-8).  Under any other session default collation
+    # (e.g. UTF8_LCASE) the residual filter would keep rows pruning
+    # dropped (ADVICE r06), so string pruning is off there; the residual
+    # filter alone stays exact.
     string_prune_ok = True
     for _ck in (
         "spark.sql.session.collation.default",  # Spark 4 SQLConf key
@@ -1887,7 +1590,7 @@ def decode(
                 string_prune_ok = False
         except Exception:
             pass
-    prunable = [p for p in preds if p.ddl != "string" or string_prune_ok]
+    prunable = [p for p in preds if "smin" not in p.ct.zone_cols or string_prune_ok]
     content = info["content_col"] if any(n == info["content_col"] for n, _ in decode_spec) else None
     kernel = make_decode_kernel(
         decode_spec, info["key_cols"], content,
@@ -1916,10 +1619,7 @@ def decode(
         # columns (timestamp/date bounds compare natively)
         cond = F.lit(True)
         for p in preds:
-            c = F.col(p.col)
-            # PySpark builds a date literal through strftime, which drops
-            # the zero padding of a year before 1000: go through ISO text
-            lit = (lambda v: F.lit(v.isoformat()).cast("date")) if p.ddl == "date" else F.lit
+            c, lit = F.col(p.col), p.ct.literal
             if p.points is not None:
                 cond = cond & c.isin([lit(v) for v, _ in p.points])
             if p.lo is not None:

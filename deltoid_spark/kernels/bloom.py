@@ -1,6 +1,6 @@
 """Per-block Bloom filters for string point lookups.
 
-Zone maps (A13 range pushdown, ``jobs/pipeline._string_zone``) prune
+Zone maps (A13 range pushdown, ``jobs/coltypes._string_zone``) prune
 range predicates well, but equality probes through HASH-LIKE columns
 (``commit``, ``path``) barely prune: a block's [smin, smax] spans most
 of the value space when the column isn't clustered, so
@@ -27,7 +27,7 @@ Sizing: ~10 bits per DISTINCT key, k=4 probes (FPR ~1%), clamped to
 [1 Ki, 256 Ki] bits -> at most 32 KiB of metadata per (partition,
 column); at 100 TB with >= 100 MB partitions that is <= ~0.06% of data
 size.  Filters never reach the driver: decode's one prune pass
-(``jobs/pipeline._where_parts``) probes them as a JVM expression over
+(``jobs/pipeline._where_hits``) probes them as a JVM expression over
 the blocks DataFrame, together with the zone test of the same block,
 and collects only the partitions-sized hit list.  The driver hashes
 the probe values once (``probe_positions``); each block tests those

@@ -22,9 +22,9 @@ Encode reads a ``pa.Array``.  Nulls are carried in the packed validity
 mask, and decode returns a float32/float64 ``pa.Array`` with them in
 its validity bitmap; a NaN is a value here, kept bit-exact in the lanes
 or the exception list.  A top-level float column of a table is a
-different matter: the encode job's storage mapping
-(``jobs.pipeline._storage``) turns its NaNs into nulls first, so there
-NaN and null share the mask bit and a NaN decodes as null.  NaN inside
+different matter: the float record's storage mapping
+(``jobs/coltypes``) turns its NaNs into nulls first, so there NaN
+and null share the mask bit and a NaN decodes as null.  NaN inside
 a nested float leaf stays a value (kernels/nested).
 """
 

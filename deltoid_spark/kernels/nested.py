@@ -41,7 +41,8 @@ _SCALAR_ARROW = {
     "date": pa.date32(),
 }
 _INT_LIKE = {"bigint", "int", "smallint", "tinyint", "boolean", "timestamp", "date"}
-_WIDTHS = {
+# logical bytes per scalar value (raw-size accounting; jobs/coltypes too)
+WIDTHS = {
     "bigint": 8, "int": 4, "smallint": 2, "tinyint": 1, "boolean": 1,
     "timestamp": 8, "date": 4, "float": 4, "double": 8,
 }
@@ -274,7 +275,7 @@ def nested_raw_bytes(arr: pa.Array, ddl: str) -> int:
                 return int(
                     pc.sum(pc.binary_length(a.cast(pa.large_binary()))).as_py() or 0
                 )
-            return _WIDTHS[nd[1]] * len(a)
+            return WIDTHS[nd[1]] * len(a)
         if kind == "array":
             return 8 * len(a) + walk(a.flatten(), nd[1])
         if kind == "map":

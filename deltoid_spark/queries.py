@@ -683,7 +683,7 @@ def _q58_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q58_unicode_zone_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String zone maps over NON-ASCII values (round-6 gate drop in
-    _string_zone): unicode repo names record verbatim (smin, smax)
+    jobs/coltypes._string_zone): unicode repo names record verbatim (smin, smax)
     bounds under UTF-8 byte order — which equals code-point order and
     Spark's pinned UTF8_BINARY collation — so a unicode range predicate
     prunes partitions exactly like an ASCII one.  The oracle recomputes

@@ -84,7 +84,7 @@ def test_storage_int64_rejects_unprovable_floats():
     loudly instead of corrupting."""
     import pyarrow as pa
 
-    from deltoid_spark.jobs.pipeline import _storage
+    from deltoid_spark.jobs.coltypes import storage as _storage
 
     s = pa.array([float(2**53 + 2), None], pa.float64())
     with pytest.raises(ValueError, match="2\\^53"):

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 
 from deltoid_spark.fixtures import codegen
-from deltoid_spark import reference_encoder as ref
+import reference_encoder as ref
 
 
 @pytest.fixture(scope="module")

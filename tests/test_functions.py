@@ -3,10 +3,31 @@ multimodal) against local ground truth."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 
 from deltoid_spark.functions import dedup, multimodal, similarity
+
+
+def _simhash64(text: str) -> int:
+    """Pure-python reference SimHash (the unit-test oracle for simhash()).
+
+    Deterministic 64-bit SimHash over whitespace tokens: h = first 8
+    bytes of md5(token) big-endian; bit b of the output is the sign of
+    the per-bit vote sum across tokens.
+    """
+    acc = [0] * 64
+    for tok in text.split():
+        h = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
+        for b in range(64):
+            acc[b] += 1 if (h >> b) & 1 else -1
+    out = 0
+    for b in range(64):
+        if acc[b] > 0:
+            out |= 1 << b
+    return out - (1 << 64) if out >= (1 << 63) else out  # wrap into int64
 
 
 @pytest.fixture(scope="module")
@@ -99,7 +120,7 @@ def test_simhash_hamming(docs):
     assert ham(0, 1) == 0
     assert ham(0, 2) < ham(0, 4)
     # deterministic: matches the pure-python reference implementation
-    assert sh[0] == dedup._simhash64("the quick brown fox jumps over the lazy dog again and again")
+    assert sh[0] == _simhash64("the quick brown fox jumps over the lazy dog again and again")
 
 
 def test_brute_force_topk_matches_numpy(spark):
@@ -714,8 +735,8 @@ def test_frame_sample_plan(spark):
 
 def test_simhash_empty_string_is_zero():
     # regression: the int64 wrap used to flip the MSB unconditionally
-    assert dedup._simhash64("") == 0
-    h = dedup._simhash64("token")
+    assert _simhash64("") == 0
+    h = _simhash64("token")
     assert -(2**63) <= h < 2**63
 
 
@@ -1150,6 +1171,37 @@ def test_stratified_sample_rates_and_determinism(spark):
         packing.stratified_sample(df, rates={"en": 1001})
 
 
+# The HOF reference folds: dot, l2norm and cosine in one fixed IEEE
+# operation order, ((0 + x0*c0) + x1*c1) + ...  The engine's Arrow
+# kernels (similarity._seq_dot and friends) reproduce them bit for bit.
+def _as_double(col):
+    import pyspark.sql.functions as F  # noqa: PLC0415
+
+    return F.col(col).cast("array<double>") if isinstance(col, str) else col
+
+
+def dot(a, b):
+    import pyspark.sql.functions as F  # noqa: PLC0415
+
+    return F.aggregate(
+        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def l2norm(a):
+    import pyspark.sql.functions as F  # noqa: PLC0415
+
+    return F.sqrt(F.aggregate(
+        F.transform(_as_double(a), lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v
+    ))
+
+
+def cosine(a, b):
+    return dot(a, b) / (l2norm(a) * l2norm(b))
+
+
 def _list_id_expr(cents: list[tuple[int, list[float]]]):
     """The executable spec of IVF list assignment: argmax over
     literal-broadcast centroid cosines (cos desc, cid asc tie-break)
@@ -1158,7 +1210,7 @@ def _list_id_expr(cents: list[tuple[int, list[float]]]):
 
     def cos_to_const(vec: list[float]):
         carr = F.array(*[F.lit(float(x)) for x in vec])
-        return similarity.cosine(F.col("embedding").cast("array<double>"), carr)
+        return cosine(F.col("embedding").cast("array<double>"), carr)
 
     return F.greatest(
         *[

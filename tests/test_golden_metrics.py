@@ -209,6 +209,40 @@ def test_typed_encode_golden():
     assert _rows_sha(frag) == GOLDEN_TYPED_APPEND_SHA
 
 
+# sha256 over the kernel output of a partition whose smallint/tinyint
+# columns hold nulls and each type's min and max, one of them a key.
+SMALL_INT_SPEC = [("k", "tinyint"), ("s", "smallint"), ("t", "tinyint"), ("content", "string")]
+GOLDEN_SMALL_INT_SHA = "03af4a9ad0946ec714f3701fb4952d2592457fc2add16396ab3b8c2d11be998e"
+
+
+def test_small_int_encode_golden():
+    """smallint and tinyint take the int family's storage and codec:
+    their blocks are byte-pinned and decode back to the Spark types."""
+    import pyarrow as pa
+
+    from deltoid_spark.jobs import pipeline
+
+    rows = range(48)
+    s_vals = [-(2**15), 2**15 - 1, None, 0, -1, 12_345]
+    t_vals = [-(2**7), 2**7 - 1, None, 0, 1, -77, 5]
+    tbl = pa.table({
+        "part_id": pa.array([0] * len(rows), pa.int64()),
+        "k": pa.array([None if i % 13 == 6 else (i % 3) * 127 - 128 for i in rows], pa.int8()),
+        "s": pa.array([s_vals[i % 6] if i % 4 else i * 311 - 7000 for i in rows], pa.int16()),
+        "t": pa.array([t_vals[i % 7] for i in rows], pa.int8()),
+        "content": pa.array([f"v {i // 5}\nrow {i % 5}" for i in rows], pa.string()),
+    })
+    kw = dict(key_cols=("k",), order_cols=("s",), content_col="content")
+    blocks = make_encode_kernel(spec=SMALL_INT_SPEC, **kw)(tbl)
+    assert "error" not in blocks.column("codec").to_pylist()
+    assert _rows_sha(blocks) == GOLDEN_SMALL_INT_SHA
+    out = pipeline.make_decode_kernel(SMALL_INT_SPEC, ("k",), "content")(blocks)
+    assert out.schema.field("s").type == pa.int16() and out.schema.field("t").type == pa.int8()
+    got = sorted(zip(*(out.column(c).to_pylist() for c in ("content", "k", "s", "t"))), key=repr)
+    want = sorted(zip(*(tbl.column(c).to_pylist() for c in ("content", "k", "s", "t"))), key=repr)
+    assert got == want
+
+
 # sha256 over the ``encode_chain`` bytes of seeded blocks (appended
 # fragments whose groups continue a stored chain).  The hand-made block
 # has one group per script shape a seeded first version can take;
@@ -457,7 +491,7 @@ def test_decode_block_casts_to_spark_type(codec):
     type Spark's applyInArrow verifier expects for the column."""
     import pyarrow as pa
 
-    from deltoid_spark.jobs import pipeline
+    from deltoid_spark.jobs import coltypes
 
     for n in (40, 0):
         spec, cols = _decode_fixture(n)
@@ -467,7 +501,7 @@ def test_decode_block_casts_to_spark_type(codec):
         for name, buf in picked:
             arr = api.decode_block(buf)
             assert isinstance(arr, pa.Array) and len(arr) == n, name
-            assert pipeline._to_spark(arr, ddls[name]).type == pipeline._spark_arrow_type(
+            assert coltypes.to_spark(arr, ddls[name]).type == coltypes.spark_type(
                 ddls[name]
             ), name
 

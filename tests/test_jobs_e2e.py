@@ -11,7 +11,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from deltoid_spark import reference_encoder as ref
+import reference_encoder as ref
 from deltoid_spark.fixtures import codegen
 from deltoid_spark.jobs import assign_partitions, decode, encode, metrics_summary, verify
 

@@ -524,7 +524,7 @@ def test_zone_map_pruning_floats(spark, tmp_path_factory):
     import math
 
     from deltoid_spark.jobs import decode, encode
-    from deltoid_spark.jobs.pipeline import _float_sortable
+    from deltoid_spark.jobs.coltypes import _float_sortable
     import numpy as np
 
     # sortable-transform unit law: order preserved across sign/zero
@@ -690,7 +690,7 @@ def test_zone_map_pruning_strings(spark, tmp_path_factory):
     import pytest
 
     from deltoid_spark.jobs import decode, encode
-    from deltoid_spark.jobs.pipeline import _string_zone
+    from deltoid_spark.jobs.coltypes import _string_zone
     import pyarrow as pa
 
     rows = []
